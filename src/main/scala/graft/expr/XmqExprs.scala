@@ -54,15 +54,32 @@ object XmqExprs {
     * previous parse is almost always the one needed). Only non-mutating
     * consumers may use it: probe/annotate mutate the tree and parse their
     * own copy. A parse failure memoizes as doc=null, so repeated
-    * wellformed-checks of a bad document stay cheap. */
+    * wellformed-checks of a bad document stay cheap. Inside a task the
+    * memo is cleared when the task completes, so an idle executor thread
+    * pins no document. */
   private final class ParseMemo {
     var content: String = null
     var lang: String = null
     var doc: XDoc = null
+    private var task: org.apache.spark.TaskContext = null
+
+    def clear(): Unit = { content = null; lang = null; doc = null }
+
+    def fill(c: String, l: String, d: XDoc): Unit = {
+      content = c; lang = l; doc = d
+      val tc = org.apache.spark.TaskContext.get()
+      if (tc != null && (tc ne task)) {
+        task = tc
+        tc.addTaskCompletionListener[Unit] { _ => clear(); task = null }
+      }
+    }
   }
   private val parseMemo = new ThreadLocal[ParseMemo] {
     override def initialValue(): ParseMemo = new ParseMemo
   }
+
+  /** whether this thread's memo pins a document. */
+  private[graft] def memoHeld: Boolean = parseMemo.get().content != null
 
   /** documents above this size are parsed without memoizing — bounds the
     * per-thread retention (content string + tree) the memo pins. */
@@ -76,17 +93,11 @@ object XmqExprs {
       // invalidate BEFORE parsing: a non-Exception Throwable (e.g. a
       // StackOverflowError on pathological nesting) must not leave the memo
       // claiming the new content maps to the previous document's tree
-      m.content = null
-      m.lang = null
-      m.doc = null
+      m.clear()
       val doc =
         try XmqEngine.parse(content.getBytes("UTF-8"), XmqEngine.ParseFlags(forced = ctOf(lang)))
         catch { case _: Exception => null }
-      if (content.length <= memoMaxChars) {
-        m.content = content
-        m.lang = lang
-        m.doc = doc
-      }
+      if (content.length <= memoMaxChars) m.fill(content, lang, doc)
       doc
     }
   }

@@ -163,11 +163,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
 
   override def dropTable(ident: Identifier): Boolean = {
     if (!tableExists(ident)) return false
-    val io = LakeIO.of(tablePath(ident))
-    io.delete("")
-    // a recreated table at the same path could otherwise hit a stale
-    // snapshot-json cache entry if length and mtime-millis happen to match
-    GraftTable.invalidateLocation(tablePath(ident))
+    LakeIO.of(tablePath(ident)).delete("")
+    MetaCache.invalidateLocation(tablePath(ident))
     true
   }
 

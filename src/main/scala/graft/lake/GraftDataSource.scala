@@ -1474,17 +1474,11 @@ class GraftMorFilteringReader(absPath: String, outColumns: Array[String],
   override def close(): Unit = inner.close()
 }
 
-/** Executor-side cache of equality-delete key maps: one load per (executor,
-  * eqdel shard set), shared by every task of the scan - the same "load the
-  * delete file once, probe per row" shape Iceberg's readers use. */
 /** Executor-side cache of position-delete address sets: one load per
   * (executor, posdel shard set), file→ordinal-set, probed per row by the
   * filtering reader — Iceberg's "load the delete file once" shape, with a
   * long probe instead of a string-key compare. */
 object GraftPosDeletes {
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.HashMap[String, java.util.HashSet[java.lang.Long]]]()
 
@@ -1509,36 +1503,20 @@ object GraftPosDeletes {
       : java.util.HashMap[String, java.util.HashSet[java.lang.Long]] = {
     val m = new java.util.HashMap[String, java.util.HashSet[java.lang.Long]]()
     val conf = LakeConf.installedConf()
-    for (dir <- shardDirs) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(conf)
-      val parts =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).toSeq.map(_.getPath)
-            .filter(_.getName.endsWith(".parquet"))
-        else Seq(p)
-      for (part <- parts) {
-        val reader: ParquetReader[org.apache.parquet.example.data.Group] =
-          ParquetReader.builder(new GroupReadSupport(), part).withConf(conf).build()
-        try {
-          var g = reader.read()
-          while (g != null) {
-            m.computeIfAbsent(g.getString("file_path", 0),
-                _ => new java.util.HashSet[java.lang.Long]())
-              .add(java.lang.Long.valueOf(g.getLong("pos", 0)))
-            g = reader.read()
-          }
-        } finally reader.close()
-      }
+    // a missing shard throws: reading it as empty would resurrect its rows
+    for (dir <- shardDirs) MetaIO.foreachGroup(new org.apache.hadoop.fs.Path(dir), conf) { g =>
+      m.computeIfAbsent(g.getString("file_path", 0),
+          _ => new java.util.HashSet[java.lang.Long]())
+        .add(java.lang.Long.valueOf(g.getLong("pos", 0)))
     }
     m
   }
 }
 
+/** Executor-side cache of equality-delete key maps: one load per (executor,
+  * eqdel shard set), shared by every task of the scan - the same "load the
+  * delete file once, probe per row" shape Iceberg's readers use. */
 object GraftEqDeletes {
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.HashMap[String, java.lang.Long]]()
 
@@ -1558,31 +1536,12 @@ object GraftEqDeletes {
   private def load(shardDirs: Seq[String]): java.util.HashMap[String, java.lang.Long] = {
     val m = new java.util.HashMap[String, java.lang.Long]()
     val conf = LakeConf.installedConf()
-    for (dir <- shardDirs) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(conf)
-      val parts =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).toSeq.map(_.getPath)
-            .filter(_.getName.endsWith(".parquet"))
-        else Seq(p)
-      for (part <- parts) {
-        val reader: ParquetReader[org.apache.parquet.example.data.Group] =
-          ParquetReader.builder(new GroupReadSupport(), part).withConf(conf).build()
-        try {
-          var g = reader.read()
-          while (g != null) {
-            val kk = key(g.getString("repo", 0), g.getString("path", 0),
-              g.getString("commit", 0))
-            if (kk != null) {
-              val seq = g.getLong("del_seq", 0)
-              m.merge(kk, java.lang.Long.valueOf(seq),
-                (a, b) => if (a.longValue() >= b.longValue()) a else b)
-            }
-            g = reader.read()
-          }
-        } finally reader.close()
-      }
+    // a missing shard throws: reading it as empty would resurrect its rows
+    for (dir <- shardDirs) MetaIO.foreachGroup(new org.apache.hadoop.fs.Path(dir), conf) { g =>
+      val kk = key(g.getString("repo", 0), g.getString("path", 0), g.getString("commit", 0))
+      if (kk != null)
+        m.merge(kk, java.lang.Long.valueOf(g.getLong("del_seq", 0)),
+          (a, b) => if (a.longValue() >= b.longValue()) a else b)
     }
     m
   }

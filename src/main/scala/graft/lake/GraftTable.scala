@@ -109,24 +109,6 @@ final case class ManifestEntry(file_path: String, partition: String,
 final case class ManifestShard(seq: Int, kind: String, path: String) // add | remove
 
 object GraftTable {
-  /** stat-validated snapshot-json LRU shared across table handles (handles
-    * are constructed per operation in the DSv2/streaming paths). */
-  private[lake] val snapCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, (Long, Long, Option[Snapshot])](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, (Long, Long, Option[Snapshot])]): Boolean =
-          size() > 1024
-      })
-
-  /** drop every cached snapshot under a table location (DROP TABLE path —
-    * a recreated table must never be served the old table's metadata). */
-  private[lake] def invalidateLocation(location: String): Unit =
-    snapCache.synchronized {
-      val it = snapCache.keySet().iterator()
-      while (it.hasNext) if (it.next().startsWith(location)) it.remove()
-    }
-
   /** per-row content hash whose xor is the order-independent file digest. */
   def rowHash(): org.apache.spark.sql.Column =
     xxhash64(col("repo"), col("path"), col("commit"), sha2(col("content"), 256))
@@ -245,33 +227,20 @@ class GraftTable(val spark: SparkSession, val location: String,
 
   def snapshot(version: Long): Option[Snapshot] = {
     val rel = s"meta/snapshot-v$version.json"
-    // stat-validated LRU (see MetaIO's shard caches): snapshot jsons are
-    // written once under version-unique names (claims forbid id reuse), and
-    // every lake operation re-reads several of them. The single stat both
-    // answers existence (the old io.exists call) and validates the cache.
-    val fresh =
-      try io.sizeAndMtime(rel)
-      catch {
-        // absent → no snapshot; any OTHER IO failure must stay loud — a
-        // transient fault mapped to None would read as "empty table"
-        case _: java.io.FileNotFoundException => return None
-      }
-    val key = io.abs(rel).toString
-    val hit = GraftTable.snapCache.get(key)
-    if (hit != null && hit._1 == fresh._1 && hit._2 == fresh._2) return hit._3
-    val m = parseJsonFlat(io.readString(rel))
-    // defensive: snapshot writes are atomic (tmp + rename), so a json
-    // missing its core keys is foreign debris, not a torn commit — treat
-    // as absent rather than crashing every reader of the table
-    val parsed =
+    // absent → no snapshot; any OTHER IO failure stays loud — a transient
+    // fault mapped to None would read as "empty table"
+    MetaCache.snapshots.get(io, rel, None) { _ =>
+      val m = parseJsonFlat(io.readString(rel))
+      // defensive: snapshot writes are atomic (tmp + rename), so a json
+      // missing its core keys is foreign debris, not a torn commit — treat
+      // as absent rather than crashing every reader of the table
       if (!m.contains("version")) None
       else Some(Snapshot(m("version").toLong, m("parent").toLong, m("tsMillis").toLong,
         m("operation"), m("manifest"), m("recordCount").toLong,
         m.getOrElse("fileCount", "-1").toLong,
         m.getOrElse("extraCols", ""), m.getOrElse("droppedCols", ""),
         m.getOrElse("ref", "main")))
-    GraftTable.snapCache.put(key, (fresh._1, fresh._2, parsed))
-    parsed
+    }
   }
 
   def currentSnapshot: Option[Snapshot] = {

@@ -1,7 +1,7 @@
 package graft.lake
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import java.nio.charset.StandardCharsets
 
 /** Filesystem seam for the lake layer (VERDICT r2 "object-store-safe FS
@@ -95,12 +95,10 @@ final class LakeIO(val root: String) extends Serializable {
 
   def exists(rel: String): Boolean = fs.exists(abs(rel))
   def size(rel: String): Long = fs.getFileStatus(abs(rel)).getLen
-  /** (length, mtimeMillis) of a FILE — the freshness key metadata caches
-    * validate against (one stat RPC instead of an open+read+parse). */
-  def sizeAndMtime(rel: String): (Long, Long) = {
-    val st = fs.getFileStatus(abs(rel))
-    (st.getLen, st.getModificationTime)
-  }
+  /** one stat: None when nothing is at rel; any other IO fault throws. */
+  def status(rel: String): Option[FileStatus] =
+    try Some(fs.getFileStatus(abs(rel)))
+    catch { case _: java.io.FileNotFoundException => None }
   def mkdirs(rel: String): Unit = fs.mkdirs(abs(rel))
   def isDirectory(rel: String): Boolean =
     fs.exists(abs(rel)) && fs.getFileStatus(abs(rel)).isDirectory

@@ -1,6 +1,7 @@
 package graft.lake
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
@@ -9,6 +10,63 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import scala.collection.mutable.ArrayBuffer
+
+/** Bounded LRU of parsed metadata files, keyed by absolute path and
+  * validated on every lookup against the file's (length, mtime): a hit
+  * costs one stat instead of an open+read+parse, and scan and maintenance
+  * planning re-read the same snapshot JSONs, shard lists and manifest
+  * shards many times per operation.
+  *
+  * Freshness assumption: metadata files are written once under unique
+  * names (claims forbid version-id reuse; shards are uid-named), and mtimes
+  * have millisecond resolution. On a store with second-granularity mtimes,
+  * a same-length rewrite of one path inside that second would be served
+  * stale. A table dropped and recreated at the same path reuses
+  * version-named files, so DROP TABLE purges the location
+  * ([[MetaCache.invalidateLocation]]).
+  */
+private[lake] final class MetaCache[V](cap: Int) {
+  private val lru = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, (Long, Long, V)](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, (Long, Long, V)]): Boolean =
+        size() > cap
+    })
+
+  /** parse of the file at rel, reused while its (length, mtime) hold. A
+    * missing path answers `absent` and a directory is parsed on every call,
+    * neither cached; any other stat fault reaches the caller. */
+  def get(io: LakeIO, rel: String, absent: V)(parse: FileStatus => V): V =
+    io.status(rel) match {
+      case None => absent
+      case Some(st) if st.isDirectory => parse(st)
+      case Some(st) =>
+        val key = io.abs(rel).toString
+        val hit = lru.get(key)
+        if (hit != null && hit._1 == st.getLen && hit._2 == st.getModificationTime) hit._3
+        else {
+          val v = parse(st)
+          lru.put(key, (st.getLen, st.getModificationTime, v))
+          v
+        }
+    }
+
+  private def dropUnder(prefix: String): Unit = lru.keySet.removeIf(_.startsWith(prefix))
+}
+
+private[lake] object MetaCache {
+  val snapshots = new MetaCache[Option[Snapshot]](1024)
+  val shardLists = new MetaCache[Seq[ManifestShard]](512)
+  val entries = new MetaCache[Seq[ManifestEntry]](512)
+
+  /** drops every cached file under a table location, whatever its kind
+    * (DROP TABLE: a table recreated at the same path must never be served
+    * the old table's metadata). Keys use [[LakeIO.abs]]'s form, and the
+    * trailing "/" keeps a sibling such as `t2` cached when `t` is dropped. */
+  def invalidateLocation(location: String): Unit = {
+    val prefix = LakeIO.of(location).abs("").toString + "/"
+    Seq(snapshots, shardLists, entries).foreach(_.dropUnder(prefix))
+  }
+}
 
 /** Driver-side parquet read/write for SMALL metadata (manifest shards from
   * in-memory Seqs, shard lists, lineage rows) via parquet-mr's Group API —
@@ -159,43 +217,52 @@ object MetaIO {
     } finally w.close()
   }
 
-  private def parquetFilesAt(io: LakeIO, rel: String): Seq[String] =
-    if (!io.exists(rel)) Seq.empty
-    else if (io.isDirectory(rel))
-      io.list(rel).filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-        .map(n => s"$rel/$n")
-    else Seq(rel)
+  /** parquet part files at st: the file itself, or a directory's visible
+    * `*.parquet` children (Spark- and MetaIO-written alike). */
+  private def partFiles(st: FileStatus, conf: Configuration): Seq[HPath] =
+    if (!st.isDirectory) Seq(st.getPath)
+    else st.getPath.getFileSystem(conf).listStatus(st.getPath).toSeq.map(_.getPath).filter { p =>
+      val n = p.getName
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  /** feeds every row of every part file at st to f, file by file. */
+  private def foreachGroup(st: FileStatus, conf: Configuration)(f: Group => Unit): Unit =
+    partFiles(st, conf).foreach { part =>
+      val r = ParquetReader.builder(new GroupReadSupport(), part).withConf(conf).build()
+      try {
+        var g = r.read()
+        while (g != null) { f(g); g = r.read() }
+      } finally r.close()
+    }
+
+  /** every row at p (a file or a directory of part files), for readers
+    * outside a table's [[LakeIO]] such as the executor-side delete loaders;
+    * a missing p throws FileNotFoundException. */
+  private[lake] def foreachGroup(p: HPath, conf: Configuration)(f: Group => Unit): Unit =
+    foreachGroup(p.getFileSystem(conf).getFileStatus(p), conf)(f)
 
   /** total row count at rel from parquet FOOTERS only — driver-side, zero
     * Spark jobs (counting a freshly written shard used to cost a whole
     * metadata job). */
   def rowCount(io: LakeIO, rel: String): Long = {
     val conf = new Configuration(io.hadoopConf)
-    parquetFilesAt(io, rel).map { f =>
+    io.status(rel).fold(Seq.empty[HPath])(partFiles(_, conf)).map { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader
-        .open(HadoopInputFile.fromPath(io.abs(f), conf))
+        .open(HadoopInputFile.fromPath(f, conf))
       try r.getRecordCount finally r.close()
     }.sum
   }
 
-  /** every row of every parquet file at rel (a file, or a directory of
-    * part files — Spark- and MetaIO-written alike). */
-  private def readGroups(io: LakeIO, rel: String): Seq[Group] = {
-    val files: Seq[String] = parquetFilesAt(io, rel)
+  private def readGroups(io: LakeIO, st: FileStatus): Seq[Group] = {
     val out = ArrayBuffer.empty[Group]
-    val conf = new Configuration(io.hadoopConf)
-    files.foreach { f =>
-      val r = ParquetReader
-        .builder(new GroupReadSupport(), io.abs(f))
-        .withConf(conf)
-        .build()
-      try {
-        var g = r.read()
-        while (g != null) { out += g; g = r.read() }
-      } finally r.close()
-    }
+    foreachGroup(st, new Configuration(io.hadoopConf))(out += _)
     out.toSeq
   }
+
+  /** every row at rel; a missing path reads as empty. */
+  private def readGroups(io: LakeIO, rel: String): Seq[Group] =
+    io.status(rel).fold(Seq.empty[Group])(readGroups(io, _))
 
   private def optLong(g: Group, field: String): Option[Long] =
     if (g.getFieldRepetitionCount(field) == 0) None else Some(g.getLong(field, 0))
@@ -203,86 +270,37 @@ object MetaIO {
   private def optStr(g: Group, field: String): String =
     if (g.getFieldRepetitionCount(field) == 0) null else g.getString(field, 0)
 
-  // Bounded LRU over parsed shard files: scan/maintenance planning re-reads
-  // the SAME shard (shards are uid-named and immutable once committed)
-  // many times per pipeline; each hit is validated against the file's
-  // (length, mtime) — one stat RPC instead of an open+read+parse. Small
-  // shards only (the localManifest gate keeps them ≤ a few MiB anyway).
-  private val entryCacheCap = 512
-  private val entryCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, (Long, Long, Seq[ManifestEntry])](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, (Long, Long, Seq[ManifestEntry])]): Boolean =
-          size() > entryCacheCap
-      })
-
-  private def parseEntries(io: LakeIO, rel: String): Seq[ManifestEntry] =
-    readGroups(io, rel).map { g =>
-      ManifestEntry(
-        optStr(g, "file_path"), optStr(g, "partition"),
-        g.getLong("record_count", 0), g.getLong("file_bytes", 0),
-        optStr(g, "min_repo"), optStr(g, "max_repo"),
-        optStr(g, "min_path"), optStr(g, "max_path"),
-        getList(g, "langs"),
-        g.getLong("min_z", 0), g.getLong("max_z", 0),
-        g.getLong("min_rh", 0), g.getLong("max_rh", 0),
-        g.getLong("digest", 0),
-        optLong(g, "nulls_repo"), optLong(g, "nulls_path"), optLong(g, "nulls_lang"),
-        if (g.getFieldRepetitionCount("bucket") == 0) None
-        else Some(g.getInteger("bucket", 0)))
-    }
-
   /** manifest entries of one shard, read driver-side — the small-manifest
     * fast path that lets scan planning skip Spark jobs entirely. Reads both
     * MetaIO- and Spark-written shards (same 3-level LIST layout). */
-  def readEntries(io: LakeIO, rel: String): Seq[ManifestEntry] = {
-    val key = io.abs(rel).toString
-    val fresh =
-      try { if (io.isDirectory(rel)) null else io.sizeAndMtime(rel) }
-      catch { case _: Exception => null }
-    if (fresh == null) return parseEntries(io, rel) // dirs/missing: no cache
-    val hit = entryCache.get(key)
-    if (hit != null && hit._1 == fresh._1 && hit._2 == fresh._2) hit._3
-    else {
-      val entries = parseEntries(io, rel)
-      entryCache.put(key, (fresh._1, fresh._2, entries))
-      entries
+  def readEntries(io: LakeIO, rel: String): Seq[ManifestEntry] =
+    MetaCache.entries.get(io, rel, Seq.empty) { st =>
+      readGroups(io, st).map { g =>
+        ManifestEntry(
+          optStr(g, "file_path"), optStr(g, "partition"),
+          g.getLong("record_count", 0), g.getLong("file_bytes", 0),
+          optStr(g, "min_repo"), optStr(g, "max_repo"),
+          optStr(g, "min_path"), optStr(g, "max_path"),
+          getList(g, "langs"),
+          g.getLong("min_z", 0), g.getLong("max_z", 0),
+          g.getLong("min_rh", 0), g.getLong("max_rh", 0),
+          g.getLong("digest", 0),
+          optLong(g, "nulls_repo"), optLong(g, "nulls_path"), optLong(g, "nulls_lang"),
+          if (g.getFieldRepetitionCount("bucket") == 0) None
+          else Some(g.getInteger("bucket", 0)))
+      }
     }
-  }
 
   /** removed file paths of one remove shard, driver-side. */
   def readRemoves(io: LakeIO, rel: String): Seq[String] =
     readGroups(io, rel).map(g => g.getString("file_path", 0))
 
-  private val shardCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, (Long, Long, Seq[ManifestShard])](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, (Long, Long, Seq[ManifestShard])]): Boolean =
-          size() > entryCacheCap
-      })
-
-  def readShards(io: LakeIO, rel: String): Seq[ManifestShard] = {
-    def parse() = readGroups(io, rel).map { g =>
-      ManifestShard(g.getInteger("seq", 0), g.getString("kind", 0), g.getString("path", 0))
+  def readShards(io: LakeIO, rel: String): Seq[ManifestShard] =
+    MetaCache.shardLists.get(io, rel, Seq.empty) { st =>
+      readGroups(io, st).map { g =>
+        ManifestShard(g.getInteger("seq", 0), g.getString("kind", 0), g.getString("path", 0))
+      }
     }
-    // same (length, mtime)-validated LRU as readEntries: every snapshot
-    // access re-reads its shard list, and the lists are immutable once
-    // published — one stat RPC per hit
-    val key = io.abs(rel).toString
-    val fresh =
-      try { if (io.isDirectory(rel)) null else io.sizeAndMtime(rel) }
-      catch { case _: Exception => null }
-    if (fresh == null) return parse()
-    val hit = shardCache.get(key)
-    if (hit != null && hit._1 == fresh._1 && hit._2 == fresh._2) hit._3
-    else {
-      val shards = parse()
-      shardCache.put(key, (fresh._1, fresh._2, shards))
-      shards
-    }
-  }
 
   def readLineage(io: LakeIO, rel: String): Seq[Lineage.LineageRow] =
     readGroups(io, rel).map { g =>

@@ -194,4 +194,36 @@ class LakeReviewFixesSpec extends SparkTestBase {
     assert(t.bucketSpec.isEmpty,
       "cluster left bucket-spec.json behind while writing unbucketed files")
   }
+
+  test("DROP TABLE purges every cached metadata kind before a same-path recreate") {
+    import org.apache.hadoop.fs.Path
+    // no scheme on the warehouse: cache keys carry "file:", the purge must too
+    val wh = Files.createTempDirectory("graft-drop-recreate").toString
+    spark.conf.set("spark.sql.catalog.dropcat", "graft.lake.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.dropcat.warehouse", wh)
+    spark.sql("CREATE NAMESPACE dropcat.ns")
+    val ddl = "CREATE TABLE dropcat.ns.t " +
+      "(repo STRING, path STRING, commit STRING, lang STRING, content STRING, z BIGINT)"
+    val meta = new Path(s"file://$wh/ns/t/meta")
+    val fs = meta.getFileSystem(spark.sessionState.newHadoopConf())
+    def metaFiles = fs.listStatus(meta).filter(_.isFile).map(st => st.getPath.getName -> st).toMap
+    def paths = spark.table("dropcat.ns.t").select("path").collect().map(_.getString(0)).toSeq
+
+    spark.sql(ddl)
+    spark.sql("INSERT INTO dropcat.ns.t VALUES ('r', 'p1', 'c1', 'xml', '<a/>', 1)")
+    assert(paths == Seq("p1")) // caches the snapshot, shard list and entries
+    val old = metaFiles
+    spark.sql("DROP TABLE dropcat.ns.t")
+
+    spark.sql(ddl)
+    spark.sql("INSERT INTO dropcat.ns.t VALUES ('r', 'p2', 'c2', 'xml', '<b/>', 1)")
+    val recreated = metaFiles
+    // version-named files of equal length: with the old mtimes forced on,
+    // only the purge tells the new table's metadata from the old one's
+    for (name <- Seq("snapshot-v1.json", "manifest-list-v1.parquet"))
+      assert(recreated(name).getLen == old(name).getLen, s"$name lengths differ")
+    for ((name, st) <- recreated; o <- old.get(name))
+      fs.setTimes(st.getPath, o.getModificationTime, -1)
+    assert(paths == Seq("p2"), "the recreated table was served the dropped table's metadata")
+  }
 }

@@ -105,6 +105,22 @@ class XmqExprSpec extends SparkTestBase {
     assert(parseLongC("99999999999999999999") == Long.MaxValue) // strtol clamp
   }
 
+  test("the getter parse memo pins no document once its task ends") {
+    import graft.expr.XmqFunctions._
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val got = spark.range(0, 256, 1, 16)
+      .select(xmq_get_string(concat(lit("<a>"), col("id").cast("string"), lit("</a>")),
+        lit("xml"), lit("/a")))
+      .collect().map(_.getString(0).toLong).toSet
+    assert(got == (0L until 256L).toSet)
+    // the executor pool hands new tasks to its most recently idle threads,
+    // i.e. the ones that just ran the getters
+    val held = spark.sparkContext.parallelize(0 until 64, 64)
+      .map(_ => XmqExprs.memoHeld).collect()
+    assert(!held.contains(true),
+      s"${held.count(identity)} of 64 probe tasks found a memoized document")
+  }
+
   test("typed getters return 0 (not null) on null inputs") {
     import spark.implicits._
     import graft.expr.XmqFunctions._
