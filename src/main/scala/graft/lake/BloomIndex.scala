@@ -103,16 +103,10 @@ object BloomIndex {
   def prunedManifest(table: GraftTable, man: DataFrame,
                      filters: Array[org.apache.spark.sql.sources.Filter])
       : DataFrame = {
-    import org.apache.spark.sql.sources.{EqualTo, In}
-    val points: Seq[(String, Seq[String])] = filters.toSeq.flatMap {
-      case EqualTo(c, v: String) => Some(c -> Seq(v))
-      case In(c, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        Some(c -> vs.toSeq.map(_.asInstanceOf[String]))
-      case _ => None
-    }
-    if (points.isEmpty) return man
+    val ps = points(filters)
+    if (ps.isEmpty) return man
     val spark = table.spark
-    points.foldLeft(man) { case (df, (c, vs)) =>
+    ps.foldLeft(man) { case (df, (c, vs)) =>
       sidecarFor(table, c) match {
         case None => df
         case Some((rel, _, bits)) =>
@@ -129,6 +123,22 @@ object BloomIndex {
       }
     }
   }
+
+  /** the top-level point conjuncts (column, values) of `filters`. */
+  private def points(filters: Array[org.apache.spark.sql.sources.Filter])
+      : Seq[(String, Seq[String])] = {
+    import org.apache.spark.sql.sources.{EqualTo, In}
+    filters.toSeq.flatMap {
+      case EqualTo(c, v: String) => Some(c -> Seq(v))
+      case In(c, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
+        Some(c -> vs.toSeq.map(_.asInstanceOf[String]))
+      case _ => None
+    }
+  }
+
+  /** whether [[prunedManifest]] would probe a sidecar for `filters`. */
+  def applies(table: GraftTable, filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
+    points(filters).exists { case (c, _) => sidecarFor(table, c).isDefined }
 
   /** Point-lookup scan: `SELECT ... WHERE column = value` opening only
     * bloom-may-contain files. Returns (rows, totalFiles, openedFiles);

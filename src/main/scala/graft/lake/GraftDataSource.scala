@@ -532,11 +532,11 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
     s"GraftScan location=$location PushedFilters=[${pushed.mkString(", ")}]$rt$inc$lim$tn$files"
   }
 
-  /** Manifest pruning runs DISTRIBUTED: the pushed filters become a Column
-    * predicate over the manifest stats and prune the manifest DataFrame
-    * BEFORE collecting — only surviving file paths ever reach the driver
-    * (same planning cost prunedScan / FileSourceScan pay), never the full
-    * entry rows. */
+  /** Manifest pruning keeps a scan's fixed cost in the files it opens: a
+    * driver-local manifest is pruned in place on the driver, and a
+    * distributed one is pruned as a DataFrame BEFORE collecting — only
+    * surviving file paths ever reach the driver (same planning cost
+    * prunedScan / FileSourceScan pay), never the full entry rows. */
   override def planInputPartitions(): Array[InputPartition] = {
     val p = planned
     if (p != null) return p
@@ -544,17 +544,6 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
     planned = out
     out
   }
-
-  /** Bloom-sidecar pruning for pushed POINT predicates (EqualTo/IN on a
-    * column with a BloomIndex sidecar, e.g. commit): each file's filter is
-    * probed DISTRIBUTED during the manifest-planning join; definite
-    * negatives never open. Files newer than the sidecar have no row
-    * (left join → kept), so appends after the index build are never
-    * wrongly pruned, and the pushed filter stays residual row-level. */
-  private def bloomPruned(table: GraftTable,
-                          man: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    BloomIndex.prunedManifest(table, man, pushed ++ runtime)
 
   private def planPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
@@ -568,10 +557,18 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
       case None => Array.empty
       case Some(s) =>
         import spark.implicits._
+        val filters = pushed ++ runtime
+        // a driver-local manifest (the localManifest gate) is pruned in
+        // place by the one pruning rule, with no nested query; incremental
+        // slices, bloom-sidecar lookups and distributed manifests prune the
+        // manifest DataFrame by the same rule
+        val local =
+          if (fromSnapshot.isDefined || BloomIndex.applies(table, filters)) None
+          else table.localManifestSeq(table.manifestShards(s))
         // incremental read: only the entries APPENDED in (fromSnapshot, s]
         // — stats pruning and projection apply to the changelog slice the
         // same way they apply to a full read
-        val m = fromSnapshot match {
+        lazy val m = fromSnapshot match {
           case Some(from) => table.incrementalEntries(from, s.version)
           case None => table.manifest(s)
         }
@@ -580,7 +577,7 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
         val total =
           if (fromSnapshot.isDefined) m.count().toInt
           else if (s.fileCount >= 0) s.fileCount.toInt
-          else m.count().toInt
+          else local.fold(m.count().toInt)(_.size)
         // pending merge-on-read deletes: plan from the seq-tagged manifest
         // and ship each partition its add seq + the eqdel shard locations so
         // the reader can apply the deletes per task (row-reader path; stats
@@ -592,19 +589,30 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
         val posdels =
           if (fromSnapshot.isDefined) Seq.empty
           else table.posDeleteShards(s).map(sh => table.io.abs(sh.path).toString)
-        // bucket pruning (distributed, before the collect): point/IN
-        // predicates on the bucket column pin the exact candidate buckets
+        // bucket pruning (before the collect): point/IN predicates on the
+        // bucket column pin the exact candidate buckets
         val spec = if (fromSnapshot.isEmpty) table.bucketSpec else None
-        val bucketPred = GraftScan.bucketPredicate(spec.flatMap { case (c, n) =>
-          GraftScan.candidateBuckets(pushed ++ runtime, c, n)
-        })
+        val cands = spec.flatMap { case (c, n) => GraftScan.candidateBuckets(filters, c, n) }
+        val keep = GraftScan.mayMatch(filters)
+        def survives(e: ManifestEntry) = keep(e) && e.bucket.forall(b => cands.forall(_(b)))
+        // Bloom-sidecar pruning for pushed POINT predicates (EqualTo/IN on a
+        // column with a BloomIndex sidecar, e.g. commit): each file's filter
+        // is probed during the manifest-planning join; definite negatives
+        // never open. Files newer than the sidecar have no row (left join →
+        // kept), and the pushed filter stays residual row-level.
+        def keptDf(man: org.apache.spark.sql.DataFrame) =
+          BloomIndex.prunedManifest(table, man, filters)
+            .filter(GraftScan.manifestPredicate(filters) && GraftScan.bucketPredicate(cands))
         if (eqdels.nonEmpty || posdels.nonEmpty) {
           bucketInfo = None // pending MoR deletes: row path, no key grouping
           topNCap = None    // surviving-row prefixes are not sorted prefixes
-          val kept = bloomPruned(table, table.manifestWithSeq(s))
-            .filter(GraftScan.manifestPredicate(pushed ++ runtime) && bucketPred)
-            .select("file_path", "record_count", "file_bytes", "add_seq")
-            .as[(String, Long, Long, Long)].collect()
+          val kept = local match {
+            case Some(es) => es.collect { case (e, seq) if survives(e) =>
+              (e.file_path, e.record_count, e.file_bytes, seq) }.toArray
+            case None => keptDf(table.manifestWithSeq(s))
+              .select("file_path", "record_count", "file_bytes", "add_seq")
+              .as[(String, Long, Long, Long)].collect()
+          }
           pruneInfo = Some((kept.length, total))
           statsInfo = Some((kept.map(_._2).sum, kept.map(_._3).sum))
           kept.map { case (p, _, _, seq) =>
@@ -612,10 +620,13 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
               .asInstanceOf[InputPartition]
           }
         } else {
-          val keptAll = bloomPruned(table, m)
-            .filter(GraftScan.manifestPredicate(pushed ++ runtime) && bucketPred)
-            .select("file_path", "record_count", "file_bytes", "bucket")
-            .as[(String, Long, Long, Option[Int])].collect()
+          val keptAll = local match {
+            case Some(es) => es.collect { case (e, _) if survives(e) =>
+              (e.file_path, e.record_count, e.file_bytes, e.bucket) }.toArray
+            case None => keptDf(m)
+              .select("file_path", "record_count", "file_bytes", "bucket")
+              .as[(String, Long, Long, Option[Int])].collect()
+          }
           // pushed LIMIT: keep only the fewest files whose exact committed
           // record_counts cover it (largest-first, path tiebreak for
           // determinism) — `LIMIT 10` plans one file, not the whole table.
@@ -743,78 +754,123 @@ class GraftMicroBatchStream(location: String, pushed: Array[Filter],
 }
 
 object GraftScan {
-  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.{Column, Row}
   import org.apache.spark.sql.functions._
 
-  /** pushed-filter → manifest-stats predicate translation. Missing stats
-    * (null min/max — e.g. a file whose every value is null) must KEEP the
-    * file: every comparison is wrapped in coalesce(..., true) so correctness
-    * never depends on the stats, matching the residual-filter contract. */
-  def manifestPredicate(filters: Array[Filter]): Column =
-    filters.map(toCol).foldLeft(lit(true))(_ && _)
-
-  private def keepIfUnknown(c: Column): Column = coalesce(c, lit(true))
-
-  private def toCol(f: Filter): Column = f match {
-    case EqualTo("repo", v: String) =>
-      keepIfUnknown(col("min_repo") <= v && col("max_repo") >= v)
-    case EqualTo("path", v: String) =>
-      keepIfUnknown(col("min_path") <= v && col("max_path") >= v)
-    case EqualTo("lang", v: String) =>
-      keepIfUnknown(array_contains(col("langs"), v))
-    case GreaterThan("repo", v: String) => keepIfUnknown(col("max_repo") > v)
-    case GreaterThanOrEqual("repo", v: String) => keepIfUnknown(col("max_repo") >= v)
-    case LessThan("repo", v: String) => keepIfUnknown(col("min_repo") < v)
-    case LessThanOrEqual("repo", v: String) => keepIfUnknown(col("min_repo") <= v)
-    case GreaterThan("path", v: String) => keepIfUnknown(col("max_path") > v)
-    case GreaterThanOrEqual("path", v: String) => keepIfUnknown(col("max_path") >= v)
-    case LessThan("path", v: String) => keepIfUnknown(col("min_path") < v)
-    case LessThanOrEqual("path", v: String) => keepIfUnknown(col("min_path") <= v)
-    case In("repo", vs) =>
-      vs.map {
-        case v: String => keepIfUnknown(col("min_repo") <= v && col("max_repo") >= v)
-        case _ => lit(true)
-      }.foldLeft(lit(false))(_ || _)
-    case In("lang", vs) =>
-      vs.map {
-        case v: String => keepIfUnknown(array_contains(col("langs"), v))
-        case _ => lit(true)
-      }.foldLeft(lit(false))(_ || _)
-    case StringStartsWith("repo", p: String) => startsWithCol("repo", p)
-    case StringStartsWith("path", p: String) => startsWithCol("path", p)
-    // null-count pruning: a null-free file can't satisfy IS NULL, an
-    // all-null file can't satisfy IS NOT NULL (nulls_* null = pre-field
-    // manifest → keep, pruning is never optimistic)
-    case IsNull(c) if c == "repo" || c == "path" || c == "lang" =>
-      keepIfUnknown(col(s"nulls_$c") > 0L)
-    case IsNotNull(c) if c == "repo" || c == "path" || c == "lang" =>
-      keepIfUnknown(col(s"nulls_$c") < col("record_count"))
-    case And(l, r) => toCol(l) && toCol(r)
-    case Or(l, r) => toCol(l) || toCol(r)
-    case _ => lit(true)
+  /** THE manifest pruning rule: false only when an entry's stats prove that
+    * no row of its file satisfies every filter. Strings compare in
+    * UTF8String (code point) order — Spark's own, the order the writers'
+    * min/max were taken in — never Java's UTF-16 order. A null stat (e.g.
+    * the min of an all-null column) is unknown, and unknown KEEPS the file:
+    * under SQL's three-valued AND a predicate's conjunction of stat
+    * comparisons is false only when one of them is, so each comparison with
+    * an unknown side reads as true. Correctness never depends on the stats,
+    * matching the residual-filter contract. The driver-local planner calls
+    * it on the entries directly; [[manifestPredicate]] applies it to
+    * manifest DataFrames. */
+  def mayMatch(filters: Array[Filter]): ManifestEntry => Boolean = {
+    val tests = filters.map(compile)
+    e => tests.forall(_(e))
   }
 
-  /** startsWith pruning: strings with prefix p lie in [p, nextPrefix(p)),
-    * where nextPrefix increments the last non-U+FFFF char. A prefix composed
-    * ENTIRELY of U+FFFF has no finite string upper bound — there emit only
-    * the lower-bound conjunct, never a fabricated `min < U+FFFF` that would
-    * wrongly prune files whose min is itself >= U+FFFF yet contains
-    * prefixed strings (file-level pruning loss is unrepairable by the
-    * residual filters). */
-  private def startsWithCol(field: String, p: String): Column =
-    nextPrefix(p) match {
-      case Some(np) =>
-        keepIfUnknown(col(s"max_$field") >= p && col(s"min_$field") < np)
-      case None => keepIfUnknown(col(s"max_$field") >= p)
+  /** [[mayMatch]] as a predicate over a manifest DataFrame's stat columns
+    * (distributed manifests, bloom sidecars, incremental reads, DML and the
+    * stream). */
+  def manifestPredicate(filters: Array[Filter]): Column =
+    if (filters.isEmpty) lit(true)
+    else {
+      val keep = mayMatch(filters)
+      udf((r: Row) => keep(statsOf(r))).apply(struct(statColumns.map(col): _*))
     }
 
-  /** smallest string greater than every string with prefix `p`, or None if
-    * no such string exists (prefix is all U+FFFF). */
-  private def nextPrefix(p: String): Option[String] = {
-    var i = p.length - 1
-    while (i >= 0 && p.charAt(i) == '\uFFFF') i -= 1
-    if (i < 0) None
-    else Some(p.substring(0, i) + (p.charAt(i) + 1).toChar)
+  private val statColumns = Seq("min_repo", "max_repo", "min_path", "max_path", "langs",
+    "min_rh", "max_rh", "nulls_repo", "nulls_path", "nulls_lang", "record_count")
+
+  /** an entry carrying a statColumns row's stats. Unknown values map to
+    * what the rule reads as unknown: (0, 0) repo-hash bounds, and a
+    * record_count no null count reaches. */
+  private def statsOf(r: Row): ManifestEntry = {
+    def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    val rh = if (r.isNullAt(5) || r.isNullAt(6)) (0L, 0L) else (r.getLong(5), r.getLong(6))
+    ManifestEntry(null, null, if (r.isNullAt(10)) Long.MaxValue else r.getLong(10), 0L,
+      r.getString(0), r.getString(1), r.getString(2), r.getString(3),
+      if (r.isNullAt(4)) null else r.getSeq[String](4), 0L, 0L, rh._1, rh._2, 0L,
+      opt(7), opt(8), opt(9))
+  }
+
+  /** `stat <op> v` by the sign of stat.compareTo(v); a null stat keeps. */
+  private def cmp(stat: String, v: UTF8String)(ok: Int => Boolean): Boolean =
+    stat == null || ok(UTF8String.fromString(stat).compareTo(v))
+
+  private def compile(f: Filter): ManifestEntry => Boolean = f match {
+    case EqualTo("repo", v: String) =>
+      val u = UTF8String.fromString(v)
+      // xxhash64(repo), seed 42, as the writers take min_rh/max_rh: the hash
+      // bounds prune a repo the string bounds of a z-clustered file span;
+      // (0, 0) bounds and a null min_repo carry no hash stats
+      val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(u, StringType, 42L)
+      e => cmp(e.min_repo, u)(_ <= 0) && cmp(e.max_repo, u)(_ >= 0) &&
+        (e.min_repo == null || (e.min_rh == 0L && e.max_rh == 0L) ||
+          (e.min_rh <= h && h <= e.max_rh))
+    case EqualTo("path", v: String) =>
+      val u = UTF8String.fromString(v)
+      e => cmp(e.min_path, u)(_ <= 0) && cmp(e.max_path, u)(_ >= 0)
+    case EqualTo("lang", v: String) =>
+      // array_contains: a miss is unknown when the set holds a null
+      e => e.langs == null || e.langs.contains(v) || e.langs.contains(null)
+    case GreaterThan("repo", v: String) => bound(_.max_repo, v)(_ > 0)
+    case GreaterThanOrEqual("repo", v: String) => bound(_.max_repo, v)(_ >= 0)
+    case LessThan("repo", v: String) => bound(_.min_repo, v)(_ < 0)
+    case LessThanOrEqual("repo", v: String) => bound(_.min_repo, v)(_ <= 0)
+    case GreaterThan("path", v: String) => bound(_.max_path, v)(_ > 0)
+    case GreaterThanOrEqual("path", v: String) => bound(_.max_path, v)(_ >= 0)
+    case LessThan("path", v: String) => bound(_.min_path, v)(_ < 0)
+    case LessThanOrEqual("path", v: String) => bound(_.min_path, v)(_ <= 0)
+    case In(c @ ("repo" | "lang"), vs) =>
+      val any = vs.map {
+        case v: String => compile(EqualTo(c, v))
+        case _ => (_: ManifestEntry) => true
+      }
+      e => any.exists(_(e))
+    case StringStartsWith("repo", p: String) => startsWith(_.min_repo, _.max_repo, p)
+    case StringStartsWith("path", p: String) => startsWith(_.min_path, _.max_path, p)
+    // null-count pruning: a null-free file can't satisfy IS NULL, an
+    // all-null file can't satisfy IS NOT NULL (None = pre-field manifest →
+    // keep, pruning is never optimistic)
+    case IsNull(c) if nullCount.contains(c) =>
+      e => nullCount(c)(e).forall(_ > 0L)
+    case IsNotNull(c) if nullCount.contains(c) =>
+      e => nullCount(c)(e).forall(_ < e.record_count)
+    case And(l, r) =>
+      val (a, b) = (compile(l), compile(r))
+      e => a(e) && b(e)
+    case Or(l, r) =>
+      val (a, b) = (compile(l), compile(r))
+      e => a(e) || b(e)
+    case _ => _ => true
+  }
+
+  private val nullCount: Map[String, ManifestEntry => Option[Long]] =
+    Map("repo" -> (_.nulls_repo), "path" -> (_.nulls_path), "lang" -> (_.nulls_lang))
+
+  private def bound(stat: ManifestEntry => String, v: String)(ok: Int => Boolean)
+      : ManifestEntry => Boolean = {
+    val u = UTF8String.fromString(v)
+    e => cmp(stat(e), u)(ok)
+  }
+
+  /** startsWith pruning: the strings with prefix p are exactly those in
+    * [p, sup) for the least string sup above them all, so a file may hold
+    * one iff max >= p and min < sup — and min < sup iff min < p or min
+    * itself starts with p. No sup is ever built, so a prefix of all U+FFFF
+    * (or one ending in a surrogate) needs no special case. */
+  private def startsWith(min: ManifestEntry => String, max: ManifestEntry => String,
+                         p: String): ManifestEntry => Boolean = {
+    val u = UTF8String.fromString(p)
+    e => cmp(max(e), u)(_ >= 0) && (min(e) == null || {
+      val m = UTF8String.fromString(min(e))
+      m.compareTo(u) < 0 || m.startsWith(u)
+    })
   }
 
   /** BUCKET pruning: on a bucket-clustered table, an equality/IN predicate
@@ -1200,7 +1256,6 @@ class GraftColumnarPartitionReader(absPath: String, required: StructType,
   import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
   import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-  import org.apache.hadoop.conf.Configuration
 
   private val columns = required.fieldNames
   // ROW-GROUP pruning: the pushed (always-residual) filters translate to a
@@ -1216,51 +1271,56 @@ class GraftColumnarPartitionReader(absPath: String, required: StructType,
   private val rowGroupFilter: Option[org.apache.parquet.filter2.predicate.FilterPredicate] =
     if (columns.contains("_pos")) None else GraftParquetFilters.translate(pushed)
 
-  // one ParquetFileReader serves the footer probe AND the page reads (the
-  // previous shape opened the footer twice: once to project, once to read)
-  private val pfr: org.apache.parquet.hadoop.ParquetFileReader = {
-    val conf = LakeConf.restore(confBag)
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(absPath), conf)
-    val b = org.apache.parquet.HadoopReadOptions.builder(conf)
-    rowGroupFilter.foreach(p =>
-      b.withRecordFilter(org.apache.parquet.filter2.compat.FilterCompat.get(p)))
-    new org.apache.parquet.hadoop.ParquetFileReader(in, b.build())
-  }
-  private val fileSchema = pfr.getFooter.getFileMetaData.getSchema
-  private val present: Array[String] = columns.filter(fileSchema.containsField)
-  // post-filter row count: with a filter the PAGE-level (column-index) path
-  // is used, so the count is the filtered row-range total; without one it is
-  // the footer count
-  private val fileRows: Long =
-    if (rowGroupFilter.isDefined) pfr.getFilteredRecordCount else pfr.getRecordCount
+  private val conf = LakeConf.restore(confBag)
+  // one open serves the footer probe AND the page reads: the footer and the
+  // stream it came from are handed to Spark's reader, which builds its
+  // ParquetFileReader on them instead of reopening the file
+  private val inputFile = org.apache.parquet.hadoop.util.HadoopInputFile
+    .fromPath(new org.apache.hadoop.fs.Path(absPath), conf)
+  private val stream = inputFile.newStream()
+  private val footer =
+    try org.apache.parquet.hadoop.ParquetFileReader.readFooter(inputFile,
+      org.apache.parquet.HadoopReadOptions.builder(conf).build(), stream)
+    catch { case e: Throwable => stream.close(); throw e }
+  private val fileSchema = footer.getFileMetaData.getSchema
+  private val presentSchema =
+    StructType(required.fields.filter(f => fileSchema.containsField(f.name)))
+  private val present: Array[String] = presentSchema.fieldNames
   private val allPresent = present.length == columns.length
   private val presentIdx: Map[String, Int] = present.zipWithIndex.toMap
-  @volatile private var pfrClosed = false
-  private def closePfr(): Unit = if (!pfrClosed) { pfrClosed = true; pfr.close() }
 
   private val reader: VectorizedParquetRecordReader =
-    if (present.isEmpty) { closePfr(); null }
-    else {
-      val req = new org.apache.parquet.schema.MessageType(fileSchema.getName,
-        present.map(c => fileSchema.getType(Seq(c): _*)): _*)
-      pfr.setRequestedSchema(req) // column projection for the page reads
+    if (present.isEmpty) { stream.close(); null }
+    else try {
+      import org.apache.parquet.hadoop.ParquetInputFormat
+      import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+      import org.apache.spark.sql.internal.SQLConf
+      // the conf Spark's reader reads: the requested (present) columns for
+      // ParquetReadSupport's projection, the schema-conversion flags its
+      // schema-only overload fixes to false, and the row-group filter, which
+      // ParquetFileReader applies to row groups AND column-index pages (the
+      // surviving pages carry the row indexes the vectorized decoder uses
+      // for synchronized row skipping across columns)
+      conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, presentSchema.json)
+      conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+      Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+        SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+        SQLConf.LEGACY_PARQUET_NANOS_AS_LONG).foreach(e => conf.setBoolean(e.key, false))
+      rowGroupFilter.foreach(ParquetInputFormat.setFilterPredicate(conf, _))
+      // Spark's reader casts its split to the mapred FileSplit
+      val split = new org.apache.hadoop.mapred.FileSplit(
+        new org.apache.hadoop.fs.Path(absPath), 0L, inputFile.getLength, Array.empty[String])
+      val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+        conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
       val r = new VectorizedParquetRecordReader(
         /* useOffHeap = */ false, /* capacity = */ 4096)
-      // with a filter, read FILTERED row groups: parquet applies the
-      // row-group statistics filter AND the column-index (page-level)
-      // filter, and the surviving pages carry row indexes the vectorized
-      // decoder uses for synchronized row skipping across columns — the
-      // exact read path Spark's own parquet source drives (its
-      // ParquetRowGroupReaderImpl delegates to readNextFilteredRowGroup)
-      val nextGroup: () => org.apache.parquet.column.page.PageReadStore =
-        if (rowGroupFilter.isDefined) () => pfr.readNextFilteredRowGroup()
-        else () => pfr.readNextRowGroup()
-      org.apache.spark.sql.execution.datasources.parquet.GraftVectorizedReaderBridge
-        .init(r, fileSchema, req, nextGroup, () => closePfr(), fileRows.toInt)
+      r.initialize(split, ctx, Some(inputFile), Some(stream), Some(footer))
       r.resultBatch() // allocates the column vectors (initBatch) — nextBatch
       r               // NPEs if called before the batch exists
-    }
+    } catch { case e: Throwable => stream.close(); throw e }
+  // rows of a file holding none of the requested columns: the footer count
+  // (a superset of any filtered count; every pushed filter stays residual)
+  private lazy val fileRows: Long = footer.getBlocks.asScala.map(_.getRowCount).sum
   private var emittedEmpty = false
 
   override def next(): Boolean =
@@ -1297,8 +1357,8 @@ class GraftColumnarPartitionReader(absPath: String, required: StructType,
   }
 
   // running file-ordinal offset for the `_pos` metadata column — the
-  // vectorized reader never skips rows (no parquet filter pushed), so batch
-  // row counts sum to exact file positions
+  // row-group filter is off whenever `_pos` is read, so the vectorized
+  // reader skips no rows and batch row counts sum to exact file positions
   private var posOffset = 0L
 
   /** a requested column absent from the file's footer: `_file` is the
@@ -1318,10 +1378,7 @@ class GraftColumnarPartitionReader(absPath: String, required: StructType,
     v
   }
 
-  override def close(): Unit = {
-    if (reader != null) reader.close()
-    closePfr()
-  }
+  override def close(): Unit = if (reader != null) reader.close()
 }
 
 class GraftPartitionReader(absPath: String, columns: Array[String],

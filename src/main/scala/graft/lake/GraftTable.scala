@@ -314,18 +314,23 @@ class GraftTable(val spark: SparkSession, val location: String,
     val maxBytes = spark.conf.get("spark.graft.manifest.localReadMaxBytes",
       (4L << 20).toString).toLong
     if (maxBytes <= 0 || data.size > 64) return None
+    // one stat per shard serves the size gate AND the cached read below
+    val statted = scala.collection.mutable.ArrayBuffer
+      .empty[(ManifestShard, org.apache.hadoop.fs.FileStatus)]
     var total = 0L
     val it = data.iterator
     while (it.hasNext) {
       val sh = it.next()
-      total += (if (io.isDirectory(sh.path)) io.listWithSizes(sh.path).values.sum
-                else io.size(sh.path))
+      val st = io.status(sh.path).getOrElse(
+        throw new java.io.FileNotFoundException(s"manifest shard ${io.abs(sh.path)} is missing"))
+      total += (if (st.isDirectory) io.listWithSizes(sh.path).values.sum else st.getLen)
       if (total > maxBytes) return None
+      statted += sh -> st
     }
-    val removed = data.filter(_.kind == "remove")
-      .flatMap(sh => MetaIO.readRemoves(io, sh.path)).toSet
-    val adds = data.filter(_.kind == "add")
-      .flatMap(sh => MetaIO.readEntries(io, sh.path).map(e => (e, sh.seq.toLong)))
+    val removed = statted.collect { case (sh, st) if sh.kind == "remove" =>
+      MetaIO.readRemoves(io, st) }.flatten.toSet
+    val adds = statted.toSeq.collect { case (sh, st) if sh.kind == "add" =>
+      MetaIO.readEntries(io, sh.path, st).map(e => (e, sh.seq.toLong)) }.flatten
     Some(if (removed.isEmpty) adds else adds.filterNot(p => removed(p._1.file_path)))
   }
 

@@ -23,30 +23,52 @@ import java.nio.charset.StandardCharsets
   * Spark's own reads of the same table work on. Driver-side code takes the
   * session's conf; executor-side classes receive `capture()`'s override bag
   * (serialized with the factory that created them at plan time) and rebuild
-  * via `restore`. */
+  * via `restore`.
+  *
+  * Defaults are parsed ONCE per JVM: a bare `new Configuration()` re-reads
+  * the default XML resources by searching every jar on the classpath
+  * (milliseconds per call, paid per table handle, reader factory and file
+  * reader), while a copy of a loaded conf is a map copy. `defaults` is the
+  * only bare `new Configuration()` in the engine. It cannot go stale:
+  * Hadoop's `addDefaultResource` reloads every registered Configuration,
+  * this one and its copies included; and were it ever behind, a captured
+  * bag would only grow into a superset of the true diff, still correct.
+  * A copy takes the SOURCE's class loader, so every copy is reset to the
+  * loader a fresh Configuration picks — the thread's context loader, else
+  * Configuration's own — or executor-side `fs.*.impl` and codec lookups
+  * would lose the user jars on the task thread's loader. */
 object LakeConf {
+  private lazy val defaults: Configuration = new Configuration()
+
+  /** a private, mutable copy of the classpath defaults. */
+  private def copyOfDefaults(): Configuration = {
+    val c = new Configuration(defaults)
+    c.setClassLoader(Option(Thread.currentThread.getContextClassLoader)
+      .getOrElse(classOf[Configuration].getClassLoader))
+    c
+  }
+
   /** the active/default session's Hadoop conf, else classpath defaults. */
   def current(): Configuration =
     org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .map(_.sessionState.newHadoopConf())
-      .getOrElse(new Configuration())
+      .getOrElse(copyOfDefaults())
 
   /** the session's overrides vs classpath defaults — small and
     * Serializable, safe to embed in DSv2 factories and task closures.
     * Empty when no session is reachable (executor-side construction). */
   def capture(): Array[(String, String)] = {
     import scala.jdk.CollectionConverters._
-    val base = new Configuration()
     current().iterator().asScala
       .map(e => e.getKey -> e.getValue)
-      .filter { case (k, v) => base.getRaw(k) != v }
+      .filter { case (k, v) => defaults.getRaw(k) != v }
       .toArray
   }
 
   /** defaults + a captured override bag. */
   def restore(bag: Array[(String, String)]): Configuration = {
-    val c = new Configuration()
+    val c = copyOfDefaults()
     bag.foreach { case (k, v) => c.set(k, v) }
     c
   }

@@ -36,18 +36,20 @@ private[lake] final class MetaCache[V](cap: Int) {
     * missing path answers `absent` and a directory is parsed on every call,
     * neither cached; any other stat fault reaches the caller. */
   def get(io: LakeIO, rel: String, absent: V)(parse: FileStatus => V): V =
-    io.status(rel) match {
-      case None => absent
-      case Some(st) if st.isDirectory => parse(st)
-      case Some(st) =>
-        val key = io.abs(rel).toString
-        val hit = lru.get(key)
-        if (hit != null && hit._1 == st.getLen && hit._2 == st.getModificationTime) hit._3
-        else {
-          val v = parse(st)
-          lru.put(key, (st.getLen, st.getModificationTime, v))
-          v
-        }
+    io.status(rel).fold(absent)(getAt(io, rel, _)(parse))
+
+  /** [[get]] for a file the caller has already statted as `st`. */
+  def getAt(io: LakeIO, rel: String, st: FileStatus)(parse: FileStatus => V): V =
+    if (st.isDirectory) parse(st)
+    else {
+      val key = io.abs(rel).toString
+      val hit = lru.get(key)
+      if (hit != null && hit._1 == st.getLen && hit._2 == st.getModificationTime) hit._3
+      else {
+        val v = parse(st)
+        lru.put(key, (st.getLen, st.getModificationTime, v))
+        v
+      }
     }
 
   private def dropUnder(prefix: String): Unit = lru.keySet.removeIf(_.startsWith(prefix))
@@ -270,11 +272,12 @@ object MetaIO {
   private def optStr(g: Group, field: String): String =
     if (g.getFieldRepetitionCount(field) == 0) null else g.getString(field, 0)
 
-  /** manifest entries of one shard, read driver-side — the small-manifest
-    * fast path that lets scan planning skip Spark jobs entirely. Reads both
-    * MetaIO- and Spark-written shards (same 3-level LIST layout). */
-  def readEntries(io: LakeIO, rel: String): Seq[ManifestEntry] =
-    MetaCache.entries.get(io, rel, Seq.empty) { st =>
+  /** manifest entries of one shard, statted by the caller as `st`, read
+    * driver-side — the small-manifest fast path that lets scan planning skip
+    * Spark jobs entirely. Reads both MetaIO- and Spark-written shards (same
+    * 3-level LIST layout). */
+  def readEntries(io: LakeIO, rel: String, st: FileStatus): Seq[ManifestEntry] =
+    MetaCache.entries.getAt(io, rel, st) { st =>
       readGroups(io, st).map { g =>
         ManifestEntry(
           optStr(g, "file_path"), optStr(g, "partition"),
@@ -292,8 +295,8 @@ object MetaIO {
     }
 
   /** removed file paths of one remove shard, driver-side. */
-  def readRemoves(io: LakeIO, rel: String): Seq[String] =
-    readGroups(io, rel).map(g => g.getString("file_path", 0))
+  def readRemoves(io: LakeIO, st: FileStatus): Seq[String] =
+    readGroups(io, st).map(g => g.getString("file_path", 0))
 
   def readShards(io: LakeIO, rel: String): Seq[ManifestShard] =
     MetaCache.shardLists.get(io, rel, Seq.empty) { st =>
