@@ -79,10 +79,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
         // per microbatch (default: all available) — bounds per-batch work
         // when a stream catches up on a long append backlog
         val maxVersions = Option(properties.get("maxVersionsPerBatch")).map(_.toLong)
-        // .option("columnar", false): row-at-a-time fallback reader, kept for
-        // A/B measurement and as an escape hatch — default is columnar
-        val columnar = Option(properties.get("columnar")).forall(_.toBoolean)
-        new GraftSparkTable(location, snapshot, columnar, fromSnapshot, maxVersions,
+        new GraftSparkTable(location, snapshot, fromSnapshot, maxVersions,
           writeBranch = branch)
     }
   }
@@ -106,7 +103,6 @@ object GraftDataSource {
 }
 
 class GraftSparkTable(location: String, snapshot: Option[Long] = None,
-                      columnar: Boolean = true,
                       fromSnapshot: Option[Long] = None,
                       maxVersionsPerBatch: Option[Long] = None,
                       // path-based handles accept subset schemas on write
@@ -161,8 +157,7 @@ class GraftSparkTable(location: String, snapshot: Option[Long] = None,
     caps
   }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(location, snapshot, columnar, fromSnapshot,
-      maxVersionsPerBatch, evolved)
+    new GraftScanBuilder(location, snapshot, fromSnapshot, maxVersionsPerBatch, evolved)
 
   /** SQL `DELETE FROM` (SupportsDelete): metadata-only drop of files whose
     * stats prove every row matches, copy-on-write rewrite of the rest —
@@ -225,7 +220,6 @@ class GraftSparkTable(location: String, snapshot: Option[Long] = None,
 }
 
 class GraftScanBuilder(location: String, snapshot: Option[Long] = None,
-                       columnar: Boolean = true,
                        fromSnapshot: Option[Long] = None,
                        maxVersionsPerBatch: Option[Long] = None,
                        tableSchema: StructType = GraftDataSource.schema)
@@ -337,7 +331,7 @@ class GraftScanBuilder(location: String, snapshot: Option[Long] = None,
   override def build(): Scan = aggPushed match {
     case Some(aggs) => new GraftAggScan(location, snapshot, aggs)
     case None =>
-      new GraftScan(location, pushed, required, snapshot, columnar, fromSnapshot,
+      new GraftScan(location, pushed, required, snapshot, fromSnapshot,
         maxVersionsPerBatch, limit, topN)
   }
 }
@@ -361,7 +355,7 @@ object GraftScanBuilder {
 }
 
 class GraftScan(location: String, pushed: Array[Filter], required: StructType,
-                snapshot: Option[Long] = None, columnar: Boolean = true,
+                snapshot: Option[Long] = None,
                 fromSnapshot: Option[Long] = None,
                 maxVersionsPerBatch: Option[Long] = None,
                 limit: Option[Int] = None,
@@ -579,10 +573,10 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
           else if (s.fileCount >= 0) s.fileCount.toInt
           else local.fold(m.count().toInt)(_.size)
         // pending merge-on-read deletes: plan from the seq-tagged manifest
-        // and ship each partition its add seq + the eqdel shard locations so
-        // the reader can apply the deletes per task (row-reader path; stats
-        // then over-count by the not-yet-materialized deleted rows — an
-        // upper bound, same direction Iceberg's stats drift under MoR)
+        // and ship each partition its add seq + the delete shard locations
+        // so the filtering reader applies the deletes per task (stats then
+        // over-count by the not-yet-materialized deleted rows — an upper
+        // bound, same direction Iceberg's stats drift under MoR)
         val eqdels =
           if (fromSnapshot.isDefined) Seq.empty // appends after a delete are unaffected by it
           else table.eqDeleteShards(s).map(sh => table.io.abs(sh.path).toString)
@@ -604,7 +598,7 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
           BloomIndex.prunedManifest(table, man, filters)
             .filter(GraftScan.manifestPredicate(filters) && GraftScan.bucketPredicate(cands))
         if (eqdels.nonEmpty || posdels.nonEmpty) {
-          bucketInfo = None // pending MoR deletes: row path, no key grouping
+          bucketInfo = None // pending MoR deletes: filtered rows, no key grouping
           topNCap = None    // surviving-row prefixes are not sorted prefixes
           val kept = local match {
             case Some(es) => es.collect { case (e, seq) if survives(e) =>
@@ -683,15 +677,14 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory = {
     planInputPartitions() // resolves the TopN cap from the planned layout
-    new GraftReaderFactory(required, columnar, limit.orElse(topNCap),
-      pushed ++ runtime)
+    new GraftReaderFactory(required, limit.orElse(topNCap), pushed ++ runtime)
   }
 
   /** `spark.readStream.format("graft")`: each microbatch is the appends-only
     * changelog between two snapshot versions. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GraftMicroBatchStream(location, pushed, required, columnar, fromSnapshot,
+    new GraftMicroBatchStream(location, pushed, required, fromSnapshot,
       maxVersionsPerBatch)
 }
 
@@ -706,7 +699,7 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
   * write-ahead log, no sidecar state. Pushed filters still prune the
   * changelog's files by manifest stats before any file is opened. */
 class GraftMicroBatchStream(location: String, pushed: Array[Filter],
-                            required: StructType, columnar: Boolean,
+                            required: StructType,
                             fromSnapshot: Option[Long],
                             maxVersionsPerBatch: Option[Long] = None)
   extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
@@ -750,7 +743,7 @@ class GraftMicroBatchStream(location: String, pushed: Array[Filter],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, columnar, None, pushed)
+    new GraftReaderFactory(required, None, pushed)
 }
 
 object GraftScan {
@@ -912,11 +905,13 @@ object GraftScan {
     }
 }
 
-/** addSeq/eqDeletes/posDeletes carry the merge-on-read delete state when
-  * the scanned snapshot has pending delete shards: the reader filters rows
-  * whose key is equality-deleted at a seq GREATER than the file's add seq
-  * (the sequence rule), and rows whose (file, ordinal) address is position-
-  * deleted. Defaults mean "no pending deletes" — the common case. */
+/** One data file. addSeq/eqDeletes/posDeletes carry the merge-on-read
+  * delete state when the scanned snapshot has pending delete shards: such a
+  * partition reads as rows through GraftMorFilteringReader, which drops
+  * rows whose key is equality-deleted at a seq GREATER than the file's add
+  * seq (the sequence rule) and rows whose (file, ordinal) address is
+  * position-deleted. Defaults mean "no pending deletes" — the common case,
+  * read columnar. */
 case class GraftInputPartition(absPath: String, addSeq: Long = Long.MaxValue,
                                eqDeletes: Seq[String] = Nil,
                                posDeletes: Seq[String] = Nil) extends InputPartition
@@ -1048,32 +1043,30 @@ class GraftAggReaderFactory extends PartitionReaderFactory {
     }
 }
 
-/** COLUMNAR read path (VERDICT r4 #1): each data file is decoded straight
-  * into ColumnarBatches by Spark's own VectorizedParquetRecordReader — the
-  * same vectorized decoder FileSourceScan uses, so the connector scan keeps
-  * whole-stage codegen's batch iteration instead of materializing one
-  * InternalRow object per row through parquet-mr's Group API. Columns
-  * missing from a file's footer (schema evolution) are spliced in as
-  * constant null vectors; the row-at-a-time Group reader remains only as
-  * the non-columnar fallback Spark may request. */
-class GraftReaderFactory(required: StructType, columnar: Boolean = true,
-                         limit: Option[Int] = None,
+/** The connector's ONE data-file decoder is Spark's own
+  * VectorizedParquetRecordReader (GraftColumnarPartitionReader, VERDICT r4
+  * #1): each data file decodes straight into ColumnarBatches — the same
+  * vectorized decoder FileSourceScan uses, so the connector scan keeps
+  * whole-stage codegen's batch iteration. Columns missing from a file's
+  * footer (schema evolution) are spliced in as constant null vectors. A
+  * partition carrying pending merge-on-read deletes reads the same batches
+  * as rows through GraftMorFilteringReader, which drops the deleted ones. */
+class GraftReaderFactory(required: StructType, limit: Option[Int] = None,
                          pushed: Array[Filter] = Array.empty)
   extends PartitionReaderFactory {
-  private val columns = required.fieldNames
   // session Hadoop overrides captured at plan time; installed executor-side
   // when a task builds its reader so the static delete-shard loaders (which
   // cannot receive a bag) see them too (LakeConf scaladoc)
   private val confBag = LakeConf.capture()
 
-  /** per-partition, but uniform per scan: a scan either planned with
-    * pending MoR deletes (every partition carries them → row path, which
-    * can filter) or without (→ columnar). Never mixed. */
+  /** columnar iff the partition carries no pending deletes. Uniform per
+    * scan: a scan planned with pending MoR deletes ships them to EVERY
+    * partition (→ rows, filtered), one planned without ships none. Bucketed
+    * partitions are planned only when no deletes are pending. */
   override def supportColumnarReads(partition: InputPartition): Boolean =
     partition match {
-      case p: GraftInputPartition =>
-        columnar && p.eqDeletes.isEmpty && p.posDeletes.isEmpty
-      case _: GraftBucketedPartition => columnar
+      case p: GraftInputPartition => p.eqDeletes.isEmpty && p.posDeletes.isEmpty
+      case _: GraftBucketedPartition => true
     }
 
   override def createColumnarReader(partition: InputPartition)
@@ -1083,26 +1076,18 @@ class GraftReaderFactory(required: StructType, columnar: Boolean = true,
       case p: GraftInputPartition =>
         new GraftColumnarPartitionReader(p.absPath, required, pushed, confBag)
       case b: GraftBucketedPartition =>
-        GraftChainedReader.columnar(b.absPaths, required, pushed, confBag)
+        GraftChainedReader(b.absPaths, required, pushed, confBag)
     }
     limit.fold(inner)(GraftLimitReaders.columnar(inner, _))
   }
 
-  private val fieldTypes: Map[String, DataType] =
-    required.fields.map(f => f.name -> f.dataType).toMap
-
+  /** the row path: a partition with pending deletes. The pushed filters
+    * stay off (GraftMorFilteringReader). */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     LakeConf.install(confBag)
-    val inner = partition match {
-      case p: GraftInputPartition =>
-        if (p.eqDeletes.isEmpty && p.posDeletes.isEmpty)
-          new GraftPartitionReader(p.absPath, columns, fieldTypes, confBag)
-        else
-          new GraftMorFilteringReader(p.absPath, columns, p.addSeq, p.eqDeletes,
-            fieldTypes, p.posDeletes, confBag)
-      case b: GraftBucketedPartition =>
-        GraftChainedReader.rows(b.absPaths, columns, fieldTypes, confBag)
-    }
+    val p = partition.asInstanceOf[GraftInputPartition]
+    val inner: PartitionReader[InternalRow] = new GraftMorFilteringReader(
+      p.absPath, required, p.addSeq, p.eqDeletes, p.posDeletes, confBag)
     limit.fold(inner)(GraftLimitReaders.rows(inner, _))
   }
 }
@@ -1213,34 +1198,27 @@ object GraftLimitReaders {
   * hold several bucket-pure files (appends after bucketize); each is opened
   * only when its predecessor is exhausted, so memory stays one-file-bounded. */
 object GraftChainedReader {
-  def columnar(paths: Seq[String], required: StructType,
-               pushed: Array[Filter] = Array.empty,
-               confBag: Array[(String, String)] = Array.empty)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    chain(paths, p => new GraftColumnarPartitionReader(p, required, pushed, confBag))
+  import org.apache.spark.sql.vectorized.ColumnarBatch
 
-  def rows(paths: Seq[String], columns: Array[String],
-           types: Map[String, DataType] = Map.empty,
-           confBag: Array[(String, String)] = Array.empty): PartitionReader[InternalRow] =
-    chain(paths, p => new GraftPartitionReader(p, columns, types, confBag))
-
-  private def chain[T](paths: Seq[String],
-                       open: String => PartitionReader[T]): PartitionReader[T] =
-    new PartitionReader[T] {
+  def apply(paths: Seq[String], required: StructType,
+            pushed: Array[Filter] = Array.empty,
+            confBag: Array[(String, String)] = Array.empty)
+      : PartitionReader[ColumnarBatch] =
+    new PartitionReader[ColumnarBatch] {
       private val it = paths.iterator
-      private var cur: PartitionReader[T] = _
+      private var cur: PartitionReader[ColumnarBatch] = _
       override def next(): Boolean = {
         while (true) {
           if (cur == null) {
             if (!it.hasNext) return false
-            cur = open(it.next())
+            cur = new GraftColumnarPartitionReader(it.next(), required, pushed, confBag)
           }
           if (cur.next()) return true
           cur.close(); cur = null
         }
         false
       }
-      override def get(): T = cur.get()
+      override def get(): ColumnarBatch = cur.get()
       override def close(): Unit = if (cur != null) { cur.close(); cur = null }
     }
 }
@@ -1381,151 +1359,66 @@ class GraftColumnarPartitionReader(absPath: String, required: StructType,
   override def close(): Unit = if (reader != null) reader.close()
 }
 
-class GraftPartitionReader(absPath: String, columns: Array[String],
-                           types: Map[String, DataType] = Map.empty,
-                           confBag: Array[(String, String)] = Array.empty)
-  extends PartitionReader[InternalRow] {
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-  import org.apache.parquet.example.data.Group
-  import org.apache.hadoop.conf.Configuration
-
-  // per-column Spark type for the typed Group accessors; base columns are
-  // strings apart from z, evolved columns carry their declared type
-  private val dts: Array[DataType] = columns.map { c =>
-    types.getOrElse(c, if (c == "z") LongType else StringType)
-  }
-
-  private val conf = LakeConf.restore(confBag)
-  locally {
-    // projection pushdown: request only the needed columns, with each
-    // field's type/repetition taken from the FILE's own footer — files
-    // written by different writers disagree on e.g. z's requiredness, and
-    // parquet-mr rejects a projection whose repetition mismatches
-    if (columns.nonEmpty) {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(absPath), conf)
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val fileSchema = try rd.getFooter.getFileMetaData.getSchema finally rd.close()
-      val fields = columns.toSeq.filter(fileSchema.containsField)
-        .map(c => fileSchema.getType(fileSchema.getFieldIndex(c)))
-      if (fields.nonEmpty) {
-        val proj = new org.apache.parquet.schema.MessageType("graft", fields: _*)
-        conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-          proj.toString)
-      }
-    }
-  }
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(absPath))
-      .withConf(conf).build()
-  private var cur: Group = _
-  // `_pos` metadata column: this reader walks the file sequentially with
-  // nothing skipped, so its row count IS the file ordinal
-  private var ordinal = -1L
-
-  override def next(): Boolean = { cur = reader.read(); ordinal += 1; cur != null }
-
-  // `_file` metadata column: the reader knows its own file
-  private val filePathUtf8 = UTF8String.fromString(absPath)
-
-  override def get(): InternalRow = {
-    val row = new GenericInternalRow(columns.length)
-    var i = 0
-    while (i < columns.length) {
-      val c = columns(i)
-      if (c == "_file") { row.update(i, filePathUtf8); i += 1 }
-      else if (c == "_pos") { row.setLong(i, ordinal); i += 1 }
-      else {
-      val present = cur.getType.containsField(c) &&
-        cur.getFieldRepetitionCount(cur.getType.getFieldIndex(c)) > 0
-      if (!present) row.setNullAt(i)
-      else dts(i) match {
-        case LongType    => row.setLong(i, cur.getLong(c, 0))
-        case IntegerType => row.setInt(i, cur.getInteger(c, 0))
-        case DoubleType  => row.setDouble(i, cur.getDouble(c, 0))
-        case FloatType   => row.setFloat(i, cur.getFloat(c, 0))
-        case BooleanType => row.setBoolean(i, cur.getBoolean(c, 0))
-        case _           => row.update(i, UTF8String.fromString(cur.getString(c, 0)))
-      }
-      i += 1
-      }
-    }
-    row
-  }
-
-  override def close(): Unit = reader.close()
-}
-
 /** Row reader applying pending MERGE-ON-READ deletes per task (the Iceberg
-  * equality-delete read shape: the key set is loaded into task memory once
-  * per executor and each row probes it). The key columns are read in
-  * addition to the projection when the query didn't ask for them, used for
-  * the probe, and dropped from the emitted row. A row is deleted when its
-  * (repo, path, commit) key appears with del_seq > the file's add seq. */
-class GraftMorFilteringReader(absPath: String, outColumns: Array[String],
+  * delete read shape: each delete set is loaded into task memory once per
+  * executor and every row probes it), layered over the columnar decoder. It
+  * walks each batch's rows in file order, so a running count is the row's
+  * file ordinal. A row is dropped when its ordinal is position-deleted, or
+  * when its (repo, path, commit) key is equality-deleted with del_seq > the
+  * file's add seq (the sequence rule). Key columns the query didn't ask for
+  * are read for the probe and projected away. No pushed filter reaches the
+  * decoder: a skipped row group would shift every later ordinal, and the
+  * positional deletes and `_pos` address rows by it. */
+class GraftMorFilteringReader(absPath: String, required: StructType,
                               addSeq: Long, eqDeletes: Seq[String],
-                              types: Map[String, DataType] = Map.empty,
-                              posDeletes: Seq[String] = Nil,
+                              posDeletes: Seq[String],
                               confBag: Array[(String, String)] = Array.empty)
   extends PartitionReader[InternalRow] {
   // equality probing needs the key columns; a posdel-only scan must NOT
   // widen its read set for keys it will never compare
   private val keyCols =
-    if (eqDeletes.isEmpty) Array.empty[String] else Array("repo", "path", "commit")
-  private val readCols = (outColumns ++ keyCols).distinct
-  private val inner = new GraftPartitionReader(absPath, readCols, types, confBag)
-  private val identity = readCols.sameElements(outColumns)
-  private val outIdx = outColumns.map(c => readCols.indexOf(c))
-  private val keyIdx = keyCols.map(c => readCols.indexOf(c))
+    if (eqDeletes.isEmpty) Seq.empty[String] else Seq("repo", "path", "commit")
+  private val readSchema = StructType(required.fields ++ keyCols
+    .filterNot(required.fieldNames.contains).map(StructField(_, StringType)))
+  private val inner = new GraftColumnarPartitionReader(absPath, readSchema,
+    Array.empty, confBag)
+  private val keyIdx = keyCols.map(readSchema.fieldIndex).toArray
+  // the required columns lead the read schema; the probe-only keys trail it
+  private val projection =
+    if (readSchema.length == required.length) None
+    else Some(org.apache.spark.sql.catalyst.ProjectingInternalRow(required,
+      required.indices))
   private lazy val dels = GraftEqDeletes.keyMap(eqDeletes)
-  // position deletes for THIS file: the inner reader walks the parquet file
-  // sequentially with nothing skipped, so its row count IS the file ordinal
   private lazy val posDels: java.util.HashSet[java.lang.Long] =
     GraftPosDeletes.forFile(posDeletes, GraftPosDeletes.relOf(absPath))
+  private var rows: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
   private var ordinal = -1L
   private var cur: InternalRow = _
 
   override def next(): Boolean = {
-    while (inner.next()) {
-      ordinal += 1
-      if (posDeletes.isEmpty || !posDels.contains(ordinal)) {
-      val row = inner.get()
-      val r = row.asInstanceOf[GenericInternalRow]
-      val key = if (eqDeletes.isEmpty) null else GraftEqDeletes.key(
-        strOf(r, keyIdx(0)), strOf(r, keyIdx(1)), strOf(r, keyIdx(2)))
-      val d = if (key == null) null else dels.get(key)
-      // a null key column can never equal a delete key - keep the row
-      if (d == null || addSeq >= d.longValue()) {
-        cur =
-          if (identity) row
-          else {
-            val out = new GenericInternalRow(outColumns.length)
-            var i = 0
-            while (i < outColumns.length) {
-              out.update(i, valueAt(r, outIdx(i)))
-              i += 1
-            }
-            out
-          }
-        return true
+    while (true) {
+      while (rows.hasNext) {
+        val r = rows.next()
+        ordinal += 1
+        if (!(posDeletes.nonEmpty && posDels.contains(ordinal)) && !eqDeleted(r)) {
+          cur = projection.fold(r) { p => p.project(r); p }
+          return true
+        }
       }
-      }
+      if (!inner.next()) return false
+      rows = inner.get().rowIterator()
     }
     false
   }
 
-  // values are read back type-agnostically (the row holds UTF8String or
-  // java.lang.Long); isNullAt/get with the right ordinal avoids the
-  // protected genericGet accessor
-  private def valueAt(r: GenericInternalRow, i: Int): Any =
-    if (r.isNullAt(i)) null
-    else r.values(i)
-
-  private def strOf(r: GenericInternalRow, i: Int): String = {
-    val v = valueAt(r, i)
-    if (v == null) null else v.toString
-  }
+  // a null key column can never equal a delete key - keep the row
+  private def eqDeleted(r: InternalRow): Boolean =
+    keyIdx.nonEmpty && !r.isNullAt(keyIdx(0)) && !r.isNullAt(keyIdx(1)) &&
+      !r.isNullAt(keyIdx(2)) && {
+        val d = dels.get((r.getUTF8String(keyIdx(0)), r.getUTF8String(keyIdx(1)),
+          r.getUTF8String(keyIdx(2))))
+        d != null && d.longValue() > addSeq
+      }
 
   override def get(): InternalRow = cur
   override def close(): Unit = inner.close()
@@ -1574,30 +1467,32 @@ object GraftPosDeletes {
   * eqdel shard set), shared by every task of the scan - the same "load the
   * delete file once, probe per row" shape Iceberg's readers use. */
 object GraftEqDeletes {
+  /** a probe key: the (repo, path, commit) values themselves, compared
+    * bytewise — no separator that a value could also contain. */
+  type Key = (UTF8String, UTF8String, UTF8String)
+
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.HashMap[String, java.lang.Long]]()
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.HashMap[Key, java.lang.Long]]()
 
-  /** composite probe key; null when any component is null (SQL equality
-    * with null never matches). NUL separators cannot collide: the key
-    * columns come from parquet strings, which never contain NUL here. */
-  def key(repo: String, path: String, commit: String): String =
-    if (repo == null || path == null || commit == null) null
-    else repo + "\u0000" + path + "\u0000" + commit
-
-  def keyMap(shardDirs: Seq[String]): java.util.HashMap[String, java.lang.Long] = {
+  def keyMap(shardDirs: Seq[String]): java.util.HashMap[Key, java.lang.Long] = {
     val k = shardDirs.sorted.mkString("\u0001")
     if (cache.size > 32) cache.clear() // stale shard sets from old snapshots
     cache.computeIfAbsent(k, _ => load(shardDirs))
   }
 
-  private def load(shardDirs: Seq[String]): java.util.HashMap[String, java.lang.Long] = {
-    val m = new java.util.HashMap[String, java.lang.Long]()
+  private def load(shardDirs: Seq[String]): java.util.HashMap[Key, java.lang.Long] = {
+    val m = new java.util.HashMap[Key, java.lang.Long]()
     val conf = LakeConf.installedConf()
+    // a null key component (SQL equality with null never matches) deletes
+    // nothing
+    def str(g: org.apache.parquet.example.data.Group, f: String): UTF8String =
+      if (g.getFieldRepetitionCount(f) == 0) null
+      else UTF8String.fromBytes(g.getBinary(f, 0).getBytes)
     // a missing shard throws: reading it as empty would resurrect its rows
     for (dir <- shardDirs) MetaIO.foreachGroup(new org.apache.hadoop.fs.Path(dir), conf) { g =>
-      val kk = key(g.getString("repo", 0), g.getString("path", 0), g.getString("commit", 0))
-      if (kk != null)
-        m.merge(kk, java.lang.Long.valueOf(g.getLong("del_seq", 0)),
+      val key = (str(g, "repo"), str(g, "path"), str(g, "commit"))
+      if (key._1 != null && key._2 != null && key._3 != null)
+        m.merge(key, java.lang.Long.valueOf(g.getLong("del_seq", 0)),
           (a, b) => if (a.longValue() >= b.longValue()) a else b)
     }
     m

@@ -146,8 +146,8 @@ class GraftCowScan(location: String, op: GraftRowLevelOperation,
         // rewrite — deleted rows would be carried into the rewritten files
         // (equality) or the rewritten files' new paths would orphan the
         // pending addresses (positional). The DELTA path instead APPLIES
-        // pending deletes per task (same filtering readers as the public
-        // scan), so stacked MoR DML needs no materialization in between.
+        // pending deletes per task (the public scan's filtering reader), so
+        // stacked MoR DML needs no materialization in between.
         if (!delta) require(!table.hasMorDeletes(s),
           "pending merge-on-read deletes: a copy-on-write SQL MERGE/UPDATE " +
           "would resurrect logically deleted rows — run MorDelete.applyDeletes first")
@@ -175,8 +175,11 @@ class GraftCowScan(location: String, op: GraftRowLevelOperation,
     out
   }
 
+  // the public scan's factory: columnar while no deletes are pending,
+  // filtered rows otherwise; no pushed filter reaches the decoder, since a
+  // skipped row group would shift the delta path's `_pos` row ids
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, columnar = false)
+    new GraftReaderFactory(required)
 }
 
 /** The ReplaceData write: rewritten rows land in task-side parquet files,

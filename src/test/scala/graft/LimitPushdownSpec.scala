@@ -1,10 +1,11 @@
 package graft
 
-import graft.lake.{GraftTable, MorDelete}
+import graft.lake.{GraftInputPartition, GraftReaderFactory, GraftTable, MorDelete}
 import graft.synth.SourceFiles
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.EqualTo
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import java.nio.file.Files
 
 /** DSv2 LIMIT pushdown: `LIMIT k` over a many-file table must plan only the
@@ -97,14 +98,37 @@ class LimitPushdownSpec extends SparkTestBase {
   }
 
   test("row-reader fallback path honors the per-partition cap") {
+    // the builder refuses the pushdown while deletes are pending, but the
+    // scan re-resolves its snapshot, so a capped factory can still meet a
+    // partition carrying deletes: its row reader caps the SURVIVORS
+    import spark.implicits._
     val dir = freshDir("graft-limit-rows")
-    val df = synthDf(150)
-    new GraftTable(spark, dir).append(df.repartition(3))
-
-    val limited = spark.read.format("graft").option("columnar", "false")
-      .load(dir).limit(13)
-    assert(limited.count() == 13)
-    assert(leafDesc(limited).contains("PushedLimit=13"))
+    val t = new GraftTable(spark, dir)
+    t.append(synthDf(150).coalesce(1))
+    // the file's rows in order, read before any delete
+    val rows = spark.read.format("graft").load(dir).select($"repo", $"_pos")
+      .as[(String, Long)].collect().sortBy(_._2)
+    val first = rows.head._1
+    MorDelete.deleteWhere(t, col("repo") === first)
+    MorDelete.deleteWherePositional(t, col("_pos") < 5L)
+    val s = t.currentSnapshot.get
+    val (file, seq) = t.manifestWithSeq(s).select("file_path", "add_seq")
+      .as[(String, Long)].head()
+    val part = GraftInputPartition(t.io.abs(file).toString, seq,
+      t.eqDeleteShards(s).map(sh => t.io.abs(sh.path).toString),
+      t.posDeleteShards(s).map(sh => t.io.abs(sh.path).toString))
+    val required = StructType(Seq(StructField("repo", StringType),
+      StructField("_pos", LongType)))
+    val factory = new GraftReaderFactory(required, limit = Some(13))
+    assert(!factory.supportColumnarReads(part))
+    val r = factory.createReader(part)
+    val got = try Iterator.continually(r).takeWhile(_.next())
+      .map(x => (x.get().getUTF8String(0).toString, x.get().getLong(1))).toList
+      finally r.close()
+    // the first 13 survivors in file order
+    val want = rows.filter(w => w._1 != first && w._2 >= 5L).take(13).toList
+    assert(want.length == 13)
+    assert(got == want)
   }
 
   test("columnar batch cap truncates mid-batch (k below one batch)") {

@@ -9,7 +9,7 @@ import java.nio.file.Files
 
 /** Schema evolution (Iceberg-style add/drop column, metadata-only commits):
   * old files read the new column as null on BOTH scan paths (library +
-  * DSv2 columnar and row fallback), every CoW rewrite carries evolved
+  * DSv2, columnar and under pending deletes), every CoW rewrite carries evolved
   * columns through, time travel sees the schema as of the pinned snapshot,
   * and dropped names are tombstoned so they can never resurrect old bytes. */
 class SchemaEvolutionSpec extends SparkTestBase {
@@ -127,10 +127,19 @@ class SchemaEvolutionSpec extends SparkTestBase {
     assert(cols.filter(col("stars") === 7).count() == 20)
     assert(cols.filter(col("stars").isNull).count() == 40)
 
-    // row-at-a-time fallback reader gives the same answer (typed accessors)
-    val rows = spark.read.format("graft").option("columnar", "false").load(t.location)
+    // the row path (pending merge-on-read deletes) gives the same typed
+    // answer: one extra row, appended and equality-deleted again
+    import spark.implicits._
+    t.append(SourceFiles.generate(1, 5).toDF().withColumn("path", lit("se/extra"))
+      .withColumn("stars", lit(8)))
+    MorDelete.deleteWhere(t, Array[org.apache.spark.sql.sources.Filter](
+      EqualTo("path", "se/extra")))
+    assert(t.hasPendingDeletes)
+    val rows = spark.read.format("graft").load(t.location)
+    assert(rows.count() == 60)
     assert(rows.filter(col("stars") === 7).count() == 20)
     assert(rows.filter(col("stars").isNull).count() == 40)
+    assert(rows.filter(col("stars") === 8).count() == 0)
 
     // time travel: a pre-evolution pin reports the OLD schema
     val old = spark.read.format("graft").option("snapshot", preEvolveV).load(t.location)

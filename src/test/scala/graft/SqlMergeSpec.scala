@@ -8,7 +8,8 @@ import java.nio.file.Files
 /** SQL MERGE INTO / UPDATE through Spark's row-level-operation framework
   * (group-based copy-on-write): row-set correctness vs an independent
   * recompute, GROUP pruning (only affected files rewritten), `_file`
-  * metadata column on plain reads, snapshot isolation, evolved-column
+  * metadata column on plain reads and under pending deletes, snapshot
+  * isolation, evolved-column
   * carry-through, and the pending-MoR-delete refusal. */
 class SqlMergeSpec extends SparkTestBase {
   import org.apache.spark.sql.DataFrame
@@ -120,9 +121,19 @@ class SqlMergeSpec extends SparkTestBase {
       .select($"repo", $"_file")
     assert(cols.filter($"_file".isNull).count() == 0)
     assert(cols.select("_file").distinct().count() == 8) // one per data file
-    val rows = spark.read.format("graft").option("columnar", "false")
-      .load(t.location).select($"path", $"_file")
-    assert(rows.filter(!$"_file".contains("/data/")).count() == 0)
+    // under pending merge-on-read deletes, survivors keep their _file
+    def keyed = spark.read.format("graft").load(t.location)
+      .select($"repo", $"path", $"commit", $"_file")
+      .as[(String, String, String, String)].collect()
+    val before = keyed
+    val repo = before.head._1
+    graft.lake.MorDelete.deleteWhere(t, $"repo" === repo)
+    graft.lake.MorDelete.deleteWherePositional(t, length($"content") % 3 === 0)
+    assert(t.hasPendingDeletes)
+    val after = keyed
+    assert(after.nonEmpty && after.length < before.length)
+    assert(after.forall(_._4.contains("/data/")))
+    assert(after.toSet.subsetOf(before.toSet) && !after.exists(_._1 == repo))
   }
 
   test("MERGE carries evolved columns through the rewrite") {

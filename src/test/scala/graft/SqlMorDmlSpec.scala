@@ -11,7 +11,7 @@ import java.nio.file.Files
   * (_file, _pos) row ids, deletes become position-delete address shards,
   * inserts become ordinary data files, one snapshot per statement, no
   * target file rewritten. The `_pos` metadata column is also a public
-  * SELECT surface on both reader paths. */
+  * SELECT surface, columnar and under pending deletes. */
 class SqlMorDmlSpec extends SparkTestBase {
 
   private var catN = 0
@@ -36,16 +36,21 @@ class SqlMorDmlSpec extends SparkTestBase {
 
   test("_pos metadata column: sequential per file on both reader paths") {
     val (_, t) = freshSqlTable(120, "copy-on-write")
-    for (columnar <- Seq(true, false)) {
-      val read = spark.read.format("graft").option("columnar", columnar)
-        .load(t.location).select(col("_file"), col("_pos"))
-      // per file: positions are exactly 0..n-1
-      val bad = read.groupBy("_file")
-        .agg(count(lit(1)).as("n"), min("_pos").as("lo"),
-             max("_pos").as("hi"), countDistinct("_pos").as("d"))
-        .filter(col("lo") =!= 0 || col("hi") =!= col("n") - 1 || col("d") =!= col("n"))
-      assert(bad.count() == 0, s"non-sequential _pos (columnar=$columnar)")
-    }
+    import spark.implicits._
+    def read = spark.read.format("graft").load(t.location)
+      .select(col("_file"), col("_pos"), length(col("content")) % 3 === 0)
+    // per file: positions are exactly 0..n-1
+    val bad = read.groupBy("_file")
+      .agg(count(lit(1)).as("n"), min("_pos").as("lo"),
+           max("_pos").as("hi"), countDistinct("_pos").as("d"))
+      .filter(col("lo") =!= 0 || col("hi") =!= col("n") - 1 || col("d") =!= col("n"))
+    assert(bad.count() == 0, "non-sequential _pos")
+    // under a pending positional delete, survivors keep their _pos
+    val before = read.as[(String, Long, Boolean)].collect()
+    val n = MorDelete.deleteWherePositional(t, length(col("content")) % 3 === 0)
+    assert(n > 0 && t.hasPendingDeletes)
+    assert(read.as[(String, Long, Boolean)].collect().sorted.toSeq ==
+      before.filterNot(_._3).sorted.toSeq)
   }
 
   test("SQL UPDATE in merge-on-read mode: one snapshot, no file rewritten") {

@@ -5,14 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Connector-vs-prunedScan comparison at 10× bench scale (VERDICT r4 #1
   * "Done =" criterion): the same pruning predicate over the same maintained
-  * table, three read paths —
+  * table, two read paths —
   *
   *   prunedScan  — library API: pruned file list into the BUILT-IN parquet
   *                 source (FileSourceScan, vectorized, the gold standard)
   *   dsv2_col    — the DSv2 connector's columnar VectorizedParquetRecordReader
-  *                 path (this round)
-  *   dsv2_row    — the connector's parquet-mr Group row-at-a-time fallback
-  *                 (last round's only path), via .option("columnar", false)
   *
   * Each path runs the same aggregate (count + sum(length(content))) so the
   * scan, not the query, dominates. Best-of-k wall seconds per path.
@@ -62,7 +59,7 @@ object ConnectorScanBench {
 
     // two workloads: WIDE materializes the content strings (the string-copy
     // cost dominates any reader); NARROW projects only the z long column,
-    // where vectorized decode vs per-row Group objects is the whole story
+    // where the decoder is the whole story
     def agg(df: org.apache.spark.sql.DataFrame): Long =
       df.filter($"repo" === repo)
         .agg(count(lit(1)), sum(length($"content"))).head().getLong(0)
@@ -76,9 +73,7 @@ object ConnectorScanBench {
         val (df, _, _) = t.prunedScan(col("min_rh") <= rh && col("max_rh") >= rh)
         agg(df)
       }),
-      "dsv2_col" -> (() => agg(spark.read.format("graft").load(dir))),
-      "dsv2_row" -> (() => agg(
-        spark.read.format("graft").option("columnar", "false").load(dir))))
+      "dsv2_col" -> (() => agg(spark.read.format("graft").load(dir))))
 
     val narrowPaths = Seq(
       "pruned_scan" -> (() => {
@@ -86,9 +81,7 @@ object ConnectorScanBench {
         val (df, _, _) = t.prunedScan(col("min_rh") <= rh && col("max_rh") >= rh)
         aggNarrow(df)
       }),
-      "dsv2_col" -> (() => aggNarrow(spark.read.format("graft").load(dir))),
-      "dsv2_row" -> (() => aggNarrow(
-        spark.read.format("graft").option("columnar", "false").load(dir))))
+      "dsv2_col" -> (() => aggNarrow(spark.read.format("graft").load(dir))))
 
     def runSuite(tag: String,
                  ps: Seq[(String, () => Long)]): Map[String, (Double, Long)] = {
@@ -120,9 +113,7 @@ object ConnectorScanBench {
     def j(r: Map[String, (Double, Long)]) =
       f""""pruned_scan_sec":${r("pruned_scan")._1}%.3f,""" +
       f""""dsv2_col_sec":${r("dsv2_col")._1}%.3f,""" +
-      f""""dsv2_row_sec":${r("dsv2_row")._1}%.3f,""" +
-      f""""col_vs_pruned":${r("dsv2_col")._1 / r("pruned_scan")._1}%.2f,""" +
-      f""""row_vs_pruned":${r("dsv2_row")._1 / r("pruned_scan")._1}%.2f"""
+      f""""col_vs_pruned":${r("dsv2_col")._1 / r("pruned_scan")._1}%.2f"""
     println(s"""{"metric":"connector_scan","rows":$rows,"files":$total,""" +
       s""""wide":{${j(res)}},"narrow":{${j(resN)}},""" +
       f""""agg":{"full_scan_sec":${resA("full_scan")._1}%.3f,""" +

@@ -45,12 +45,19 @@ class LakeConfSpec extends SparkTestBase {
       val t = new GraftTable(spark, "seamlocal://" + Files.createTempDirectory("graft-seam"))
       val df = SourceFiles.generate(200, 3).toDF()
       t.append(df.repartition(2))
-      val want = df.select(sha2(col("content"), 256)).as[String].collect().sorted.toSeq
-      Seq("true", "false").foreach { columnar =>
-        val got = spark.read.format("graft").option("columnar", columnar).load(t.location)
-          .select(sha2(col("content"), 256)).as[String].collect().sorted.toSeq
-        assert(got == want, s"columnar=$columnar")
-      }
+      def read(df: org.apache.spark.sql.DataFrame) =
+        df.select(sha2(col("content"), 256)).as[String].collect().sorted.toSeq
+      assert(read(spark.read.format("graft").load(t.location)) == read(df))
+      // once more with pending deletes: the executor-side delete-shard
+      // loaders must resolve the scheme too
+      val repo = df.select("repo").as[String].head()
+      MorDelete.deleteWhere(t, col("repo") === repo)
+      MorDelete.deleteWherePositional(t, length(col("content")) % 3 === 0)
+      val s = t.currentSnapshot.get
+      assert(t.hasEqDeletes(s) && t.hasPosDeletes(s))
+      val want = read(df.filter(col("repo") =!= repo && length(col("content")) % 3 =!= 0))
+      assert(want.length < 200)
+      assert(read(spark.read.format("graft").load(t.location)) == want)
     } finally {
       hc.unset("fs.seamlocal.impl")
       hc.unset("fs.seamlocal.impl.disable.cache")
