@@ -34,7 +34,7 @@ object ManifestScaleDebug {
     // 1M synthetic entries, all under the small-file threshold, written as a
     // 16-partition add shard straight into the table's meta tree
     val addRel = "meta/manifest-add-v1.parquet"
-    spark.range(entries).repartition(16)
+    t.io.writeParquet(spark.range(entries).repartition(16)
       .select(
         concat(lit("data/fake/f"), col("id"), lit(".parquet")).as("file_path"),
         concat(lit("p"), (col("id") / 4096).cast("long")).as("partition"),
@@ -45,8 +45,7 @@ object ManifestScaleDebug {
         array(lit("scala")).as("langs"),
         col("id").as("min_z"), col("id").as("max_z"),
         lit(0L).as("min_rh"), lit(0L).as("max_rh"),
-        lit(0L).as("digest"))
-      .write.mode("overwrite").parquet(t.io.abs(addRel).toString)
+        lit(0L).as("digest")), addRel, overwrite = true)
     val snap = t.commitSparkShards(Seq(addRel), "synthetic-import",
       entries.toLong * 1000L, entries.toLong)
     require(snap.fileCount == entries.toLong)

@@ -82,7 +82,7 @@ object BloomIndex {
       .groupBy(regexp_extract(col("abs"), "(data/[^/]+/[^/]+)$", 1).as("file_path"))
       .agg(bloomAgg(col("h")).as("bloom"), count(lit(1)).as("n_keys"))
     val rel = sidecarRel(column, snap.version, bits)
-    side.write.mode("overwrite").parquet(table.io.abs(rel).toString)
+    table.io.writeParquet(side, rel, overwrite = true)
     val n = spark.read.parquet(table.io.abs(rel).toString).count()
     // drop superseded sidecars (best effort — a concurrent reader of an old
     // one only loses pruning, never correctness)

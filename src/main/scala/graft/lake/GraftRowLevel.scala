@@ -260,7 +260,7 @@ class GraftCowDataWriter(location: String, relPath: String,
   import org.apache.hadoop.conf.Configuration
   import org.apache.hadoop.fs.{Path => HPath}
 
-  private val conf = LakeConf.restore(confBag)
+  private val conf = ForkFreeLocalFileSystem.route(LakeConf.restore(confBag))
   private val absPath = new HPath(new HPath(location), relPath)
 
   private val lower = inputSchema.fieldNames.zipWithIndex
@@ -510,7 +510,7 @@ class GraftDeltaDataWriter(location: String, batch: String, suffix: String,
     .addField(Types.optional(PrimitiveTypeName.INT64).named("pos"))
     .named("spark_schema")
   private val posFactory = new SimpleGroupFactory(posType)
-  private val conf = LakeConf.restore(confBag)
+  private val conf = ForkFreeLocalFileSystem.route(LakeConf.restore(confBag))
   private val posAbs = new HPath(new HPath(location), posRel)
   private var posWriter: ParquetWriter[org.apache.parquet.example.data.Group] = _
   private var deleted = 0L

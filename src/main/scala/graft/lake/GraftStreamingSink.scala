@@ -121,7 +121,7 @@ class GraftStreamDataWriter(location: String, relPath: String, inputSchema: Stru
   import org.apache.hadoop.conf.Configuration
   import org.apache.hadoop.fs.{Path => HPath}
 
-  private val conf = LakeConf.restore(confBag)
+  private val conf = ForkFreeLocalFileSystem.route(LakeConf.restore(confBag))
   private val absPath = new HPath(new HPath(location), relPath)
 
   // case-insensitive input index per graft column (-1 = absent or wrong type)

@@ -913,7 +913,7 @@ class GraftTable(val spark: SparkSession, val location: String,
         }
       }
     }(org.apache.spark.sql.Encoders.row(dataSchema))
-    stripped.write.parquet(io.abs(outRel).toString)
+    io.writeParquet(stripped, outRel, overwrite = false)
 
     val sizes = io.listWithSizes(outRel)
       .filter { case (n, _) => !n.startsWith("_") && !n.startsWith(".") }
@@ -1085,8 +1085,7 @@ class GraftTable(val spark: SparkSession, val location: String,
     // under a uid name BEFORE the claim, never collected
     val rmRel = removedDf.map { rm =>
       val r = s"meta/manifest-remove-$uid.parquet"
-      rm.select(col("file_path").cast("string")).coalesce(1).write.mode("overwrite")
-        .parquet(io.abs(r).toString)
+      io.writeParquet(rm.select(col("file_path").cast("string")).coalesce(1), r, overwrite = true)
       r
     }
 
@@ -2167,7 +2166,7 @@ class GraftTable(val spark: SparkSession, val location: String,
             liveAll.repartitionByRange(shardsN, $"partition", $"min_z", $"file_path")
               .sortWithinPartitions($"partition", $"min_z", $"file_path")
         val addRel = s"meta/manifest-add-${UUID.randomUUID().toString.take(12)}.parquet"
-        live.write.mode("overwrite").parquet(io.abs(addRel).toString)
+        io.writeParquet(live, addRel, overwrite = true)
         // re-base: the new list holds exactly this shard directory; record
         // count comes from one agg over the freshly written shards (metadata)
         val r = spark.read.schema(GraftTable.manifestSchema)

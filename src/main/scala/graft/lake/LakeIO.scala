@@ -1,21 +1,11 @@
 package graft.lake
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{ChecksumException, FileStatus, FileSystem, Path => HPath}
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 
-/** Filesystem seam for the lake layer (VERDICT r2 "object-store-safe FS
-  * seam"): every table/maintenance file operation goes through the Hadoop
-  * `FileSystem` API — the same abstraction Spark and Iceberg use — so the
-  * table works unchanged against file://, hdfs://, s3a://, gs://, etc.
-  * No direct `java.nio.file` calls remain in table/maintenance logic.
-  *
-  * Atomicity note: `writeAtomic` uses create-temp + rename, which is atomic
-  * on POSIX and HDFS; object stores without atomic rename need a
-  * commit-service or conditional-put variant behind this same method — the
-  * single-writer maintenance pipeline only relies on readers never seeing a
-  * torn version-hint.
-  */
 /** Hadoop-Configuration seam. A bare `new Configuration()` sees only
   * classpath defaults (core-site.xml) and silently ignores everything set
   * through the standard `spark.hadoop.*` mechanism — s3a credentials,
@@ -29,14 +19,21 @@ import java.nio.charset.StandardCharsets
   * the default XML resources by searching every jar on the classpath
   * (milliseconds per call, paid per table handle, reader factory and file
   * reader), while a copy of a loaded conf is a map copy. `defaults` is the
-  * only bare `new Configuration()` in the engine. It cannot go stale:
+  * only bare `new Configuration()` in the engine, parquet-mr's builders
+  * included: MetaIO's readers take their conf from a `HadoopInputFile`,
+  * where `ParquetReader.builder(readSupport, path)` would first build a
+  * bare one. It cannot go stale:
   * Hadoop's `addDefaultResource` reloads every registered Configuration,
   * this one and its copies included; and were it ever behind, a captured
   * bag would only grow into a superset of the true diff, still correct.
   * A copy takes the SOURCE's class loader, so every copy is reset to the
   * loader a fresh Configuration picks — the thread's context loader, else
   * Configuration's own — or executor-side `fs.*.impl` and codec lookups
-  * would lose the user jars on the task thread's loader. */
+  * would lose the user jars on the task thread's loader.
+  *
+  * The confs built here serve reads and writes alike. Writers add
+  * [[ForkFreeLocalFileSystem.route]] on top, so their `file:` writes start
+  * no process (the invariant is stated on that class). */
 object LakeConf {
   private lazy val defaults: Configuration = new Configuration()
 
@@ -93,6 +90,22 @@ object LakeConf {
   private[lake] def installedBagSnapshot: Array[(String, String)] = installedBag
 }
 
+/** Filesystem seam for the lake layer (VERDICT r2 "object-store-safe FS
+  * seam"): every table/maintenance file operation goes through the Hadoop
+  * `FileSystem` API — the same abstraction Spark and Iceberg use — so the
+  * table works unchanged against file://, hdfs://, s3a://, gs://, etc.
+  * No direct `java.nio.file` calls remain in table/maintenance logic.
+  *
+  * Writes on `file:` start no process: the seam's conf and
+  * [[LakeIO.writeParquet]] route them through [[ForkFreeLocalFileSystem]],
+  * which states that invariant.
+  *
+  * Atomicity note: `writeAtomic` uses create-temp + rename, which is atomic
+  * on POSIX and HDFS; object stores without atomic rename need a
+  * commit-service or conditional-put variant behind this same method — the
+  * single-writer maintenance pipeline only relies on readers never seeing a
+  * torn version-hint.
+  */
 final class LakeIO(val root: String) extends Serializable {
 
   // captured at construction (a driver-side `new LakeIO` embeds the session
@@ -101,9 +114,9 @@ final class LakeIO(val root: String) extends Serializable {
   // back to classpath defaults
   private val confBag: Array[(String, String)] = LakeConf.capture()
 
-  @transient private lazy val conf =
+  @transient private lazy val conf = ForkFreeLocalFileSystem.route(
     if (confBag.nonEmpty) LakeConf.restore(confBag)
-    else LakeConf.restore(LakeConf.installedBagSnapshot)
+    else LakeConf.restore(LakeConf.installedBagSnapshot))
 
   /** the seam's conf for sibling metadata writers (MetaIO). */
   private[lake] def hadoopConf: Configuration = conf
@@ -120,47 +133,64 @@ final class LakeIO(val root: String) extends Serializable {
   /** one stat: None when nothing is at rel; any other IO fault throws. */
   def status(rel: String): Option[FileStatus] =
     try Some(fs.getFileStatus(abs(rel)))
-    catch { case _: java.io.FileNotFoundException => None }
+    catch { case _: FileNotFoundException => None }
   def mkdirs(rel: String): Unit = fs.mkdirs(abs(rel))
-  def isDirectory(rel: String): Boolean =
-    fs.exists(abs(rel)) && fs.getFileStatus(abs(rel)).isDirectory
+  def isDirectory(rel: String): Boolean = status(rel).exists(_.isDirectory)
 
   /** delete (recursively for directories); true when something was removed. */
   def delete(rel: String): Boolean = fs.delete(abs(rel), true)
 
+  /** one listing call; empty when nothing is at relDir. */
+  private def listing(relDir: String): Array[FileStatus] =
+    try fs.listStatus(abs(relDir))
+    catch { case _: FileNotFoundException => Array.empty }
+
   /** names (not paths) of a directory's children; empty when absent. */
-  def list(relDir: String): Seq[String] = {
-    val p = abs(relDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-  }
+  def list(relDir: String): Seq[String] = listing(relDir).toSeq.map(_.getPath.getName)
 
   /** child name → byte size, one listing call (replaces per-file stat). */
-  def listWithSizes(relDir: String): Map[String, Long] = {
-    val p = abs(relDir)
-    if (!fs.exists(p)) Map.empty
-    else fs.listStatus(p).iterator.map(st => st.getPath.getName -> st.getLen).toMap
-  }
+  def listWithSizes(relDir: String): Map[String, Long] =
+    listing(relDir).iterator.map(st => st.getPath.getName -> st.getLen).toMap
 
   /** (name, mtimeMillis, bytes) of a directory's FILE children, one listing
     * call — the orphan-scan primitive. */
-  def listFileStatus(relDir: String): Seq[(String, Long, Long)] = {
-    val p = abs(relDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.collect {
+  def listFileStatus(relDir: String): Seq[(String, Long, Long)] =
+    listing(relDir).toSeq.collect {
       case st if st.isFile => (st.getPath.getName, st.getModificationTime, st.getLen)
     }
-  }
 
-  def readString(rel: String): String = {
-    val in = fs.open(abs(rel))
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  /** the file's text. [[writeAtomic]]'s rename moves the file and then its
+    * `.crc` sibling, so a read racing it can open one before and one after
+    * a rename and fail its checksum; a re-read shortly after sees both
+    * moved. A checksum that still fails after the retries is corruption. */
+  def readString(rel: String): String = readString(rel, attempts = 5)
+
+  @scala.annotation.tailrec
+  private def readString(rel: String, attempts: Int): String = {
+    val text =
+      try {
+        val in = fs.open(abs(rel))
+        try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
+      } catch { case _: ChecksumException if attempts > 1 => None }
+    text match {
+      case Some(t) => t
+      case None => Thread.sleep(10); readString(rel, attempts - 1)
+    }
   }
 
   def writeString(rel: String, s: String): Unit = {
     val out = fs.create(abs(rel), true)
     try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
+
+  /** Spark's distributed parquet write of df to rel: replacing whatever is
+    * there when overwrite, else failing if rel exists. The write job, its
+    * committer and its tasks take the seam's filesystem routing as writer
+    * options, which Spark copies into their Hadoop conf. */
+  def writeParquet(df: DataFrame, rel: String, overwrite: Boolean): Unit =
+    df.write.options(ForkFreeLocalFileSystem.routing(conf))
+      .mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+      .parquet(abs(rel).toString)
 
   /** Atomic create-if-absent — the compare-and-swap primitive behind
     * optimistic concurrency (version claims): exactly one of any number of

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport, GroupWriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
@@ -221,17 +222,22 @@ object MetaIO {
 
   /** parquet part files at st: the file itself, or a directory's visible
     * `*.parquet` children (Spark- and MetaIO-written alike). */
-  private def partFiles(st: FileStatus, conf: Configuration): Seq[HPath] =
-    if (!st.isDirectory) Seq(st.getPath)
-    else st.getPath.getFileSystem(conf).listStatus(st.getPath).toSeq.map(_.getPath).filter { p =>
-      val n = p.getName
+  private def partFiles(st: FileStatus, conf: Configuration): Seq[FileStatus] =
+    if (!st.isDirectory) Seq(st)
+    else st.getPath.getFileSystem(conf).listStatus(st.getPath).toSeq.filter { p =>
+      val n = p.getPath.getName
       n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
     }
 
-  /** feeds every row of every part file at st to f, file by file. */
+  /** feeds every row of every part file at st to f, file by file. The
+    * reader takes conf from its input file: `ParquetReader.builder(support,
+    * path)` would first parse the classpath defaults into a bare
+    * Configuration, milliseconds per part file (LakeConf). */
   private def foreachGroup(st: FileStatus, conf: Configuration)(f: Group => Unit): Unit =
     partFiles(st, conf).foreach { part =>
-      val r = ParquetReader.builder(new GroupReadSupport(), part).withConf(conf).build()
+      val r = new ParquetReader.Builder[Group](HadoopInputFile.fromStatus(part, conf)) {
+        override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
+      }.build()
       try {
         var g = r.read()
         while (g != null) { f(g); g = r.read() }
@@ -249,9 +255,9 @@ object MetaIO {
     * metadata job). */
   def rowCount(io: LakeIO, rel: String): Long = {
     val conf = new Configuration(io.hadoopConf)
-    io.status(rel).fold(Seq.empty[HPath])(partFiles(_, conf)).map { f =>
+    io.status(rel).fold(Seq.empty[FileStatus])(partFiles(_, conf)).map { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader
-        .open(HadoopInputFile.fromPath(f, conf))
+        .open(HadoopInputFile.fromStatus(f, conf))
       try r.getRecordCount finally r.close()
     }.sum
   }

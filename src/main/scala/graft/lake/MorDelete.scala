@@ -69,8 +69,7 @@ object MorDelete {
       lit(delSeq).as("del_seq"))
     val uid = java.util.UUID.randomUUID().toString.take(12)
     val shardRel = s"meta/manifest-eqdel-$uid.parquet"
-    val abs = table.io.abs(shardRel).toString
-    keys.write.mode("overwrite").parquet(abs)
+    table.io.writeParquet(keys, shardRel, overwrite = true)
     // matched count from the freshly written shard's parquet footers —
     // driver-side, zero jobs
     val matched = MetaIO.rowCount(table.io, shardRel)
@@ -116,8 +115,7 @@ object MorDelete {
     val keys = matching.select(col("_file").as("file_path"), col("_pos").as("pos"))
     val uid = java.util.UUID.randomUUID().toString.take(12)
     val shardRel = s"meta/manifest-posdel-$uid.parquet"
-    val abs = table.io.abs(shardRel).toString
-    keys.write.mode("overwrite").parquet(abs)
+    table.io.writeParquet(keys, shardRel, overwrite = true)
     val matched = MetaIO.rowCount(table.io, shardRel)
     if (matched == 0L) { table.io.delete(shardRel); return 0L }
     table.commitPosDelete(shardRel, matched, Some(basis))
@@ -193,17 +191,17 @@ object MorDelete {
     var seq = shards.map(_.seq).maxOption.getOrElse(0)
     if (eq.size > 1) {
       val rel = s"meta/manifest-eqdel-$uid.parquet"
-      spark.read.schema(GraftTable.eqDeleteSchema)
+      table.io.writeParquet(spark.read.schema(GraftTable.eqDeleteSchema)
         .parquet(eq.map(sh => table.io.abs(sh.path).toString): _*)
-        .coalesce(1).write.mode("overwrite").parquet(table.io.abs(rel).toString)
+        .coalesce(1), rel, overwrite = true)
       seq += 1; shards :+= ManifestShard(seq, "eqdel", rel)
     }
     if (pos.size > 1) {
       val rel = s"meta/manifest-posdel-$uid.parquet"
-      spark.read.schema(GraftTable.posDeleteSchema)
+      table.io.writeParquet(spark.read.schema(GraftTable.posDeleteSchema)
         .parquet(pos.map(sh => table.io.abs(sh.path).toString): _*)
         .distinct() // stacked deletes never duplicate addresses, but cheap insurance
-        .coalesce(1).write.mode("overwrite").parquet(table.io.abs(rel).toString)
+        .coalesce(1), rel, overwrite = true)
       seq += 1; shards :+= ManifestShard(seq, "posdel", rel)
     }
     table.commitDeleteCompaction(snap, shards)

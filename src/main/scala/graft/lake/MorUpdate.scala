@@ -186,9 +186,8 @@ object MorUpdate {
         else {
           val uid = java.util.UUID.randomUUID().toString.take(12)
           val rel = s"meta/manifest-eqdel-$uid.parquet"
-          liveMatches.get.distinct()
-            .withColumn("del_seq", lit(delSeq))
-            .write.mode("overwrite").parquet(table.io.abs(rel).toString)
+          table.io.writeParquet(liveMatches.get.distinct().withColumn("del_seq", lit(delSeq)),
+            rel, overwrite = true)
           Some(rel)
         }
       val added = table.writeDataFilesRouted(batch, "upsert")
@@ -220,8 +219,8 @@ object MorUpdate {
   private def writeAddresses(table: GraftTable, matching: DataFrame): Option[String] = {
     val uid = java.util.UUID.randomUUID().toString.take(12)
     val rel = s"meta/manifest-posdel-$uid.parquet"
-    matching.select(col("_file").as("file_path"), col("_pos").as("pos"))
-      .write.mode("overwrite").parquet(table.io.abs(rel).toString)
+    table.io.writeParquet(matching.select(col("_file").as("file_path"), col("_pos").as("pos")),
+      rel, overwrite = true)
     val n = MetaIO.rowCount(table.io, rel)
     if (n == 0L) { table.io.delete(rel); None } else Some(rel)
   }

@@ -32,6 +32,29 @@ class ConcurrencySpec extends SparkTestBase {
     assert(results.count(identity) == 1)
   }
 
+  test("readString never sees a writeAtomic half-renamed with its .crc") {
+    val root = Files.createTempDirectory("graft-hint").toString
+    val writer = new LakeIO(root)
+    val reader = new LakeIO(root)
+    // different lengths, so a stale .crc never matches the new bytes
+    val values = Seq("7", "1234567890123")
+    writer.writeAtomic("hint", values.head)
+    @volatile var done = false
+    val pool = Executors.newSingleThreadExecutor()
+    // a rewrite every millisecond: a faster hint stream than any commit
+    // stream, each commit writing several files before its hint
+    val writes = pool.submit(new Runnable {
+      def run(): Unit = {
+        var i = 0
+        while (!done && i < 20000) {
+          writer.writeAtomic("hint", values(i % 2)); i += 1; Thread.sleep(1)
+        }
+      }
+    })
+    try (0 until 4000).foreach(_ => assert(values.contains(reader.readString("hint"))))
+    finally { done = true; writes.get(60, TimeUnit.SECONDS); pool.shutdown() }
+  }
+
   test("concurrent appends: all survive on one linear chain, counts exact") {
     val t = fresh()
     t.append(synthDf(50, seed = 1)) // non-empty base
