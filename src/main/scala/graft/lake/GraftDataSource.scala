@@ -182,11 +182,9 @@ class GraftSparkTable(location: String, snapshot: Option[Long] = None,
 
   /** write path via the V1 bridge: `df.write.format("graft").save(loc)`
     * appends through the SAME GraftTable.append used everywhere — one
-    * distributed data write, one distributed stats pass (per-file min/max,
-    * langs, z bounds, xor digest), one driver-side O(delta) metadata
-    * commit. A bespoke DataWriter would have to replicate Spark's
-    * xxhash64/sha2 semantics in-task to produce identical manifest stats —
-    * the bridge keeps one implementation of that contract. */
+    * distributed data write whose tasks return their files' manifest
+    * entries (per-file min/max, langs, z bounds, xor digest), one
+    * driver-side O(delta) metadata commit. */
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -194,7 +192,7 @@ class GraftSparkTable(location: String, snapshot: Option[Long] = None,
       override def build(): org.apache.spark.sql.connector.write.Write =
         new org.apache.spark.sql.connector.write.V1Write {
           // streaming path: df.writeStream.format("graft") — epoch-idempotent
-          // task-side parquet writes + one stats pass per microbatch
+          // task-side data files, one metadata commit per microbatch
           override def toStreaming
               : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
             new GraftStreamingWrite(location, info.queryId(), info.schema())

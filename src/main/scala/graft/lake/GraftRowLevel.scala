@@ -23,9 +23,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     into this scan — only AFFECTED files are read and rewritten, the
   *     same stats/bloom pruning tiers applying before it;
   *  3. the write replaces exactly the files the (filtered) scan planned:
-  *     task-side parquet writers (the streaming sink's writer shape, z
-  *     recomputed with the batch kernels), one distributed stats pass, one
-  *     O(delta) metadata commit — remove scanned files, add rewritten ones.
+  *     task-side data files ([[GraftDataFileWriter]], z recomputed), each
+  *     task returning its file's manifest entry, then one O(delta) metadata
+  *     commit — remove scanned files, add rewritten ones.
   *
   * At 100 TB a MERGE touching one repo reads and rewrites that repo's files
   * only; everything flows through the ordinary commit protocol (time travel
@@ -182,39 +182,25 @@ class GraftCowScan(location: String, op: GraftRowLevelOperation,
     new GraftReaderFactory(required)
 }
 
-/** The ReplaceData write: rewritten rows land in task-side parquet files,
-  * commit removes exactly the scanned group and adds the new entries —
-  * one distributed stats pass, zero extra jobs for the removed-record
-  * count (it was collected with the plan). */
+/** The ReplaceData write: rewritten rows land in task-side data files
+  * ([[GraftDataFileWriter]], z recomputed); the commit removes exactly the
+  * scanned group and adds the entries the tasks returned — no Spark job,
+  * and the removed-record count was collected with the plan. */
 class GraftReplaceDataWrite(location: String, op: GraftRowLevelOperation,
                             schema: StructType)
   extends Write with BatchWrite {
 
+  private def opName = s"sql-${op.command().toString.toLowerCase}"
+
   override def toBatch: BatchWrite = this
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val t = new GraftTable(SparkSession.active, location)
-    val extras = t.currentSnapshot.toSeq.flatMap(t.extraFields)
-    extras.foreach { f =>
-      require(GraftCowDataWriter.writable(f.dataType),
-        s"SQL ${op.command()} cannot write evolved column ${f.name}: ${f.dataType}")
-    }
-    new GraftCowWriterFactory(location,
-      s"b-cow-${UUID.randomUUID().toString.take(8)}", schema, extras)
-  }
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    new GraftDmlWriterFactory(location, s"b-cow-${UUID.randomUUID().toString.take(8)}",
+      opName, schema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val table = new GraftTable(spark, location)
-    val files = messages.collect { case GraftStreamCommit(ps, _) => ps }.flatten.toSeq
-    val opName = s"sql-${op.command().toString.toLowerCase}"
-    // fused task-side stats (see GraftStreamingWrite.commit): zero-job
-    // commit when every writer carried its entry, distributed pass otherwise
-    val fused = messages.collect { case GraftStreamCommit(_, es) => es }.flatten.toSeq
-    val added =
-      if (fused.map(_.file_path).sorted == files.sorted)
-        fused.map(_.copy(partition = opName))
-      else table.statsForFiles(files, opName)
+    val table = new GraftTable(SparkSession.active, location)
+    val added = messages.collect { case GraftWriteCommit(es) => es }.flatten.toSeq
     val removed = op.scannedFiles
     table.commit(added, removed.map(_._1).toSet, opName,
       removedRecords = removed.map(_._2).sum, basis = op.basis)
@@ -222,158 +208,29 @@ class GraftReplaceDataWrite(location: String, op: GraftRowLevelOperation,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val table = new GraftTable(SparkSession.active, location)
-    messages.collect { case GraftStreamCommit(ps, _) => ps }.flatten
-      .foreach(table.io.delete)
+    messages.collect { case GraftWriteCommit(es) => es }.flatten
+      .foreach(e => table.io.delete(e.file_path))
   }
 
   override def description(): String = s"GraftReplaceData[${op.command()}]"
 }
 
-class GraftCowWriterFactory(location: String, batch: String,
-                            schema: StructType, extras: Seq[StructField])
+/** Task writers of SQL DML: the table's current schema, evolved columns
+  * included, with z recomputed (an update may change repo, path or lang). */
+class GraftDmlWriterFactory(location: String, batch: String, tag: String,
+                            inputSchema: StructType)
   extends DataWriterFactory {
   // session Hadoop overrides captured at plan time (LakeConf scaladoc)
-  private val confBag = LakeConf.capture()
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val rel = f"data/$batch/part-$partitionId%05d-$taskId-" +
-      UUID.randomUUID().toString.take(8) + ".parquet"
-    new GraftCowDataWriter(location, rel, schema, extras, confBag)
+  private[lake] val confBag = LakeConf.capture()
+  private val fileSchema = {
+    val t = new GraftTable(SparkSession.active, location)
+    StructType(GraftTable.dataSchema.fields ++ t.currentSnapshot.toSeq.flatMap(t.extraFields))
   }
-}
+  private val ordinals = GraftDataFileWriter.ordinals(fileSchema, inputSchema, keepZ = false)
 
-/** Task-side parquet writer for one ReplaceData partition: the streaming
-  * sink's writer shape generalized to the EVOLVED schema (typed extras ride
-  * through the rewrite) with z always recomputed via the batch kernels —
-  * the same contract Maintenance.mergeInto's writeDataFiles applies. */
-class GraftCowDataWriter(location: String, relPath: String,
-                         inputSchema: StructType, extras: Seq[StructField],
-                         confBag: Array[(String, String)] = Array.empty)
-  extends DataWriter[InternalRow] {
-  import org.apache.parquet.example.data.simple.SimpleGroupFactory
-  import org.apache.parquet.hadoop.ParquetWriter
-  import org.apache.parquet.hadoop.example.ExampleParquetWriter
-  import org.apache.parquet.hadoop.metadata.CompressionCodecName
-  import org.apache.parquet.hadoop.util.HadoopOutputFile
-  import org.apache.parquet.io.api.Binary
-  import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-  import org.apache.hadoop.conf.Configuration
-  import org.apache.hadoop.fs.{Path => HPath}
-
-  private val conf = ForkFreeLocalFileSystem.route(LakeConf.restore(confBag))
-  private val absPath = new HPath(new HPath(location), relPath)
-
-  private val lower = inputSchema.fieldNames.zipWithIndex
-    .map { case (n, i) => n.toLowerCase -> i }.toMap
-  private val strCols = Array("repo", "path", "commit", "lang", "content")
-  private val strIdx = strCols.map(c =>
-    lower.get(c).filter(i => inputSchema(i).dataType == StringType).getOrElse(-1))
-  private val extraIdx = extras.map(f =>
-    lower.get(f.name.toLowerCase)
-      .filter(i => inputSchema(i).dataType == f.dataType).getOrElse(-1)).toArray
-  private val repoIdx = strIdx(0); private val pathIdx = strIdx(1); private val langIdx = strIdx(3)
-
-  private val messageType: MessageType = {
-    val b = Types.buildMessage()
-    strCols.foreach { c =>
-      b.addField(Types.optional(PrimitiveTypeName.BINARY)
-        .as(LogicalTypeAnnotation.stringType()).named(c))
-    }
-    b.addField(Types.optional(PrimitiveTypeName.INT64).named("z"))
-    extras.foreach { f =>
-      val t = f.dataType match {
-        case IntegerType => Types.optional(PrimitiveTypeName.INT32)
-        case LongType    => Types.optional(PrimitiveTypeName.INT64)
-        case DoubleType  => Types.optional(PrimitiveTypeName.DOUBLE)
-        case FloatType   => Types.optional(PrimitiveTypeName.FLOAT)
-        case BooleanType => Types.optional(PrimitiveTypeName.BOOLEAN)
-        case StringType  => Types.optional(PrimitiveTypeName.BINARY)
-          .as(LogicalTypeAnnotation.stringType())
-        case dt => throw new IllegalArgumentException(s"unwritable $dt")
-      }
-      b.addField(t.named(f.name))
-    }
-    b.named("spark_schema")
-  }
-  private val factory = new SimpleGroupFactory(messageType)
-  private var writer: ParquetWriter[org.apache.parquet.example.data.Group] = _
-  private var wroteAny = false
-
-  private def hash(row: InternalRow, idx: Int): Long =
-    if (idx < 0 || row.isNullAt(idx)) 42L
-    else org.apache.spark.sql.catalyst.expressions.XxHash64Function
-      .hash(row.getUTF8String(idx), StringType, 42L)
-
-  // fused per-file manifest stats (WriteStats.TaskStats): the ReplaceData
-  // commit uses them directly instead of a distributed stats job
-  private val stats = new WriteStats.TaskStats(
-    repoIdx, pathIdx, strIdx(2), langIdx, strIdx(4))
-
-  override def write(row: InternalRow): Unit = {
-    if (writer == null) {
-      writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(absPath, conf))
-        .withType(messageType).withConf(conf)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .build()
-      wroteAny = true
-    }
-    val g = factory.newGroup()
-    var i = 0
-    while (i < strCols.length) {
-      val idx = strIdx(i)
-      if (idx >= 0 && !row.isNullAt(idx))
-        g.add(strCols(i), Binary.fromString(row.getUTF8String(idx).toString))
-      i += 1
-    }
-    // z recomputed per row (the library merge path's contract: dataCols
-    // exclude z, writeDataFiles re-derives it)
-    val z = graft.expr.ZOrderInterleave.interleave(
-      hash(row, repoIdx), hash(row, pathIdx), hash(row, langIdx))
-    g.add("z", z)
-    stats.update(row, java.lang.Long.valueOf(z))
-    var e = 0
-    while (e < extraIdx.length) {
-      val idx = extraIdx(e)
-      if (idx >= 0 && !row.isNullAt(idx)) {
-        val f = extras(e)
-        f.dataType match {
-          case IntegerType => g.add(f.name, row.getInt(idx))
-          case LongType    => g.add(f.name, row.getLong(idx))
-          case DoubleType  => g.add(f.name, row.getDouble(idx))
-          case FloatType   => g.add(f.name, row.getFloat(idx))
-          case BooleanType => g.add(f.name, row.getBoolean(idx))
-          case _ => g.add(f.name, Binary.fromString(row.getUTF8String(idx).toString))
-        }
-      }
-      e += 1
-    }
-    writer.write(g)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (writer != null) { writer.close(); writer = null }
-    if (!wroteAny) GraftStreamCommit(Seq.empty)
-    else {
-      val bytes = absPath.getFileSystem(conf).getFileStatus(absPath).getLen
-      // tag filled in by the commit (it knows the SQL op name)
-      GraftStreamCommit(Seq(relPath), Seq(stats.entry(relPath, "cow", bytes)))
-    }
-  }
-
-  override def abort(): Unit = {
-    if (writer != null) { writer.close(); writer = null }
-    if (wroteAny) absPath.getFileSystem(conf).delete(absPath, false)
-  }
-
-  override def close(): Unit =
-    if (writer != null) { writer.close(); writer = null }
-}
-
-object GraftCowDataWriter {
-  def writable(dt: DataType): Boolean = dt match {
-    case IntegerType | LongType | DoubleType | FloatType | BooleanType | StringType => true
-    case _ => false
-  }
+  override def createWriter(partitionId: Int, taskId: Long): GraftDataFileWriter =
+    GraftDataFileWriter(location, batch, partitionId, tag, fileSchema, ordinals,
+      -1, confBag)
 }
 
 // ---- DELTA-based row-level operations (SQL merge-on-read DML) -------------
@@ -407,11 +264,10 @@ class GraftDeltaOperation(location: String, cmd: RowLevelOperation.Command)
   override def description(): String = s"GraftDelta[$cmd]"
 }
 
-/** one task's delta output: new data files, position-delete address files,
-  * and the count of deleted addresses. */
-case class GraftDeltaCommit(dataFiles: Seq[String], posFiles: Seq[String],
-                            deleted: Long,
-                            entries: Seq[ManifestEntry] = Seq.empty)
+/** one task's delta output: its new data files' entries, its
+  * position-delete address file, and the count of deleted addresses. */
+case class GraftDeltaCommit(entries: Seq[ManifestEntry], posFiles: Seq[String],
+                            deleted: Long)
   extends WriterCommitMessage
 
 class GraftDeltaWrite(location: String, op: GraftDeltaOperation,
@@ -420,32 +276,17 @@ class GraftDeltaWrite(location: String, op: GraftDeltaOperation,
 
   override def toBatch: DeltaBatchWrite = this
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val t = new GraftTable(SparkSession.active, location)
-    val extras = t.currentSnapshot.toSeq.flatMap(t.extraFields)
-    extras.foreach { f =>
-      require(GraftCowDataWriter.writable(f.dataType),
-        s"SQL ${op.command()} cannot write evolved column ${f.name}: ${f.dataType}")
-    }
-    new GraftDeltaWriterFactory(location,
-      s"b-mor-${UUID.randomUUID().toString.take(8)}", schema, extras)
-  }
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
+    new GraftDeltaWriterFactory(location, new GraftDmlWriterFactory(location,
+      s"b-mor-${UUID.randomUUID().toString.take(8)}", "sql-mor", schema))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val table = new GraftTable(spark, location)
+    val table = new GraftTable(SparkSession.active, location)
     val ms = messages.collect { case m: GraftDeltaCommit => m }
-    val dataFiles = ms.flatMap(_.dataFiles).toSeq
+    val added = ms.flatMap(_.entries).toSeq
     val posFiles = ms.flatMap(_.posFiles).toSeq
     val deleted = ms.map(_.deleted).sum
-    if (dataFiles.isEmpty && posFiles.isEmpty) return
-    // fused task-side stats; distributed fallback (see GraftReplaceData)
-    val fused = ms.flatMap(_.entries).toSeq
-    val added =
-      if (dataFiles.isEmpty) Seq.empty
-      else if (fused.map(_.file_path).sorted == dataFiles.sorted)
-        fused.map(_.copy(partition = "sql-mor"))
-      else table.statsForFiles(dataFiles, "sql-mor")
+    if (added.isEmpty && posFiles.isEmpty) return
     op.basis match {
       case Some(basis) =>
         table.commitMorRowChange(basis, added, posFiles, deleted,
@@ -462,57 +303,41 @@ class GraftDeltaWrite(location: String, op: GraftDeltaOperation,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val table = new GraftTable(SparkSession.active, location)
-    messages.collect { case m: GraftDeltaCommit => m.dataFiles ++ m.posFiles }
+    messages.collect { case m: GraftDeltaCommit => m.entries.map(_.file_path) ++ m.posFiles }
       .flatten.foreach(table.io.delete)
   }
 
   override def description(): String = s"GraftDeltaWrite[${op.command()}]"
 }
 
-class GraftDeltaWriterFactory(location: String, batch: String,
-                              schema: StructType, extras: Seq[StructField])
+class GraftDeltaWriterFactory(location: String, inserts: GraftDmlWriterFactory)
   extends DeltaWriterFactory {
-  // session Hadoop overrides captured at plan time (LakeConf scaladoc)
-  private val confBag = LakeConf.capture()
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
-    val suffix = f"part-$partitionId%05d-$taskId-" + UUID.randomUUID().toString.take(8)
-    new GraftDeltaDataWriter(location, batch, suffix, schema, extras, confBag)
-  }
+  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
+    new GraftDeltaDataWriter(location, inserts.createWriter(partitionId, taskId),
+      inserts.confBag)
 }
 
-/** Task-side delta writer: inserts stream into an ordinary data-file writer
-  * (the CoW writer, reused — z recomputed, evolved extras typed through);
-  * deletes stream into a position-delete address file under meta/ — both
-  * uid-named, referenced only via the commit message, so zombie attempts
-  * are never swept into the table. */
-class GraftDeltaDataWriter(location: String, batch: String, suffix: String,
-                           inputSchema: StructType, extras: Seq[StructField],
-                           confBag: Array[(String, String)] = Array.empty)
+/** Task-side delta writer: inserts go to an ordinary data file
+  * ([[GraftDataFileWriter]]); deletes go to a position-delete address file
+  * under meta/ named after the insert file, opened the same way. Both are
+  * referenced only by the commit message, so zombie attempts are never
+  * swept into the table. */
+class GraftDeltaDataWriter(location: String, inserts: GraftDataFileWriter,
+                           confBag: Array[(String, String)])
   extends DeltaWriter[InternalRow] {
-  import org.apache.parquet.example.data.simple.SimpleGroupFactory
-  import org.apache.parquet.hadoop.ParquetWriter
-  import org.apache.parquet.hadoop.example.ExampleParquetWriter
-  import org.apache.parquet.hadoop.metadata.CompressionCodecName
-  import org.apache.parquet.hadoop.util.HadoopOutputFile
-  import org.apache.parquet.io.api.Binary
-  import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-  import org.apache.hadoop.conf.Configuration
   import org.apache.hadoop.fs.{Path => HPath}
+  import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
+  import org.apache.spark.sql.execution.datasources.OutputWriter
+  import org.apache.spark.unsafe.types.UTF8String
 
-  private val dataRel = s"data/$batch/$suffix.parquet"
-  private val posRel = s"meta/manifest-posdel-$batch-$suffix.parquet"
-  private val inserts = new GraftCowDataWriter(location, dataRel, inputSchema, extras, confBag)
-
-  private val posType = Types.buildMessage()
-    .addField(Types.optional(PrimitiveTypeName.BINARY)
-      .as(LogicalTypeAnnotation.stringType()).named("file_path"))
-    .addField(Types.optional(PrimitiveTypeName.INT64).named("pos"))
-    .named("spark_schema")
-  private val posFactory = new SimpleGroupFactory(posType)
-  private val conf = ForkFreeLocalFileSystem.route(LakeConf.restore(confBag))
+  private val posRel = {
+    val d = inserts.relPath
+    s"meta/manifest-posdel-${d.split('/')(1)}-${d.substring(d.lastIndexOf('/') + 1)}"
+  }
+  private val conf = GraftDataFileWriter.conf(confBag)
   private val posAbs = new HPath(new HPath(location), posRel)
-  private var posWriter: ParquetWriter[org.apache.parquet.example.data.Group] = _
+  private val address = new SpecificInternalRow(Seq(StringType, LongType))
+  private var posWriter: OutputWriter = _
   private var deleted = 0L
 
   override def insert(row: InternalRow): Unit = inserts.write(row)
@@ -520,15 +345,10 @@ class GraftDeltaDataWriter(location: String, batch: String, suffix: String,
   /** id row = the operation's rowId() projection: (_file abs path, _pos). */
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
     if (posWriter == null)
-      posWriter = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(posAbs, conf))
-        .withType(posType).withConf(conf)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .build()
-    val g = posFactory.newGroup()
-    g.add("file_path", Binary.fromString(
-      GraftPosDeletes.relOf(id.getUTF8String(0).toString)))
-    g.add("pos", id.getLong(1))
-    posWriter.write(g)
+      posWriter = GraftDataFileWriter.open(posAbs, GraftDeltaDataWriter.addressSchema, conf)
+    address.update(0, UTF8String.fromString(GraftPosDeletes.relOf(id.getUTF8String(0).toString)))
+    address.setLong(1, id.getLong(1))
+    posWriter.write(address)
     deleted += 1L
   }
 
@@ -537,23 +357,23 @@ class GraftDeltaDataWriter(location: String, batch: String, suffix: String,
       "updates are represented as delete+insert (representUpdateAsDeleteAndInsert)")
 
   override def commit(): WriterCommitMessage = {
-    val (dataMsg, dataEntries) = inserts.commit() match {
-      case GraftStreamCommit(ps, es) => (ps, es)
-      case _ => (Seq.empty[String], Seq.empty[ManifestEntry])
-    }
-    if (posWriter != null) { posWriter.close(); posWriter = null }
-    GraftDeltaCommit(dataMsg, if (deleted > 0) Seq(posRel) else Seq.empty,
-      deleted, dataEntries)
+    val entries = inserts.commit().entries
+    closePos()
+    GraftDeltaCommit(entries, if (deleted > 0) Seq(posRel) else Seq.empty, deleted)
   }
 
-  override def abort(): Unit = {
-    inserts.abort()
-    if (posWriter != null) { posWriter.close(); posWriter = null }
-    if (deleted > 0) posAbs.getFileSystem(conf).delete(posAbs, false)
-  }
+  override def abort(): Unit =
+    try inserts.abort()
+    finally try closePos() finally if (deleted > 0) posAbs.getFileSystem(conf).delete(posAbs, false)
 
-  override def close(): Unit = {
-    inserts.close()
-    if (posWriter != null) { posWriter.close(); posWriter = null }
-  }
+  override def close(): Unit = try inserts.close() finally closePos()
+
+  private def closePos(): Unit =
+    if (posWriter != null) try posWriter.close() finally posWriter = null
+}
+
+object GraftDeltaDataWriter {
+  /** a position-delete address file's rows: (data file, row ordinal). */
+  val addressSchema: StructType = StructType(Seq(
+    StructField("file_path", StringType), StructField("pos", LongType)))
 }

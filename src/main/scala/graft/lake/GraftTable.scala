@@ -855,93 +855,33 @@ class GraftTable(val spark: SparkSession, val location: String,
       .parquet(files.map(f => io.abs(f).toString): _*)
   }
 
-  /** Write df rows as new data files (one parquet file per spark partition),
-    * returning manifest entries with per-file stats AND per-file digests
-    * (xor of per-row content hashes) from one distributed stats pass.
-    * Expects source_files schema + optional z col. */
+  /** Write df's rows as new data files, one per non-empty partition, and
+    * return their manifest entries, per-file stats and digests included:
+    * one Spark job over the plan's InternalRows, whose task results are the
+    * entries ([[GraftDataFileWriter]] states the writer's invariants).
+    * Expects source_files columns; a LONG `z` column is written as is,
+    * otherwise z is derived per row. With `bucketBy` each file must hold one
+    * bucket of the column, or the write is refused. */
   def writeDataFiles(df: DataFrame, tag: String,
                      bucketBy: Option[(String, Int)] = None): Seq[ManifestEntry] = {
+    import org.apache.spark.sql.types.{LongType, StructField}
     val batch = s"b-${UUID.randomUUID().toString.take(8)}-$tag"
-    val outRel = s"data/$batch"
-    val cols = df.columns
-    val withZ = if (cols.contains("z")) df else df.withColumn("z",
-      graft.expr.XmqFunctions.zorder_interleave(
-        xxhash64(col("repo")), xxhash64(col("path")),
-        pmod(xxhash64(col("lang")), lit(256L))))
-
-    // FUSED single-pass write+stats (guide §1.2: one pass instead of two):
-    // the hash/bucket columns are computed by the SAME Column expressions the
-    // old read-back pass used, tee'd into a per-partition accumulator while
-    // the write job streams rows into parquet — no second job, no re-read.
-    val dataSchema = withZ.schema
-    val width = dataSchema.length
-    val repoIdx = dataSchema.fieldIndex("repo")
-    val pathIdx = dataSchema.fieldIndex("path")
-    val langIdx = dataSchema.fieldIndex("lang")
-    val zIdx = dataSchema.fieldIndex("z")
-    val teed0 = withZ
-      .withColumn("__h", GraftTable.rowHash())
-      .withColumn("__rh", xxhash64(col("repo")))
-    val teed = bucketBy match {
-      case Some((c, n)) => teed0.withColumn("__b", Bucketing.bucketCol(c, n))
-      case None => teed0
+    // a derived z is never null
+    val fileSchema =
+      if (df.columns.contains("z")) df.schema
+      else df.schema.add(StructField("z", LongType, nullable = false))
+    // the bucket id rides after the data columns; the writer checks purity
+    val src = bucketBy.fold(df) { case (c, n) =>
+      df.withColumn("_graft_bucket", Bucketing.bucketCol(c, n))
     }
-    val bIdx = if (bucketBy.isDefined) width + 2 else -1
-    val acc = new WriteStats.Acc
-    spark.sparkContext.register(acc, s"graft-write-stats-$batch")
-    val stripped = teed.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val st = new WriteStats.Collector(repoIdx, pathIdx, langIdx, zIdx,
-        width, width + 1, bIdx)
-      var flushed = false
-      new Iterator[Row] {
-        override def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h && !flushed) {
-            flushed = true
-            if (st.count > 0) acc.add(pid -> st.result)
-          }
-          h
-        }
-        override def next(): Row = {
-          val r = it.next()
-          st.update(r)
-          val arr = new Array[Any](width)
-          var i = 0
-          while (i < width) { arr(i) = r.get(i); i += 1 }
-          Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(dataSchema))
-    io.writeParquet(stripped, outRel, overwrite = false)
-
-    val sizes = io.listWithSizes(outRel)
-      .filter { case (n, _) => !n.startsWith("_") && !n.startsWith(".") }
-    val stats = acc.value
-    val mapped = sizes.keys.map(n => n -> WriteStats.filePartIdx(n)).toMap
-    val ok = sizes.nonEmpty == stats.nonEmpty &&
-      mapped.values.forall(_ >= 0) &&
-      mapped.values.toSeq.sorted == stats.keys.toSeq.sorted
-    if (ok) {
-      sizes.toSeq.map { case (name, bytes) =>
-        val st = stats(mapped(name))
-        val bucket = bucketBy.map { _ =>
-          require(st.bMin == st.bMax,
-            s"bucketed write produced an impure file $outRel/$name (buckets ${st.bMin}..${st.bMax})")
-          st.bMin
-        }
-        ManifestEntry(s"$outRel/$name", tag, st.records, bytes,
-          st.minRepo, st.maxRepo, st.minPath, st.maxPath, st.langs,
-          if (st.hasZ) st.minZ else 0L, if (st.hasZ) st.maxZ else 0L,
-          st.minRh, st.maxRh, st.digest,
-          Some(st.nullsRepo), Some(st.nullsPath), Some(st.nullsLang), bucket)
-      }
-    } else {
-      // unexpected file↔partition mapping (e.g. maxRecordsPerFile split a
-      // task's output): fall back to the read-back stats pass
-      val written = spark.read.schema(withZ.schema).parquet(io.abs(outRel).toString)
-      entriesFor(written, tag, sizes, bucketBy)
-    }
+    val ordinals = GraftDataFileWriter.ordinals(fileSchema, df.schema, keepZ = true)
+    val bucketOrdinal = if (bucketBy.isDefined) df.schema.length else -1
+    val task = GraftDataFileWriter.writeTask(location, batch, tag, fileSchema, ordinals,
+      bucketOrdinal, LakeConf.capture())
+    val qe = src.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(s"graft write $batch")) {
+      spark.sparkContext.runJob(qe.toRdd, task)
+    }.toSeq.flatten
   }
 
   /** writeDataFiles PRESERVING the table's bucket layout: when a bucket spec
@@ -960,65 +900,6 @@ class GraftTable(val spark: SparkSession, val location: String,
         writeDataFiles(Bucketing.route(df, c, n, bucketSorted), tag, Some((c, n)))
       case None => writeDataFiles(df, tag)
     }
-
-  /** Manifest entries for data files that ALREADY exist under the table root
-    * (written by an external task-side writer, e.g. the streaming sink):
-    * the same single distributed stats pass writeDataFiles runs, over
-    * exactly the given files — never a directory listing, so leftover files
-    * from failed/zombie write attempts are not swept into the commit. */
-  def statsForFiles(relPaths: Seq[String], tag: String): Seq[ManifestEntry] = {
-    if (relPaths.isEmpty) return Seq.empty
-    val dirs = relPaths.map(p => p.substring(0, p.lastIndexOf('/'))).distinct
-    // file names carry a UUID, so bare names never collide across dirs
-    val sizes = dirs.flatMap(d => io.listWithSizes(d)).toMap
-    entriesFor(readFiles(relPaths), tag, sizes)
-  }
-
-  private def entriesFor(written0: DataFrame, tag: String,
-                         sizes: Map[String, Long],
-                         bucketBy: Option[(String, Int)] = None): Seq[ManifestEntry] = {
-    val written = written0.withColumn("h", GraftTable.rowHash())
-    // when the batch claims a bucketed layout, the same stats pass verifies
-    // it: per-file min and max bucket id must agree, or the write is refused
-    // (a silently impure file would make a later storage-partitioned join
-    // silently WRONG — fail at write time, not at query time)
-    val bucketAggs = bucketBy.toSeq.flatMap { case (c, n) =>
-      val b = Bucketing.bucketCol(c, n)
-      Seq(min(b).as("bmin"), max(b).as("bmax"))
-    }
-    val stats = written.groupBy(input_file_name().as("abs_path"))
-      .agg(count(lit(1)).as("record_count"),
-           (Seq(min($"repo").as("min_repo"), max($"repo").as("max_repo"),
-           min($"path").as("min_path"), max($"path").as("max_path"),
-           collect_set($"lang").as("langs"),
-           min($"z").as("min_z"), max($"z").as("max_z"),
-           min(xxhash64($"repo")).as("min_rh"), max(xxhash64($"repo")).as("max_rh"),
-           expr("bit_xor(h)").as("digest"),
-           count(when($"repo".isNull, 1)).as("nulls_repo"),
-           count(when($"path".isNull, 1)).as("nulls_path"),
-           count(when($"lang".isNull, 1)).as("nulls_lang")) ++ bucketAggs): _*)
-      .collect()
-
-    // the caller's directory listing supplies all byte sizes (no per-file
-    // stat RPCs); a lookup miss (decoding mismatch, unexpected layout) falls
-    // back to a single stat — committing file_bytes=0 would make the file
-    // permanently "small" and re-compacted forever
-    stats.toSeq.map { r =>
-      val rel = io.relativize(r.getString(0))
-      val name = rel.substring(rel.lastIndexOf('/') + 1)
-      val bucket = bucketBy.map { _ =>
-        val (bmin, bmax) = (r.getInt(15), r.getInt(16))
-        require(bmin == bmax,
-          s"bucketed write produced an impure file $rel (buckets $bmin..$bmax)")
-        bmin
-      }
-      ManifestEntry(rel, tag, r.getLong(1), sizes.getOrElse(name, io.size(rel)),
-        r.getString(2), r.getString(3), r.getString(4), r.getString(5),
-        r.getSeq[String](6), r.getLong(7), r.getLong(8), r.getLong(9), r.getLong(10),
-        r.getLong(11), Some(r.getLong(12)), Some(r.getLong(13)), Some(r.getLong(14)),
-        bucket)
-    }
-  }
 
   /** Commit a metadata delta with a driver-known removed set: ALL metadata
     * is written driver-side (MetaIO), zero Spark jobs. Delta shard files are

@@ -1,7 +1,8 @@
 package graft.lake
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, FileStatus, FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path => HPath}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
@@ -100,11 +101,12 @@ object LakeConf {
   * [[LakeIO.writeParquet]] route them through [[ForkFreeLocalFileSystem]],
   * which states that invariant.
   *
-  * Atomicity note: `writeAtomic` uses create-temp + rename, which is atomic
-  * on POSIX and HDFS; object stores without atomic rename need a
-  * commit-service or conditional-put variant behind this same method — the
-  * single-writer maintenance pipeline only relies on readers never seeing a
-  * torn version-hint.
+  * Atomicity note: `writeAtomic` uses create-temp + rename, which atomically
+  * replaces the target on POSIX; HDFS (whose FileSystem.rename will not
+  * replace) and object stores without atomic rename need a commit-service
+  * or conditional-put variant behind this same method — the single-writer
+  * maintenance pipeline only relies on readers never seeing a torn
+  * version-hint.
   */
 final class LakeIO(val root: String) extends Serializable {
 
@@ -125,6 +127,20 @@ final class LakeIO(val root: String) extends Serializable {
     if (p.isAbsoluteAndSchemeAuthorityNull) new HPath("file://" + root) else p
   }
   @transient private lazy val fs: FileSystem = rootPath.getFileSystem(conf)
+
+  /** fs without checksums, for [[writeAtomic]]'s pointer files: on a
+    * checksummed filesystem a private instance (the cache may share fs
+    * with other users, so its flags are not ours to change). */
+  @transient private lazy val textFs: FileSystem = fs match {
+    case _: ChecksumFileSystem =>
+      val c = new Configuration(conf)
+      c.setBoolean(s"fs.${rootPath.toUri.getScheme}.impl.disable.cache", true)
+      val f = rootPath.getFileSystem(c)
+      f.setWriteChecksum(false)
+      f.setVerifyChecksum(false)
+      f
+    case f => f
+  }
 
   def abs(rel: String): HPath = if (rel.isEmpty) rootPath else new HPath(rootPath, rel)
 
@@ -159,23 +175,11 @@ final class LakeIO(val root: String) extends Serializable {
       case st if st.isFile => (st.getPath.getName, st.getModificationTime, st.getLen)
     }
 
-  /** the file's text. [[writeAtomic]]'s rename moves the file and then its
-    * `.crc` sibling, so a read racing it can open one before and one after
-    * a rename and fail its checksum; a re-read shortly after sees both
-    * moved. A checksum that still fails after the retries is corruption. */
-  def readString(rel: String): String = readString(rel, attempts = 5)
-
-  @scala.annotation.tailrec
-  private def readString(rel: String, attempts: Int): String = {
-    val text =
-      try {
-        val in = fs.open(abs(rel))
-        try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
-      } catch { case _: ChecksumException if attempts > 1 => None }
-    text match {
-      case Some(t) => t
-      case None => Thread.sleep(10); readString(rel, attempts - 1)
-    }
+  /** the file's text, read without checksum verification: the pointer
+    * files [[writeAtomic]] replaces carry no `.crc` (see there). */
+  def readString(rel: String): String = {
+    val in = textFs.open(abs(rel))
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
   def writeString(rel: String, s: String): Unit = {
@@ -196,15 +200,26 @@ final class LakeIO(val root: String) extends Serializable {
     * optimistic concurrency (version claims): exactly one of any number of
     * concurrent callers returns true. file:// goes through
     * java.nio.Files.createFile (a real O_CREAT|O_EXCL, atomic on POSIX —
-    * Hadoop's RawLocalFileSystem create() has a check-then-open race);
+    * Hadoop's RawLocalFileSystem create() has a check-then-open race), and
+    * the new file then gets the mode bits Hadoop gives a file under
+    * `fs.permissions.umask-mode`, set with one chmod(2) as
+    * [[ForkFreeLocalFileSystem]] sets them. A marker gets no `.crc`: it is
+    * empty, and only its existence is ever read (a marker later replaced
+    * by [[writeAtomic]] is a pointer file, which carries none either).
     * HDFS create(overwrite=false) is an atomic namenode operation; object
     * stores map it to a conditional PUT (S3 If-None-Match, GCS
     * generation-0 preconditions) behind their FileSystem connectors. */
   def createExclusive(rel: String): Boolean = {
     val p = abs(rel)
     if (Option(p.toUri.getScheme).forall(_ == "file")) {
-      try { java.nio.file.Files.createFile(java.nio.file.Paths.get(p.toUri.getPath)); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      val f = java.nio.file.Paths.get(p.toUri.getPath)
+      try java.nio.file.Files.createFile(f)
+      catch { case _: java.nio.file.FileAlreadyExistsException => return false }
+      if (ForkFreeLocalFileSystem.unixView) {
+        val mode = FsPermission.getFileDefault.applyUMask(FsPermission.getUMask(conf))
+        java.nio.file.Files.setAttribute(f, "unix:mode", Integer.valueOf(mode.toShort & 0xfff))
+      }
+      true
     } else {
       try { fs.create(p, false).close(); true }
       catch {
@@ -216,23 +231,29 @@ final class LakeIO(val root: String) extends Serializable {
   }
 
   /** temp-write + rename-overwrite: readers see either the old or the new
-    * content — the target is never absent mid-commit. POSIX/local rename
-    * atomically replaces an existing destination. HDFS's FileSystem.rename
-    * returns false when dst exists, so HDFS takes the delete+retry branch —
-    * non-atomic, but safe here because currentVersion recovers from a
-    * missing hint by scanning max snapshot id; a deployment wanting a truly
-    * atomic HDFS replace should use FileContext.rename with
-    * Options.Rename.OVERWRITE (not on the portable FileSystem seam this
-    * class targets). Stores whose rename refuses to overwrite need a commit
-    * service for true atomicity regardless — documented above. */
+    * content — the target is never absent. POSIX/local rename atomically
+    * replaces an existing destination; a filesystem whose rename refuses
+    * to replace (HDFS's FileSystem.rename, object stores) fails the write
+    * rather than delete the target first, and needs a commit service or an
+    * atomic-replace rename behind this method (see the class scaladoc).
+    *
+    * These pointer files carry no `.crc`. A checksummed filesystem renames
+    * the file and then its `.crc`, and a read between the two renames fails
+    * its checksum. So they are written and read through [[textFs]] with
+    * checksums off, and a `.crc` left by an older writer is deleted before
+    * the rename: a reader that still verifies (an older graft) then sees
+    * the old content with its checksum, or content without one. */
   def writeAtomic(rel: String, s: String): Unit = {
-    val tmp = rel + ".tmp-" + java.util.UUID.randomUUID()
-    writeString(tmp, s)
-    if (!fs.rename(abs(tmp), abs(rel))) {
-      fs.delete(abs(rel), false)
-      if (!fs.rename(abs(tmp), abs(rel)))
-        throw new java.io.IOException(s"atomic rename failed for $rel")
+    val p = abs(rel)
+    val tmp = abs(rel + ".tmp-" + java.util.UUID.randomUUID())
+    val out = textFs.create(tmp, true)
+    try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem.delete(c.getChecksumFile(p), false)
+      case _ =>
     }
+    if (!textFs.rename(tmp, p))
+      throw new java.io.IOException(s"atomic rename failed for $rel")
   }
 
   /** relative path of an absolute file URI under this root (for

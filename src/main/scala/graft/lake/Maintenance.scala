@@ -73,8 +73,8 @@ object Maintenance {
   /** BUCKET-cluster the whole table on `column` into `n` storage buckets —
     * the one-time layout rewrite that buys every later join on that column
     * its shuffle back (storage-partitioned joins, Bucketing.scala). Each
-    * output file is bucket-pure (verified in the same stats pass that
-    * commits it); the spec is persisted so appends stay routed and the DSv2
+    * output file is bucket-pure (verified by the writer that writes it);
+    * the spec is persisted so appends stay routed and the DSv2
     * scan can report KeyGroupedPartitioning. A full rewrite (one shuffle),
     * amortized across every subsequent join/groupBy on the bucket column. */
   def bucketize(table: GraftTable, n: Int, column: String = "repo"): Long = {

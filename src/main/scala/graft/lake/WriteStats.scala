@@ -1,160 +1,80 @@
 package graft.lake
 
-import org.apache.spark.sql.Row
-import org.apache.spark.util.AccumulatorV2
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass write statistics (guide §1.2 "remove unnecessary passes"):
-  * the per-file manifest stats writeDataFiles needs (min/max/null-counts/
-  * langs/digest) are computed WHILE the write job streams rows into parquet,
-  * tee'd into a per-partition accumulator, instead of re-reading the whole
-  * freshly-written batch in a second Spark job. One file per write task, so
-  * partition-id ↔ `part-NNNNN-*` file name is exact; task retries overwrite
-  * their own partition slot (stats are order-insensitive aggregates of a
-  * deterministic row set, so last-write-wins is idempotent).
+/** The manifest stats of one data file, collected by [[GraftDataFileWriter]]
+  * from the rows it writes: record count, repo/path min/max, langs, z
+  * bounds, `xxhash64(repo)` bounds, null counts, the xor digest of the
+  * per-row content hash and, on a bucketed write, the bucket the file is
+  * pure to.
   *
-  * String min/max use UTF8String comparison — parquet/Spark binary order,
-  * NOT java.lang.String's UTF-16 code-unit order (they differ for
-  * supplementary characters) — so the fused stats are bit-identical to the
-  * old read-back `groupBy(input_file_name)` pass.
+  * The kernels are those of the Column expressions that define the
+  * manifest contract: min/max compare in UTF8String binary order (parquet's
+  * and Spark's, not java.lang.String's UTF-16 order, which differs for
+  * supplementary characters), min/max/collect_set skip nulls, and the row
+  * hash is [[GraftTable.rowHash]], `xxhash64(repo, path, commit,
+  * sha2(content, 256))`, where a null input leaves the hash unchanged. A
+  * `groupBy(input_file_name)` aggregation over the written files yields the
+  * same entries.
   */
 object WriteStats {
 
-  /** order-insensitive per-partition (= per output file) stats. */
-  final case class PartStats(records: Long,
-                             minRepo: String, maxRepo: String,
-                             minPath: String, maxPath: String,
-                             langs: Seq[String],
-                             minZ: Long, maxZ: Long, hasZ: Boolean,
-                             minRh: Long, maxRh: Long,
-                             digest: Long,
-                             nullsRepo: Long, nullsPath: Long, nullsLang: Long,
-                             bMin: Int, bMax: Int)
+  /** Spark's `xxhash64(col)` of a string column: seed 42, a null (or an
+    * absent column, idx < 0) leaves the seed. */
+  def hash(row: InternalRow, idx: Int): Long = hashInto(row, idx, 42L)
 
-  /** mutable in-task collector; indices refer to the teed row layout:
-    * data columns ++ (__h: long, __rh: long, __b: int). */
-  final class Collector(repoIdx: Int, pathIdx: Int, langIdx: Int, zIdx: Int,
-                        hIdx: Int, rhIdx: Int, bIdx: Int) extends Serializable {
+  private def hashInto(row: InternalRow, idx: Int, h: Long): Long =
+    if (idx < 0 || row.isNullAt(idx)) h
+    else XxHash64Function.hash(row.getUTF8String(idx), StringType, h)
+
+  /** Stats over rows of `schema`, a data file's schema (it has a LONG `z`);
+    * `bucketOrdinal` is the bucket id's ordinal in the INPUT row, -1 on an
+    * unbucketed write. */
+  final class TaskStats(schema: StructType, bucketOrdinal: Int) {
+    private def stringCol(name: String): Int =
+      schema.fields.indexWhere(f => f.name.equalsIgnoreCase(name) && f.dataType == StringType)
+    val repoIdx: Int = stringCol("repo")
+    val pathIdx: Int = stringCol("path")
+    val langIdx: Int = stringCol("lang")
+    private val commitIdx = stringCol("commit")
+    private val contentIdx = stringCol("content")
+    private val zIdx = schema.fieldIndex("z")
+
+    private val sha = java.security.MessageDigest.getInstance("SHA-256")
+    private val hexDigits = "0123456789abcdef".getBytes("US-ASCII")
     private var n = 0L
     private var minRepo: UTF8String = null; private var maxRepo: UTF8String = null
     private var minPath: UTF8String = null; private var maxPath: UTF8String = null
-    private val langs = scala.collection.mutable.HashSet.empty[String]
+    private val langs = scala.collection.mutable.HashSet.empty[UTF8String]
     private var minZ = Long.MaxValue; private var maxZ = Long.MinValue; private var sawZ = false
     private var minRh = Long.MaxValue; private var maxRh = Long.MinValue
     private var digest = 0L
     private var nullsRepo = 0L; private var nullsPath = 0L; private var nullsLang = 0L
     private var bMin = Int.MaxValue; private var bMax = Int.MinValue
 
-    def update(r: Row): Unit = {
-      n += 1
-      if (r.isNullAt(repoIdx)) nullsRepo += 1
-      else {
-        val u = UTF8String.fromString(r.getString(repoIdx))
-        if (minRepo == null || u.compareTo(minRepo) < 0) minRepo = u
-        if (maxRepo == null || u.compareTo(maxRepo) > 0) maxRepo = u
-      }
-      if (r.isNullAt(pathIdx)) nullsPath += 1
-      else {
-        val u = UTF8String.fromString(r.getString(pathIdx))
-        if (minPath == null || u.compareTo(minPath) < 0) minPath = u
-        if (maxPath == null || u.compareTo(maxPath) > 0) maxPath = u
-      }
-      if (r.isNullAt(langIdx)) nullsLang += 1
-      else langs += r.getString(langIdx)
-      if (zIdx >= 0 && !r.isNullAt(zIdx)) {
-        val z = r.getLong(zIdx); sawZ = true
-        if (z < minZ) minZ = z
-        if (z > maxZ) maxZ = z
-      }
-      val rh = r.getLong(rhIdx)
-      if (rh < minRh) minRh = rh
-      if (rh > maxRh) maxRh = rh
-      digest ^= r.getLong(hIdx)
-      if (bIdx >= 0) {
-        val b = r.getInt(bIdx)
-        if (b < bMin) bMin = b
-        if (b > bMax) bMax = b
-      }
-    }
-
-    def result: PartStats = PartStats(n,
-      if (minRepo == null) null else minRepo.toString,
-      if (maxRepo == null) null else maxRepo.toString,
-      if (minPath == null) null else minPath.toString,
-      if (maxPath == null) null else maxPath.toString,
-      langs.toSeq.sorted, minZ, maxZ, sawZ, minRh, maxRh, digest,
-      nullsRepo, nullsPath, nullsLang, bMin, bMax)
-
-    def count: Long = n
-  }
-
-  /** pid → stats map accumulator. Retried tasks overwrite their own slot
-    * (same deterministic partition ⇒ same stats), so double counting is
-    * structurally impossible. */
-  final class Acc extends AccumulatorV2[(Int, PartStats), Map[Int, PartStats]] {
-    private val m = new java.util.concurrent.ConcurrentHashMap[Int, PartStats]()
-    override def isZero: Boolean = m.isEmpty
-    override def copy(): Acc = {
-      val c = new Acc; c.m.putAll(m); c
-    }
-    override def reset(): Unit = m.clear()
-    override def add(v: (Int, PartStats)): Unit = { m.put(v._1, v._2); () }
-    override def merge(other: AccumulatorV2[(Int, PartStats), Map[Int, PartStats]]): Unit =
-      other.value.foreach { case (k, v) => m.put(k, v) }
-    override def value: Map[Int, PartStats] = {
-      import scala.jdk.CollectionConverters._
-      m.asScala.toMap
-    }
-  }
-
-  /** Fused per-file stats for the TASK-SIDE parquet writers (streaming sink
-    * and SQL CoW rewrite): same aggregates as the batch Collector, computed
-    * from InternalRow while writing, replicating the batch Column kernels
-    * bit for bit — UTF8String binary order for min/max, and the per-row
-    * content hash xxhash64(repo, path, commit, sha2(content,256)) with
-    * Spark's null-skip rule. */
-  final class TaskStats(repoIdx: Int, pathIdx: Int, commitIdx: Int,
-                        langIdx: Int, contentIdx: Int) {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-    import org.apache.spark.sql.types.StringType
-    private val sha = java.security.MessageDigest.getInstance("SHA-256")
-    private val hexDigits = "0123456789abcdef".toCharArray
-    private var n = 0L
-    private var minRepo: UTF8String = null; private var maxRepo: UTF8String = null
-    private var minPath: UTF8String = null; private var maxPath: UTF8String = null
-    private val langs = scala.collection.mutable.HashSet.empty[String]
-    private var minZ = Long.MaxValue; private var maxZ = Long.MinValue
-    private var minRh = Long.MaxValue; private var maxRh = Long.MinValue
-    private var digest = 0L
-    private var nullsRepo = 0L; private var nullsPath = 0L; private var nullsLang = 0L
-
-    private def shaHexUtf8(content: UTF8String): UTF8String = {
-      sha.reset()
+    /** `sha2(content, 256)`: the lowercase hex of the SHA-256. */
+    private def shaHex(content: UTF8String): UTF8String = {
       val d = sha.digest(content.getBytes)
       val out = new Array[Byte](64)
       var i = 0
       while (i < 32) {
-        out(2 * i) = hexDigits((d(i) >> 4) & 0xf).toByte
-        out(2 * i + 1) = hexDigits(d(i) & 0xf).toByte
+        out(2 * i) = hexDigits((d(i) >> 4) & 0xf)
+        out(2 * i + 1) = hexDigits(d(i) & 0xf)
         i += 1
       }
       UTF8String.fromBytes(out)
     }
 
-    private def hashInto(row: InternalRow, idx: Int, h: Long): Long =
-      if (idx < 0 || row.isNullAt(idx)) h
-      else XxHash64Function.hash(row.getUTF8String(idx), StringType, h)
-
-    /** xxhash64 of one string column (seed 42, null keeps the seed). */
-    def colHash(row: InternalRow, idx: Int): Long = hashInto(row, idx, 42L)
-
-    /** record one written row; `z` is the z value written (null = none). */
-    def update(row: InternalRow, z: java.lang.Long): Unit = {
+    /** record one written row (`row` in the file's schema) of `input`.
+      * String values may point into a reused buffer, so retained ones are
+      * copied. */
+    def update(row: InternalRow, input: InternalRow): Unit = {
       n += 1
       if (repoIdx < 0 || row.isNullAt(repoIdx)) nullsRepo += 1
       else {
-        // getUTF8String may point into a reused buffer — copy when retained
         val u = row.getUTF8String(repoIdx)
         if (minRepo == null || u.compareTo(minRepo) < 0) minRepo = u.clone()
         if (maxRepo == null || u.compareTo(maxRepo) > 0) maxRepo = u.clone()
@@ -166,42 +86,48 @@ object WriteStats {
         if (maxPath == null || u.compareTo(maxPath) > 0) maxPath = u.clone()
       }
       if (langIdx < 0 || row.isNullAt(langIdx)) nullsLang += 1
-      else langs += row.getUTF8String(langIdx).toString
-      if (z != null) {
-        if (z.longValue() < minZ) minZ = z.longValue()
-        if (z.longValue() > maxZ) maxZ = z.longValue()
+      else {
+        val u = row.getUTF8String(langIdx)
+        if (!langs.contains(u)) langs += u.clone()
       }
-      val rh = colHash(row, repoIdx)
+      if (!row.isNullAt(zIdx)) {
+        val z = row.getLong(zIdx); sawZ = true
+        if (z < minZ) minZ = z
+        if (z > maxZ) maxZ = z
+      }
+      val rh = hash(row, repoIdx)
       if (rh < minRh) minRh = rh
       if (rh > maxRh) maxRh = rh
-      var h = hashInto(row, repoIdx, 42L)
-      h = hashInto(row, pathIdx, h)
+      var h = hashInto(row, pathIdx, rh)
       h = hashInto(row, commitIdx, h)
       if (contentIdx >= 0 && !row.isNullAt(contentIdx))
-        h = XxHash64Function.hash(shaHexUtf8(row.getUTF8String(contentIdx)), StringType, h)
+        h = XxHash64Function.hash(shaHex(row.getUTF8String(contentIdx)), StringType, h)
       digest ^= h
+      if (bucketOrdinal >= 0) {
+        val b = input.getInt(bucketOrdinal)
+        if (b < bMin) bMin = b
+        if (b > bMax) bMax = b
+      }
     }
 
-    def entry(relPath: String, tag: String, bytes: Long): ManifestEntry =
+    /** the file's manifest entry; a bucketed file holding two buckets is
+      * refused (a storage-partitioned join over it would be silently
+      * wrong). */
+    def entry(relPath: String, tag: String, bytes: Long): ManifestEntry = {
+      val bucket = if (bucketOrdinal < 0) None else {
+        require(bMin == bMax,
+          s"bucketed write produced an impure file $relPath (buckets $bMin..$bMax)")
+        Some(bMin)
+      }
       ManifestEntry(relPath, tag, n, bytes,
         if (minRepo == null) null else minRepo.toString,
         if (maxRepo == null) null else maxRepo.toString,
         if (minPath == null) null else minPath.toString,
         if (maxPath == null) null else maxPath.toString,
-        langs.toSeq.sorted,
-        if (minZ == Long.MaxValue) 0L else minZ,
-        if (maxZ == Long.MinValue) 0L else maxZ,
+        langs.toSeq.map(_.toString).sorted,
+        if (sawZ) minZ else 0L, if (sawZ) maxZ else 0L,
         minRh, maxRh, digest,
-        Some(nullsRepo), Some(nullsPath), Some(nullsLang), None)
-  }
-
-  /** partition index of a Spark output file name ("part-00007-<uuid>..."),
-    * or -1 when the name doesn't follow the FileFormatWriter pattern. */
-  def filePartIdx(name: String): Int = {
-    if (!name.startsWith("part-")) return -1
-    val rest = name.substring(5)
-    val dash = rest.indexOf('-')
-    if (dash <= 0) return -1
-    try rest.substring(0, dash).toInt catch { case _: NumberFormatException => -1 }
+        Some(nullsRepo), Some(nullsPath), Some(nullsLang), bucket)
+    }
   }
 }

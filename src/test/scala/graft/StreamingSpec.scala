@@ -299,7 +299,7 @@ class StreamingSpec extends SparkTestBase {
     // same files: min/max in UTF8 binary order, null counts, digest, langs
     val streamed = dst.manifestEntries(dst.currentSnapshot.get)
       .map(e => e.copy(langs = e.langs.sorted)).sortBy(_.file_path)
-    val recomputed = dst.statsForFiles(streamed.map(_.file_path), "stream")
+    val recomputed = graft.lake.StatsOracle.entriesFor(dst, streamed.map(_.file_path), "stream")
       .map(e => e.copy(langs = e.langs.sorted)).sortBy(_.file_path)
     assert(streamed == recomputed,
       "fused task-side stats drifted from the distributed stats pass")

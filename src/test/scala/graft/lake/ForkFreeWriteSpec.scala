@@ -141,20 +141,23 @@ class ForkFreeWriteSpec extends SparkTestBase {
       t.append(synthDf(100, 3).repartition(2))
       Maintenance.compact(t, "j1")
       val root = java.nio.file.Paths.get(t.location)
-      // createExclusive's markers are java.nio O_EXCL creates, outside Hadoop
-      val all = Files.walk(root).iterator.asScala.filter(_ != root).filterNot { p =>
-        val n = p.getFileName.toString
-        Seq("claim-", "edge-", "head-", "refs-exist").exists(n.startsWith)
-      }.toSeq
+      val all = Files.walk(root).iterator.asScala.filter(_ != root).toSeq
       def mode(p: Path) =
         Files.getAttribute(p, "unix:mode").asInstanceOf[Integer].intValue & 0xfff
       val (dirs, files) = all.partition(Files.isDirectory(_))
       assert(dirs.nonEmpty && files.nonEmpty)
       dirs.foreach(d => assert(mode(d) == 0x1c0, s"$d")) // 0700
       files.foreach(f => assert(mode(f) == 0x180, s"$f")) // 0600
-      files.filterNot(_.getFileName.toString.endsWith(".crc")).foreach { f =>
-        assert(Files.exists(f.resolveSibling("." + f.getFileName + ".crc")), s"$f")
-      }
+      // LakeIO's markers (createExclusive) and pointer files (writeAtomic)
+      // carry no .crc by design; every other file has one
+      val crcLess = Seq("claim-", "edge-", "head-", "refs-exist", "refs.json",
+        "version-hint.text", "max-version.text", "snapshot-v", "stats.json")
+      val (bare, checked) = files.filterNot(_.getFileName.toString.endsWith(".crc"))
+        .partition(f => crcLess.exists(f.getFileName.toString.startsWith))
+      assert(bare.nonEmpty && checked.nonEmpty)
+      def crc(f: Path) = f.resolveSibling("." + f.getFileName + ".crc")
+      checked.foreach(f => assert(Files.exists(crc(f)), s"$f"))
+      bare.foreach(f => assert(!Files.exists(crc(f)), s"$f"))
     } finally spark.conf.unset("fs.permissions.umask-mode")
   }
 
