@@ -911,9 +911,15 @@ class GraftTable(val spark: SparkSession, val location: String,
     * A delta with removals was planned against a specific snapshot's file
     * set (pass it as `basis`, rewrite ops do); a lost race surfaces as
     * [[CommitConflictException]] instead of silently re-applying a rewrite
-    * onto files another committer may have already replaced. */
+    * onto files another committer may have already replaced.
+    *
+    * `removedRecords` is the removed files' total record count; a commit
+    * that removes files must pass it (the caller planned from their
+    * entries, so it costs no metadata query here). */
   def commit(added: Seq[ManifestEntry], removedPaths: Set[String], operation: String,
              removedRecords: Long = -1L, basis: Option[Snapshot] = None): Snapshot = {
+    require(removedPaths.isEmpty || removedRecords >= 0L,
+      s"$operation removes ${removedPaths.size} files without their removedRecords")
     init()
     val uid = UUID.randomUUID().toString.take(12)
     val addRel = if (added.isEmpty) None else {
@@ -929,10 +935,7 @@ class GraftTable(val spark: SparkSession, val location: String,
       var (shards, seq) = parentShards(parent)
       addRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "add", r) }
       rmRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "remove", r) }
-      val removed =
-        if (removedPaths.isEmpty) 0L
-        else if (removedRecords >= 0L) removedRecords
-        else removedRecordSum(parent, removedPaths) // fallback: one metadata agg
+      val removed = if (removedPaths.isEmpty) 0L else removedRecords
       val liveCount = parent.map(_.recordCount).getOrElse(0L) +
         added.map(_.record_count).sum - removed
       val parentFiles = parent.map(_.fileCount).getOrElse(0L)
@@ -1447,17 +1450,6 @@ class GraftTable(val spark: SparkSession, val location: String,
     }
     snap
   }
-
-  /** record sum of specific removed paths — a small agg over the parent's
-    * live manifest, used only when the caller didn't know the count. */
-  private def removedRecordSum(parent: Option[Snapshot], paths: Set[String]): Long =
-    parent match {
-      case None => 0L
-      case Some(s) =>
-        val r = manifest(s).filter($"file_path".isin(paths.toSeq: _*))
-          .agg(sum($"record_count")).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
 
   // ---- storage bucketing (the layout behind storage-partitioned joins) --
 

@@ -1,7 +1,9 @@
 package graft.lake
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, In, LessThanOrEqual}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The maintenance jobs over a GraftTable (north_rule): bin-packing
   * compaction, Z-order/Hilbert clustering with salted range repartition,
@@ -261,17 +263,34 @@ object Maintenance {
     (rows, BatchPlan(b, peak, total))
   }
 
-  /** Copy-on-write MERGE INTO keyed on (repo, path, commit): updates rewrite
-    * only the affected files; inserts append new files (SURVEY.md §2.5).
+  /** Copy-on-write MERGE INTO keyed on (repo, path, commit): a target row
+    * whose key the source carries is replaced by the source's rows with that
+    * key, every other source row is inserted, and only the files holding a
+    * matched row are rewritten (SURVEY.md §2.5). Both regimes below keep the
+    * same semantics: duplicate source keys are all written; a key with a
+    * null component never matches, as in an equi-join; evolved columns the
+    * source lacks are written as typed nulls while rewritten target rows keep
+    * theirs; a bucketed table is written bucket-pure; and the rewrite commits
+    * against the snapshot it was planned on, so a commit that overtook it
+    * raises [[CommitConflictException]].
     *
-    * ONE full target scan (the key-match pass); everything after reads only
-    * the affected files or the cached source. The distinct source key set is
-    * broadcast when the source's PLAN-STATS size estimate is small (the
-    * maintenance norm — no extra count job, the same mechanism Spark's own
-    * autoBroadcastJoinThreshold uses); past `broadcastBytes` every key join
-    * falls back to a shuffle join — a 10% source at 100 TB would otherwise
-    * blow the driver/executor broadcast memory. The single-full-scan
-    * property holds on both paths. */
+    * One gate picks the regime: the conformed source's plan-stats size
+    * estimate against `broadcastBytes` (zero jobs; the mechanism of Spark's
+    * own autoBroadcastJoinThreshold).
+    *  - At or under the gate the source is collected to the driver once, and
+    *    its distinct key set stays there. The candidate files are the live
+    *    entries whose stats admit a source repo and the source's path range
+    *    ([[GraftScan.mayMatch]]; no job on a driver-local manifest). One job
+    *    reads the candidates' keys against the driver set and collects the
+    *    matched keys and their files; one job writes the affected files'
+    *    other rows plus the source. At most 4 jobs: the source collect (none
+    *    for a local source), a distributed manifest's pruning, the match,
+    *    the write.
+    *  - Past it (a 10% source at 100 TB would blow driver and broadcast
+    *    memory) the source is cached, one semi-join over the whole table
+    *    collects the affected files and the updated count, and every key
+    *    join is a shuffle join; the insert count is observed during the
+    *    write. Nothing stays cached when the merge returns or fails. */
   def mergeInto(table: GraftTable, jobId: String, source: DataFrame,
                 broadcastBytes: Long = 32L << 20): MergeResult = {
     val phase = "merge"
@@ -279,17 +298,13 @@ object Maintenance {
       val s = Lineage.summary(table, jobId, phase).get
       return MergeResult(0, s.rowCount, s.inputFiles.size)
     }
-    val spark = table.spark
-    import spark.implicits._
-    val keys = Seq("repo", "path", "commit")
     // base columns plus any evolved extras — a CoW rewrite that projected
     // only the base set would silently DROP evolved columns from rewritten
     // files; a source missing an extra gets it spliced in as typed null
-    val dataCols = table.dataColumnNames
-    val source0 = table.conform(source)
+    val src = table.conform(source).select(table.dataColumnNames.map(col): _*)
 
     if (table.currentSnapshot.isEmpty) {
-      val added = table.writeDataFilesRouted(source0.select(dataCols.map(col): _*), "merge-insert")
+      val added = table.writeDataFilesRouted(src, "merge-insert")
       table.commit(added, Set.empty, "merge")
       Lineage.record(table, jobId, phase, Seq.empty, added)
       return MergeResult(0, added.map(_.record_count).sum, 0)
@@ -298,58 +313,133 @@ object Maintenance {
     MorDelete.materializeIfPending(table)
     // the basis the rewrite is planned against: a concurrent commit past it
     // surfaces as CommitConflictException instead of a silent double-apply
-    val basisSnap = table.currentSnapshot
+    val basis = table.currentSnapshot.get
 
-    val src = source0.select(dataCols.map(col): _*).cache()
-    val srcKeys = src.select(keys.map(col): _*).distinct()
-    // plan-stats size estimate decides broadcast vs shuffle — zero jobs
-    val small = source.queryExecution.optimizedPlan.stats.sizeInBytes <= broadcastBytes
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-
-    // 1. the ONLY full-table pass: rows whose key the source touches, with
-    //    their file — one action (on the cached frame) yields the affected
-    //    file set AND the updated count; the cache then feeds the
-    //    classification keys without re-scanning the table
-    val matched = table.scan().withColumn("_file", input_file_name())
-      .join(hinted(srcKeys), keys, "left_semi")
-      .select((keys.map(col) :+ col("_file")): _*)
-      .cache()
-    val head = matched.agg(collect_set($"_file").as("files"),
-                           count(lit(1)).as("n")).head()
-    val affectedRel = head.getSeq[String](0).map(table.io.relativize).toSet
-    val updatedCount = head.getLong(1)
-    val matchedKeys = matched.select(keys.map(col): _*).distinct()
-
-    // 2. ONE copy-on-write write job for the whole merge delta: affected
-    //    files keep their untouched rows (left_anti on the source keys),
-    //    matched source keys land as updates, the rest as inserts —
-    //    (affected ∖ srcKeys) ∪ updates ∪ inserts, written once where the
-    //    old code paid two writes. The insert count is OBSERVED on the
-    //    insert branch during the same write (exact even when duplicate
-    //    keys make |src| − updatedCount wrong), not paid as an extra job.
-    val obs = org.apache.spark.sql.Observation()
-    // one flagged left join classifies updates vs inserts (matchedKeys is
-    // key-distinct, so no row duplication); the insert count is the flag's
-    // null count, observed during the write
-    val srcRows = src
-      .join(hinted(matchedKeys.withColumn("_m", lit(1))), keys, "left")
-      .observe(obs, count(when(col("_m").isNull, 1)).as("n"))
-      .drop("_m")
-    val mergedRows =
-      if (affectedRel.isEmpty) srcRows
-      else table.readFiles(affectedRel.toSeq)
-        .select(dataCols.map(col): _*)
-        .join(hinted(srcKeys), keys, "left_anti")
-        .unionByName(srcRows)
-    val added = table.writeDataFilesRouted(mergedRows, "merge")
-    val insertedCount = obs.get("n").asInstanceOf[Long]
-
-    table.commit(added, affectedRel, "merge", basis = basisSnap)
-    matched.unpersist()
-    src.unpersist()
-    Lineage.record(table, jobId, phase, affectedRel.toSeq, added)
-    MergeResult(updatedCount, insertedCount, affectedRel.size)
+    // the regimes' shared tail: ONE write job for the whole merge delta,
+    // then a commit that subtracts the replaced entries' record counts
+    def rewrite(rows: DataFrame, replaced: Seq[ManifestEntry]): Unit = {
+      val added = table.writeDataFilesRouted(rows, "merge")
+      val paths = replaced.map(_.file_path)
+      table.commit(added, paths.toSet, "merge",
+        removedRecords = replaced.iterator.map(_.record_count).sum, basis = Some(basis))
+      Lineage.record(table, jobId, phase, paths, added)
+    }
+    // the small regime's collect reuses the plan optimized here
+    if (src.queryExecution.optimizedPlan.stats.sizeInBytes <= broadcastBytes)
+      mergeSmall(table, basis, src, rewrite)
+    else mergeLarge(table, basis, src, rewrite)
   }
+
+  private type Key = (String, String, String)
+  private val keys = Seq("repo", "path", "commit")
+
+  /** the (repo, path, commit) in a row's first three columns; None when a
+    * component is null, which never matches */
+  private def keyOf(r: Row): Option[Key] =
+    if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) None
+    else Some((r.getString(0), r.getString(1), r.getString(2)))
+
+  /** whether a row's key is in the driver-held `set` (which holds no null
+    * component, so a null one is never in): travels in the task closure, no
+    * broadcast job */
+  private def inKeys(set: Set[Key]): Column =
+    udf((r: String, p: String, c: String) => set.contains((r, p, c)))
+      .apply(keys.map(col): _*)
+
+  private def mergeSmall(table: GraftTable, basis: Snapshot, src: DataFrame,
+                         rewrite: (DataFrame, Seq[ManifestEntry]) => Unit): MergeResult = {
+    // 1. the source, collected once: the driver key set, and the rows the
+    //    write reads back from a LocalRelation
+    val rows = src.collect()
+    val local = table.spark.createDataFrame(java.util.Arrays.asList(rows: _*), src.schema)
+    val srcKeys = rows.iterator.flatMap(keyOf).toSet
+    // 2. candidate files: stats that admit a source repo and the source's
+    //    path range (UTF8String order, the order the bounds were taken in)
+    val candidates =
+      if (srcKeys.isEmpty) Seq.empty
+      else {
+        val paths = srcKeys.iterator.map(k => UTF8String.fromString(k._2)).toSeq
+        val order: Ordering[UTF8String] = _ compareTo _
+        val filters: Array[Filter] = Array(
+          In("repo", srcKeys.iterator.map(_._1).toArray[Any].distinct),
+          GreaterThanOrEqual("path", paths.min(order).toString),
+          LessThanOrEqual("path", paths.max(order).toString))
+        liveEntries(table, basis, GraftScan.mayMatch(filters), GraftScan.manifestPredicate(filters))
+      }
+    // 3. one job: the candidates' rows the source matches, with their file
+    val hits =
+      if (candidates.isEmpty) Array.empty[Row]
+      else table.readFiles(candidates.map(_.file_path))
+        .select((keys.map(col) :+ input_file_name()): _*)
+        .filter(inKeys(srcKeys))
+        .collect()
+    val matched = hits.iterator.flatMap(keyOf).toSet
+    val files = hits.iterator.map(r => table.io.relativize(r.getString(3))).toSet
+    val affected = candidates.filter(e => files(e.file_path))
+    // 4. one write job: the affected files' rows the source does not
+    //    replace, plus every source row
+    val rewritten =
+      if (affected.isEmpty) local
+      else table.readFiles(affected.map(_.file_path)).select(src.columns.map(col): _*)
+        .filter(!inKeys(srcKeys)).unionByName(local)
+    rewrite(rewritten, affected)
+    MergeResult(hits.length, rows.count(r => keyOf(r).forall(!matched(_))), affected.size)
+  }
+
+  private def mergeLarge(table: GraftTable, basis: Snapshot, source: DataFrame,
+                         rewrite: (DataFrame, Seq[ManifestEntry]) => Unit): MergeResult = {
+    val src = source.cache()
+    try {
+      val srcKeys = src.select(keys.map(col): _*).distinct()
+      // the ONLY full-table pass: rows whose key the source touches, with
+      // their file — one action (on the cached frame) yields the affected
+      // file set AND the updated count; the cache then feeds the
+      // classification keys without re-scanning the table
+      val matched = table.scan().withColumn("_file", input_file_name())
+        .join(srcKeys, keys, "left_semi")
+        .select((keys.map(col) :+ col("_file")): _*)
+        .cache()
+      try {
+        val head = matched.agg(collect_set(col("_file")).as("files"),
+                               count(lit(1)).as("n")).head()
+        val files = head.getSeq[String](0).map(table.io.relativize).toSet
+        val affected =
+          if (files.isEmpty) Seq.empty
+          else liveEntries(table, basis, e => files(e.file_path),
+            col("file_path").isin(files.toSeq: _*))
+        // one flagged left join classifies updates vs inserts (the matched
+        // keys are distinct, so no row duplication); the insert count is
+        // the flag's null count, observed during the write — exact even
+        // when duplicate keys make |src| − updated wrong
+        val obs = org.apache.spark.sql.Observation()
+        val srcRows = src
+          .join(matched.select(keys.map(col): _*).distinct().withColumn("_m", lit(1)),
+            keys, "left")
+          .observe(obs, count(when(col("_m").isNull, 1)).as("n"))
+          .drop("_m")
+        val rewritten =
+          if (affected.isEmpty) srcRows
+          else table.readFiles(affected.map(_.file_path))
+            .select(src.columns.map(col): _*)
+            .join(srcKeys, keys, "left_anti")
+            .unionByName(srcRows)
+        rewrite(rewritten, affected)
+        MergeResult(head.getLong(1), obs.get("n").asInstanceOf[Long], affected.size)
+      } finally matched.unpersist()
+    } finally src.unpersist()
+  }
+
+  /** The live entries of `snap` that `keep` admits: filtered on the driver
+    * for a driver-local manifest (no job), by `pred`, keep's twin over the
+    * manifest DataFrame, otherwise. */
+  private def liveEntries(table: GraftTable, snap: Snapshot, keep: ManifestEntry => Boolean,
+                          pred: => Column): Seq[ManifestEntry] =
+    table.localManifest(table.manifestShards(snap)) match {
+      case Some(entries) => entries.filter(keep)
+      case None =>
+        import table.spark.implicits._
+        table.manifest(snap).filter(pred).as[ManifestEntry].collect().toSeq
+    }
 
   /** ANALYZE: one-pass per-column statistics — NDV via the KMV sketch (k
     * smallest distinct sha60 hashes; shuffle is partitions × k longs per
