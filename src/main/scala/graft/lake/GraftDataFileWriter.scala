@@ -37,7 +37,9 @@ case class GraftWriteCommit(entries: Seq[ManifestEntry]) extends WriterCommitMes
   *    xxhash64 of repo, path and lang (interleave keeps the lang hash's low
   *    byte, which is `pmod(xxhash64(lang), 256)`).
   *  - The manifest entry is [[WriteStats.TaskStats]] over exactly the rows
-  *    written, with the file's byte size after close.
+  *    written, with the file's byte size after close. Its `z_order` flag is
+  *    true by construction when the writer derived z; a passed-through z
+  *    earns it only if every row's value equals that derivation.
   *  - The file is created through [[ForkFreeLocalFileSystem.route]]: on
   *    `file:` no process is forked, the file has the mode bits of the
   *    session's `fs.permissions.umask-mode` and a `.crc` sibling.
@@ -56,7 +58,7 @@ final class GraftDataFileWriter(root: String, val relPath: String, tag: String,
   private val absPath = new HPath(new HPath(root), relPath)
   private val zPos = fileSchema.fieldIndex("z")
   private val computeZ = ordinals(zPos) < 0
-  private val stats = new WriteStats.TaskStats(fileSchema, bucketOrdinal)
+  private val stats = new WriteStats.TaskStats(fileSchema, bucketOrdinal, zDerived = computeZ)
   // behind the input row: a computed z, then a slot that is always null
   private val tail = new SpecificInternalRow(Seq(LongType, LongType))
   tail.setNullAt(1)

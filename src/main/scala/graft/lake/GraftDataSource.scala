@@ -758,11 +758,15 @@ object GraftScan {
     * an unknown side reads as true. Correctness never depends on the stats,
     * matching the residual-filter contract. The driver-local planner calls
     * it on the entries directly; [[manifestPredicate]] applies it to
-    * manifest DataFrames. */
-  def mayMatch(filters: Array[Filter]): ManifestEntry => Boolean = {
-    val tests = filters.map(compile)
-    e => tests.forall(_(e))
-  }
+    * manifest DataFrames.
+    *
+    * Each conjunction — the filter array itself and every `And` node, one
+    * under an `Or` included — is also tested as a whole on the z bounds:
+    * when it holds `EqualTo`/`In` on both `repo` and `path`, every matching
+    * row's Z-order key lies in the ranges [[zRanges]] gives, and an entry
+    * whose `z_order` is `Some(true)` and whose [min_z, max_z] meets none of
+    * them is dropped. */
+  def mayMatch(filters: Array[Filter]): ManifestEntry => Boolean = conjunction(filters.toSeq)
 
   /** [[mayMatch]] as a predicate over a manifest DataFrame's stat columns
     * (distributed manifests, bloom sidecars, incremental reads, DML and the
@@ -775,19 +779,82 @@ object GraftScan {
     }
 
   private val statColumns = Seq("min_repo", "max_repo", "min_path", "max_path", "langs",
-    "min_rh", "max_rh", "nulls_repo", "nulls_path", "nulls_lang", "record_count")
+    "min_rh", "max_rh", "nulls_repo", "nulls_path", "nulls_lang", "record_count",
+    "min_z", "max_z", "z_order")
 
   /** an entry carrying a statColumns row's stats. Unknown values map to
-    * what the rule reads as unknown: (0, 0) repo-hash bounds, and a
-    * record_count no null count reaches. */
+    * what the rule reads as unknown: (0, 0) repo-hash and z bounds, a
+    * record_count no null count reaches, and a None z_order. */
   private def statsOf(r: Row): ManifestEntry = {
     def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
-    val rh = if (r.isNullAt(5) || r.isNullAt(6)) (0L, 0L) else (r.getLong(5), r.getLong(6))
+    def bounds(i: Int) =
+      if (r.isNullAt(i) || r.isNullAt(i + 1)) (0L, 0L) else (r.getLong(i), r.getLong(i + 1))
+    val (rh, z) = (bounds(5), bounds(11))
     ManifestEntry(null, null, if (r.isNullAt(10)) Long.MaxValue else r.getLong(10), 0L,
       r.getString(0), r.getString(1), r.getString(2), r.getString(3),
-      if (r.isNullAt(4)) null else r.getSeq[String](4), 0L, 0L, rh._1, rh._2, 0L,
-      opt(7), opt(8), opt(9))
+      if (r.isNullAt(4)) null else r.getSeq[String](4), z._1, z._2, rh._1, rh._2, 0L,
+      opt(7), opt(8), opt(9), None, if (r.isNullAt(13)) None else Some(r.getBoolean(13)))
   }
+
+  /** the conjuncts of f, And nodes flattened. */
+  private def conjuncts(f: Filter): Seq[Filter] = f match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case _ => Seq(f)
+  }
+
+  /** every conjunct's own test, plus the z test of the conjunction. */
+  private def conjunction(fs: Seq[Filter]): ManifestEntry => Boolean = {
+    val leaves = fs.flatMap(conjuncts)
+    val tests = (leaves.map(compile) ++ zRanges(leaves).map(zTest)).toArray
+    e => tests.forall(_(e))
+  }
+
+  /** The starts of the Z-order key ranges that hold every row satisfying
+    * `leaves`, None when they do not bound it. A row with repo = a and
+    * path = b has z = interleave(h(a), h(b), h(lang)) for the seed-42
+    * xxhash64 h, and interleave puts the lang byte below the 56 hash bits,
+    * so z lies in [p, p | 0xff] for p = interleave(h(a), h(b), 0) whatever
+    * its lang. The values of every `EqualTo`/`In` on repo (and on path)
+    * intersect; a null or non-string value among them, or more than
+    * [[maxZRanges]] pairs, leaves the conjunction without a z test. The
+    * starts come distinct and ascending in signed order, the order min_z
+    * and max_z are taken in; their low bytes are 0, so the ranges are
+    * disjoint and ascend with them. */
+  private def zRanges(leaves: Seq[Filter]): Option[Array[Long]] = {
+    def sets(c: String) = leaves.collect {
+      case EqualTo(`c`, v) => Seq(v)
+      case In(`c`, vs) => vs.toSeq
+    }
+    val (repoSets, pathSets) = (sets("repo"), sets("path"))
+    def values(ss: Seq[Seq[Any]]) = ss.map(_.map(_.asInstanceOf[String]).toSet).reduce(_ intersect _)
+    if (repoSets.isEmpty || pathSets.isEmpty ||
+        (repoSets ++ pathSets).flatten.exists(!_.isInstanceOf[String])) None
+    else {
+      val (repos, paths) = (values(repoSets), values(pathSets))
+      def h(v: String) = org.apache.spark.sql.catalyst.expressions.XxHash64Function
+        .hash(UTF8String.fromString(v), StringType, 42L)
+      if (repos.size.toLong * paths.size > maxZRanges) None
+      else Some((for (a <- repos.toArray.map(h); b <- paths.toArray.map(h))
+        yield graft.expr.ZOrderInterleave.interleave(a, b, 0L)).distinct.sorted)
+    }
+  }
+
+  /** the most (repo, path) pairs a conjunction is z-tested on. */
+  private val maxZRanges = 1L << 16
+
+  /** keeps an entry unless its z is the Z-order key (`z_order` is
+    * `Some(true)`) with known bounds ((0, 0) carries none) and no range
+    * [p, p | 0xff] of `starts` meets [min_z, max_z]. */
+  private def zTest(starts: Array[Long]): ManifestEntry => Boolean = e =>
+    !e.z_order.contains(true) || (e.min_z == 0L && e.max_z == 0L) || {
+      // the first range ending at or after min_z must start by max_z
+      var lo = 0; var hi = starts.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if ((starts(mid) | 0xffL) < e.min_z) lo = mid + 1 else hi = mid
+      }
+      lo < starts.length && starts(lo) <= e.max_z
+    }
 
   /** `stat <op> v` by the sign of stat.compareTo(v); a null stat keeps. */
   private def cmp(stat: String, v: UTF8String)(ok: Int => Boolean): Boolean =
@@ -817,7 +884,7 @@ object GraftScan {
     case GreaterThanOrEqual("path", v: String) => bound(_.max_path, v)(_ >= 0)
     case LessThan("path", v: String) => bound(_.min_path, v)(_ < 0)
     case LessThanOrEqual("path", v: String) => bound(_.min_path, v)(_ <= 0)
-    case In(c @ ("repo" | "lang"), vs) =>
+    case In(c @ ("repo" | "path" | "lang"), vs) =>
       val any = vs.map {
         case v: String => compile(EqualTo(c, v))
         case _ => (_: ManifestEntry) => true
@@ -832,9 +899,7 @@ object GraftScan {
       e => nullCount(c)(e).forall(_ > 0L)
     case IsNotNull(c) if nullCount.contains(c) =>
       e => nullCount(c)(e).forall(_ < e.record_count)
-    case And(l, r) =>
-      val (a, b) = (compile(l), compile(r))
-      e => a(e) && b(e)
+    case And(l, r) => conjunction(Seq(l, r))
     case Or(l, r) =>
       val (a, b) = (compile(l), compile(r))
       e => a(e) || b(e)

@@ -104,7 +104,19 @@ final case class ManifestEntry(file_path: String, partition: String,
                                // ride on; any entry with None degrades the
                                // scan to unknown partitioning, never to a
                                // wrong join
-                               bucket: Option[Int] = None)
+                               bucket: Option[Int] = None,
+                               // whether every row's z is the Z-order key
+                               // ZOrderInterleave.interleave(xxhash64(repo),
+                               // xxhash64(path), xxhash64(lang)), so
+                               // [min_z, max_z] bounds the (repo, path)
+                               // pairs the file can hold. Set per file by
+                               // WriteStats.TaskStats from the rows written:
+                               // Some(false) for Hilbert values, a user's or
+                               // a stream's own z, a null z; None (a
+                               // pre-field manifest) is unknown. Only
+                               // Some(true) lets GraftScan.mayMatch prune a
+                               // (repo, path) point on the z bounds.
+                               z_order: Option[Boolean] = None)
 
 final case class ManifestShard(seq: Int, kind: String, path: String) // add | remove
 

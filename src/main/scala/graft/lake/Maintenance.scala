@@ -290,13 +290,18 @@ object Maintenance {
     *    memory) the source is cached, one semi-join over the whole table
     *    collects the affected files and the updated count, and every key
     *    join is a shuffle join; the insert count is observed during the
-    *    write. Nothing stays cached when the merge returns or fails. */
+    *    write. Nothing stays cached when the merge returns or fails.
+    *
+    * The merge's lineage records its updated and inserted counts, so a call
+    * resumed with the same jobId returns the first call's result; lineage
+    * written without them answers (0, rows written, files replaced). */
   def mergeInto(table: GraftTable, jobId: String, source: DataFrame,
                 broadcastBytes: Long = 32L << 20): MergeResult = {
     val phase = "merge"
     if (Lineage.isDone(table, jobId, phase)) {
       val s = Lineage.summary(table, jobId, phase).get
-      return MergeResult(0, s.rowCount, s.inputFiles.size)
+      val (updated, inserted) = s.counts.getOrElse((0L, s.rowCount))
+      return MergeResult(updated, inserted, s.inputFiles.size)
     }
     // base columns plus any evolved extras — a CoW rewrite that projected
     // only the base set would silently DROP evolved columns from rewritten
@@ -305,9 +310,10 @@ object Maintenance {
 
     if (table.currentSnapshot.isEmpty) {
       val added = table.writeDataFilesRouted(src, "merge-insert")
+      val inserted = added.map(_.record_count).sum
       table.commit(added, Set.empty, "merge")
-      Lineage.record(table, jobId, phase, Seq.empty, added)
-      return MergeResult(0, added.map(_.record_count).sum, 0)
+      Lineage.record(table, jobId, phase, Seq.empty, added, Some((0L, inserted)))
+      return MergeResult(0, inserted, 0)
     }
     // the CoW rewrite re-sequences files — materialize pending MoR deletes
     MorDelete.materializeIfPending(table)
@@ -316,13 +322,18 @@ object Maintenance {
     val basis = table.currentSnapshot.get
 
     // the regimes' shared tail: ONE write job for the whole merge delta,
-    // then a commit that subtracts the replaced entries' record counts
-    def rewrite(rows: DataFrame, replaced: Seq[ManifestEntry]): Unit = {
+    // then a commit that subtracts the replaced entries' record counts and
+    // lineage with the (updated, inserted) counts, taken after the write
+    // (the large regime observes its insert count there)
+    def rewrite(rows: DataFrame, replaced: Seq[ManifestEntry],
+                counts: () => (Long, Long)): MergeResult = {
       val added = table.writeDataFilesRouted(rows, "merge")
+      val (updated, inserted) = counts()
       val paths = replaced.map(_.file_path)
       table.commit(added, paths.toSet, "merge",
         removedRecords = replaced.iterator.map(_.record_count).sum, basis = Some(basis))
-      Lineage.record(table, jobId, phase, paths, added)
+      Lineage.record(table, jobId, phase, paths, added, Some((updated, inserted)))
+      MergeResult(updated, inserted, replaced.size)
     }
     // the small regime's collect reuses the plan optimized here
     if (src.queryExecution.optimizedPlan.stats.sizeInBytes <= broadcastBytes)
@@ -346,8 +357,12 @@ object Maintenance {
     udf((r: String, p: String, c: String) => set.contains((r, p, c)))
       .apply(keys.map(col): _*)
 
+  /** the regimes' shared write, commit and lineage: (rows, replaced
+    * entries, the (updated, inserted) counts read after the write). */
+  private type Rewrite = (DataFrame, Seq[ManifestEntry], () => (Long, Long)) => MergeResult
+
   private def mergeSmall(table: GraftTable, basis: Snapshot, src: DataFrame,
-                         rewrite: (DataFrame, Seq[ManifestEntry]) => Unit): MergeResult = {
+                         rewrite: Rewrite): MergeResult = {
     // 1. the source, collected once: the driver key set, and the rows the
     //    write reads back from a LocalRelation
     val rows = src.collect()
@@ -382,12 +397,12 @@ object Maintenance {
       if (affected.isEmpty) local
       else table.readFiles(affected.map(_.file_path)).select(src.columns.map(col): _*)
         .filter(!inKeys(srcKeys)).unionByName(local)
-    rewrite(rewritten, affected)
-    MergeResult(hits.length, rows.count(r => keyOf(r).forall(!matched(_))), affected.size)
+    rewrite(rewritten, affected,
+      () => (hits.length.toLong, rows.count(r => keyOf(r).forall(!matched(_))).toLong))
   }
 
   private def mergeLarge(table: GraftTable, basis: Snapshot, source: DataFrame,
-                         rewrite: (DataFrame, Seq[ManifestEntry]) => Unit): MergeResult = {
+                         rewrite: Rewrite): MergeResult = {
     val src = source.cache()
     try {
       val srcKeys = src.select(keys.map(col): _*).distinct()
@@ -423,8 +438,7 @@ object Maintenance {
             .select(src.columns.map(col): _*)
             .join(srcKeys, keys, "left_anti")
             .unionByName(srcRows)
-        rewrite(rewritten, affected)
-        MergeResult(head.getLong(1), obs.get("n").asInstanceOf[Long], affected.size)
+        rewrite(rewritten, affected, () => (head.getLong(1), obs.get("n").asInstanceOf[Long]))
       } finally matched.unpersist()
     } finally src.unpersist()
   }

@@ -104,6 +104,7 @@ object MetaIO {
       |  optional int64 nulls_path;
       |  optional int64 nulls_lang;
       |  optional int32 bucket;
+      |  optional boolean z_order;
       |}""".stripMargin)
 
   private val shardSchema: MessageType = MessageTypeParser.parseMessageType(
@@ -132,6 +133,8 @@ object MetaIO {
       |  optional int64 row_count;
       |  optional binary sha256_digest (UTF8);
       |  optional int64 ts_millis;
+      |  optional int64 updated;
+      |  optional int64 inserted;
       |}""".stripMargin)
 
   private def writer(io: LakeIO, rel: String, schema: MessageType): ParquetWriter[Group] = {
@@ -188,6 +191,7 @@ object MetaIO {
       e.nulls_path.foreach(v => g.append("nulls_path", v))
       e.nulls_lang.foreach(v => g.append("nulls_lang", v))
       e.bucket.foreach(b => g.append("bucket", b))
+      e.z_order.foreach(b => g.append("z_order", b))
       w.write(g)
     } finally w.close()
   }
@@ -216,6 +220,8 @@ object MetaIO {
       addList(g, "output_files", r.output_files)
       g.append("row_count", r.row_count).append("sha256_digest", r.sha256_digest)
         .append("ts_millis", r.ts_millis)
+      r.updated.foreach(v => g.append("updated", v))
+      r.inserted.foreach(v => g.append("inserted", v))
       w.write(g)
     } finally w.close()
   }
@@ -272,8 +278,13 @@ object MetaIO {
   private def readGroups(io: LakeIO, rel: String): Seq[Group] =
     io.status(rel).fold(Seq.empty[Group])(readGroups(io, _))
 
+  /** whether g carries a value of field: false when a shard written before
+    * the field existed lacks the column. */
+  private def has(g: Group, field: String): Boolean =
+    g.getType.containsField(field) && g.getFieldRepetitionCount(field) > 0
+
   private def optLong(g: Group, field: String): Option[Long] =
-    if (g.getFieldRepetitionCount(field) == 0) None else Some(g.getLong(field, 0))
+    if (has(g, field)) Some(g.getLong(field, 0)) else None
 
   private def optStr(g: Group, field: String): String =
     if (g.getFieldRepetitionCount(field) == 0) null else g.getString(field, 0)
@@ -295,8 +306,8 @@ object MetaIO {
           g.getLong("min_rh", 0), g.getLong("max_rh", 0),
           g.getLong("digest", 0),
           optLong(g, "nulls_repo"), optLong(g, "nulls_path"), optLong(g, "nulls_lang"),
-          if (g.getFieldRepetitionCount("bucket") == 0) None
-          else Some(g.getInteger("bucket", 0)))
+          if (has(g, "bucket")) Some(g.getInteger("bucket", 0)) else None,
+          if (has(g, "z_order")) Some(g.getBoolean("z_order", 0)) else None)
       }
     }
 
@@ -316,6 +327,7 @@ object MetaIO {
       Lineage.LineageRow(g.getString("job_id", 0), g.getString("phase", 0),
         g.getInteger("partition_id", 0), getList(g, "input_files"),
         getList(g, "output_files"), g.getLong("row_count", 0),
-        g.getString("sha256_digest", 0), g.getLong("ts_millis", 0))
+        g.getString("sha256_digest", 0), g.getLong("ts_millis", 0),
+        optLong(g, "updated"), optLong(g, "inserted"))
     }
 }

@@ -32,8 +32,17 @@ object WriteStats {
 
   /** Stats over rows of `schema`, a data file's schema (it has a LONG `z`);
     * `bucketOrdinal` is the bucket id's ordinal in the INPUT row, -1 on an
-    * unbucketed write. */
-  final class TaskStats(schema: StructType, bucketOrdinal: Int) {
+    * unbucketed write.
+    *
+    * The entry's `z_order` flag says whether every row's z is non-null and
+    * equals `ZOrderInterleave.interleave(xxhash64(repo), xxhash64(path),
+    * xxhash64(lang))`, the key point pruning reads z as. It is a fact about
+    * the rows, not the writer: an input z passes through the writer
+    * unchanged and may hold Hilbert indexes, a user's or a stream's own
+    * values, or a rewrite's mix of such files. So each row is checked, up
+    * to its first mismatch, unless `zDerived` says the writer computed z
+    * by that very formula. */
+  final class TaskStats(schema: StructType, bucketOrdinal: Int, zDerived: Boolean) {
     private def stringCol(name: String): Int =
       schema.fields.indexWhere(f => f.name.equalsIgnoreCase(name) && f.dataType == StringType)
     val repoIdx: Int = stringCol("repo")
@@ -50,6 +59,7 @@ object WriteStats {
     private var minPath: UTF8String = null; private var maxPath: UTF8String = null
     private val langs = scala.collection.mutable.HashSet.empty[UTF8String]
     private var minZ = Long.MaxValue; private var maxZ = Long.MinValue; private var sawZ = false
+    private var zOrder = true
     private var minRh = Long.MaxValue; private var maxRh = Long.MinValue
     private var digest = 0L
     private var nullsRepo = 0L; private var nullsPath = 0L; private var nullsLang = 0L
@@ -90,14 +100,17 @@ object WriteStats {
         val u = row.getUTF8String(langIdx)
         if (!langs.contains(u)) langs += u.clone()
       }
-      if (!row.isNullAt(zIdx)) {
-        val z = row.getLong(zIdx); sawZ = true
-        if (z < minZ) minZ = z
-        if (z > maxZ) maxZ = z
-      }
       val rh = hash(row, repoIdx)
       if (rh < minRh) minRh = rh
       if (rh > maxRh) maxRh = rh
+      if (row.isNullAt(zIdx)) zOrder = false
+      else {
+        val z = row.getLong(zIdx); sawZ = true
+        if (z < minZ) minZ = z
+        if (z > maxZ) maxZ = z
+        if (zOrder && !zDerived) zOrder = z == graft.expr.ZOrderInterleave.interleave(
+          rh, hash(row, pathIdx), hash(row, langIdx))
+      }
       var h = hashInto(row, pathIdx, rh)
       h = hashInto(row, commitIdx, h)
       if (contentIdx >= 0 && !row.isNullAt(contentIdx))
@@ -127,7 +140,7 @@ object WriteStats {
         langs.toSeq.map(_.toString).sorted,
         if (sawZ) minZ else 0L, if (sawZ) maxZ else 0L,
         minRh, maxRh, digest,
-        Some(nullsRepo), Some(nullsPath), Some(nullsLang), bucket)
+        Some(nullsRepo), Some(nullsPath), Some(nullsLang), bucket, Some(zOrder))
     }
   }
 }

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 /** The reference for the manifest stats graft's writer computes while it
   * writes: one `groupBy(input_file_name)` aggregation of the Column kernels
   * that define the manifest contract, over exactly the given files of the
-  * table, with byte sizes from a listing of their directories. */
+  * table, with byte sizes from a listing of their directories. The
+  * `z_order` flag is whether every row's z is null-safe equal to the
+  * Z-order key the SQL functions give. */
 object StatsOracle {
 
   def entriesFor(t: GraftTable, relPaths: Seq[String], tag: String,
@@ -16,7 +18,10 @@ object StatsOracle {
     val dirs = relPaths.map(p => p.substring(0, p.lastIndexOf('/'))).distinct
     // file names carry a UUID, so bare names never collide across dirs
     val sizes = dirs.flatMap(d => t.io.listWithSizes(d)).toMap
+    val zOrder = graft.expr.XmqFunctions.zorder_interleave(
+      xxhash64($"repo"), xxhash64($"path"), pmod(xxhash64($"lang"), lit(256L)))
     val written = t.readFiles(relPaths).withColumn("h", GraftTable.rowHash())
+      .withColumn("zk", $"z" <=> zOrder)
     val bucketAggs = bucketBy.toSeq.flatMap { case (c, n) =>
       val b = Bucketing.bucketCol(c, n)
       Seq(min(b).as("bmin"), max(b).as("bmax"))
@@ -31,13 +36,14 @@ object StatsOracle {
            expr("bit_xor(h)").as("digest"),
            count(when($"repo".isNull, 1)).as("nulls_repo"),
            count(when($"path".isNull, 1)).as("nulls_path"),
-           count(when($"lang".isNull, 1)).as("nulls_lang")) ++ bucketAggs): _*)
+           count(when($"lang".isNull, 1)).as("nulls_lang"),
+           expr("bool_and(zk)").as("z_order")) ++ bucketAggs): _*)
       .collect()
     stats.toSeq.map { r =>
       val rel = t.io.relativize(r.getString(0))
       val name = rel.substring(rel.lastIndexOf('/') + 1)
       val bucket = bucketBy.map { _ =>
-        val (bmin, bmax) = (r.getInt(15), r.getInt(16))
+        val (bmin, bmax) = (r.getInt(16), r.getInt(17))
         require(bmin == bmax, s"impure file $rel (buckets $bmin..$bmax)")
         bmin
       }
@@ -45,7 +51,7 @@ object StatsOracle {
         r.getString(2), r.getString(3), r.getString(4), r.getString(5),
         r.getSeq[String](6).sorted, r.getLong(7), r.getLong(8), r.getLong(9), r.getLong(10),
         r.getLong(11), Some(r.getLong(12)), Some(r.getLong(13)), Some(r.getLong(14)),
-        bucket)
+        bucket, Some(r.getBoolean(15)))
     }
   }
 }

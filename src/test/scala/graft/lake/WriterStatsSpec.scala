@@ -80,7 +80,7 @@ class WriterStatsSpec extends SparkTestBase {
   test("append, compact and a Hilbert cluster: entries equal the reference") {
     val t = fresh("graft-ws-append")
     t.append(synthDf(300, 1).repartition(3))
-    assert(checkAdded(t, Set.empty).size == 3)
+    assert(checkAdded(t, Set.empty).map(_.z_order) == Seq.fill(3)(Some(true)))
     t.append(synthDf(120, 2).repartition(2))
     assert(zMismatches(t, zOrder) == 0)
 
@@ -90,7 +90,7 @@ class WriterStatsSpec extends SparkTestBase {
 
     before = live(t)
     Maintenance.cluster(t, "j2", useHilbert = true)
-    checkAdded(t, before)
+    assert(checkAdded(t, before).forall(_.z_order.contains(false)))
     // the cluster's Hilbert values pass through the writer unchanged
     val hilbert = graft.expr.XmqFunctions.hilbert_index(
       shiftrightunsigned(xxhash64(col("repo")), 34),
