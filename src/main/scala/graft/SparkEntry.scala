@@ -18,12 +18,20 @@ object SparkEntry {
   // 92 queries issue ~150 such reads. The memo holds only the logical plan
   // (no data, no .cache()) — every query still computes from the parquet
   // input; this removes repeated driver-side listing/schema work only.
-  private val readCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  // It holds one session's frames: a different session replaces the whole
+  // memo, so it pins at most the last session it served.
+  private final class ReadCache(val session: SparkSession) {
+    val frames = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  }
+  private val readCache = new java.util.concurrent.atomic.AtomicReference[ReadCache]()
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    readCache.computeIfAbsent((s, s"$dir/$name.parquet"),
-      k => k._1.read.parquet(k._2))
+    readCache.updateAndGet(c => if (c != null && (c.session eq s)) c else new ReadCache(s))
+      .frames.computeIfAbsent(s"$dir/$name.parquet", p => s.read.parquet(p))
+
+  /** the session whose frames the read memo holds, if any */
+  private[graft] def readCacheSession: Option[SparkSession] =
+    Option(readCache.get).map(_.session)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {

@@ -360,18 +360,30 @@ class LakeSpec extends SparkTestBase {
       keyset(synthDf(200)))
   }
 
+  /** the live paths of each commit after `v0`, paired with its parent's */
+  private def commitsAfter(t: GraftTable, v0: Long): Seq[(Set[String], Set[String])] = {
+    def live(v: Long) = t.manifestEntries(t.snapshot(v).get).map(_.file_path).toSet
+    (v0 + 1 to t.currentVersion).map(v => (live(v - 1), live(v)))
+  }
+
   test("batched compaction: bounded per-batch collects, per-batch commits, rows preserved") {
     val t = freshTable("graft-compactbatch")
     t.append(synthDf(400).repartition(16)) // 16 small files
     val v0 = t.currentVersion
-    val (results, plan) = Maintenance.compactBatched(t, "jobcb",
+    val records = t.manifestEntries(t.currentSnapshot.get)
+      .map(e => e.file_path -> e.record_count).toMap
+    val res = Maintenance.compact(t, "jobcb",
       smallBytes = 1L << 20, targetBytes = 1L << 30, batchFiles = 5)
-    // 16 paths in batches of <=5: driver never held more than 5 at once
-    assert(plan.peakBatchPaths <= 5 && plan.totalPaths == 16, s"plan=$plan")
-    assert(plan.batches >= 3, s"expected >=3 rewrite batches, got $plan")
-    assert(results.map(_.inputFiles).sum >= 15) // a trailing 1-file batch may skip
-    // one commit per batch — each is an independent recoverable snapshot
-    assert(t.currentVersion == v0 + plan.batches)
+    // 16 paths in batches of <=5 (5, 5, 5, 1): the trailing 1-file batch
+    // has nothing to pack, the other three are one commit each
+    val commits = commitsAfter(t, v0)
+    assert(commits.size == 3, s"expected 3 batch commits, got ${commits.size}")
+    val removed = commits.map { case (parent, child) => parent -- child }
+    // no commit replaced more than batchFiles files
+    assert(removed.forall(r => r.nonEmpty && r.size <= 5), removed.map(_.size))
+    assert(res.inputFiles == 15 && removed.map(_.size).sum == 15, s"res=$res")
+    assert(removed.reduce(_ ++ _).size == 15) // each file in one batch only
+    assert(res.rows == removed.flatten.map(records).sum)
     assert(keyset(t.scan()) == keyset(synthDf(400)))
     assert(t.currentSnapshot.get.recordCount == 400)
   }
@@ -379,15 +391,22 @@ class LakeSpec extends SparkTestBase {
   test("batched clustering: rewrites everything in bounded batches, rows preserved") {
     val t = freshTable("graft-clusterbatch")
     t.append(synthDf(300).repartition(9))
-    val (rows, plan) = Maintenance.clusterBatched(t, "jobclb",
-      filesPerBatchOutput = 2, batchFiles = 4)
-    assert(rows == 300 && plan.peakBatchPaths <= 4 && plan.totalPaths == 9, s"$plan")
-    assert(plan.batches == 3)
+    val v0 = t.currentVersion
+    val before = t.manifestEntries(t.currentSnapshot.get).map(_.file_path).toSet
+    assert(before.size == 9)
+    val rows = Maintenance.cluster(t, "jobclb", numFiles = 2, batchFiles = 4)
+    assert(rows == 300)
+    // 9 paths in batches of <=4 (4, 4, 1): one commit each
+    val commits = commitsAfter(t, v0)
+    assert(commits.size == 3, s"expected 3 batch commits, got ${commits.size}")
+    val removed = commits.map { case (parent, child) => parent -- child }
+    assert(removed.forall(r => r.nonEmpty && r.size <= 4), removed.map(_.size))
+    assert(removed.reduce(_ ++ _) == before)
     assert(keyset(t.scan()) == keyset(synthDf(300)))
     assert(t.currentSnapshot.get.recordCount == 300)
-    // every original file was rewritten: live set carries the cluster tag
-    val live = t.manifestEntries(t.currentSnapshot.get)
-    assert(live.forall(_.file_path.contains("cluster-b")), live.map(_.file_path).mkString(","))
+    // every original file was rewritten: none of them is live any more
+    val live = t.manifestEntries(t.currentSnapshot.get).map(_.file_path).toSet
+    assert((live & before).isEmpty, live.mkString(","))
   }
 
   test("DSv2 planning prunes the manifest distributed: partitions == survivors over a 10k-entry manifest") {

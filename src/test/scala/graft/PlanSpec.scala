@@ -410,4 +410,16 @@ class PlanSpec extends SparkTestBase {
     // whole-stage-codegen stages render as "*(n) Operator" in toString
     assert(p.contains("*(") , s"no codegen spans:\n$p")
   }
+
+  test("the read memo holds the frames of the last session only") {
+    SparkEntry.queries("q1_agg")(spark, sfDir)
+    assert(SparkEntry.readCacheSession.exists(_ eq spark))
+    val other = spark.newSession()
+    val df = SparkEntry.queries("q1_agg")(other, sfDir)
+    assert(df.sparkSession eq other)
+    // the first session's frames are dropped, not kept beside the new ones
+    assert(SparkEntry.readCacheSession.exists(_ eq other))
+    assert(SparkEntry.queries("q1_agg")(spark, sfDir).sparkSession eq spark)
+    assert(SparkEntry.readCacheSession.exists(_ eq spark))
+  }
 }

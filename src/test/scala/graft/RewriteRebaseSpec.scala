@@ -2,9 +2,34 @@ package graft.lake
 
 import graft.SparkTestBase
 import graft.synth.SourceFiles
+import java.io.OutputStream
+import java.net.URI
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicReference
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
+
+/** The local file system under the `racefault:` scheme: the first data file
+  * created after [[RaceFaultFileSystem.beforeDataFile]] runs that hook
+  * first, synchronously, in the task creating it — a commit that lands
+  * inside a rewrite's write window, made deterministic. */
+class RaceFaultFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("racefault:///")
+  override def getScheme: String = "racefault"
+  override protected def createOutputStreamWithMode(f: Path, append: Boolean,
+                                                    permission: FsPermission): OutputStream = {
+    if (f.toString.contains("/data/"))
+      Option(RaceFaultFileSystem.hook.getAndSet(null)).foreach(_())
+    super.createOutputStreamWithMode(f, append, permission)
+  }
+}
+
+object RaceFaultFileSystem {
+  private[lake] val hook = new AtomicReference[() => Unit]()
+  def beforeDataFile(f: => Unit): Unit = hook.set(() => f)
+}
 
 /** Validated rebase for rewrite commits (GraftTable.commitRewrite — the
   * Iceberg RewriteFiles stance): a compaction/clustering planned against
@@ -18,6 +43,51 @@ class RewriteRebaseSpec extends SparkTestBase {
   private def synthDf(n: Int, seed: Long = 42) = SourceFiles.generate(n, seed).toDF()
   private def fresh(): GraftTable =
     new GraftTable(spark, Files.createTempDirectory("graft-rebase").toString)
+
+  private def keys(df: org.apache.spark.sql.DataFrame) =
+    df.select($"repo", $"path", $"commit").as[(String, String, String)].collect().toSeq
+
+  /** Run a multi-batch rewrite of 8 files in batches of 2 while another
+    * writer deletes the last file of `order` (the rewrite's planned order,
+    * so a file of its last batch) the moment the first batch creates its
+    * first data file. The rewrite must conflict or rebase correctly: the
+    * deleted rows stay deleted, no row is doubled and the record count
+    * matches the rows. */
+  private def raceRemoval(order: GraftTable => Seq[String])(
+      rewrite: GraftTable => Unit): Unit = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.racefault.impl", classOf[RaceFaultFileSystem].getName)
+    hc.setBoolean("fs.racefault.impl.disable.cache", true)
+    try {
+      val t = new GraftTable(spark,
+        "racefault://" + Files.createTempDirectory("graft-rebase-race"))
+      t.append(synthDf(200, seed = 91).repartition(8))
+      val planned = order(t)
+      assert(planned.size == 8)
+      val victim = planned.last
+      val victimKeys = keys(t.readFiles(Seq(victim))).toSet
+      val victimRows = t.manifestEntries(t.currentSnapshot.get)
+        .find(_.file_path == victim).get.record_count
+      val expected = keys(t.scan()).toSet -- victimKeys
+      @volatile var fired = false
+      RaceFaultFileSystem.beforeDataFile {
+        new GraftTable(spark, t.location)
+          .commit(Seq.empty, Set(victim), "delete", removedRecords = victimRows)
+        fired = true
+      }
+      val outcome = scala.util.Try(rewrite(t))
+      assert(fired, "the racing delete never ran")
+      outcome.failed.foreach(e => assert(e.isInstanceOf[CommitConflictException], e))
+      val live = keys(t.scan())
+      assert(live.size == live.distinct.size, "a row was doubled")
+      assert(live.toSet == expected, "the deleted file's rows came back")
+      assert(t.currentSnapshot.get.recordCount == live.size)
+    } finally {
+      RaceFaultFileSystem.hook.set(null)
+      hc.unset("fs.racefault.impl")
+      hc.unset("fs.racefault.impl.disable.cache")
+    }
+  }
 
   /** plan a rewrite of `paths` at the current head: same rows, new files. */
   private def planRewrite(t: GraftTable, paths: Seq[String]) =
@@ -144,7 +214,8 @@ class RewriteRebaseSpec extends SparkTestBase {
     assert(e.getMessage.contains("restructured the manifest list"))
   }
 
-  test("Maintenance.compact lands while appends race it") {
+  /** `compact` a table of 8 small files while three appends race it */
+  private def compactRacingAppends(compact: GraftTable => Maintenance.CompactionResult): Unit = {
     val t = fresh()
     // many small files so compaction has real work
     t.append(synthDf(200, seed = 71).repartition(8))
@@ -161,7 +232,7 @@ class RewriteRebaseSpec extends SparkTestBase {
     val compaction = pool.submit(new java.util.concurrent.Callable[Maintenance.CompactionResult] {
       def call(): Maintenance.CompactionResult = {
         start.await()
-        Maintenance.compact(new GraftTable(spark, t.location), "race-job")
+        compact(new GraftTable(spark, t.location))
       }
     })
     start.countDown()
@@ -174,5 +245,28 @@ class RewriteRebaseSpec extends SparkTestBase {
     // single linear chain — racing never forked the table
     val chain = t.ancestorsOf(t.currentVersion)
     assert(t.listSnapshots().forall(s => chain(s.version)))
+  }
+
+  test("Maintenance.compact lands while appends race it") {
+    compactRacingAppends(Maintenance.compact(_, "race-job"))
+  }
+
+  test("multi-batch Maintenance.compact lands while appends race it") {
+    // batches of 3: of the 8 to 11 small files only a trailing single stays
+    compactRacingAppends(Maintenance.compact(_, "race-batched", batchFiles = 3))
+  }
+
+  test("multi-batch compact never resurrects a file a racing commit removed") {
+    raceRemoval(t => t.manifest(t.currentSnapshot.get).select("file_path")
+      .as[String].collect().toSeq) { t =>
+      Maintenance.compact(t, "race-remove", batchFiles = 2)
+    }
+  }
+
+  test("multi-batch cluster never resurrects a file a racing commit removed") {
+    raceRemoval(t => t.manifest(t.currentSnapshot.get).orderBy("partition", "min_z")
+      .select("file_path").as[String].collect().toSeq) { t =>
+      Maintenance.cluster(t, "race-remove", numFiles = 2, batchFiles = 2)
+    }
   }
 }
