@@ -240,7 +240,7 @@ class GraftDmlWriterFactory(location: String, batch: String, tag: String,
 // WriteDelta instead of ReplaceData — the scan serves each row's physical
 // address through the (_file, _pos) row id, the writer turns deletes into
 // position-delete address shards and inserts into ordinary data files, and
-// the commit lands BOTH in one snapshot (GraftTable.commitMorRowChange).
+// the commit lands BOTH in one snapshot (PendingCommit.rowChange).
 // No target file is rewritten; write bytes ∝ matched + inserted rows. This
 // is the same split Iceberg makes between its copy-on-write and
 // position-delta SQL paths, on the same Spark connector interfaces.
@@ -289,8 +289,8 @@ class GraftDeltaWrite(location: String, op: GraftDeltaOperation,
     if (added.isEmpty && posFiles.isEmpty) return
     op.basis match {
       case Some(basis) =>
-        table.commitMorRowChange(basis, added, posFiles, deleted,
-          s"sql-mor-${op.command().toString.toLowerCase}")
+        table.publish(PendingCommit.rowChange(basis, added, posFiles, deleted,
+          s"sql-mor-${op.command().toString.toLowerCase}"))
       case None =>
         // no snapshot existed when the scan planned (MERGE INTO an empty
         // table): there was nothing to address, so this is a pure insert

@@ -2,6 +2,7 @@ package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession, Row}
 import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import java.util.UUID
 
 /** Iceberg-style table format built from scratch (no lakehouse jars in this
@@ -120,7 +121,74 @@ final case class ManifestEntry(file_path: String, partition: String,
 
 final case class ManifestShard(seq: Int, kind: String, path: String) // add | remove
 
+/** One snapshot commit as an operation describes it to [[GraftTable.publish]]
+  * (the role of Iceberg's SnapshotProducer): which parent shards the new
+  * list keeps, the new shards in list order, the record and file deltas
+  * over the kept shards' counts, an optional schema override, and the
+  * validation policy a moved head is judged by. */
+private[lake] final case class PendingCommit(
+    operation: String,
+    basis: Option[Snapshot],
+    policy: PendingCommit.Policy,
+    kept: PendingCommit.Kept = PendingCommit.KeepAll,
+    shards: Seq[PendingCommit.NewShard] = Seq.empty,
+    recordDelta: Long = 0L,
+    fileDelta: Long = 0L,
+    // (extraCols, droppedCols) of evolveSchema/dropColumn; every other
+    // commit inherits its parent's
+    schema: Option[(String, String)] = None)
+
+private[lake] object PendingCommit {
+  sealed trait Policy
+  /** adds only: rebuilt on whatever head wins a race. */
+  case object Retry extends Policy
+  /** a content-neutral rewrite of `replaced`: rebased over compatible
+    * interleaved commits; `own` are the versions the same multi-batch run
+    * committed, which the rebase walk skips. */
+  final case class Rebase(replaced: Set[String], own: Set[Long] = Set.empty) extends Policy
+  /** the head must still be the basis. */
+  case object Strict extends Policy
+
+  sealed trait Kept
+  case object KeepAll extends Kept
+  /** every parent shard but the eqdel/posdel ones (apply-deletes). */
+  case object KeepData extends Kept
+  /** an explicit list with its own counts (rollback, manifest rewrite,
+    * delete compaction). */
+  final case class Replace(shards: Seq[ManifestShard], records: Long, files: Long) extends Kept
+
+  sealed trait NewShard
+  /** an add shard written by MetaIO.writeEntries; none when empty. */
+  final case class Entries(entries: Seq[ManifestEntry]) extends NewShard
+  /** a remove shard written by MetaIO.writeRemoves; none when empty. */
+  final case class Removes(paths: Set[String]) extends NewShard
+  /** a remove shard written distributed from a `file_path` frame. */
+  final case class RemovedFrame(paths: DataFrame) extends NewShard
+  /** a shard the caller wrote: add (WAP publish, cherry-pick), eqdel, posdel. */
+  final case class Written(kind: String, rel: String) extends NewShard
+
+  def rows(entries: Seq[ManifestEntry]): Long = entries.map(_.record_count).sum
+
+  /** a rewrite of `replaced` into `added`, planned against `basis`. */
+  def rewrite(basis: Option[Snapshot], added: Seq[ManifestEntry], replaced: Set[String],
+              operation: String, removedRecords: Long,
+              own: Set[Long] = Set.empty): PendingCommit =
+    PendingCommit(operation, basis, Rebase(replaced, own),
+      shards = Seq(Entries(added), Removes(replaced)),
+      recordDelta = rows(added) - removedRecords, fileDelta = added.size - replaced.size)
+
+  /** a merge-on-read row change: the new rows' add shard, then the changed
+    * rows' posdel shards, in one snapshot against `basis`. */
+  def rowChange(basis: Snapshot, added: Seq[ManifestEntry], posShards: Seq[String],
+                changedRows: Long, operation: String): PendingCommit =
+    PendingCommit(operation, Some(basis), Strict,
+      shards = Entries(added) +: posShards.map(Written("posdel", _)),
+      recordDelta = rows(added) - changedRows, fileDelta = added.size)
+}
+
 object GraftTable {
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** per-row content hash whose xor is the order-independent file digest. */
   def rowHash(): org.apache.spark.sql.Column =
     xxhash64(col("repo"), col("path"), col("commit"), sha2(col("content"), 256))
@@ -323,8 +391,7 @@ class GraftTable(val spark: SparkSession, val location: String,
   private[lake] def localManifestSeq(shards: Seq[ManifestShard])
       : Option[Seq[(ManifestEntry, Long)]] = {
     val data = shards.filter(sh => sh.kind == "add" || sh.kind == "remove")
-    val maxBytes = spark.conf.get("spark.graft.manifest.localReadMaxBytes",
-      (4L << 20).toString).toLong
+    val maxBytes = localReadMaxBytes
     if (maxBytes <= 0 || data.size > 64) return None
     // one stat per shard serves the size gate AND the cached read below
     val statted = scala.collection.mutable.ArrayBuffer
@@ -333,9 +400,8 @@ class GraftTable(val spark: SparkSession, val location: String,
     val it = data.iterator
     while (it.hasNext) {
       val sh = it.next()
-      val st = io.status(sh.path).getOrElse(
-        throw new java.io.FileNotFoundException(s"manifest shard ${io.abs(sh.path)} is missing"))
-      total += (if (st.isDirectory) io.listWithSizes(sh.path).values.sum else st.getLen)
+      val st = shardStatus(sh)
+      total += shardBytes(sh, st)
       if (total > maxBytes) return None
       statted += sh -> st
     }
@@ -345,6 +411,17 @@ class GraftTable(val spark: SparkSession, val location: String,
       MetaIO.readEntries(io, sh.path, st).map(e => (e, sh.seq.toLong)) }.flatten
     Some(if (removed.isEmpty) adds else adds.filterNot(p => removed(p._1.file_path)))
   }
+
+  private def localReadMaxBytes: Long =
+    spark.conf.get("spark.graft.manifest.localReadMaxBytes", (4L << 20).toString).toLong
+
+  private def shardStatus(sh: ManifestShard): org.apache.hadoop.fs.FileStatus =
+    io.status(sh.path).getOrElse(
+      throw new java.io.FileNotFoundException(s"manifest shard ${io.abs(sh.path)} is missing"))
+
+  /** a shard's bytes: its file's, or the sum over a directory's files. */
+  private def shardBytes(sh: ManifestShard, st: org.apache.hadoop.fs.FileStatus): Long =
+    if (st.isDirectory) io.listWithSizes(sh.path).values.sum else st.getLen
 
   def manifestEntries(s: Snapshot): Seq[ManifestEntry] =
     manifest(s).as[ManifestEntry].collect().toSeq
@@ -661,10 +738,8 @@ class GraftTable(val spark: SparkSession, val location: String,
   private def refName: String = branch.getOrElse("main")
 
   /** try to win the right to extend `ref` from `parentV`. */
-  private[graft] def claimEdge(ref: String, parentV: Long): Boolean = {
-    init()
+  private[graft] def claimEdge(ref: String, parentV: Long): Boolean =
     io.createExclusive(s"meta/edge-$ref-v$parentV")
-  }
 
   /** Wall-clock budget a committer spends losing edge claims before it
     * surfaces a conflict naming repairRefs(): the head not moving for this
@@ -761,11 +836,17 @@ class GraftTable(val spark: SparkSession, val location: String,
       require(!f.name.contains(",") && !f.name.contains("\""),
         s"unsupported column name ${f.name}")
     }
-    val merged = (parent.map(_.extraCols).filter(_.nonEmpty).toSeq :+ adding.toDDL)
+    val merged = (parent.map(_.extraCols).filter(_.nonEmpty).toSeq :+ ddlOf(adding.fields))
       .mkString(",")
-    metadataOnlyCommit(parent, "evolve-schema",
-      Some((merged, parent.map(_.droppedCols).getOrElse(""))))
+    publish(PendingCommit("evolve-schema", parent, PendingCommit.Strict,
+      schema = Some((merged, parent.map(_.droppedCols).getOrElse("")))))
   }
+
+  /** DDL that parses back to `fields`, comments included: Spark's toDDL
+    * escapes a comment's single quotes but not its backslashes. */
+  private def ddlOf(fields: Seq[org.apache.spark.sql.types.StructField]): String =
+    org.apache.spark.sql.types.StructType(fields.map(f =>
+      f.getComment().fold(f)(c => f.withComment(c.replace("\\", "\\\\")))).toArray).toDDL
 
   /** DROP COLUMN: metadata-only — data files keep the bytes, readers stop
     * projecting the column, and the name is tombstoned. Base columns carry
@@ -779,25 +860,12 @@ class GraftTable(val spark: SparkSession, val location: String,
     require(extras.exists(_.name.equalsIgnoreCase(name)),
       s"no such column $name")
     val remaining = extras.filterNot(_.name.equalsIgnoreCase(name))
-    val remainingDdl =
-      if (remaining.isEmpty) ""
-      else org.apache.spark.sql.types.StructType(remaining.toArray).toDDL
+    val remainingDdl = if (remaining.isEmpty) "" else ddlOf(remaining)
     val tombs = (parent.droppedCols.split(",").filter(_.nonEmpty).toSeq :+
       name.toLowerCase).mkString(",")
-    metadataOnlyCommit(Some(parent), s"drop-column-$name",
-      Some((remainingDdl, tombs)))
+    publish(PendingCommit(s"drop-column-$name", Some(parent), PendingCommit.Strict,
+      schema = Some((remainingDdl, tombs))))
   }
-
-  /** a commit that changes ONLY snapshot metadata: re-lists the parent's
-    * manifest shards (its own list file, the rollback pattern, so later
-    * expiry of either snapshot never strands the other). Conflicts (rather
-    * than rebasing) when the head moves — the override was derived from the
-    * parent's schema state. */
-  private def metadataOnlyCommit(parent: Option[Snapshot], operation: String,
-                                 schemaOverride: Option[(String, String)]): Snapshot =
-    publish(parent, parent.map(manifestShards).getOrElse(Seq.empty), operation,
-      parent.map(_.recordCount).getOrElse(0L),
-      parent.map(_.fileCount).getOrElse(0L), schemaOverride)
 
   /** Align a source frame to the current write schema: evolved columns the
     * frame doesn't carry are spliced in as typed nulls (base columns must be
@@ -913,17 +981,75 @@ class GraftTable(val spark: SparkSession, val location: String,
       case None => writeDataFiles(df, tag)
     }
 
-  /** Commit a metadata delta with a driver-known removed set: ALL metadata
-    * is written driver-side (MetaIO), zero Spark jobs. Delta shard files are
-    * uid-named so they can be written BEFORE the commit's version is known —
-    * the optimistic-concurrency claim binds the version only at publish.
-    *
-    * Concurrency policy: an adds-only delta (append, streaming epoch) is
-    * rebased onto whatever head wins a race and retried — appends commute.
-    * A delta with removals was planned against a specific snapshot's file
-    * set (pass it as `basis`, rewrite ops do); a lost race surfaces as
-    * [[CommitConflictException]] instead of silently re-applying a rewrite
-    * onto files another committer may have already replaced.
+  // ---- commits: one pending-commit value, one publish path ---------------
+  //
+  // Every snapshot commit is a [[PendingCommit]] handed to [[publish]], the
+  // one place that writes the commit's new shards, validates the head under
+  // the commit's policy, computes recordCount/fileCount, claims the edge,
+  // allocates the version and writes the manifest list and the snapshot
+  // JSON. New shards are written once, under uid names, before any claim:
+  // the optimistic-concurrency claim binds the version only at publish.
+  //
+  // The new shards follow the kept parent shards in the order the value
+  // lists them, each at the next seq. The order is part of the format,
+  // because the MoR sequence rule compares shard seqs: an upsert lists its
+  // eqdel before its add (the batch's own rows survive its retraction), a
+  // MoR row change its add before its posdel, every other commit its add
+  // before its remove.
+  //
+  // Three validation policies judge a head that moved past the basis:
+  //
+  //   - Retry (adds only: append, streaming epochs, WAP publish): every
+  //     attempt re-assembles on the current head, because appends commute.
+  //     The wait is bounded: a head that never moves (the winning claimant
+  //     died before publishing) surfaces as a conflict naming repairRefs().
+  //   - Strict (MERGE, UPDATE, DELETE, MoR deletes and row changes, upsert,
+  //     apply-deletes, delete compaction, rollback, cherry-pick, schema
+  //     changes, manifest rewrites): the work was planned against the
+  //     basis's content, so the head must still be the basis; a lost edge
+  //     claim raises [[CommitConflictException]] and the caller re-plans.
+  //   - Rebase(replaced, own) (compaction, clustering): a rewrite replaces
+  //     `replaced` with files holding the SAME rows, so, as Iceberg's
+  //     RewriteFiles, it need not conflict with every interleaved commit.
+  //     At 100 TB a compaction runs for minutes while ingest lands; "re-plan
+  //     on any interleaved append" would mean maintenance never commits on
+  //     a live table. The head is walked back to the basis, and the rewrite
+  //     rebases when every interleaved commit is compatible:
+  //
+  //       "add", "eqdel", "posdel" shards                    → compatible here
+  //       "remove" shards DISJOINT from replaced              → compatible
+  //       "remove" shards touching a replaced file            → CONFLICT
+  //       a restructured manifest list (rewrite-manifests,
+  //       apply-deletes, rollback, full bucket rewrite)       → CONFLICT
+  //
+  //     `own` holds the versions the same multi-batch run committed: they
+  //     are incremental deltas of files disjoint from every later batch by
+  //     construction, so the walk skips them. Independently of the walk, the
+  //     publish-time parent must hold no pending delete the rewrite would
+  //     corrupt, whether it arrived as an interleave or was already in the
+  //     basis:
+  //
+  //       any pending "eqdel" shard                           → CONFLICT
+  //         (the rebased add shard's seq would exceed the delete's, so the
+  //          rewritten copies of deleted rows would escape the rule)
+  //       a pending "posdel" shard touching a replaced file   → CONFLICT
+  //         (its addresses bind to a file the rewrite drops); DISJOINT
+  //          posdel shards stay pending and valid
+  //
+  //     Validation runs against the head read at the top of each attempt;
+  //     the edge claim then proves the head did not move before publish
+  //     (heads only move by claiming edges), so a rebase never skips an
+  //     unvalidated commit. A shard's overlap with `replaced` is read on the
+  //     driver (MetaIO.readRemoves, no Spark job) when the shard fits
+  //     spark.graft.manifest.localReadMaxBytes, statted and summed as for
+  //     [[localManifest]]; only a larger shard runs a broadcast join.
+
+  /** Commit added entries and a driver-known removed set. An adds-only
+    * commit without a `basis` (append, streaming epoch) retries on whatever
+    * head wins a race. A commit that removes files, or names the snapshot
+    * it was planned against as `basis`, is strict: a moved head raises
+    * [[CommitConflictException]] instead of re-applying a rewrite onto
+    * files another committer may have already replaced.
     *
     * `removedRecords` is the removed files' total record count; a commit
     * that removes files must pass it (the caller planned from their
@@ -932,201 +1058,149 @@ class GraftTable(val spark: SparkSession, val location: String,
              removedRecords: Long = -1L, basis: Option[Snapshot] = None): Snapshot = {
     require(removedPaths.isEmpty || removedRecords >= 0L,
       s"$operation removes ${removedPaths.size} files without their removedRecords")
-    init()
-    val uid = UUID.randomUUID().toString.take(12)
-    val addRel = if (added.isEmpty) None else {
-      val r = s"meta/manifest-add-$uid.parquet"
-      MetaIO.writeEntries(io, r, added); Some(r)
-    }
-    val rmRel = if (removedPaths.isEmpty) None else {
-      val r = s"meta/manifest-remove-$uid.parquet"
-      MetaIO.writeRemoves(io, r, removedPaths.toSeq.sorted); Some(r)
-    }
-
-    def assemble(parent: Option[Snapshot]): (Seq[ManifestShard], Long, Long) = {
-      var (shards, seq) = parentShards(parent)
-      addRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "add", r) }
-      rmRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "remove", r) }
-      val removed = if (removedPaths.isEmpty) 0L else removedRecords
-      val liveCount = parent.map(_.recordCount).getOrElse(0L) +
-        added.map(_.record_count).sum - removed
-      val parentFiles = parent.map(_.fileCount).getOrElse(0L)
-      val fileCount =
-        if (parentFiles < 0) -1L else parentFiles + added.size - removedPaths.size
-      (shards, liveCount, fileCount)
-    }
-
-    if (removedPaths.isEmpty && basis.isEmpty) commitRetrying(operation)(assemble)
-    else {
-      val parent = basis.orElse(currentSnapshot)
-      val (shards, live, files) = assemble(parent)
-      publish(parent, shards, operation, live, files)
-    }
+    val appendOnly = removedPaths.isEmpty && basis.isEmpty
+    publish(PendingCommit(operation,
+      if (appendOnly) None else basis.orElse(currentSnapshot),
+      if (appendOnly) PendingCommit.Retry else PendingCommit.Strict,
+      shards = Seq(PendingCommit.Entries(added), PendingCommit.Removes(removedPaths)),
+      recordDelta = PendingCommit.rows(added) - (if (removedPaths.isEmpty) 0L else removedRecords),
+      fileDelta = added.size - removedPaths.size))
   }
 
-  /** Commit with the removed-file set supplied as a DataFrame (full rewrites
-    * pass the previous live manifest's paths without collecting them). The
-    * remove shard is a distributed write; pass `removedRecords` when the
-    * caller knows it (a full rewrite removes parent.recordCount rows). */
-  def commitDelta(added: Seq[ManifestEntry], removedDf: Option[DataFrame],
-                  operation: String, removedRecords: Long = -1L,
-                  removedFiles: Long = -1L, basis: Option[Snapshot] = None): Snapshot = {
-    init()
-    val uid = UUID.randomUUID().toString.take(12)
-    val addRel = if (added.isEmpty) None else {
-      val r = s"meta/manifest-add-$uid.parquet"
-      MetaIO.writeEntries(io, r, added); Some(r)
-    }
-    // the removed set may be table-sized (full rewrites): written distributed
-    // under a uid name BEFORE the claim, never collected
-    val rmRel = removedDf.map { rm =>
-      val r = s"meta/manifest-remove-$uid.parquet"
-      io.writeParquet(rm.select(col("file_path").cast("string")).coalesce(1), r, overwrite = true)
-      r
-    }
-
-    def assemble(parent: Option[Snapshot]): Seq[ManifestShard] = {
-      var (shards, seq) = parentShards(parent)
-      addRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "add", r) }
-      rmRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "remove", r) }
-      shards
-    }
-
-    if (removedDf.isEmpty && basis.isEmpty)
-      commitRetrying(operation) { parent =>
-        (assemble(parent),
-          parent.map(_.recordCount).getOrElse(0L) + added.map(_.record_count).sum,
-          parent.map(_.fileCount).getOrElse(0L) match {
-            case pf if pf < 0 => -1L
-            case pf => pf + added.size
-          })
-      }
-    else {
-      val parent = basis.orElse(currentSnapshot)
-      val shards = assemble(parent)
-      val parentFiles = parent.map(_.fileCount).getOrElse(0L)
-      val fileCount =
-        if (parentFiles < 0) -1L
-        else if (removedDf.isEmpty) parentFiles + added.size
-        else if (removedFiles >= 0L) parentFiles + added.size - removedFiles
-        else -1L
-      val liveCount =
-        if (removedDf.isEmpty)
-          parent.map(_.recordCount).getOrElse(0L) + added.map(_.record_count).sum
-        else if (removedRecords >= 0L)
-          parent.map(_.recordCount).getOrElse(0L) + added.map(_.record_count).sum - removedRecords
-        else {
-          // fallback: aggregate the assembled live manifest (one metadata job)
-          val r = manifestOf(shards).agg(sum($"record_count"), count(lit(1))).head()
-          val c = if (r.isNullAt(0)) 0L else r.getLong(0)
-          return publish(parent, shards, operation, c, r.getLong(1))
-        }
-      publish(parent, shards, operation, liveCount, fileCount)
-    }
-  }
-
-  // ---- validated rebase for rewrite commits (Iceberg RewriteFiles) -------
-  //
-  // A REWRITE (compaction / clustering) replaces `replacedPaths` with
-  // `added` holding the SAME logical rows — it is content-neutral, so unlike
-  // MERGE/UPDATE (whose matched-vs-insert split depends on target content)
-  // it does not have to conflict with every interleaved commit. At 100 TB a
-  // compaction runs for minutes-to-hours while ingest lands continuously;
-  // "re-plan the whole rewrite on any interleaved append" means maintenance
-  // can never commit on a live table. Instead, a lost edge race walks the
-  // snapshot chain from the planning basis to the new head and REBASES when
-  // every interleaved commit is compatible:
-  //
-  //   - "add" shards (appends, other rewrites' outputs)   → compatible
-  //   - "remove" shards DISJOINT from replacedPaths        → compatible
-  //     (two rewrites of disjoint file sets commute)
-  //   - "remove" shards touching a replaced file           → CONFLICT
-  //     (someone else already replaced rows this plan still carries)
-  //   - a restructured manifest list (rewrite-manifests, apply-deletes,
-  //     rollback, full bucket rewrite)                     → CONFLICT
-  //
-  // Independently of the walk, the PUBLISH-TIME parent must hold no pending
-  // delete shard the rewrite would corrupt — whether it arrived as an
-  // interleave or was already in a freshly-read basis (batched maintenance
-  // re-reads its basis per batch):
-  //
-  //   - any pending "eqdel" shard                          → CONFLICT
-  //     (the rebased add shard's seq would exceed the delete's seq, so the
-  //      rewrite's re-written copies of deleted rows would escape the
-  //      sequence rule and resurrect)
-  //   - a pending "posdel" shard touching a replaced file  → CONFLICT
-  //     (its addresses bind to a file this rewrite drops — those deletes
-  //      would silently vanish); DISJOINT posdel shards stay pending, valid
-  //
-  // Validation happens against the head observed at the top of each attempt;
-  // the edge claim then proves the head did not move between validation and
-  // publish (heads only move by claiming edges), so a rebase can never
-  // silently skip an unvalidated commit.
-
-  /** Commit a rewrite of `replacedPaths` into `added` with validated rebase
-    * (see block comment above). `basis` is the snapshot the plan was made
-    * against; `removedRecords` the exact row count of the replaced files
-    * (still exact after a rebase — compatible interleaves never touch them).
-    * Throws [[CommitConflictException]] on a genuine conflict. */
+  /** Commit a rewrite of `replacedPaths` into `added` under the rebase
+    * policy (see the section comment). `basis` is the snapshot the plan was
+    * made against; `removedRecords` the exact row count of the replaced
+    * files (still exact after a rebase: compatible interleaves never touch
+    * them). Throws [[CommitConflictException]] on a genuine conflict. */
   def commitRewrite(basis: Option[Snapshot], added: Seq[ManifestEntry],
                     replacedPaths: Set[String], operation: String,
-                    removedRecords: Long): Snapshot = {
-    init()
-    val uid = UUID.randomUUID().toString.take(12)
-    val addRel = if (added.isEmpty) None else {
-      val r = s"meta/manifest-add-$uid.parquet"
-      MetaIO.writeEntries(io, r, added); Some(r)
-    }
-    val rmRel = if (replacedPaths.isEmpty) None else {
-      val r = s"meta/manifest-remove-$uid.parquet"
-      MetaIO.writeRemoves(io, r, replacedPaths.toSeq.sorted); Some(r)
-    }
-    val addedRecords = added.map(_.record_count).sum
-    val basisV = basis.map(_.version).getOrElse(0L)
-    val deadline = System.currentTimeMillis() + contentionBudgetMs
-    var backoffMs = 25L
-    while (System.currentTimeMillis() < deadline) {
-      val parent = currentSnapshot
-      val pv = parent.map(_.version).getOrElse(0L)
-      if (pv != basisV) validateRebase(basisV, parent, replacedPaths, operation)
-      var (shards, seq) = parentShards(parent)
-      // the publish-time parent must hold no pending delete the rewrite
-      // would corrupt (see block comment) — checked on the assembled shard
-      // list itself so it covers interleaves AND a freshly-read basis
-      shards.foreach { sh =>
-        if (sh.kind == "eqdel")
-          throw new CommitConflictException(
-            s"$operation on ref $refName at $location: the table has a " +
-            "pending equality-delete shard — rewriting files under it would " +
-            "resurrect deleted rows; materialize deletes (applyDeletes) and " +
-            "re-plan")
-        if (sh.kind == "posdel" && shardTouchesFiles(sh, replacedPaths))
-          throw new CommitConflictException(
-            s"$operation on ref $refName at $location: a pending positional-" +
-            "delete shard addresses a file this rewrite replaces — its " +
-            "deletes would be dropped; materialize deletes (applyDeletes) " +
-            "and re-plan")
+                    removedRecords: Long): Snapshot =
+    publish(PendingCommit.rewrite(basis, added, replacedPaths, operation, removedRecords))
+
+  /** Full rewrite commit (bucketize): `entries` replace the whole live set
+    * of the current snapshot, strictly. A metadata-small previous manifest
+    * is removed as a driver-side set; a larger one is streamed from the
+    * manifest DataFrame into a distributed remove shard, never collected.
+    * The removed record count is the parent's total, with no aggregation. */
+  def commitFull(entries: Seq[ManifestEntry], operation: String): Snapshot = {
+    import PendingCommit._
+    val basis = currentSnapshot
+    val (removed, removedFiles): (Seq[NewShard], Long) = basis match {
+      case None => (Seq.empty, 0L)
+      case Some(s) => localManifest(manifestShards(s)) match {
+        case Some(prev) => // metadata-small: driver-side remove set, zero jobs
+          val paths = prev.map(_.file_path).toSet
+          (Seq(Removes(paths)), paths.size.toLong)
+        case None => (Seq(RemovedFrame(manifest(s).select("file_path"))), s.fileCount)
       }
-      addRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "add", r) }
-      rmRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "remove", r) }
-      val live = parent.map(_.recordCount).getOrElse(0L) + addedRecords - removedRecords
-      val pf = parent.map(_.fileCount).getOrElse(0L)
-      val files = if (pf < 0) -1L else pf + added.size - replacedPaths.size
-      if (claimEdge(refName, pv))
-        return publishClaimed(parent, shards, operation, live, files, None)
-      Thread.sleep(backoffMs)
-      backoffMs = math.min(backoffMs * 2, 200L)
     }
-    throw new CommitConflictException(
-      s"$operation on ref $refName at $location kept losing the edge claim " +
-      "and the head never advanced — a concurrent writer likely died before " +
-      "publishing; run repairRefs() and retry")
+    publish(PendingCommit(operation, basis, if (basis.isEmpty) Retry else Strict,
+      shards = Entries(entries) +: removed,
+      recordDelta = rows(entries) - basis.fold(0L)(_.recordCount),
+      fileDelta = entries.size - removedFiles))
   }
 
+  /** Publish `p` (see the section comment): write its new shards, judge the
+    * head under its policy, assemble the kept and new shards, claim the
+    * ref's edge, allocate the version and write the list, the snapshot and
+    * the ref's head. recordCount is the kept shards' count plus the record
+    * delta; fileCount likewise, and stays -1 (unknown) once unknown. */
+  private[lake] def publish(p: PendingCommit): Snapshot = {
+    import PendingCommit._
+    init()
+    val uid = UUID.randomUUID().toString.take(12)
+    val fresh: Seq[(String, String)] = p.shards.flatMap {
+      case Entries(es) if es.nonEmpty =>
+        val r = s"meta/manifest-add-$uid.parquet"
+        MetaIO.writeEntries(io, r, es); Some("add" -> r)
+      case Removes(paths) if paths.nonEmpty =>
+        val r = s"meta/manifest-remove-$uid.parquet"
+        MetaIO.writeRemoves(io, r, paths.toSeq.sorted); Some("remove" -> r)
+      case RemovedFrame(df) =>
+        // table-sized: written distributed, never collected
+        val r = s"meta/manifest-remove-$uid.parquet"
+        io.writeParquet(df.select(col("file_path").cast("string")).coalesce(1), r,
+          overwrite = true)
+        Some("remove" -> r)
+      case Written(kind, r) => Some(kind -> r)
+      case _ => None
+    }
+    def kept(parent: Option[Snapshot]): Seq[ManifestShard] = p.kept match {
+      case Replace(shards, _, _) => shards
+      case KeepData => parent.map(manifestShards).getOrElse(Seq.empty)
+        .filterNot(sh => sh.kind == "eqdel" || sh.kind == "posdel")
+      case KeepAll => parent.map(manifestShards).getOrElse(Seq.empty)
+    }
+    def publishOn(parent: Option[Snapshot], keptShards: Seq[ManifestShard]): Option[Snapshot] = {
+      val pv = parent.map(_.version).getOrElse(0L)
+      if (!claimEdge(refName, pv)) return None
+      var seq = keptShards.map(_.seq).maxOption.getOrElse(0)
+      val shards = keptShards ++ fresh.map { case (kind, r) =>
+        seq += 1; ManifestShard(seq, kind, r) }
+      val (records, files) = p.kept match {
+        case Replace(_, r, f) => (r, f)
+        case _ => (parent.map(_.recordCount).getOrElse(0L), parent.map(_.fileCount).getOrElse(0L))
+      }
+      Some(writeSnapshot(parent, shards, p.operation, records + p.recordDelta,
+        if (files < 0) -1L else files + p.fileDelta, p.schema))
+    }
+    p.policy match {
+      case Strict =>
+        publishOn(p.basis, kept(p.basis)).getOrElse(throw new CommitConflictException(
+          s"ref $refName at $location was extended past " +
+          s"v${p.basis.map(_.version).getOrElse(0L)} by a concurrent commit — " +
+          s"${p.operation} was planned against a stale snapshot; re-plan against " +
+          "the new head and retry"))
+      case policy =>
+        val deadline = System.currentTimeMillis() + contentionBudgetMs
+        var backoffMs = 25L
+        while (System.currentTimeMillis() < deadline) {
+          val parent = currentSnapshot
+          val keptShards = kept(parent)
+          policy match {
+            case Rebase(replaced, own) =>
+              val basisV = p.basis.map(_.version).getOrElse(0L)
+              if (parent.map(_.version).getOrElse(0L) != basisV)
+                validateRebase(basisV, parent, replaced, own, p.operation)
+              checkPendingDeletes(keptShards, replaced, p.operation)
+            case _ => ()
+          }
+          val published = publishOn(parent, keptShards)
+          if (published.isDefined) return published.get
+          Thread.sleep(backoffMs)
+          backoffMs = math.min(backoffMs * 2, 200L)
+        }
+        throw new CommitConflictException(
+          s"${p.operation} on ref $refName at $location kept losing the edge claim " +
+          "and the head never advanced — a concurrent writer likely died before " +
+          "publishing; run repairRefs() and retry")
+    }
+  }
+
+  /** A rewrite of `replaced` must not publish over a pending delete it
+    * would corrupt (see the section comment). */
+  private def checkPendingDeletes(shards: Seq[ManifestShard], replaced: Set[String],
+                                  operation: String): Unit =
+    shards.foreach { sh =>
+      if (sh.kind == "eqdel")
+        throw new CommitConflictException(
+          s"$operation on ref $refName at $location: the table has a " +
+          "pending equality-delete shard — rewriting files under it would " +
+          "resurrect deleted rows; materialize deletes (applyDeletes) and " +
+          "re-plan")
+      if (sh.kind == "posdel" && shardTouchesFiles(sh, replaced))
+        throw new CommitConflictException(
+          s"$operation on ref $refName at $location: a pending positional-" +
+          "delete shard addresses a file this rewrite replaces — its " +
+          "deletes would be dropped; materialize deletes (applyDeletes) " +
+          "and re-plan")
+    }
+
   /** Walk head → basis and throw [[CommitConflictException]] unless every
-    * interleaved commit is compatible with rewriting `replacedPaths`. */
-  private def validateRebase(basisV: Long, head: Option[Snapshot],
-                             replacedPaths: Set[String], operation: String): Unit = {
+    * interleaved commit outside `own` is compatible with rewriting
+    * `replaced`. */
+  private def validateRebase(basisV: Long, head: Option[Snapshot], replaced: Set[String],
+                             own: Set[Long], operation: String): Unit = {
     def conflict(why: String): Nothing = throw new CommitConflictException(
       s"$operation on ref $refName at $location was planned against v$basisV " +
       s"but the head moved and cannot be rebased: $why; re-plan against the " +
@@ -1145,7 +1219,7 @@ class GraftTable(val spark: SparkSession, val location: String,
       if (c.parent == 0L && basisV != 0L)
         conflict("the new head's ancestry does not reach the basis")
     }
-    interleaved.foreach { c =>
+    interleaved.filterNot(c => own(c.version)).foreach { c =>
       val pShards =
         if (c.parent == 0L) Seq.empty
         else manifestShards(snapshot(c.parent).getOrElse(
@@ -1157,12 +1231,10 @@ class GraftTable(val spark: SparkSession, val location: String,
           "manifest list (not an incremental delta)")
       cShards.filter(_.seq > pMax).foreach { sh =>
         sh.kind match {
-          case "add" | "eqdel" | "posdel" => () // pending deletes are
-            // re-checked on the publish-time parent's own shard list —
-            // commitRewrite conflicts there on any pending eqdel and on
-            // posdel shards touching the replaced files
+          case "add" | "eqdel" | "posdel" => () // pending deletes are judged
+            // on the publish-time parent (checkPendingDeletes)
           case "remove" =>
-            if (shardTouchesFiles(sh, replacedPaths))
+            if (shardTouchesFiles(sh, replaced))
               conflict(s"interleaved ${c.operation} v${c.version} removed " +
                 "a file this rewrite replaces")
           case other =>
@@ -1172,68 +1244,22 @@ class GraftTable(val spark: SparkSession, val location: String,
     }
   }
 
-  /** does the shard's `file_path` column intersect `paths`? One tiny
-    * metadata job (shards may be distributed-written and table-sized; the
-    * replaced set is already driver-held by the rewrite planner). */
+  /** does the shard's `file_path` column intersect `paths`? Read on the
+    * driver when the shard fits the localReadMaxBytes gate; a larger shard
+    * (a distributed full-rewrite remove set, a large posdel shard) runs one
+    * broadcast semi-join, 2 Spark jobs. */
   private def shardTouchesFiles(sh: ManifestShard, paths: Set[String]): Boolean = {
     if (paths.isEmpty) return false
-    import spark.implicits._
-    val shardPaths = spark.read.schema("file_path STRING")
-      .parquet(io.abs(sh.path).toString).select($"file_path")
-    val repl = paths.toSeq.toDF("file_path")
-    !shardPaths.join(broadcast(repl), "file_path").isEmpty
-  }
-
-  /** Commit a merge-on-read delete: the caller has already written the key
-    * shard (distributed) at the seq this method reserved via
-    * [[nextEqDeleteSeq]] against `basis`. Metadata-only — no data file
-    * changes; the live record count drops by the matched-row count, the file
-    * count doesn't. Conflicts when the head moved past `basis`: the stamped
-    * del_seq is only meaningful against that snapshot's shard sequence. */
-  private[lake] def commitEqDelete(shardRel: String, deletedRows: Long,
-                                   basis: Option[Snapshot]): Snapshot = {
-    init()
-    val (prev, seq) = parentShards(basis)
-    val shards = prev :+ ManifestShard(seq + 1, "eqdel", shardRel)
-    val liveCount = basis.map(_.recordCount).getOrElse(0L) - deletedRows
-    publish(basis, shards, "mor-delete", liveCount,
-      basis.map(_.fileCount).getOrElse(0L))
-  }
-
-  /** Commit a merge-on-read POSITIONAL delete: the caller has written the
-    * (file, pos) shard against `basis`. No sequence stamping — positions
-    * bind to immutable physical files — but the matched count and the
-    * "row not already deleted" guarantee were computed against `basis`, so
-    * a moved head still conflicts. */
-  private[lake] def commitPosDelete(shardRel: String, deletedRows: Long,
-                                    basis: Option[Snapshot]): Snapshot = {
-    init()
-    val (prev, seq) = parentShards(basis)
-    val shards = prev :+ ManifestShard(seq + 1, "posdel", shardRel)
-    publish(basis, shards, "mor-posdelete",
-      basis.map(_.recordCount).getOrElse(0L) - deletedRows,
-      basis.map(_.fileCount).getOrElse(0L))
-  }
-
-  /** Commit a merge-on-read ROW CHANGE (MorUpdate): the new rows' add shard
-    * and the old addresses' posdel shard land in ONE snapshot — readers see
-    * the old rows or the new rows, never both, never neither. Counts stay
-    * arithmetic: +appended −changed. Conflicts when the head moved past the
-    * basis (the addresses were planned against its physical layout). */
-  private[lake] def commitMorRowChange(basis: Snapshot, added: Seq[ManifestEntry],
-                                       posShardRels: Seq[String], changedRows: Long,
-                                       operation: String): Snapshot = {
-    val uid = UUID.randomUUID().toString.take(12)
-    var (shards, seq) = parentShards(Some(basis))
-    if (added.nonEmpty) {
-      val addRel = s"meta/manifest-add-$uid.parquet"
-      MetaIO.writeEntries(io, addRel, added)
-      seq += 1; shards :+= ManifestShard(seq, "add", addRel)
+    val st = shardStatus(sh)
+    val maxBytes = localReadMaxBytes
+    if (maxBytes > 0 && shardBytes(sh, st) <= maxBytes)
+      MetaIO.readRemoves(io, st).exists(paths)
+    else {
+      import spark.implicits._
+      val shardPaths = spark.read.schema("file_path STRING")
+        .parquet(io.abs(sh.path).toString).select($"file_path")
+      !shardPaths.join(broadcast(paths.toSeq.toDF("file_path")), "file_path").isEmpty
     }
-    posShardRels.foreach { r => seq += 1; shards :+= ManifestShard(seq, "posdel", r) }
-    val live = basis.recordCount + added.map(_.record_count).sum - changedRows
-    val files = if (basis.fileCount < 0) -1L else basis.fileCount + added.size
-    publish(Some(basis), shards, operation, live, files)
   }
 
   // ---- DML strategy property --------------------------------------------
@@ -1254,49 +1280,12 @@ class GraftTable(val spark: SparkSession, val location: String,
     io.writeAtomic("meta/dml-mode.text", mode)
   }
 
-  /** commit a delete-shard compaction (MorDelete.compactDeleteShards): the
-    * same live rows behind a bounded shard list — metadata-only, counts
-    * unchanged, conflicts if the head moved past the basis. */
-  private[lake] def commitDeleteCompaction(basis: Snapshot,
-                                           shards: Seq[ManifestShard]): Snapshot =
-    publish(Some(basis), shards, "compact-deletes",
-      basis.recordCount, basis.fileCount)
-
   /** the seq the NEXT eqdel shard will get when committed against `basis`:
     * keys must be stamped with their del_seq before the shard is written.
-    * [[commitEqDelete]] conflicts if the head moved past `basis`, so a
-    * stamped seq can never be committed against the wrong shard sequence. */
+    * The eqdel commit is strict, so a stamped seq can never be committed
+    * against another shard sequence than `basis`'s. */
   private[lake] def nextEqDeleteSeq(basis: Option[Snapshot]): Long =
-    parentShards(basis)._2.toLong + 1L
-
-  /** Commit a merge-on-read UPSERT: ONE snapshot holding both the batch's
-    * equality-delete keys (del_seq = s, retracting whatever prior version
-    * of those keys is live) and the batch's new data files (add seq = s+1,
-    * so the batch's own rows survive their own retraction — the Iceberg
-    * sequence rule). The CDC "upsert mode" write shape: no MERGE join on
-    * the write path, no file rewritten; a never-seen key retracts nothing.
-    * `eqdelShardRel = None` = the batch matched nothing live — commits as
-    * a plain append, leaving no pending-delete state behind. */
-  private[lake] def commitUpsert(added: Seq[ManifestEntry],
-                                 eqdelShardRel: Option[String],
-                                 retractedRows: Long, basis: Option[Snapshot],
-                                 operation: String): Snapshot = {
-    init()
-    val uid = UUID.randomUUID().toString.take(12)
-    val addRel = s"meta/manifest-add-$uid.parquet"
-    MetaIO.writeEntries(io, addRel, added)
-    val (prev, seq) = parentShards(basis)
-    var shards = prev
-    var s = seq
-    eqdelShardRel.foreach { r => s += 1; shards :+= ManifestShard(s, "eqdel", r) }
-    s += 1
-    shards :+= ManifestShard(s, "add", addRel)
-    val liveCount = basis.map(_.recordCount).getOrElse(0L) - retractedRows +
-      added.map(_.record_count).sum
-    val parentFiles = basis.map(_.fileCount).getOrElse(0L)
-    publish(basis, shards, operation, liveCount,
-      if (parentFiles < 0) -1L else parentFiles + added.size)
-  }
+    basis.map(manifestShards).getOrElse(Seq.empty).map(_.seq).maxOption.getOrElse(0) + 1L
 
   /** Exactly-once epoch guard shared by the streaming sinks: has `op`
     * (which embeds the sink/query id and epoch id) already been committed?
@@ -1332,109 +1321,26 @@ class GraftTable(val spark: SparkSession, val location: String,
       }))
   }
 
-  /** Commit the MATERIALIZATION of pending merge-on-read deletes: the
-    * affected files were rewritten with deletes applied, every eqdel shard
-    * is dropped from the manifest list, and the live record count is
-    * UNCHANGED (the MoR commits already subtracted the deleted rows — this
-    * commit only converts logical deletes into physical ones). */
-  private[lake] def commitApplyDeletes(basis: Snapshot, added: Seq[ManifestEntry],
-                                       removedPaths: Set[String]): Snapshot = {
-    val uid = UUID.randomUUID().toString.take(12)
-    var shards = manifestShards(basis)
-      .filterNot(sh => sh.kind == "eqdel" || sh.kind == "posdel")
-    var seq = shards.map(_.seq).maxOption.getOrElse(0)
-    if (added.nonEmpty) {
-      val addRel = s"meta/manifest-add-$uid.parquet"
-      MetaIO.writeEntries(io, addRel, added)
-      seq += 1
-      shards :+= ManifestShard(seq, "add", addRel)
-    }
-    if (removedPaths.nonEmpty) {
-      val rmRel = s"meta/manifest-remove-$uid.parquet"
-      MetaIO.writeRemoves(io, rmRel, removedPaths.toSeq.sorted)
-      seq += 1
-      shards :+= ManifestShard(seq, "remove", rmRel)
-    }
-    val parentFiles = basis.fileCount
-    val fileCount =
-      if (parentFiles < 0) -1L else parentFiles + added.size - removedPaths.size
-    publish(Some(basis), shards, "apply-deletes", basis.recordCount, fileCount)
-  }
-
-  private def parentShards(parent: Option[Snapshot]): (Seq[ManifestShard], Int) = {
-    val prev = parent.map(manifestShards).getOrElse(Seq.empty)
-    (prev, prev.map(_.seq).maxOption.getOrElse(0))
-  }
-
-  private def writeList(newVersion: Long, shards: Seq[ManifestShard]): String = {
+  /** The tail of [[publish]] once the edge is claimed: allocate the
+    * version, write the manifest list and the snapshot, advance this
+    * handle's ref. */
+  private def writeSnapshot(parent: Option[Snapshot], shards: Seq[ManifestShard],
+                            operation: String, recordCount: Long, fileCount: Long,
+                            schema: Option[(String, String)]): Snapshot = {
+    val newVersion = allocateVersion()
     val listRel = s"meta/manifest-list-v$newVersion.parquet"
     MetaIO.writeShards(io, listRel, shards)
-    listRel
-  }
-
-  /** Publish a fully assembled commit against a known parent: win the edge
-    * claim (throwing [[CommitConflictException]] on a lost race), then
-    * allocate the version, write the list + snapshot, advance this handle's
-    * ref. Rewrite-style ops call this directly — a lost race means their
-    * planned file set is stale and must be re-planned, never rebased. */
-  private def publish(parent: Option[Snapshot], shards: Seq[ManifestShard],
-                      operation: String, liveCount: Long, fileCount: Long,
-                      schemaOverride: Option[(String, String)] = None): Snapshot = {
-    val pv = parent.map(_.version).getOrElse(0L)
-    if (!claimEdge(refName, pv))
-      throw new CommitConflictException(
-        s"ref $refName at $location was extended past v$pv by a concurrent " +
-        s"commit — $operation was planned against a stale snapshot; " +
-        "re-plan against the new head and retry")
-    publishClaimed(parent, shards, operation, liveCount, fileCount, schemaOverride)
-  }
-
-  /** Adds-only commits (append, streaming epochs, WAP publish) REBASE AND
-    * RETRY: `build` re-derives the full shard list and counts from whatever
-    * the current head is, so losing an edge race just means re-assembling on
-    * the winner — appends commute. Bounded wait: if the head never moves
-    * (the winning claimant died pre-publish), this surfaces as a conflict
-    * naming repairRefs() instead of spinning forever. */
-  private def commitRetrying(operation: String)
-      (build: Option[Snapshot] => (Seq[ManifestShard], Long, Long)): Snapshot = {
-    val deadline = System.currentTimeMillis() + contentionBudgetMs
-    var backoffMs = 25L
-    while (System.currentTimeMillis() < deadline) {
-      val parent = currentSnapshot
-      val (shards, live, files) = build(parent)
-      if (claimEdge(refName, parent.map(_.version).getOrElse(0L)))
-        return publishClaimed(parent, shards, operation, live, files, None)
-      Thread.sleep(backoffMs)
-      backoffMs = math.min(backoffMs * 2, 200L)
-    }
-    throw new CommitConflictException(
-      s"$operation on ref $refName at $location kept losing the edge claim " +
-      "and the head never advanced — a concurrent writer likely died before " +
-      "publishing; run repairRefs() and retry")
-  }
-
-  private def publishClaimed(parent: Option[Snapshot], shards: Seq[ManifestShard],
-                             operation: String, liveCount: Long, fileCount: Long,
-                             schemaOverride: Option[(String, String)]): Snapshot = {
-    val newVersion = allocateVersion()
-    val listRel = writeList(newVersion, shards)
     // schema evolution state is INHERITED by every ordinary commit; only
     // evolveSchema/dropColumn commits override it
-    val (extra, dropped) = schemaOverride.getOrElse(
+    val (extra, dropped) = schema.getOrElse(
       (parent.map(_.extraCols).getOrElse(""), parent.map(_.droppedCols).getOrElse("")))
     val snap = Snapshot(newVersion, parent.map(_.version).getOrElse(0L),
-      System.currentTimeMillis(), operation, listRel, liveCount, fileCount,
+      System.currentTimeMillis(), operation, listRel, recordCount, fileCount,
       extra, dropped, refName)
-    val json =
-      s"""{"version": ${snap.version}, "parent": ${snap.parent}, "tsMillis": ${snap.tsMillis},
-         | "operation": "${snap.operation}", "manifest": "${snap.manifest}",
-         | "recordCount": ${snap.recordCount}, "fileCount": ${snap.fileCount},
-         | "extraCols": "${snap.extraCols}", "droppedCols": "${snap.droppedCols}",
-         | "ref": "${snap.ref}"}""".stripMargin
     // ATOMIC (tmp + rename): concurrent committers resolve heads through the
     // max-snapshot fallback while a fresh table has no hint yet — a plain
     // create-then-write would let them observe this file empty mid-write
-    io.writeAtomic(s"meta/snapshot-v$newVersion.json", json)
+    io.writeAtomic(s"meta/snapshot-v$newVersion.json", snapshotJson(snap))
     // advance THIS handle's ref — the branch head for a branch handle,
     // main's hint otherwise; per-ref files, so refs never contend here
     branch match {
@@ -1461,6 +1367,22 @@ class GraftTable(val spark: SparkSession, val location: String,
         io.writeAtomic("meta/max-version.text", newVersion.toString)
     }
     snap
+  }
+
+  /** The snapshot JSON, one key per [[Snapshot]] field, strings JSON-escaped.
+    * A snapshot none of whose strings needs an escape is written byte for
+    * byte as before escaping existed; one that needs one also carries
+    * `"escaped": true`, which tells [[parseJsonFlat]] to decode it. */
+  private def snapshotJson(s: Snapshot): String = {
+    val raw = Seq(s.operation, s.manifest, s.extraCols, s.droppedCols, s.ref)
+    val esc = raw.map(v => new String(JsonStringEncoder.getInstance.quoteAsString(v)))
+    val Seq(op, manifest, extra, dropped, ref) = esc.map("\"" + _ + "\"")
+    val marker = if (esc != raw) ", \"escaped\": true" else ""
+    s"""{"version": ${s.version}, "parent": ${s.parent}, "tsMillis": ${s.tsMillis},
+       | "operation": $op, "manifest": $manifest,
+       | "recordCount": ${s.recordCount}, "fileCount": ${s.fileCount},
+       | "extraCols": $extra, "droppedCols": $dropped,
+       | "ref": $ref$marker}""".stripMargin
   }
 
   // ---- storage bucketing (the layout behind storage-partitioned joins) --
@@ -1781,7 +1703,7 @@ class GraftTable(val spark: SparkSession, val location: String,
     // publish a fresh snapshot under a reused id — exactly what claims
     // exist to prevent). Reaping v <= max(hwm, main) is safe because both
     // are monotone: the hint only advances via edge claims, and the hwm
-    // write is read-max (publishClaimed).
+    // write is read-max (writeSnapshot).
     val claimFloor = {
       val hwm = if (io.exists("meta/max-version.text"))
         io.readString("meta/max-version.text").trim.toLong else 0L
@@ -1814,8 +1736,8 @@ class GraftTable(val spark: SparkSession, val location: String,
       throw new IllegalArgumentException(s"no snapshot v$toVersion at $location"))
     val parent = currentSnapshot
     require(parent.exists(_.version != toVersion), s"v$toVersion is already current")
-    publish(parent, manifestShards(target),
-      s"rollback-to-v$toVersion", target.recordCount, target.fileCount)
+    publish(PendingCommit(s"rollback-to-v$toVersion", parent, PendingCommit.Strict,
+      PendingCommit.Replace(manifestShards(target), target.recordCount, target.fileCount)))
   }
 
   /** CHERRY-PICK: re-apply snapshot `v`'s APPEND delta onto the current
@@ -1882,11 +1804,9 @@ class GraftTable(val spark: SparkSession, val location: String,
         s"$overlap of v$v's files are already live at head — the delta is " +
         "already present (cherry-picking an ancestor would double-count rows)")
     }
-    var (shards, seq) = parentShards(head)
-    delta.foreach { d => seq += 1; shards :+= ManifestShard(seq, "add", d.path) }
-    publish(head, shards, s"cherrypick-v$v",
-      head.map(_.recordCount).getOrElse(0L) + addedRecords,
-      head.map(_.fileCount).filter(_ >= 0).map(_ + addedFiles).getOrElse(-1L))
+    publish(PendingCommit(s"cherrypick-v$v", head, PendingCommit.Strict,
+      shards = delta.map(d => PendingCommit.Written("add", d.path)),
+      recordDelta = addedRecords, fileDelta = addedFiles))
   }
 
   /** Remove ORPHAN data files: files under data/ that no retained snapshot's
@@ -1966,14 +1886,10 @@ class GraftTable(val spark: SparkSession, val location: String,
   def publishStaged(id: String): Snapshot = {
     val meta = parseJsonFlat(io.readString(s"meta/staged-$id.json"))
     // adds-only: rebases onto whatever head wins a concurrent race
-    val snap = commitRetrying(s"publish-wap-$id") { parent =>
-      val (prev, seq) = parentShards(parent)
-      val shards = prev :+ ManifestShard(seq + 1, "add", s"meta/staged-add-$id.parquet")
-      val rc = parent.map(_.recordCount).getOrElse(0L) + meta("recordCount").trim.toLong
-      val parentFiles = parent.map(_.fileCount).getOrElse(0L)
-      val fc = if (parentFiles < 0) -1L else parentFiles + meta("fileCount").trim.toLong
-      (shards, rc, fc)
-    }
+    val snap = publish(PendingCommit(s"publish-wap-$id", None, PendingCommit.Retry,
+      shards = Seq(PendingCommit.Written("add", s"meta/staged-add-$id.parquet")),
+      recordDelta = meta("recordCount").trim.toLong,
+      fileDelta = meta("fileCount").trim.toLong))
     io.delete(s"meta/staged-$id.json")
     snap
   }
@@ -2001,7 +1917,7 @@ class GraftTable(val spark: SparkSession, val location: String,
     * entry (an S3 bill at scale). */
   def rewriteManifests(targetEntriesPerShard: Int = 250000): Snapshot =
     currentSnapshot match {
-      case None => commitDelta(Seq.empty, None, "manifest_rewrite")
+      case None => publish(PendingCommit("manifest_rewrite", None, PendingCommit.Retry))
       case Some(s) =>
         // the rebase collapses every add shard to seq 1, which would destroy
         // the per-file sequence numbers the MoR delete rule compares against
@@ -2024,10 +1940,9 @@ class GraftTable(val spark: SparkSession, val location: String,
             val live = entries.filter(e => existingSet(e.file_path))
             if (live.size <= targetEntriesPerShard) {
               val sorted = live.sortBy(e => (e.partition, e.min_z, e.file_path))
-              val addRel = s"meta/manifest-add-${UUID.randomUUID().toString.take(12)}.parquet"
-              MetaIO.writeEntries(io, addRel, sorted)
-              return publish(Some(s), Seq(ManifestShard(1, "add", addRel)),
-                "manifest_rewrite", sorted.map(_.record_count).sum, sorted.size.toLong)
+              return publish(PendingCommit("manifest_rewrite", Some(s), PendingCommit.Strict,
+                PendingCommit.Replace(Seq.empty, 0L, 0L), Seq(PendingCommit.Entries(sorted)),
+                PendingCommit.rows(sorted), sorted.size.toLong))
             }
           case _ => ()
         }
@@ -2058,46 +1973,27 @@ class GraftTable(val spark: SparkSession, val location: String,
           .parquet(io.abs(addRel).toString)
           .agg(sum($"record_count"), count(lit(1))).head()
         val liveCount = if (r.isNullAt(0)) 0L else r.getLong(0)
-        publish(Some(s), Seq(ManifestShard(1, "add", addRel)), "manifest_rewrite",
-          liveCount, r.getLong(1))
+        publish(PendingCommit("manifest_rewrite", Some(s), PendingCommit.Strict,
+          PendingCommit.Replace(Seq.empty, 0L, 0L), Seq(PendingCommit.Written("add", addRel)),
+          liveCount, r.getLong(1)))
     }
 
-  /** Register externally Spark-written add shards as a new snapshot — a
-    * metadata-only commit for manifest imports and scale harnesses, where
-    * the entry set is written DISTRIBUTED and must never pass through the
-    * driver as objects. */
-  private[graft] def commitSparkShards(addRels: Seq[String], operation: String,
-                                       recordCount: Long, fileCount: Long): Snapshot = {
-    init()
-    val parent = currentSnapshot
-    val shards = addRels.zipWithIndex.map { case (r, i) => ManifestShard(i + 1, "add", r) }
-    publish(parent, shards, operation, recordCount, fileCount)
-  }
-
-  /** Full rewrite commit (compaction/cluster jobs): adds replace the entire
-    * previous live set; the removed paths are streamed from the previous
-    * manifest DataFrame, never collected, and the removed record count is
-    * the parent's total — no re-aggregation. */
-  def commitFull(entries: Seq[ManifestEntry], operation: String): Snapshot =
-    currentSnapshot match {
-      case None => commitDelta(entries, None, operation)
-      case Some(s) => localManifest(manifestShards(s)) match {
-        case Some(prev) => // metadata-small: driver-side remove set, zero jobs
-          commit(entries, prev.map(_.file_path).toSet, operation,
-            removedRecords = s.recordCount, basis = Some(s))
-        case None => commitDelta(entries, Some(manifest(s).select("file_path")),
-          operation, removedRecords = s.recordCount, removedFiles = s.fileCount,
-          basis = Some(s))
-      }
+  /** the flat JSON objects of this format: snapshots, refs, specs, stats.
+    * An object with the `"escaped"` key ([[snapshotJson]]) is decoded as
+    * JSON; any other holds its strings verbatim, as every file written
+    * before string escaping does, and is read by the flat pattern, so those
+    * files parse exactly as they always have. */
+  private def parseJsonFlat(s: String): Map[String, String] =
+    if (s.contains("\"escaped\"")) {
+      import scala.jdk.CollectionConverters._
+      GraftTable.json.readTree(s).properties().asScala
+        .map(e => e.getKey -> e.getValue.asText).toMap
+    } else {
+      // keys include tag names (letters, digits, dot, dash, underscore)
+      val re = """"([\w.-]+)"\s*:\s*("([^"]*)"|[-\d]+)""".r
+      re.findAllMatchIn(s).map { m =>
+        val v = if (m.group(3) != null) m.group(3) else m.group(2)
+        m.group(1) -> v
+      }.toMap
     }
-
-  // tiny flat-json parser for our own snapshot files
-  private def parseJsonFlat(s: String): Map[String, String] = {
-    // keys include tag names (letters, digits, dot, dash, underscore)
-    val re = """"([\w.-]+)"\s*:\s*("([^"]*)"|[-\d]+)""".r
-    re.findAllMatchIn(s).map { m =>
-      val v = if (m.group(3) != null) m.group(3) else m.group(2)
-      m.group(1) -> v
-    }.toMap
-  }
 }

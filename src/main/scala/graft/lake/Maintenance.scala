@@ -69,7 +69,7 @@ object Maintenance {
       return CompactionResult(nSmall.toInt, nSmall.toInt, 0)
     }
     // one batch: pack `paths` and commit the rewrite against `basis`
-    def rewrite(basis: Snapshot, paths: Seq[String], bytes: Long,
+    def rewrite(basis: Snapshot, own: Set[Long], paths: Seq[String], bytes: Long,
                 removedRecords: Long): (Snapshot, Seq[ManifestEntry]) = {
       val bins = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
       val df = table.readFiles(paths)
@@ -85,19 +85,20 @@ object Maintenance {
       // validated rebase: interleaved ingest no longer forces a re-plan —
       // the rewrite rebases over compatible commits, conflicts only when a
       // concurrent commit touched one of the replaced files (GraftTable
-      // "validated rebase" section)
-      (table.commitRewrite(Some(basis), added, paths.toSet, "compact", removedRecords), added)
+      // "commits" section, the rebase policy)
+      (table.publish(PendingCommit.rewrite(Some(basis), added, paths.toSet, "compact",
+        removedRecords, own)), added)
     }
     if (nSmall <= batchFiles) {
       val smallPaths = small.select("file_path").as[String].collect().toSeq
-      val (_, added) = rewrite(snapOpt.get, smallPaths, agg.getLong(1), agg.getLong(2))
+      val (_, added) = rewrite(snapOpt.get, Set.empty, smallPaths, agg.getLong(1), agg.getLong(2))
       Lineage.record(table, jobId, phase, smallPaths, added)
       CompactionResult(smallPaths.size, added.size, added.map(_.record_count).sum)
     } else {
       // a trailing one-file batch has nothing to pack
-      inBatches(small, batchFiles, snapOpt.get) { (basis, batch) =>
+      inBatches(small, batchFiles, snapOpt.get) { (basis, own, batch) =>
         if (batch.size <= 1) None
-        else Some(rewrite(basis, batch.map(_._1), batch.iterator.map(_._2).sum,
+        else Some(rewrite(basis, own, batch.map(_._1), batch.iterator.map(_._2).sum,
                           batch.iterator.map(_._3).sum))
       }
     }
@@ -152,7 +153,7 @@ object Maintenance {
     if (snapOpt.isEmpty) return 0L
     val snap = snapOpt.get
     // one batch: re-key `paths` and commit the rewrite against `basis`
-    def rewrite(basis: Snapshot, paths: Seq[String],
+    def rewrite(basis: Snapshot, own: Set[Long], paths: Seq[String],
                 removedRecords: Long): (Snapshot, Seq[ManifestEntry]) = {
       val df0 = table.readFiles(paths).drop("z")
       val keyed =
@@ -179,19 +180,20 @@ object Maintenance {
       val added = table.writeDataFiles(clustered, "cluster")
       // validated rebase: rows appended while the clustering ran stay live
       // (and simply unclustered) instead of aborting the whole rewrite
-      (table.commitRewrite(Some(basis), added, paths.toSet, phase, removedRecords), added)
+      (table.publish(PendingCommit.rewrite(Some(basis), added, paths.toSet, phase,
+        removedRecords, own)), added)
     }
     if (snap.fileCount >= 0 && snap.fileCount <= batchFiles) {
       // planning collect: path strings only (a full rewrite touches every
       // file, so it removes the parent's whole record count)
       val paths = table.manifest(snap).select("file_path").as[String].collect().toSeq
-      val (_, added) = rewrite(snap, paths, snap.recordCount)
+      val (_, added) = rewrite(snap, Set.empty, paths, snap.recordCount)
       Lineage.record(table, jobId, phase, paths, added)
       added.map(_.record_count).sum
     } else {
       val ordered = table.manifest(snap).orderBy(col("partition"), col("min_z"))
-      inBatches(ordered, batchFiles, snap) { (basis, batch) =>
-        Some(rewrite(basis, batch.map(_._1), batch.iterator.map(_._3).sum))
+      inBatches(ordered, batchFiles, snap) { (basis, own, batch) =>
+        Some(rewrite(basis, own, batch.map(_._1), batch.iterator.map(_._3).sum))
       }.rows
     }
   }
@@ -203,21 +205,26 @@ object Maintenance {
     * the driver holds max(partition, batch) paths. The basis starts at
     * `planned` and advances to a batch's own commit only while that
     * commit's parent is the basis itself: once another writer's commit
-    * lands, every later batch walks it in its validated rebase. */
+    * lands, every later batch walks it in its validated rebase. Each batch
+    * is also handed the versions the earlier batches committed, which that
+    * walk skips: they replaced files of other batches only. */
   private def inBatches(sel: DataFrame, batchFiles: Int, planned: Snapshot)(
-      batch: (Snapshot, Seq[(String, Long, Long)]) => Option[(Snapshot, Seq[ManifestEntry])])
+      batch: (Snapshot, Set[Long], Seq[(String, Long, Long)])
+        => Option[(Snapshot, Seq[ManifestEntry])])
       : CompactionResult = {
     import scala.jdk.CollectionConverters._
     val spark = sel.sparkSession
     import spark.implicits._
     var basis = planned
+    var own = Set.empty[Long]
     var result = CompactionResult(0, 0, 0)
     sel.select(col("file_path"), col("file_bytes"), col("record_count"))
       .as[(String, Long, Long)]
       .toLocalIterator().asScala.grouped(batchFiles)
       .foreach { b =>
-        batch(basis, b).foreach { case (committed, added) =>
+        batch(basis, own, b).foreach { case (committed, added) =>
           if (committed.parent == basis.version) basis = committed
+          own += committed.version
           result = CompactionResult(result.inputFiles + b.size,
             result.outputFiles + added.size, result.rows + added.map(_.record_count).sum)
         }

@@ -60,8 +60,8 @@ object MorDelete {
     deleteMatching(table, table.scan().filter(coalesce(condition, lit(false))))
 
   private def deleteMatching(table: GraftTable, matching: DataFrame): Long = {
-    // the basis snapshot fixes the del_seq; commitEqDelete conflicts if the
-    // head moves before the commit lands (the stamped seq would be wrong
+    // the basis snapshot fixes the del_seq; the strict commit conflicts if
+    // the head moves before it lands (the stamped seq would be wrong
     // against a different shard sequence)
     val basis = table.currentSnapshot
     val delSeq = table.nextEqDeleteSeq(basis)
@@ -74,7 +74,10 @@ object MorDelete {
     // driver-side, zero jobs
     val matched = MetaIO.rowCount(table.io, shardRel)
     if (matched == 0L) { table.io.delete(shardRel); return 0L }
-    table.commitEqDelete(shardRel, matched, basis)
+    // metadata-only: the live record count drops by the matched rows, the
+    // file count does not
+    table.publish(PendingCommit("mor-delete", basis, PendingCommit.Strict,
+      shards = Seq(PendingCommit.Written("eqdel", shardRel)), recordDelta = -matched))
     matched
   }
 
@@ -118,7 +121,10 @@ object MorDelete {
     table.io.writeParquet(keys, shardRel, overwrite = true)
     val matched = MetaIO.rowCount(table.io, shardRel)
     if (matched == 0L) { table.io.delete(shardRel); return 0L }
-    table.commitPosDelete(shardRel, matched, Some(basis))
+    // the matched count and the "row not already deleted" guarantee were
+    // computed against `basis`, so a moved head conflicts
+    table.publish(PendingCommit("mor-posdelete", Some(basis), PendingCommit.Strict,
+      shards = Seq(PendingCommit.Written("posdel", shardRel)), recordDelta = -matched))
     matched
   }
 
@@ -162,7 +168,13 @@ object MorDelete {
     val added =
       if (affected.isEmpty) Seq.empty[ManifestEntry]
       else table.writeDataFilesRouted(table.morScan(snap, affected), "apply-deletes")
-    table.commitApplyDeletes(snap, added, affected.map(_._1).toSet)
+    // every delete shard is dropped; the live record count is unchanged
+    // (the MoR commits already subtracted the deleted rows)
+    val removed = affected.map(_._1).toSet
+    table.publish(PendingCommit("apply-deletes", Some(snap), PendingCommit.Strict,
+      PendingCommit.KeepData,
+      Seq(PendingCommit.Entries(added), PendingCommit.Removes(removed)),
+      fileDelta = added.size - removed.size))
     ApplyResult(affected.size, untouched, eqShards.size + posShards.size)
   }
 
@@ -185,26 +197,28 @@ object MorDelete {
     if (eq.size <= 1 && pos.size <= 1) return (0, 0)
     val uid = java.util.UUID.randomUUID().toString.take(12)
     val spark = table.spark
-    var shards = table.manifestShards(snap)
+    val kept = table.manifestShards(snap)
       .filterNot(sh => (eq.size > 1 && sh.kind == "eqdel") ||
                        (pos.size > 1 && sh.kind == "posdel"))
-    var seq = shards.map(_.seq).maxOption.getOrElse(0)
-    if (eq.size > 1) {
+    val eqMerged = if (eq.size <= 1) None else {
       val rel = s"meta/manifest-eqdel-$uid.parquet"
       table.io.writeParquet(spark.read.schema(GraftTable.eqDeleteSchema)
         .parquet(eq.map(sh => table.io.abs(sh.path).toString): _*)
         .coalesce(1), rel, overwrite = true)
-      seq += 1; shards :+= ManifestShard(seq, "eqdel", rel)
+      Some(PendingCommit.Written("eqdel", rel))
     }
-    if (pos.size > 1) {
+    val posMerged = if (pos.size <= 1) None else {
       val rel = s"meta/manifest-posdel-$uid.parquet"
       table.io.writeParquet(spark.read.schema(GraftTable.posDeleteSchema)
         .parquet(pos.map(sh => table.io.abs(sh.path).toString): _*)
         .distinct() // stacked deletes never duplicate addresses, but cheap insurance
         .coalesce(1), rel, overwrite = true)
-      seq += 1; shards :+= ManifestShard(seq, "posdel", rel)
+      Some(PendingCommit.Written("posdel", rel))
     }
-    table.commitDeleteCompaction(snap, shards)
+    // the same live rows behind a bounded shard list: counts unchanged
+    table.publish(PendingCommit("compact-deletes", Some(snap), PendingCommit.Strict,
+      PendingCommit.Replace(kept, snap.recordCount, snap.fileCount),
+      eqMerged.toSeq ++ posMerged))
     (if (eq.size > 1) eq.size else 0, if (pos.size > 1) pos.size else 0)
   }
 }

@@ -91,7 +91,8 @@ object MorUpdate {
         return MorUpdateResult(0, 0)
       }
       val posRel = writeAddresses(table, matching)
-      table.commitMorRowChange(basis, added, posRel.toSeq, updatedRows, "mor-update")
+      table.publish(PendingCommit.rowChange(basis, added, posRel.toSeq, updatedRows,
+        "mor-update"))
       MorUpdateResult(updatedRows, added.size)
     } finally matching.unpersist()
   }
@@ -138,7 +139,8 @@ object MorUpdate {
         val updatedRows = matched.count()
         val insertedRows = added.map(_.record_count).sum - updates.count()
         if (added.isEmpty && posRel.isEmpty) return MorMergeResult(0, 0, 0)
-        table.commitMorRowChange(snap, added, posRel.toSeq, updatedRows, "mor-merge")
+        table.publish(PendingCommit.rowChange(snap, added, posRel.toSeq, updatedRows,
+          "mor-merge"))
         MorMergeResult(updatedRows, insertedRows, added.size)
       } finally matched.unpersist()
     } finally src.unpersist()
@@ -193,7 +195,12 @@ object MorUpdate {
       val added = table.writeDataFilesRouted(batch, "upsert")
       if (added.isEmpty && shardRel.isEmpty)
         return UpsertResult(0L, 0L, basis.map(_.version).getOrElse(0L))
-      val snap = table.commitUpsert(added, shardRel, retracted, basis, operation)
+      // ONE snapshot: the eqdel shard (del_seq = s) before the add shard
+      // (seq s+1), so the batch's own rows survive their own retraction
+      val snap = table.publish(PendingCommit(operation, basis, PendingCommit.Strict,
+        shards = shardRel.map(PendingCommit.Written("eqdel", _)).toSeq :+
+          PendingCommit.Entries(added),
+        recordDelta = PendingCommit.rows(added) - retracted, fileDelta = added.size))
       UpsertResult(added.map(_.record_count).sum, retracted, snap.version)
     } finally liveMatches.foreach(_.unpersist())
   }

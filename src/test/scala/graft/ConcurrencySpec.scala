@@ -119,7 +119,8 @@ class ConcurrencySpec extends SparkTestBase {
     keys.write.parquet(t.io.abs(shardRel).toString)
     t.append(synthDf(10, seed = 12)) // head moves past the basis
     intercept[CommitConflictException] {
-      t.commitEqDelete(shardRel, 5L, basis)
+      t.publish(PendingCommit("mor-delete", basis, PendingCommit.Strict,
+        shards = Seq(PendingCommit.Written("eqdel", shardRel)), recordDelta = -5L))
     }
     assert(t.currentSnapshot.get.recordCount == 110L)
   }

@@ -9,7 +9,9 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicReference
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The local file system under the `racefault:` scheme: the first data file
   * created after [[RaceFaultFileSystem.beforeDataFile]] runs that hook
@@ -31,12 +33,15 @@ object RaceFaultFileSystem {
   def beforeDataFile(f: => Unit): Unit = hook.set(() => f)
 }
 
-/** Validated rebase for rewrite commits (GraftTable.commitRewrite — the
-  * Iceberg RewriteFiles stance): a compaction/clustering planned against
-  * snapshot S commits at S+k when every interleaved commit is compatible
-  * (adds, removes/posdels disjoint from the replaced files), and conflicts
-  * only on genuine overlap — so maintenance can land on a table under
-  * continuous ingest instead of re-planning on every interleaved append. */
+/** Validated rebase for rewrite commits (the rebase policy of
+  * GraftTable.publish — the Iceberg RewriteFiles stance): a
+  * compaction/clustering planned against snapshot S commits at S+k when
+  * every interleaved commit is compatible (adds, removes/posdels disjoint
+  * from the replaced files), and conflicts only on genuine overlap — so
+  * maintenance can land on a table under continuous ingest instead of
+  * re-planning on every interleaved append. The overlap reads run no Spark
+  * job under the local-read gate; every stale-basis test also runs with
+  * the gate at 0, on the broadcast-join fallback. */
 class RewriteRebaseSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -47,20 +52,28 @@ class RewriteRebaseSpec extends SparkTestBase {
   private def keys(df: org.apache.spark.sql.DataFrame) =
     df.select($"repo", $"path", $"commit").as[(String, String, String)].collect().toSeq
 
-  /** Run a multi-batch rewrite of 8 files in batches of 2 while another
-    * writer deletes the last file of `order` (the rewrite's planned order,
-    * so a file of its last batch) the moment the first batch creates its
-    * first data file. The rewrite must conflict or rebase correctly: the
-    * deleted rows stay deleted, no row is doubled and the record count
-    * matches the rows. */
-  private def raceRemoval(order: GraftTable => Seq[String])(
-      rewrite: GraftTable => Unit): Unit = {
+  /** `body` on a fresh table under the `racefault:` scheme. */
+  private def withRaceTable[A](body: GraftTable => A): A = {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.racefault.impl", classOf[RaceFaultFileSystem].getName)
     hc.setBoolean("fs.racefault.impl.disable.cache", true)
-    try {
-      val t = new GraftTable(spark,
-        "racefault://" + Files.createTempDirectory("graft-rebase-race"))
+    try body(new GraftTable(spark,
+      "racefault://" + Files.createTempDirectory("graft-rebase-race")))
+    finally {
+      RaceFaultFileSystem.hook.set(null)
+      hc.unset("fs.racefault.impl")
+      hc.unset("fs.racefault.impl.disable.cache")
+    }
+  }
+
+  /** Run a multi-batch rewrite of 8 files in batches of 2 while another
+    * writer deletes the last file of `order` (the rewrite's planned order,
+    * so a file of its last batch) the moment the first batch creates its
+    * first data file. The last batch must conflict, and the batches before
+    * it stay: the deleted rows stay deleted, no row is doubled and the
+    * record count matches the rows. */
+  private def raceRemoval(order: GraftTable => Seq[String])(
+      rewrite: GraftTable => Unit): Unit = withRaceTable { t =>
       t.append(synthDf(200, seed = 91).repartition(8))
       val planned = order(t)
       assert(planned.size == 8)
@@ -75,17 +88,25 @@ class RewriteRebaseSpec extends SparkTestBase {
           .commit(Seq.empty, Set(victim), "delete", removedRecords = victimRows)
         fired = true
       }
-      val outcome = scala.util.Try(rewrite(t))
+      val e = intercept[CommitConflictException](rewrite(t))
       assert(fired, "the racing delete never ran")
-      outcome.failed.foreach(e => assert(e.isInstanceOf[CommitConflictException], e))
+      assert(e.getMessage.contains("removed a file this rewrite replaces"), e)
+      assert(t.listSnapshots().count(s => Set("compact", "cluster_zorder")(s.operation)) == 3,
+        "the batches before the conflicting one did not all commit")
       val live = keys(t.scan())
       assert(live.size == live.distinct.size, "a row was doubled")
       assert(live.toSet == expected, "the deleted file's rows came back")
       assert(t.currentSnapshot.get.recordCount == live.size)
-    } finally {
-      RaceFaultFileSystem.hook.set(null)
-      hc.unset("fs.racefault.impl")
-      hc.unset("fs.racefault.impl.disable.cache")
+  }
+
+  /** a stale-basis test, run at the default local-read gate and again at
+    * `localReadMaxBytes = 0`, where every overlap read takes the
+    * broadcast-join fallback and every manifest the distributed path */
+  private def staleBasisTest(name: String)(body: => Unit): Unit = {
+    test(name)(body)
+    test(s"$name (over the local-read gate)") {
+      spark.conf.set("spark.graft.manifest.localReadMaxBytes", "0")
+      try body finally spark.conf.unset("spark.graft.manifest.localReadMaxBytes")
     }
   }
 
@@ -93,7 +114,7 @@ class RewriteRebaseSpec extends SparkTestBase {
   private def planRewrite(t: GraftTable, paths: Seq[String]) =
     t.writeDataFiles(t.readFiles(paths), "compact")
 
-  test("rewrite rebases over an interleaved append instead of conflicting") {
+  staleBasisTest("rewrite rebases over an interleaved append instead of conflicting") {
     val t = fresh()
     t.append(synthDf(200, seed = 7).repartition(4))
     val basis = t.currentSnapshot
@@ -113,7 +134,7 @@ class RewriteRebaseSpec extends SparkTestBase {
       t.manifest(t.currentSnapshot.get).count())
   }
 
-  test("rewrite rebases over several interleaves incl. a disjoint rewrite") {
+  staleBasisTest("rewrite rebases over several interleaves incl. a disjoint rewrite") {
     val t = fresh()
     t.append(synthDf(120, seed = 11).repartition(3))
     val aPaths = t.manifestEntries(t.currentSnapshot.get).map(_.file_path)
@@ -133,7 +154,7 @@ class RewriteRebaseSpec extends SparkTestBase {
     assert(t.currentSnapshot.get.recordCount == 205L)
   }
 
-  test("conflict when an interleaved rewrite removed a replaced file") {
+  staleBasisTest("conflict when an interleaved rewrite removed a replaced file") {
     val t = fresh()
     t.append(synthDf(100, seed = 21).repartition(2))
     val basis = t.currentSnapshot
@@ -149,7 +170,7 @@ class RewriteRebaseSpec extends SparkTestBase {
     assert(t.scan().count() == 100L) // table intact
   }
 
-  test("conflict on a pending equality delete (resurrection guard)") {
+  staleBasisTest("conflict on a pending equality delete (resurrection guard)") {
     val t = fresh()
     t.append(synthDf(80, seed = 31))
     val basis = t.currentSnapshot
@@ -165,7 +186,7 @@ class RewriteRebaseSpec extends SparkTestBase {
     assert(e.getMessage.contains("pending equality-delete"))
   }
 
-  test("disjoint positional delete stays pending and valid across a rebase") {
+  staleBasisTest("disjoint positional delete stays pending and valid across a rebase") {
     val t = fresh()
     t.append(synthDf(100, seed = 41).repartition(2))
     val aPaths = t.manifestEntries(t.currentSnapshot.get).map(_.file_path)
@@ -184,7 +205,7 @@ class RewriteRebaseSpec extends SparkTestBase {
     assert(t.currentSnapshot.get.recordCount == 149L)
   }
 
-  test("conflict when a pending positional delete addresses a replaced file") {
+  staleBasisTest("conflict when a pending positional delete addresses a replaced file") {
     val t = fresh()
     t.append(synthDf(60, seed = 51))
     val basis = t.currentSnapshot
@@ -200,7 +221,7 @@ class RewriteRebaseSpec extends SparkTestBase {
     assert(e.getMessage.contains("positional-delete shard addresses a file"))
   }
 
-  test("conflict when an interleave restructured the manifest list") {
+  staleBasisTest("conflict when an interleave restructured the manifest list") {
     val t = fresh()
     t.append(synthDf(40, seed = 61))
     t.append(synthDf(40, seed = 62))
@@ -268,5 +289,63 @@ class RewriteRebaseSpec extends SparkTestBase {
       .select("file_path").as[String].collect().toSeq) { t =>
       Maintenance.cluster(t, "race-remove", numFiles = 2, batchFiles = 2)
     }
+  }
+
+  /** the Spark jobs `body` runs, counted from their job group once the
+    * listener has seen a later marker job (listener events arrive in order
+    * but asynchronously) */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
+          groups.add(g)
+          if (g == "rebase-marker") marker.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("rebase-counted", "rewrite under count")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("rebase-marker", "listener marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
+      groups.asScala.count(_ == "rebase-counted")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** the jobs of `compact(batchFiles = 2)` over a 16-file table; with
+    * `race`, another writer commits a metadata-only append (entries of a
+    * file written beforehand, no Spark job of its own) when the first
+    * batch creates its first data file */
+  private def multiBatchCompactJobs(race: Boolean): Int = withRaceTable { t =>
+    t.append(synthDf(320, seed = 101).repartition(16))
+    val extra = t.writeDataFiles(synthDf(10, seed = 102), "append")
+    @volatile var fired = false
+    if (race) RaceFaultFileSystem.beforeDataFile {
+      new GraftTable(spark, t.location).commit(extra, Set.empty, "append")
+      fired = true
+    }
+    val jobs = jobsOf {
+      assert(Maintenance.compact(t, "jobs", batchFiles = 2).inputFiles == 16)
+    }
+    assert(fired == race)
+    val compacts = t.listSnapshots().filter(_.operation == "compact")
+    assert(compacts.size == 8)
+    // the racing append landed inside the first batch's write window, so
+    // every batch after it validated a walk from the planned snapshot
+    val appends = t.listSnapshots().filter(_.operation == "append")
+    assert(appends.size == (if (race) 2 else 1))
+    assert(compacts.head.parent == appends.last.version)
+    assert(t.scan().count() == (if (race) 330L else 320L))
+    assert(t.currentSnapshot.get.recordCount == (if (race) 330L else 320L))
+    jobs
+  }
+
+  test("a racing append costs a multi-batch compact no Spark job") {
+    val alone = multiBatchCompactJobs(race = false)
+    assert(multiBatchCompactJobs(race = true) == alone)
   }
 }

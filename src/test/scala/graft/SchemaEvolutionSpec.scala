@@ -243,4 +243,22 @@ class SchemaEvolutionSpec extends SparkTestBase {
     }
     assert(err2.getMessage.toLowerCase.contains("unsupported"))
   }
+
+  test("a column comment with a double quote, a backslash and a single quote survives") {
+    val t = freshTable("se-quote")
+    t.append(synthDf(20).repartition(2))
+    val comment = "say \"hi\" \\ it's"
+    val ddlComment = comment.replace("\\", "\\\\").replace("'", "\\'")
+    t.evolveSchema(s"note STRING COMMENT '$ddlComment'")
+    def noteComment(tb: GraftTable): Option[String] =
+      tb.dataSchemaFor(tb.currentSnapshot).find(_.name == "note").flatMap(_.getComment())
+    assert(noteComment(t).contains(comment))
+    assert(t.scan().filter(col("note").isNull).count() == 20)
+    t.append(synthDf(10, seed = 8).withColumn("note", lit("noted")))
+    val reopened = new GraftTable(spark, t.location)
+    assert(noteComment(reopened).contains(comment))
+    assert(reopened.scan().count() == 30)
+    assert(reopened.scan().filter(col("note") === "noted").count() == 10)
+    assert(reopened.currentSnapshot.get.recordCount == 30)
+  }
 }
