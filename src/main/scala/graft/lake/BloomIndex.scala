@@ -60,12 +60,11 @@ object BloomIndex {
   /** Build (or refresh) the sidecar for `column` over the CURRENT
     * snapshot's live files: ONE distributed pass (scan → per-file bloom
     * aggregation, partial+final — each file contributes its fixed-size
-    * bitmap to the shuffle, never its keys), written distributed; older
-    * sidecars for the column are dropped. Returns (files indexed, bits
-    * per filter). */
+    * bitmap to the shuffle, never its keys), written distributed, one row
+    * per file; older sidecars for the column are dropped. Returns (files
+    * indexed, from the write's row count, bits per filter). */
   def build(table: GraftTable, column: String = "commit",
             bitsPerKey: Int = 10): (Long, Int) = {
-    val spark = table.spark
     val snap = table.currentSnapshot.getOrElse(return (0L, 0))
     require(table.dataColumnNames.contains(column), s"no such column $column")
     // size every filter for the LARGEST file (uniform bits keep the probe
@@ -82,8 +81,7 @@ object BloomIndex {
       .groupBy(regexp_extract(col("abs"), "(data/[^/]+/[^/]+)$", 1).as("file_path"))
       .agg(bloomAgg(col("h")).as("bloom"), count(lit(1)).as("n_keys"))
     val rel = sidecarRel(column, snap.version, bits)
-    table.io.writeParquet(side, rel, overwrite = true)
-    val n = spark.read.parquet(table.io.abs(rel).toString).count()
+    val n = GraftDataFileWriter.writeShard(table.io, side, rel)
     // drop superseded sidecars (best effort — a concurrent reader of an old
     // one only loses pruning, never correctness)
     val pat = s"bloom-$column-v(\\d+)-b\\d+\\.parquet".r
@@ -163,8 +161,7 @@ object BloomIndex {
       // (MoR UPDATE's pre-image, positional DELETEs)
       val m = table.manifestWithSeq(snap)
       val total = if (snap.fileCount >= 0) snap.fileCount.toInt else m.count().toInt
-      val kept = pruned(m).select($"file_path", $"add_seq")
-        .as[(String, Long)].collect().toSeq
+      val kept = table.seqPairs(pruned(m))
       (table.morScan(snap, kept).filter(rowFilter), total, kept.size)
     } else {
       val m = table.manifest(snap)

@@ -19,9 +19,9 @@ import java.nio.file.{FileSystems, Files}
   * `setPermission` is called).
   *
   * Writes reach this class through [[ForkFreeLocalFileSystem.route]]:
-  * [[LakeIO]]'s conf (which MetaIO's parquet writers copy), the restored
-  * conf of the executor-side data writers, and [[LakeIO.writeParquet]]'s
-  * writer options for Spark's own file writes. Reads keep Spark's cached
+  * [[LakeIO]]'s conf (which MetaIO's parquet writers copy) and the restored
+  * conf of [[GraftDataFileWriter]]'s tasks, which write every data file and
+  * every task-written metadata shard. Reads keep Spark's cached
   * filesystem. */
 class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSystem)
 
@@ -46,22 +46,17 @@ object ForkFreeLocalFileSystem {
 
   private val implKey = "fs.file.impl"
 
-  /** the conf entries that send `file:` paths here, uncached: Hadoop's
+  /** conf, changed in place to send `file:` paths here, uncached: Hadoop's
     * filesystem cache keys on scheme and user, not class, so a cached lookup
-    * would return whichever local filesystem was created first. Empty
+    * would return whichever local filesystem was created first. Unchanged
     * when the conf already names another `fs.file.impl`: a session's or
     * `core-site.xml`'s choice is never overridden. */
-  def routing(conf: Configuration): Map[String, String] = {
+  private[lake] def route(conf: Configuration): Configuration = {
     val name = classOf[ForkFreeLocalFileSystem].getName
-    Option(conf.get(implKey)) match {
-      case None | Some(`name`) => Map(implKey -> name, s"$implKey.disable.cache" -> "true")
-      case _ => Map.empty
+    if (Option(conf.get(implKey)).forall(_ == name)) {
+      conf.set(implKey, name)
+      conf.setBoolean(s"$implKey.disable.cache", true)
     }
-  }
-
-  /** conf with [[routing]] applied in place. */
-  def route(conf: Configuration): Configuration = {
-    routing(conf).foreach { case (k, v) => conf.set(k, v) }
     conf
   }
 }

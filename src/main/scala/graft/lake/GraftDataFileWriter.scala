@@ -7,24 +7,28 @@ import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetOutputFormat
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, GraftInternal}
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow}
 import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetCompressionCodec, ParquetOutputWriter, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StructType}
+import scala.reflect.ClassTag
 
 /** A task's data files, by their manifest entries: the commit message of
   * every graft DSv2 write, and what a committer reads the paths from. */
 case class GraftWriteCommit(entries: Seq[ManifestEntry]) extends WriterCommitMessage
 
-/** The one writer of graft data files. Batch writes
-  * ([[GraftTable.writeDataFiles]]), SQL copy-on-write and merge-on-read
-  * DML, and the streaming sink all write through it, from Spark's
-  * `InternalRow` and with Spark's own `ParquetWriteSupport`.
+/** The one writer of the parquet files graft writes from Spark tasks, from
+  * Spark's `InternalRow` through [[GraftDataFileWriter.open]]. Batch writes
+  * ([[GraftTable.writeDataFiles]]), SQL DML and the streaming sink write
+  * data files through this class; metadata shards go through
+  * [[GraftDataFileWriter.writeShard]].
   *
-  * Invariants:
+  * Data-file invariants:
   *  - One file per non-empty task, `data/<batch>/part-<pid>-<attempt>-<uuid8>.parquet`,
   *    created on the task's first row. A task without rows creates nothing
   *    and reports no entry.
@@ -145,6 +149,59 @@ object GraftDataFileWriter {
       w.commit().entries.headOption
     } catch { case t: Throwable => w.abort(); throw t }
   }
+
+  /** `task` over every partition of df's plan: one Spark job, run as df's
+    * SQL execution; the task results in partition order. */
+  private[lake] def runJob[T: ClassTag](df: DataFrame, description: String)(
+      task: (TaskContext, Iterator[InternalRow]) => T): Array[T] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(description)) {
+      df.sparkSession.sparkContext.runJob(qe.toRdd, task)
+    }
+  }
+
+  /** Writes df's rows as the metadata shard `rel` of the table at io in one
+    * Spark job; the rows written. Shard invariants:
+    *  - A directory of `part-<pid>.parquet` files, one per non-empty
+    *    partition, of df's schema made nullable (as Spark's file sources).
+    *  - Whatever was at rel is replaced, and the directory exists even when
+    *    no partition has a row (an explicit-schema read gives 0 rows).
+    *  - A task writes `_attempt-<pid>-<attempt>-<uuid8>.parquet`, which
+    *    every reader skips, and the driver renames each partition's winning
+    *    file, so a losing attempt never becomes a visible duplicate. */
+  def writeShard(io: LakeIO, df: DataFrame, rel: String): Long = {
+    io.delete(rel)
+    io.mkdirs(rel)
+    val task = shardTask(io.abs(rel).toString, GraftInternal.asNullable(df.schema),
+      LakeConf.capture())
+    publishShard(io, rel, runJob(df, s"graft shard $rel")((ctx, rows) =>
+      task(ctx.partitionId, ctx.attemptNumber, rows)))
+  }
+
+  /** Attempt `attempt` of shard task `pid`: its rows into one `_attempt-`
+    * file in the shard directory `dir`; (file name, rows), None when there
+    * is no row. A failing attempt deletes its file. */
+  private[lake] def shardTask(dir: String, schema: StructType, confBag: Array[(String, String)])
+      : (Int, Int, Iterator[InternalRow]) => Option[(String, Long)] = (pid, attempt, rows) =>
+    if (!rows.hasNext) None
+    else {
+      val name = f"_attempt-$pid%05d-$attempt-" + UUID.randomUUID().toString.take(8) + ".parquet"
+      val path = new HPath(new HPath(dir), name)
+      val conf = this.conf(confBag)
+      val w = open(path, schema, conf)
+      var n = 0L
+      try { rows.foreach { r => w.write(r); n += 1 }; w.close() }
+      catch { case t: Throwable =>
+        try w.close() finally path.getFileSystem(conf).delete(path, false); throw t }
+      Some(name -> n)
+    }
+
+  /** Renames each partition's winning attempt (`parts`, in partition order)
+    * to `rel/part-<pid>.parquet`; the rows of the shard. */
+  private[lake] def publishShard(io: LakeIO, rel: String, parts: Seq[Option[(String, Long)]]): Long =
+    parts.zipWithIndex.collect { case (Some((name, rows)), pid) =>
+      io.rename(s"$rel/$name", f"$rel/part-$pid%05d.parquet"); rows
+    }.sum
 
   /** A parquet writer of `schema`'s InternalRows at `path`: Spark's
     * ParquetOutputWriter over its ParquetWriteSupport, so the file layout

@@ -463,6 +463,10 @@ class GraftTable(val spark: SparkSession, val location: String,
       .parquet(shards.map(sh => io.abs(sh.path).toString): _*)
   }
 
+  /** the (file_path, add_seq) pairs of a [[manifestWithSeq]] frame. */
+  private[lake] def seqPairs(m: DataFrame): Seq[(String, Long)] =
+    m.select($"file_path", $"add_seq").as[(String, Long)].collect().toSeq
+
   /** Live manifest entries WITH the sequence number of the add shard that
     * introduced each entry (`add_seq`) — the data-side half of the MoR
     * sequence comparison. One tiny read per add shard (shard count is
@@ -885,8 +889,7 @@ class GraftTable(val spark: SparkSession, val location: String,
       val shards = manifestShards(s)
       val pairs = localManifestSeq(shards) match {
         case Some(ps) => ps.map(p => (p._1.file_path, p._2)) // jobless planning
-        case None => manifestWithSeq(s)
-          .select($"file_path", $"add_seq").as[(String, Long)].collect().toSeq
+        case None => seqPairs(manifestWithSeq(s))
       }
       morScan(s, pairs)
     case Some(s) =>
@@ -908,8 +911,7 @@ class GraftTable(val spark: SparkSession, val location: String,
       case Some(s) if hasMorDeletes(s) =>
         val m = manifestWithSeq(s)
         val total = m.count().toInt
-        val kept = m.filter(manifestPredicate)
-          .select($"file_path", $"add_seq").as[(String, Long)].collect().toSeq
+        val kept = seqPairs(m.filter(manifestPredicate))
         (morScan(s, kept), total, kept.size)
       case Some(s) =>
         val m = manifest(s)
@@ -958,10 +960,7 @@ class GraftTable(val spark: SparkSession, val location: String,
     val bucketOrdinal = if (bucketBy.isDefined) df.schema.length else -1
     val task = GraftDataFileWriter.writeTask(location, batch, tag, fileSchema, ordinals,
       bucketOrdinal, LakeConf.capture())
-    val qe = src.queryExecution
-    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(s"graft write $batch")) {
-      spark.sparkContext.runJob(qe.toRdd, task)
-    }.toSeq.flatten
+    GraftDataFileWriter.runJob(src, s"graft write $batch")(task).toSeq.flatten
   }
 
   /** writeDataFiles PRESERVING the table's bucket layout: when a bucket spec
@@ -1119,8 +1118,7 @@ class GraftTable(val spark: SparkSession, val location: String,
       case RemovedFrame(df) =>
         // table-sized: written distributed, never collected
         val r = s"meta/manifest-remove-$uid.parquet"
-        io.writeParquet(df.select(col("file_path").cast("string")).coalesce(1), r,
-          overwrite = true)
+        GraftDataFileWriter.writeShard(io, df.select(col("file_path").cast("string")).coalesce(1), r)
         Some("remove" -> r)
       case Written(kind, r) => Some(kind -> r)
       case _ => None
@@ -1966,16 +1964,17 @@ class GraftTable(val spark: SparkSession, val location: String,
             liveAll.repartitionByRange(shardsN, $"partition", $"min_z", $"file_path")
               .sortWithinPartitions($"partition", $"min_z", $"file_path")
         val addRel = s"meta/manifest-add-${UUID.randomUUID().toString.take(12)}.parquet"
-        io.writeParquet(live, addRel, overwrite = true)
-        // re-base: the new list holds exactly this shard directory; record
-        // count comes from one agg over the freshly written shards (metadata)
+        val entries = GraftDataFileWriter.writeShard(io, live, addRel)
+        // re-base: the new list holds exactly this shard directory; the
+        // entry count is the write's, the record count one agg over the
+        // freshly written shard (metadata)
         val r = spark.read.schema(GraftTable.manifestSchema)
           .parquet(io.abs(addRel).toString)
-          .agg(sum($"record_count"), count(lit(1))).head()
+          .agg(sum($"record_count")).head()
         val liveCount = if (r.isNullAt(0)) 0L else r.getLong(0)
         publish(PendingCommit("manifest_rewrite", Some(s), PendingCommit.Strict,
           PendingCommit.Replace(Seq.empty, 0L, 0L), Seq(PendingCommit.Written("add", addRel)),
-          liveCount, r.getLong(1)))
+          liveCount, entries))
     }
 
   /** the flat JSON objects of this format: snapshots, refs, specs, stats.

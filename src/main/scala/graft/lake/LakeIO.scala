@@ -3,7 +3,6 @@ package graft.lake
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path => HPath}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.{DataFrame, SaveMode}
 import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 
@@ -97,9 +96,9 @@ object LakeConf {
   * table works unchanged against file://, hdfs://, s3a://, gs://, etc.
   * No direct `java.nio.file` calls remain in table/maintenance logic.
   *
-  * Writes on `file:` start no process: the seam's conf and
-  * [[LakeIO.writeParquet]] route them through [[ForkFreeLocalFileSystem]],
-  * which states that invariant.
+  * Writes on `file:` start no process: this seam's conf (which MetaIO's
+  * writers copy) and [[GraftDataFileWriter]]'s tasks route them through
+  * [[ForkFreeLocalFileSystem]], which states that invariant.
   *
   * Atomicity note: `writeAtomic` uses create-temp + rename, which atomically
   * replaces the target on POSIX; HDFS (whose FileSystem.rename will not
@@ -187,14 +186,11 @@ final class LakeIO(val root: String) extends Serializable {
     try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  /** Spark's distributed parquet write of df to rel: replacing whatever is
-    * there when overwrite, else failing if rel exists. The write job, its
-    * committer and its tasks take the seam's filesystem routing as writer
-    * options, which Spark copies into their Hadoop conf. */
-  def writeParquet(df: DataFrame, rel: String, overwrite: Boolean): Unit =
-    df.write.options(ForkFreeLocalFileSystem.routing(conf))
-      .mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
-      .parquet(abs(rel).toString)
+  /** moves the file at `from` to `to`, a checksummed file with its `.crc`;
+    * a refused rename throws. */
+  def rename(from: String, to: String): Unit =
+    if (!fs.rename(abs(from), abs(to)))
+      throw new java.io.IOException(s"rename failed: $from to $to")
 
   /** Atomic create-if-absent — the compare-and-swap primitive behind
     * optimistic concurrency (version claims): exactly one of any number of

@@ -77,8 +77,9 @@ private[lake] object MetaCache {
   * metadata is a handful of rows; r2's per-commit Spark writes were ~40% of
   * the maintenance bench (VERDICT "What's wrong" #2). Files use the
   * standard 3-level LIST layout, so Spark reads them interchangeably with
-  * its own shards (big shards — e.g. manifest rewrites of the live set —
-  * are still written distributed by Spark).
+  * the shards written from Spark tasks (big shards — e.g. manifest rewrites
+  * of the live set, delete shards, bloom sidecars — are written by
+  * [[GraftDataFileWriter.writeShard]], one part file per task).
   */
 object MetaIO {
 
@@ -227,7 +228,8 @@ object MetaIO {
   }
 
   /** parquet part files at st: the file itself, or a directory's visible
-    * `*.parquet` children (Spark- and MetaIO-written alike). */
+    * `*.parquet` children (task-written shards, and Spark-written ones of
+    * older tables). */
   private def partFiles(st: FileStatus, conf: Configuration): Seq[FileStatus] =
     if (!st.isDirectory) Seq(st)
     else st.getPath.getFileSystem(conf).listStatus(st.getPath).toSeq.filter { p =>
@@ -256,18 +258,6 @@ object MetaIO {
   private[lake] def foreachGroup(p: HPath, conf: Configuration)(f: Group => Unit): Unit =
     foreachGroup(p.getFileSystem(conf).getFileStatus(p), conf)(f)
 
-  /** total row count at rel from parquet FOOTERS only — driver-side, zero
-    * Spark jobs (counting a freshly written shard used to cost a whole
-    * metadata job). */
-  def rowCount(io: LakeIO, rel: String): Long = {
-    val conf = new Configuration(io.hadoopConf)
-    io.status(rel).fold(Seq.empty[FileStatus])(partFiles(_, conf)).map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader
-        .open(HadoopInputFile.fromStatus(f, conf))
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
-
   private def readGroups(io: LakeIO, st: FileStatus): Seq[Group] = {
     val out = ArrayBuffer.empty[Group]
     foreachGroup(st, new Configuration(io.hadoopConf))(out += _)
@@ -291,7 +281,7 @@ object MetaIO {
 
   /** manifest entries of one shard, statted by the caller as `st`, read
     * driver-side — the small-manifest fast path that lets scan planning skip
-    * Spark jobs entirely. Reads both MetaIO- and Spark-written shards (same
+    * Spark jobs entirely. Reads MetaIO- and task-written shards alike (same
     * 3-level LIST layout). */
   def readEntries(io: LakeIO, rel: String, st: FileStatus): Seq[ManifestEntry] =
     MetaCache.entries.getAt(io, rel, st) { st =>

@@ -3,6 +3,7 @@ package graft.lake
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.StructType
 
 /** MERGE-ON-READ deletes — the write-cheap complement to [[Delete]]'s
   * copy-on-write path (Iceberg's two delete strategies, re-expressed
@@ -39,11 +40,7 @@ object MorDelete {
     * matching nothing commits nothing. */
   def deleteWhere(table: GraftTable, filters: Array[Filter]): Long = {
     val snap = table.currentSnapshot.getOrElse(return 0L)
-    val spark = table.spark
-    import spark.implicits._
-    val kept = table.manifestWithSeq(snap)
-      .filter(GraftScan.manifestPredicate(filters))
-      .select($"file_path", $"add_seq").as[(String, Long)].collect().toSeq
+    val kept = table.seqPairs(table.manifestWithSeq(snap).filter(GraftScan.manifestPredicate(filters)))
     if (kept.isEmpty) return 0L
     // the live view must apply BOTH pending delete flavors: eqdels only
     // would re-match rows already position-deleted, land their keys in the
@@ -67,19 +64,28 @@ object MorDelete {
     val delSeq = table.nextEqDeleteSeq(basis)
     val keys = matching.select(col("repo"), col("path"), col("commit"),
       lit(delSeq).as("del_seq"))
-    val uid = java.util.UUID.randomUUID().toString.take(12)
-    val shardRel = s"meta/manifest-eqdel-$uid.parquet"
-    table.io.writeParquet(keys, shardRel, overwrite = true)
-    // matched count from the freshly written shard's parquet footers —
-    // driver-side, zero jobs
-    val matched = MetaIO.rowCount(table.io, shardRel)
-    if (matched == 0L) { table.io.delete(shardRel); return 0L }
+    val (shardRel, matched) = writeDeleteShard(table, "eqdel", keys).getOrElse(return 0L)
     // metadata-only: the live record count drops by the matched rows, the
     // file count does not
     table.publish(PendingCommit("mor-delete", basis, PendingCommit.Strict,
       shards = Seq(PendingCommit.Written("eqdel", shardRel)), recordDelta = -matched))
     matched
   }
+
+  /** keys written as a new `kind` ("eqdel" or "posdel") delete shard of
+    * table, in one Spark job: (its rel, its rows), the count being the
+    * write's own; None, and no shard left behind, when keys is empty. */
+  private[lake] def writeDeleteShard(table: GraftTable, kind: String,
+                                     keys: DataFrame): Option[(String, Long)] = {
+    val rel = s"meta/manifest-$kind-${java.util.UUID.randomUUID().toString.take(12)}.parquet"
+    val rows = GraftDataFileWriter.writeShard(table.io, keys, rel)
+    if (rows == 0L) { table.io.delete(rel); None } else Some(rel -> rows)
+  }
+
+  /** a position-delete shard's rows, (file_path, pos), from a scan that
+    * kept each row's `_file` and `_pos`. */
+  private[lake] def addresses(matching: DataFrame): DataFrame =
+    matching.select(col("_file").as("file_path"), col("_pos").as("pos"))
 
   /** Merge-on-read POSITIONAL delete of rows matching the pushed-filter
     * conjunction: matching rows' (file, ordinal) addresses are committed as
@@ -91,11 +97,7 @@ object MorDelete {
     * live scan, so an address never enters two shards. */
   def deleteWherePositional(table: GraftTable, filters: Array[Filter]): Long = {
     val snap = table.currentSnapshot.getOrElse(return 0L)
-    val spark = table.spark
-    import spark.implicits._
-    val kept = table.manifestWithSeq(snap)
-      .filter(GraftScan.manifestPredicate(filters))
-      .select($"file_path", $"add_seq").as[(String, Long)].collect().toSeq
+    val kept = table.seqPairs(table.manifestWithSeq(snap).filter(GraftScan.manifestPredicate(filters)))
     if (kept.isEmpty) return 0L
     deletePositionalMatching(table, snap,
       table.morScanKeepPos(snap, kept)
@@ -105,22 +107,14 @@ object MorDelete {
   /** Column-predicate variant (library callers): no stats pruning. */
   def deleteWherePositional(table: GraftTable, condition: Column): Long = {
     val snap = table.currentSnapshot.getOrElse(return 0L)
-    val spark = table.spark
-    import spark.implicits._
-    val pairs = table.manifestWithSeq(snap)
-      .select($"file_path", $"add_seq").as[(String, Long)].collect().toSeq
-    deletePositionalMatching(table, snap,
-      table.morScanKeepPos(snap, pairs).filter(coalesce(condition, lit(false))))
+    deletePositionalMatching(table, snap, table.morScanKeepPos(snap,
+      table.seqPairs(table.manifestWithSeq(snap))).filter(coalesce(condition, lit(false))))
   }
 
   private def deletePositionalMatching(table: GraftTable, basis: Snapshot,
                                        matching: DataFrame): Long = {
-    val keys = matching.select(col("_file").as("file_path"), col("_pos").as("pos"))
-    val uid = java.util.UUID.randomUUID().toString.take(12)
-    val shardRel = s"meta/manifest-posdel-$uid.parquet"
-    table.io.writeParquet(keys, shardRel, overwrite = true)
-    val matched = MetaIO.rowCount(table.io, shardRel)
-    if (matched == 0L) { table.io.delete(shardRel); return 0L }
+    val (shardRel, matched) =
+      writeDeleteShard(table, "posdel", addresses(matching)).getOrElse(return 0L)
     // the matched count and the "row not already deleted" guarantee were
     // computed against `basis`, so a moved head conflicts
     table.publish(PendingCommit("mor-posdelete", Some(basis), PendingCommit.Strict,
@@ -143,25 +137,21 @@ object MorDelete {
     val eqShards = table.eqDeleteShards(snap)
     val posShards = table.posDeleteShards(snap)
     if (eqShards.isEmpty && posShards.isEmpty) return ApplyResult(0, 0, 0)
-    val spark = table.spark
-    import spark.implicits._
     val m = table.manifestWithSeq(snap)
     val affectedEq =
       if (eqShards.isEmpty) Seq.empty[(String, Long)]
       else {
         val keys = table.eqDeleteKeys(snap)
-        m.join(broadcast(keys),
-            keys("repo") >= m("min_repo") && keys("repo") <= m("max_repo") &&
-            keys("path") >= m("min_path") && keys("path") <= m("max_path") &&
-            m("add_seq") < keys("del_seq"),
-            "left_semi")
-          .select($"file_path", $"add_seq").as[(String, Long)].collect().toSeq
+        table.seqPairs(m.join(broadcast(keys),
+          keys("repo") >= m("min_repo") && keys("repo") <= m("max_repo") &&
+          keys("path") >= m("min_path") && keys("path") <= m("max_path") &&
+          m("add_seq") < keys("del_seq"),
+          "left_semi"))
       }
     val affectedPos =
       if (posShards.isEmpty) Seq.empty[(String, Long)]
-      else m.join(table.posDeleteKeys(snap).select($"file_path").distinct(),
-          Seq("file_path"), "left_semi")
-        .select($"file_path", $"add_seq").as[(String, Long)].collect().toSeq
+      else table.seqPairs(m.join(table.posDeleteKeys(snap).select(col("file_path")).distinct(),
+        Seq("file_path"), "left_semi"))
     val affected = (affectedEq ++ affectedPos).distinct
     val untouched =
       if (snap.fileCount >= 0) (snap.fileCount - affected.size).toInt else -1
@@ -195,26 +185,17 @@ object MorDelete {
     val eq = table.eqDeleteShards(snap)
     val pos = table.posDeleteShards(snap)
     if (eq.size <= 1 && pos.size <= 1) return (0, 0)
-    val uid = java.util.UUID.randomUUID().toString.take(12)
-    val spark = table.spark
     val kept = table.manifestShards(snap)
       .filterNot(sh => (eq.size > 1 && sh.kind == "eqdel") ||
                        (pos.size > 1 && sh.kind == "posdel"))
-    val eqMerged = if (eq.size <= 1) None else {
-      val rel = s"meta/manifest-eqdel-$uid.parquet"
-      table.io.writeParquet(spark.read.schema(GraftTable.eqDeleteSchema)
-        .parquet(eq.map(sh => table.io.abs(sh.path).toString): _*)
-        .coalesce(1), rel, overwrite = true)
-      Some(PendingCommit.Written("eqdel", rel))
-    }
-    val posMerged = if (pos.size <= 1) None else {
-      val rel = s"meta/manifest-posdel-$uid.parquet"
-      table.io.writeParquet(spark.read.schema(GraftTable.posDeleteSchema)
-        .parquet(pos.map(sh => table.io.abs(sh.path).toString): _*)
-        .distinct() // stacked deletes never duplicate addresses, but cheap insurance
-        .coalesce(1), rel, overwrite = true)
-      Some(PendingCommit.Written("posdel", rel))
-    }
+    def read(shards: Seq[ManifestShard], schema: StructType) = table.spark.read.schema(schema)
+      .parquet(shards.map(sh => table.io.abs(sh.path).toString): _*)
+    def merged(kind: String, keys: DataFrame) =
+      writeDeleteShard(table, kind, keys.coalesce(1)).map(s => PendingCommit.Written(kind, s._1))
+    val eqMerged = if (eq.size <= 1) None else merged("eqdel", read(eq, GraftTable.eqDeleteSchema))
+    // stacked deletes never duplicate addresses, but cheap insurance
+    val posMerged = if (pos.size <= 1) None
+      else merged("posdel", read(pos, GraftTable.posDeleteSchema).distinct())
     // the same live rows behind a bounded shard list: counts unchanged
     table.publish(PendingCommit("compact-deletes", Some(snap), PendingCommit.Strict,
       PendingCommit.Replace(kept, snap.recordCount, snap.fileCount),

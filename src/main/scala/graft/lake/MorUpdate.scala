@@ -41,12 +41,9 @@ object MorUpdate {
     * on the pending-delete-applied live scan of the candidates. */
   def updateWhereMor(table: GraftTable, filters: Array[Filter],
                      set: Map[String, Column]): MorUpdateResult = {
-    val spark = table.spark
-    import spark.implicits._
     val snap = table.currentSnapshot.getOrElse(return MorUpdateResult(0, 0))
-    val cand = BloomIndex.prunedManifest(table, table.manifestWithSeq(snap), filters)
-      .filter(GraftScan.manifestPredicate(filters))
-      .select($"file_path", $"add_seq").as[(String, Long)].collect().toSeq
+    val cand = table.seqPairs(BloomIndex.prunedManifest(table, table.manifestWithSeq(snap), filters)
+      .filter(GraftScan.manifestPredicate(filters)))
     if (cand.isEmpty) return MorUpdateResult(0, 0)
     val live = table.morScanKeepPos(snap, cand)
     run(table, snap, live,
@@ -56,12 +53,8 @@ object MorUpdate {
   /** Column-predicate variant (library callers): no stats pruning. */
   def updateWhereMor(table: GraftTable, condition: Column,
                      set: Map[String, Column]): MorUpdateResult = {
-    val spark = table.spark
-    import spark.implicits._
     val snap = table.currentSnapshot.getOrElse(return MorUpdateResult(0, 0))
-    val pairs = table.manifestWithSeq(snap)
-      .select($"file_path", $"add_seq").as[(String, Long)].collect().toSeq
-    run(table, snap, table.morScanKeepPos(snap, pairs),
+    run(table, snap, table.morScanKeepPos(snap, table.seqPairs(table.manifestWithSeq(snap))),
       coalesce(condition, lit(false)), set)
   }
 
@@ -90,8 +83,8 @@ object MorUpdate {
         added.foreach(e => table.io.delete(e.file_path))
         return MorUpdateResult(0, 0)
       }
-      val posRel = writeAddresses(table, matching)
-      table.publish(PendingCommit.rowChange(basis, added, posRel.toSeq, updatedRows,
+      val posRel = MorDelete.writeDeleteShard(table, "posdel", MorDelete.addresses(matching))
+      table.publish(PendingCommit.rowChange(basis, added, posRel.map(_._1).toSeq, updatedRows,
         "mor-update"))
       MorUpdateResult(updatedRows, added.size)
     } finally matching.unpersist()
@@ -104,8 +97,6 @@ object MorUpdate {
     * The same plan-stats broadcast decision as the CoW merge. */
   def mergeIntoMor(table: GraftTable, source: DataFrame,
                    broadcastBytes: Long = 32L << 20): MorMergeResult = {
-    val spark = table.spark
-    import spark.implicits._
     val keys = Seq("repo", "path", "commit")
     val dataCols = table.dataColumnNames
     val source0 = table.conform(source).select(dataCols.map(col): _*)
@@ -123,10 +114,8 @@ object MorUpdate {
       val small = source.queryExecution.optimizedPlan.stats.sizeInBytes <= broadcastBytes
       def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
 
-      val pairs = table.manifestWithSeq(snap)
-        .select($"file_path", $"add_seq").as[(String, Long)].collect().toSeq
       // ONE full pass: matched rows' addresses (and their key set)
-      val matched = table.morScanKeepPos(snap, pairs)
+      val matched = table.morScanKeepPos(snap, table.seqPairs(table.manifestWithSeq(snap)))
         .join(hinted(srcKeys), keys, "left_semi")
         .select((keys.map(col) :+ col("_file") :+ col("_pos")): _*)
         .cache()
@@ -135,11 +124,12 @@ object MorUpdate {
         val updates = src.join(hinted(matchedKeys), keys, "left_semi")
         val inserts = src.join(hinted(matchedKeys), keys, "left_anti")
         val added = table.writeDataFilesRouted(updates.unionByName(inserts), "mor-merge")
-        val posRel = if (matched.isEmpty) None else writeAddresses(table, matched)
-        val updatedRows = matched.count()
+        // one address per matched live row: the shard's rows are the updated rows
+        val posShard = MorDelete.writeDeleteShard(table, "posdel", MorDelete.addresses(matched))
+        val updatedRows = posShard.fold(0L)(_._2)
         val insertedRows = added.map(_.record_count).sum - updates.count()
-        if (added.isEmpty && posRel.isEmpty) return MorMergeResult(0, 0, 0)
-        table.publish(PendingCommit.rowChange(snap, added, posRel.toSeq, updatedRows,
+        if (added.isEmpty && posShard.isEmpty) return MorMergeResult(0, 0, 0)
+        table.publish(PendingCommit.rowChange(snap, added, posShard.map(_._1).toSeq, updatedRows,
           "mor-merge"))
         MorMergeResult(updatedRows, insertedRows, added.size)
       } finally matched.unpersist()
@@ -167,7 +157,6 @@ object MorUpdate {
     * state at all. */
   def upsertBatch(table: GraftTable, batch: DataFrame,
                   operation: String = "mor-upsert"): UpsertResult = {
-    val spark = table.spark
     val keys = Seq("repo", "path", "commit")
     val basis = table.currentSnapshot
     val delSeq = table.nextEqDeleteSeq(basis)
@@ -185,13 +174,8 @@ object MorUpdate {
       val retracted = liveMatches.map(_.count()).getOrElse(0L)
       val shardRel =
         if (retracted == 0L) None
-        else {
-          val uid = java.util.UUID.randomUUID().toString.take(12)
-          val rel = s"meta/manifest-eqdel-$uid.parquet"
-          table.io.writeParquet(liveMatches.get.distinct().withColumn("del_seq", lit(delSeq)),
-            rel, overwrite = true)
-          Some(rel)
-        }
+        else MorDelete.writeDeleteShard(table, "eqdel",
+          liveMatches.get.distinct().withColumn("del_seq", lit(delSeq))).map(_._1)
       val added = table.writeDataFilesRouted(batch, "upsert")
       if (added.isEmpty && shardRel.isEmpty)
         return UpsertResult(0L, 0L, basis.map(_.version).getOrElse(0L))
@@ -220,15 +204,5 @@ object MorUpdate {
       val r = upsertBatch(table, batch, op)
       table.io.writeAtomic(markerRel, s"$epochId ${r.version}")
     }
-  }
-
-  /** write the matched addresses as a posdel shard; None when empty. */
-  private def writeAddresses(table: GraftTable, matching: DataFrame): Option[String] = {
-    val uid = java.util.UUID.randomUUID().toString.take(12)
-    val rel = s"meta/manifest-posdel-$uid.parquet"
-    table.io.writeParquet(matching.select(col("_file").as("file_path"), col("_pos").as("pos")),
-      rel, overwrite = true)
-    val n = MetaIO.rowCount(table.io, rel)
-    if (n == 0L) { table.io.delete(rel); None } else Some(rel)
   }
 }

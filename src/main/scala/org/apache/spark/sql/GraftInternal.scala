@@ -11,6 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 object GraftInternal {
   def col(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expr(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** s with every field, array element and map value nullable. */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
 
   def registerFunction(spark: SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit = {

@@ -13,12 +13,12 @@ import org.apache.spark.sql.streaming.Trigger
 import scala.jdk.CollectionConverters._
 
 /** A session's own `fs.file.impl`: the checksummed local filesystem, noting
-  * the name of every file created through it. */
+  * the path of every file created through it. */
 class CountingLocalFileSystem extends LocalFileSystem {
   override def create(f: HPath, permission: FsPermission, overwrite: Boolean,
                       bufferSize: Int, replication: Short, blockSize: Long,
                       progress: Progressable): FSDataOutputStream = {
-    CountingLocalFileSystem.created.add(f.getName)
+    CountingLocalFileSystem.created.add(f.toUri.getPath)
     super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
 }
@@ -166,25 +166,42 @@ class ForkFreeWriteSpec extends SparkTestBase {
     hc.set("fs.file.impl", classOf[CountingLocalFileSystem].getName)
     hc.setBoolean("fs.file.impl.disable.cache", true)
     try {
-      assert(ForkFreeLocalFileSystem.routing(LakeConf.current()).isEmpty)
+      // routing leaves the session's choice in place
+      assert(ForkFreeLocalFileSystem.route(LakeConf.current()).get("fs.file.impl") ==
+        classOf[CountingLocalFileSystem].getName)
       CountingLocalFileSystem.created.clear()
       val t = new GraftTable(spark, Files.createTempDirectory("graft-ownfs").toString)
       t.append(synthDf(100, 5).repartition(2))
       Maintenance.compact(t, "j1")
+      assert(BloomIndex.build(t)._1 > 0)
+      val repo = t.scan().select("repo").head().getString(0)
+      assert(MorDelete.deleteWhere(t, col("repo") === repo) > 0)
       val root = java.nio.file.Paths.get(t.location)
       val written = Files.walk(root).iterator.asScala
         .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.endsWith(".crc"))
-        .map(_.getFileName.toString).toSet
-      val data = written.filter(_.startsWith("part-"))
-      val meta = written.filter(n => n.endsWith(".json") || n.startsWith("manifest-"))
+        .map(p => root.relativize(p).toString).toSeq
+      val data = written.filter(_.startsWith("data/"))
+      val meta = written.filter(n => n.startsWith("meta/") && n.count(_ == '/') == 1)
+      // the part files of shard directories: the delete shard's and the sidecar's
+      val parts = written.filter(n => n.startsWith("meta/") && n.count(_ == '/') == 2)
       assert(data.nonEmpty && meta.nonEmpty)
-      // Spark's data files, MetaIO's shards and LakeIO's JSON alike
-      assert(data.subsetOf(CountingLocalFileSystem.created.asScala))
+      assert(parts.exists(_.startsWith("meta/manifest-eqdel-")) &&
+        parts.exists(_.startsWith("meta/bloom-")), parts)
       val created = CountingLocalFileSystem.created.asScala
+      def abs(n: String) = s"${t.location}/$n"
+      // GraftDataFileWriter's data files, MetaIO's shards and LakeIO's JSON alike
+      assert(data.forall(n => created(abs(n))), data)
       // writeAtomic creates a temp sibling and renames it over the target
-      def through(n: String) = created.exists(c => c == n || c.startsWith(n + ".tmp-"))
+      def through(n: String) = created.exists(c => c == abs(n) || c.startsWith(abs(n) + ".tmp-"))
       assert(meta.exists(n => n.endsWith(".json") && through(n)))
-      assert(meta.exists(n => n.startsWith("manifest-") && through(n)))
+      assert(meta.exists(n => n.startsWith("meta/manifest-") && through(n)))
+      // a shard's task creates its part under an attempt name, which the
+      // driver renames to part-<pid>.parquet
+      parts.foreach { n =>
+        val pid = n.substring(n.lastIndexOf("/part-") + 6).stripSuffix(".parquet")
+        val attempt = abs(n.substring(0, n.lastIndexOf('/'))) + s"/_attempt-$pid-"
+        assert(created.exists(_.startsWith(attempt)), n)
+      }
     } finally {
       hc.unset("fs.file.impl")
       hc.unset("fs.file.impl.disable.cache")
