@@ -9,62 +9,7 @@ import java.nio.charset.StandardCharsets
   * xmq output, quote-depth law, incidental-indent idempotence. */
 class PropertySpec extends AnyFunSuite {
 
-  /** deterministic sampling loop (scalatestplus not in the offline cache). */
-  private def forAllN[T](gen: Gen[T], n: Int)(body: T => Unit): Unit = {
-    var seed = Seed(42L)
-    var i = 0
-    while (i < n) {
-      gen.apply(Gen.Parameters.default, seed).foreach(body)
-      seed = seed.next
-      i += 1
-    }
-  }
-
-  private val nameGen: Gen[String] = for {
-    h <- Gen.alphaLowerChar
-    t <- Gen.listOfN(5, Gen.oneOf(Gen.alphaNumChar, Gen.const('_'), Gen.const('-')))
-  } yield (h :: t).mkString
-
-  private val textGen: Gen[String] = Gen.frequency(
-    6 -> Gen.listOf(Gen.frequency(
-      8 -> Gen.alphaNumChar, 3 -> Gen.const(' '), 1 -> Gen.const('\''),
-      1 -> Gen.const('"'), 1 -> Gen.const('\n'), 1 -> Gen.const('='),
-      1 -> Gen.const('&'), 1 -> Gen.const('{'), 1 -> Gen.const('('))).map(_.mkString),
-    1 -> Gen.const("'''"),
-    1 -> Gen.const("  leading and trailing  "),
-    1 -> Gen.const("\n\nonly\nnewlines\n\n"))
-    // spaces immediately before a newline are not representable in xmq — the
-    // reference itself normalizes "x \ny" to "x\ny" (xmq_trim_quote drops
-    // line-trailing whitespace at parse; verified against the binary)
-    .map(_.replaceAll(" +\n", "\n"))
-
-  private def elemGen(depth: Int): Gen[XElem] = for {
-    name <- nameGen
-    nAttrs <- Gen.choose(0, 2)
-    attrs <- Gen.listOfN(nAttrs, for { k <- nameGen; v <- textGen } yield (k, v))
-    nKids <- if (depth >= 2) Gen.const(0) else Gen.choose(0, 3)
-    kids <- Gen.listOfN(nKids, Gen.frequency(
-      4 -> elemGen(depth + 1).map(e => e: XNode),
-      2 -> textGen.filter(_.nonEmpty).map(t => new XText(t): XNode),
-      // comment content is per-line ws-trimmed: the reference's un-comment
-      // drops leading blank lines / line-leading spaces (compact continuations
-      // add no separator space) — such content is not representable
-      1 -> textGen.map { t0 =>
-        val t = t0.trim.replaceAll("(?m)^ +| +$", "")
-        new XComment(if (t.isEmpty) "c" else t): XNode
-      }))
-    leafText <- textGen
-  } yield {
-    val e = new XElem(name)
-    attrs.zipWithIndex.foreach { case ((k, v), i) =>
-      val a = new XAttr(null, k + i) // unique keys
-      a.appendText(v)
-      e.attrs += a
-    }
-    if (kids.isEmpty) { if (leafText.nonEmpty) e.appendChild(new XText(leafText)) }
-    else kids.foreach(e.appendChild)
-    e
-  }
+  import PropertySpec._
 
   private def treeEquals(a: XNode, b: XNode): Boolean = (a, b) match {
     case (x: XElem, y: XElem) =>
@@ -145,5 +90,65 @@ class PropertySpec extends AnyFunSuite {
       val out2 = JsonPrinter.print(d2)
       assert(out1 == out2)
     }
+  }
+}
+
+/** The random-tree generators, shared with `KernelGoldenSpec`. */
+object PropertySpec {
+  /** deterministic sampling loop (scalatestplus not in the offline cache). */
+  def forAllN[T](gen: Gen[T], n: Int)(body: T => Unit): Unit = {
+    var seed = Seed(42L)
+    var i = 0
+    while (i < n) {
+      gen.apply(Gen.Parameters.default, seed).foreach(body)
+      seed = seed.next
+      i += 1
+    }
+  }
+
+  val nameGen: Gen[String] = for {
+    h <- Gen.alphaLowerChar
+    t <- Gen.listOfN(5, Gen.oneOf(Gen.alphaNumChar, Gen.const('_'), Gen.const('-')))
+  } yield (h :: t).mkString
+
+  val textGen: Gen[String] = Gen.frequency(
+    6 -> Gen.listOf(Gen.frequency(
+      8 -> Gen.alphaNumChar, 3 -> Gen.const(' '), 1 -> Gen.const('\''),
+      1 -> Gen.const('"'), 1 -> Gen.const('\n'), 1 -> Gen.const('='),
+      1 -> Gen.const('&'), 1 -> Gen.const('{'), 1 -> Gen.const('('))).map(_.mkString),
+    1 -> Gen.const("'''"),
+    1 -> Gen.const("  leading and trailing  "),
+    1 -> Gen.const("\n\nonly\nnewlines\n\n"))
+    // spaces immediately before a newline are not representable in xmq — the
+    // reference itself normalizes "x \ny" to "x\ny" (xmq_trim_quote drops
+    // line-trailing whitespace at parse; verified against the binary)
+    .map(_.replaceAll(" +\n", "\n"))
+
+  def elemGen(depth: Int): Gen[XElem] = for {
+    name <- nameGen
+    nAttrs <- Gen.choose(0, 2)
+    attrs <- Gen.listOfN(nAttrs, for { k <- nameGen; v <- textGen } yield (k, v))
+    nKids <- if (depth >= 2) Gen.const(0) else Gen.choose(0, 3)
+    kids <- Gen.listOfN(nKids, Gen.frequency(
+      4 -> elemGen(depth + 1).map(e => e: XNode),
+      2 -> textGen.filter(_.nonEmpty).map(t => new XText(t): XNode),
+      // comment content is per-line ws-trimmed: the reference's un-comment
+      // drops leading blank lines / line-leading spaces (compact continuations
+      // add no separator space) — such content is not representable
+      1 -> textGen.map { t0 =>
+        val t = t0.trim.replaceAll("(?m)^ +| +$", "")
+        new XComment(if (t.isEmpty) "c" else t): XNode
+      }))
+    leafText <- textGen
+  } yield {
+    val e = new XElem(name)
+    attrs.zipWithIndex.foreach { case ((k, v), i) =>
+      val a = new XAttr(null, k + i) // unique keys
+      a.appendText(v)
+      e.attrs += a
+    }
+    if (kids.isEmpty) { if (leafText.nonEmpty) e.appendChild(new XText(leafText)) }
+    else kids.foreach(e.appendChild)
+    e
   }
 }
