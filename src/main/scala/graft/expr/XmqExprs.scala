@@ -17,34 +17,79 @@ import graft.xmq._
   */
 object XmqExprs {
 
-  private[expr] def ctOf(lang: String): Xmq.ContentType = lang match {
-    case "xml" => Xmq.XML
-    case "html" => Xmq.HTML
-    case "json" => Xmq.JSON
-    case "xmq" | "htmq" => Xmq.XMQ
-    case "text" => Xmq.TEXT
-    case _ => null // auto-detect
+  /** the content types the `lang` argument names; any other lang is
+    * auto-detected. The UTF-8 name lets a row's lang be matched without
+    * decoding it. */
+  private final class Lang(val name: String, val ct: Xmq.ContentType) {
+    val utf8: UTF8String = UTF8String.fromString(name)
   }
+  private val Langs = Array(new Lang("xml", Xmq.XML), new Lang("html", Xmq.HTML),
+    new Lang("json", Xmq.JSON), new Lang("xmq", Xmq.XMQ), new Lang("htmq", Xmq.XMQ),
+    new Lang("text", Xmq.TEXT))
+
+  private[expr] def ctOf(lang: String): Xmq.ContentType = {
+    var k = 0
+    while (k < Langs.length) { if (Langs(k).name == lang) return Langs(k).ct; k += 1 }
+    null // auto-detect
+  }
+
+  private def ctOf(lang: UTF8String): Xmq.ContentType = {
+    var k = 0
+    while (k < Langs.length) { if (Langs(k).utf8 == lang) return Langs(k).ct; k += 1 }
+    null
+  }
+
+  /** parse flags forcing `ct` (null: detect), shared: they are immutable. */
+  private val FlagsFor: Map[Xmq.ContentType, XmqEngine.ParseFlags] =
+    (Langs.map(_.ct).toSeq :+ null).map(ct => ct -> XmqEngine.ParseFlags(forced = ct)).toMap
+
+  private def flagsOf(lang: String): XmqEngine.ParseFlags = FlagsFor(ctOf(lang))
 
   /** parse content as `lang`, print back in the same format (the round-trip
     * kernel; null on parse error). */
-  def roundtrip(content: String, lang: String): String = {
+  def roundtrip(content: String, lang: String): String = roundtripOf(content, null, lang)
+
+  /** `roundtrip` of a row's string. */
+  def roundtrip(c: UTF8String, lang: String): String = roundtripOf(c.toString, c, lang)
+
+  private def roundtripOf(content: String, utf8: UTF8String, lang: String): String =
+    try PrintBuffer.print(printRoundTrip(content, utf8, ctOf(lang), _))
+    catch { case _: Exception => null }
+
+  /** the round-trip check of a row: does `roundtrip` print it back
+    * unchanged? The row is decoded once; its print is compared in the
+    * output buffer, with no copy. */
+  def roundtripOk(c: UTF8String, lang: UTF8String): Boolean = {
+    val content = c.toString
+    val sb = PrintBuffer.borrow()
     try {
-      val ct = ctOf(lang)
-      val doc = XmqEngine.parse(content.getBytes("UTF-8"), XmqEngine.ParseFlags(forced = ct))
-      // detect on the SAME BOM-stripped text the parser saw: detecting on
-      // the raw string would see U+FEFF as the first char and print a
-      // BOM-prefixed XML document back as XMQ
-      val stripped =
-        if (content.startsWith("\uFEFF")) content.substring(1) else content
-      val effective = if (ct != null) ct else Xmq.detect(stripped)
-      effective match {
-        case Xmq.XML => XmqEngine.toXml(doc)
-        case Xmq.HTML => XmqEngine.toHtml(doc)
-        case Xmq.JSON => XmqEngine.toJson(doc)
-        case _ => XmqEngine.toXmq(doc)
-      }
-    } catch { case _: Exception => null }
+      sb.ensureCapacity(content.length)
+      printRoundTrip(content, c, ctOf(lang), sb)
+      content.contentEquals(sb)
+    } catch { case _: Exception => false }
+    finally PrintBuffer.release(sb)
+  }
+
+  /** parse `content` as `ct` (null: detect) and print it into sb in its own
+    * format. Forced xmq tokenizes `utf8`'s bytes when given (no re-encode). */
+  private def printRoundTrip(content: String, utf8: UTF8String, ct: Xmq.ContentType,
+                             sb: java.lang.StringBuilder): Unit = {
+    val flags = FlagsFor(ct)
+    val doc =
+      if (ct == Xmq.XMQ && utf8 != null) XmqEngine.parse(utf8.getBytes, flags)
+      else XmqEngine.parseText(content, flags)
+    // detect on the SAME BOM-stripped text the parser saw: detecting on
+    // the raw string would see U+FEFF as the first char and print a
+    // BOM-prefixed XML document back as XMQ
+    val effective =
+      if (ct != null) ct
+      else Xmq.detect(if (content.startsWith("\uFEFF")) content.substring(1) else content)
+    effective match {
+      case Xmq.XML => XmlPrinter.writeXml(doc, withDecl = true, sb)
+      case Xmq.HTML => HtmlPrinter.writeHtml(doc, sb)
+      case Xmq.JSON => JsonPrinter.printTo(doc, sb)
+      case _ => XmqPrinter.printTo(doc, XmqSettings(), sb)
+    }
   }
 
   /** Per-thread LAST-PARSE memo for the READ-ONLY getter kernels: a row
@@ -95,7 +140,7 @@ object XmqExprs {
       // claiming the new content maps to the previous document's tree
       m.clear()
       val doc =
-        try XmqEngine.parse(content.getBytes("UTF-8"), XmqEngine.ParseFlags(forced = ctOf(lang)))
+        try XmqEngine.parseText(content, flagsOf(lang))
         catch { case _: Exception => null }
       if (content.length <= memoMaxChars) m.fill(content, lang, doc)
       doc
@@ -131,7 +176,7 @@ object XmqExprs {
 
   def probe(content: String, lang: String, countXpath: String,
             valueXpath: String, attr: String): Probe = try {
-    val doc = XmqEngine.parse(content.getBytes("UTF-8"), XmqEngine.ParseFlags(forced = ctOf(lang)))
+    val doc = XmqEngine.parseText(content, flagsOf(lang))
     // xpath failures (bad path syntax) are caught PER FIELD: the document
     // parsed, so wellformed must stay true — the single-output expressions
     // this probe replaces (is_wellformed, xmq_count) decide independently,
@@ -179,13 +224,19 @@ object XmqExprs {
     if (s == null) 0L else parseLongC(s)
   }
 
+  /** strtod's longest valid leading prefix (xmqGetDouble, xmq.c:4357). */
+  private val StrtodPrefix =
+    java.util.regex.Pattern.compile("^\\s*[-+]?(\\d+(\\.\\d*)?|\\.\\d+)([eE][-+]?\\d+)?")
+
+  /** C strtod of `s`: its longest valid leading number, 0 on none. */
+  def parseDoubleC(s: String): Double = {
+    val m = StrtodPrefix.matcher(s)
+    if (m.find()) m.group(0).trim.toDouble else 0.0
+  }
+
   def getDouble(content: String, lang: String, path: String): Double = {
     val s = getString(content, lang, path)
-    if (s == null) return 0.0
-    // strtod: longest valid leading prefix, 0 on none
-    val m = java.util.regex.Pattern.compile("^\\s*[-+]?(\\d+(\\.\\d*)?|\\.\\d+)([eE][-+]?\\d+)?")
-      .matcher(s)
-    if (m.find()) m.group(0).trim.toDouble else 0.0
+    if (s == null) 0.0 else parseDoubleC(s)
   }
 
   def countMatches(content: String, lang: String, path: String): Long = {
@@ -202,7 +253,7 @@ object XmqExprs {
 
   /** xmqAnnotateOffsets as a conversion: parse, annotate, print compact xmq. */
   def annotateOffsets(content: String, lang: String, attr: String): String = try {
-    val doc = XmqEngine.parse(content.getBytes("UTF-8"), XmqEngine.ParseFlags(forced = ctOf(lang)))
+    val doc = XmqEngine.parseText(content, flagsOf(lang))
     TreeOps.annotateOffsets(doc, attr)
     XmqEngine.toXmq(doc, compact = true)
   } catch { case _: Exception => null }
@@ -212,7 +263,7 @@ object XmqExprs {
     * empty output). */
   def xsltTransform(content: String, lang: String,
                     transformer: javax.xml.transform.Transformer, to: String): String = try {
-    val doc = XmqEngine.parse(content.getBytes("UTF-8"), XmqEngine.ParseFlags(forced = ctOf(lang)))
+    val doc = XmqEngine.parseText(content, flagsOf(lang))
     val out = Xslt.transformWith(doc, transformer)
     to match {
       case "xml" => XmqEngine.toXml(out)
@@ -226,13 +277,13 @@ object XmqExprs {
 
   /** xsd_valid eval body: malformed content or any validation error → false. */
   def xsdValid(content: String, lang: String, validator: javax.xml.validation.Validator): Boolean = try {
-    val doc = XmqEngine.parse(content.getBytes("UTF-8"), XmqEngine.ParseFlags(forced = ctOf(lang)))
+    val doc = XmqEngine.parseText(content, flagsOf(lang))
     Xsd.validateQuick(doc, validator)
   } catch { case _: Exception => false }
 
   def convert(content: String, lang: String, to: String, compact: Boolean): String = {
     try {
-      val doc = XmqEngine.parse(content.getBytes("UTF-8"), XmqEngine.ParseFlags(forced = ctOf(lang)))
+      val doc = XmqEngine.parseText(content, flagsOf(lang))
       to match {
         case "xml" => XmqEngine.toXml(doc)
         case "html" => XmqEngine.toHtml(doc)
@@ -251,7 +302,7 @@ case class XmqRoundTrip(left: Expression, right: Expression)
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override protected def nullSafeEval(c: Any, l: Any): Any = {
-    val out = XmqExprs.roundtrip(c.toString, l.toString)
+    val out = XmqExprs.roundtrip(c.asInstanceOf[UTF8String], l.toString)
     if (out == null) null else UTF8String.fromString(out)
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
@@ -268,8 +319,7 @@ case class XmqRoundTripOk(left: Expression, right: Expression)
     val c = left.eval(input)
     val l = right.eval(input)
     if (c == null || l == null) return false
-    val out = XmqExprs.roundtrip(c.toString, l.toString)
-    out != null && out == c.toString
+    XmqExprs.roundtripOk(c.asInstanceOf[UTF8String], l.asInstanceOf[UTF8String])
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)

@@ -75,8 +75,11 @@ object BloomIndex {
     }
     val bits = bitsFor(maxRows, bitsPerKey)
     val bloomAgg = udaf(new BloomFilterAgg(bits, numHashes), Encoders.scalaLong)
+    // the live files' physical rows: a pending merge-on-read delete only
+    // adds keys to a filter, which can never cause a false negative (and
+    // input_file_name() refuses scan()'s anti-join of two sources).
     // relativize distributed: the table layout is always data/<batch>/<file>
-    val side = table.scan()
+    val side = table.scanFiles()
       .select(input_file_name().as("abs"), xxhash64(col(column)).as("h"))
       .groupBy(regexp_extract(col("abs"), "(data/[^/]+/[^/]+)$", 1).as("file_path"))
       .agg(bloomAgg(col("h")).as("bloom"), count(lit(1)).as("n_keys"))

@@ -892,6 +892,14 @@ class GraftTable(val spark: SparkSession, val location: String,
         case None => seqPairs(manifestWithSeq(s))
       }
       morScan(s, pairs)
+    case Some(_) => scanFiles()
+  }
+
+  /** The current snapshot's live data files, read as they are: pending
+    * merge-on-read deletes are NOT applied, so the rows are a superset of
+    * `scan()`'s. One parquet read, so `input_file_name()` works over it. */
+  def scanFiles(): DataFrame = currentSnapshot match {
+    case None => emptyDf
     case Some(s) =>
       val paths = localManifest(manifestShards(s)) match {
         case Some(entries) => entries.map(_.file_path) // jobless planning

@@ -79,15 +79,28 @@ final class JsonParser(s: String, b: XmqBuilder) {
 
   private def err(msg: String): Nothing = throw new JsonParseError(s"$msg at offset $i")
 
+  /** the first backslash at or after the scan position (Int.MaxValue:
+    * none); it moves forward only, so the scans stay linear. */
+  private var nextBackslash = -1
+
+  /** a quoted string's content; one without escapes is a substring. */
   private def eatQuote(): String = {
-    val sb = new StringBuilder
     if (s.charAt(i) != '"') err("expected quote")
     i += 1
+    var run = i
+    if (nextBackslash < i) {
+      val k = s.indexOf('\\', i)
+      nextBackslash = if (k < 0) Int.MaxValue else k
+    }
+    val close = s.indexOf('"', i)
+    if (close >= 0 && close < nextBackslash) { i = close + 1; return s.substring(run, close) }
+    val sb = new java.lang.StringBuilder
     var done = false
     while (i < stop && !done) {
       val c = s.charAt(i)
-      if (c == '"') { i += 1; done = true }
+      if (c == '"') { sb.append(s, run, i); i += 1; done = true }
       else if (c == '\\') {
+        sb.append(s, run, i)
         i += 1
         if (i >= stop) err("bad escape")
         s.charAt(i) match {
@@ -109,7 +122,8 @@ final class JsonParser(s: String, b: XmqBuilder) {
             i += 4
           case _ => err("invalid json escape")
         }
-      } else { sb.append(c); i += 1 }
+        run = i
+      } else i += 1
     }
     if (!done) err("quote not closed")
     sb.toString
@@ -154,8 +168,8 @@ final class JsonParser(s: String, b: XmqBuilder) {
   private def normalizeKey(key0: String): (String, String, String) = {
     val key = trimIndexSuffix(key0)
     if (key == null || key.isEmpty) return ("_", null, null)
-    val (valid, colon) = TextUtil.isXmqElementName(key)
-    if (!valid) return ("_", null, key)
+    val colon = TextUtil.xmqElementNameColon(key)
+    if (colon == TextUtil.NotAnElementName) return ("_", null, key)
     if (colon >= 0) (key.substring(colon + 1), key.substring(0, colon), null)
     else (key, null, null)
   }
@@ -204,8 +218,8 @@ final class JsonParser(s: String, b: XmqBuilder) {
       return
     }
     if (key == "_") {
-      val (valid, colon) = TextUtil.isXmqElementName(content)
-      if (valid) {
+      val colon = TextUtil.xmqElementNameColon(content)
+      if (colon != TextUtil.NotAnElementName) {
         if (colon < 0) b.setContainerName(content)
         else {
           b.setContainerName(content.substring(colon + 1))

@@ -1,6 +1,5 @@
 package graft.xmq
 
-import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 /** xmq tree → JSON printer. Re-expression of
@@ -10,58 +9,99 @@ import scala.collection.mutable.ArrayBuffer
   */
 object JsonPrinter {
 
-  def print(doc: XDoc): String = printCollect(doc)._1
+  def print(doc: XDoc): String = PrintBuffer.print(printTo(doc, _))
+
+  /** print into `sb`; the conversion-loss warnings are dropped. */
+  def printTo(doc: XDoc, sb: java.lang.StringBuilder): Unit = {
+    fixupJson(doc)
+    new JsonPrinter(sb).printTop(doc)
+  }
 
   /** print + the conversion-loss warnings (reference: stderr, so the CLI
     * shows them before the buffered json). */
   def printCollect(doc: XDoc): (String, Seq[String]) = {
     fixupJson(doc)
-    val p = new JsonPrinter
-    p.printTop(doc)
-    (p.result, p.warnings.toSeq)
+    var warnings: Seq[String] = Nil
+    val out = PrintBuffer.print { sb =>
+      val p = new JsonPrinter(sb)
+      p.printTop(doc)
+      warnings = p.warnings
+    }
+    (out, warnings)
   }
 
   /** fixup_json: collapse multi text/charentity children into one text node. */
   def fixupJson(doc: XDoc): Unit = {
-    def fix(e: XElem): Unit = {
-      val collapsed = collapseText(e)
-      if (collapsed != null) {
-        e.children.clear()
-        e.appendChild(new XText(collapsed))
-      } else e.children.foreach { case c: XElem => fix(c); case _ => }
+    var i = 0
+    while (i < doc.children.length) {
+      doc.children(i) match {
+        case e: XElem => fix(e)
+        case _ =>
+      }
+      i += 1
     }
-    doc.children.foreach { case e: XElem => fix(e); case _ => }
+  }
+
+  private def fix(e: XElem): Unit = {
+    val collapsed = collapseText(e)
+    if (collapsed != null) {
+      e.children.clear()
+      e.appendChild(new XText(collapsed))
+    } else {
+      var i = 0
+      while (i < e.children.length) {
+        e.children(i) match {
+          case c: XElem => fix(c)
+          case _ =>
+        }
+        i += 1
+      }
+    }
   }
 
   /** xml.c xml_collapse_text: null when not collapsible / already collapsed. */
   private def collapseText(e: XElem): String = {
+    val cs = e.children
     var numText = 0
     var numEntities = 0
-    e.children.foreach {
-      case _: XText => numText += 1
-      case _: XEntityRef => numEntities += 1
-      case _ => return null
+    var i = 0
+    while (i < cs.length) {
+      cs(i) match {
+        case _: XText => numText += 1
+        case _: XEntityRef => numEntities += 1
+        case _ => return null
+      }
+      i += 1
     }
     if (numText <= 1 && numEntities == 0) return null
-    val sb = new StringBuilder
-    e.children.foreach {
-      case t: XText => sb.append(t.content)
-      case r: XEntityRef =>
-        val cp = TextUtil.decodeEntityRef(r.name)
-        if (cp > 0) sb.appendAll(Character.toChars(cp))
-      case _ =>
+    val sb = new java.lang.StringBuilder
+    i = 0
+    while (i < cs.length) {
+      cs(i) match {
+        case t: XText => sb.append(t.content)
+        case r: XEntityRef =>
+          val cp = TextUtil.decodeEntityRef(r.name)
+          if (cp > 0) sb.appendCodePoint(cp)
+        case _ =>
+      }
+      i += 1
     }
     sb.toString
   }
+
+  /** above this many siblings the duplicate-key counter hashes names
+    * instead of comparing each pair. */
+  private val PairwiseMaxSiblings = 16
 }
 
-final class JsonPrinter {
-  private val sb = new StringBuilder
-  private var lastChar: Char = 0
-  /** conversion-loss diagnostics (reference PRINT_WARNING → stderr). */
-  val warnings = new ArrayBuffer[String]()
+final class JsonPrinter(sb: java.lang.StringBuilder) {
+  import JsonPrinter.PairwiseMaxSiblings
 
-  def result: String = sb.toString
+  private var lastChar: Char = 0
+  private var warningList: List[String] = Nil
+
+  /** conversion-loss diagnostics (reference PRINT_WARNING → stderr). */
+  def warnings: Seq[String] = warningList.reverse
 
   private def w(s: String): Unit = {
     sb.append(s)
@@ -74,67 +114,95 @@ final class JsonPrinter {
     if (c != '{' && c != '[' && c != ',') { sb.append(','); lastChar = ',' }
   }
 
+  /** `"` + quoteAsC(s) + `"` */
+  private def quoted(s: String): Unit = {
+    sb.append('"')
+    TextUtil.appendQuotedAsC(sb, s)
+    sb.append('"')
+    lastChar = '"'
+  }
+
   def printTop(doc: XDoc): Unit = {
     // collect leading doctype/comments and trailing comments
     val nodes = doc.children
     var first = 0
     var last = nodes.length - 1
-    val preNodes = new ArrayBuffer[XNode]()
-    val postNodes = new ArrayBuffer[XNode]()
     var numComments = 0
     while (first <= last && (nodes(first).isInstanceOf[XDoctype] || nodes(first).isInstanceOf[XComment])) {
-      preNodes += nodes(first)
       if (nodes(first).isInstanceOf[XComment]) numComments += 1
       first += 1
     }
+    val preNodes = nodes.slice(0, first)
+    val postNodes = new ArrayBuffer[XNode]()
     while (last > first && nodes(last).isInstanceOf[XComment]) {
       postNodes += nodes(last)
       numComments += 1
       last -= 1
     }
-    printObjectNodes(null, nodes.slice(first, last + 1), preNodes, postNodes, numComments)
+    printObjectNodes(null, nodes, first, last + 1, preNodes, postNodes, numComments)
     sb.append('\n')
   }
 
-  /** json_print_object_nodes with the duplicate-key counter. */
-  private def printObjectNodes(container: XElem, nodes: collection.Seq[XNode],
+  /** json_print_object_nodes over nodes(from until until), with the
+    * duplicate-key counter: a name that occurs `total` > 1 times prints as
+    * name[used]. preNodes/postNodes index the document's leading and
+    * trailing nodes, printed inside the first/last node's braces. */
+  private def printObjectNodes(container: XElem, nodes: collection.IndexedSeq[XNode],
+                               from: Int, until: Int,
                                preNodes: collection.Seq[XNode] = Nil,
                                postNodes: collection.Seq[XNode] = Nil,
                                prePostComments: Int = 0): Unit = {
-    val totals = mutable.HashMap.empty[String, Int]
-    nodes.foreach { n =>
-      val name = Nodes.jsonCountName(n)
-      if (name != null && name != "_") totals(name) = totals.getOrElse(name, 0) + 1
-    }
-    val used = mutable.HashMap.empty[String, Int]
-    var prePostUsed = 0
-
-    nodes.zipWithIndex.foreach { case (n, idx) =>
-      if (idx == 0 && container == null) {
-        // handled by caller order: element-with-children prints pre/post inside braces
+    val totals =
+      if (until - from <= PairwiseMaxSiblings) null
+      else {
+        val m = new java.util.HashMap[String, Array[Int]]
+        var j = from
+        while (j < until) {
+          val name = Nodes.jsonCountName(nodes(j))
+          if (name != null && name != "_") {
+            val c = m.get(name)
+            if (c == null) m.put(name, Array(1, 0)) else c(0) += 1
+          }
+          j += 1
+        }
+        m
       }
+    var idx = from
+    while (idx < until) {
+      val n = nodes(idx)
       val name = Nodes.jsonCountName(n)
+      var total = 1
+      var used = 0
       if (name != null && name != "_") {
-        val t = totals(name)
-        val u = used.getOrElse(name, 0)
-        printNode(container, n, t, u,
-          if (idx == 0) preNodes else Nil, if (idx == nodes.length - 1) postNodes else Nil,
-          prePostComments)
-        used(name) = u + 1
-      } else {
-        printNode(container, n, 1, 0,
-          if (idx == 0) preNodes else Nil, if (idx == nodes.length - 1) postNodes else Nil,
-          prePostComments)
+        if (totals != null) {
+          val c = totals.get(name)
+          total = c(0); used = c(1); c(1) += 1
+        } else {
+          total = 0
+          var j = from
+          while (j < until) {
+            if (name == Nodes.jsonCountName(nodes(j))) {
+              total += 1
+              if (j < idx) used += 1
+            }
+            j += 1
+          }
+        }
       }
+      printNode(container, n, total, used,
+        if (idx == from) preNodes else Nil,
+        if (idx == until - 1) postNodes else Nil, prePostComments)
+      idx += 1
     }
   }
 
-  private def printArrayNodes(nodes: collection.Seq[XNode]): Unit = {
-    nodes.foreach { n =>
+  private def printArrayNodes(nodes: collection.IndexedSeq[XNode]): Unit = {
+    var k = 0
+    while (k < nodes.length) {
       checkComma()
-      n match {
+      nodes(k) match {
         case e: XElem =>
-          val forceString = e.attr("S").isDefined
+          val forceString = e.attrOrNull("S") != null
           val content = singleTextContent(e)
           val isNum = content != null && JsonParser.jsonIsNumber(content)
           val isKw = content != null && JsonParser.jsonIsKeyword(content)
@@ -143,6 +211,7 @@ final class JsonPrinter {
           else printNode(null, e, 1, 0)
         case other => printNode(null, other, 1, 0)
       }
+      k += 1
     }
   }
 
@@ -152,8 +221,15 @@ final class JsonPrinter {
       case _ => null
     } else null
 
-  private def hasAttrOtherThanAS_(e: XElem): Boolean =
-    e.attrs.exists(a => a.key != "A" && a.key != "S" && a.key != "_")
+  private def hasAttrOtherThanAS_(e: XElem): Boolean = {
+    var k = 0
+    while (k < e.attrs.length) {
+      val key = e.attrs(k).key
+      if (key != "A" && key != "S" && key != "_") return true
+      k += 1
+    }
+    false
+  }
 
   private def printNode(container: XElem, node: XNode, total: Int, used: Int,
                         preNodes: collection.Seq[XNode] = Nil,
@@ -165,14 +241,14 @@ final class JsonPrinter {
     case e: XElem =>
       if (Nodes.isLeaf(e) && container != null) printLeafNode(container, e, total, used)
       else if (Nodes.isKeyValueNode(e) && (e.attrs.isEmpty || !hasAttrOtherThanAS_(e)))
-        printKeyNode(container, e, total, used, e.attr("S").isDefined)
-      else if (e.attr("A").isDefined) {
+        printKeyNode(container, e, total, used, e.attrOrNull("S") != null)
+      else if (e.attrOrNull("A") != null) {
         // json.c:993-1004: arrays drop the element name (top level) and any
         // non-marker attributes — warn like PRINT_WARNING does
         if (e.name != "_" && container == null)
-          warnings += s"""xmq: Warning! The element name "${e.name}" is lost when converted to an unnamed json array!"""
+          warningList ::= s"""xmq: Warning! The element name "${e.name}" is lost when converted to an unnamed json array!"""
         if (hasAttrOtherThanAS_(e))
-          warnings += s"""xmq: Warning! The element "${e.name}" loses its attributes when converted to a json array!"""
+          warningList ::= s"""xmq: Warning! The element "${e.name}" loses its attributes when converted to a json array!"""
         printArrayWithChildren(container, e)
       }
       else printElementWithChildren(container, e, total, used, preNodes, postNodes, prePostComments)
@@ -180,111 +256,121 @@ final class JsonPrinter {
     case _ =>
   }
 
-  private def printValue(parts: collection.Seq[XNode], forceString: Boolean): Unit = {
-    val single = parts.length == 1
+  private def printValue(parts: collection.IndexedSeq[XNode], forceString: Boolean): Unit = {
     val content = parts.head match {
       case t: XText => t.content
       case _ => null
     }
-    if (single && !forceString && content != null &&
+    if (parts.length == 1 && !forceString && content != null &&
         (JsonParser.jsonIsNumber(content) || JsonParser.jsonIsKeyword(content))) {
       w(content)
-    } else if (single && content != null && content.isEmpty) {
-      w("\"\"")
     } else {
-      w("\"")
-      parts.foreach {
-        case r: XEntityRef => w("&" + r.name + ";")
-        case t: XText => w(TextUtil.quoteAsC(t.content))
-        case _ =>
+      sb.append('"')
+      var k = 0
+      while (k < parts.length) {
+        parts(k) match {
+          case r: XEntityRef => sb.append('&').append(r.name).append(';')
+          case t: XText => TextUtil.appendQuotedAsC(sb, t.content)
+          case _ =>
+        }
+        k += 1
       }
-      w("\"")
+      sb.append('"')
       lastChar = '"'
     }
   }
 
-  private def printElementName(container: XElem, e: XElem, total: Int, used: Int): Unit = {
-    w("\"")
-    if (e.nsPrefix != null) { w(e.nsPrefix); w(":") }
-    if (e.name != "_") w(e.name)
-    else e.attr("_").foreach { a => w(TextUtil.quoteAsC(a.stringValue)) }
-    if (total > 1) w("[" + used + "]")
-    w("\"")
+  private def printElementName(e: XElem, total: Int, used: Int): Unit = {
+    sb.append('"')
+    if (e.nsPrefix != null) sb.append(e.nsPrefix).append(':')
+    if (e.name != "_") sb.append(e.name)
+    else {
+      val a = e.attrOrNull("_")
+      if (a != null) TextUtil.appendQuotedAsC(sb, a.stringValue)
+    }
+    if (total > 1) sb.append('[').append(used).append(']')
+    sb.append('"')
     lastChar = '"'
   }
 
   private def printAttributes(e: XElem): Unit = {
-    e.attrs.foreach { a =>
+    var k = 0
+    while (k < e.attrs.length) {
+      val a = e.attrs(k)
       if (a.key != "_") {
         checkComma()
-        w("\"_")
-        if (a.nsPrefix != null) { w(a.nsPrefix); w(":") }
-        w(TextUtil.quoteAsC(a.key)); w("\":")
-        if (a.values != null) { w("\""); w(TextUtil.quoteAsC(a.stringValue)); w("\"") }
-        else w("null")
+        sb.append("\"_")
+        if (a.nsPrefix != null) sb.append(a.nsPrefix).append(':')
+        TextUtil.appendQuotedAsC(sb, a.key)
+        sb.append("\":")
+        if (a.values != null) quoted(a.stringValue) else w("null")
       }
+      k += 1
     }
-    e.nsDefs.foreach { ns =>
+    k = 0
+    while (k < e.nsDefs.length) {
+      val ns = e.nsDefs(k)
       checkComma()
-      w("\"_xmlns")
-      if (ns.prefix != null) { w(":"); w(ns.prefix) }
-      w("\":")
-      if (ns.href != null) { w("\""); w(ns.href); w("\"") } else w("null")
+      sb.append("\"_xmlns")
+      if (ns.prefix != null) sb.append(':').append(ns.prefix)
+      sb.append("\":")
+      if (ns.href != null) { sb.append('"').append(ns.href).append('"'); lastChar = '"' }
+      else w("null")
+      k += 1
     }
   }
 
   private def printElementWithChildren(container: XElem, e: XElem, total: Int, used: Int,
-                                       preNodes: collection.Seq[XNode],
-                                       postNodes: collection.Seq[XNode],
+                                       preNodes: collection.Seq[XNode], postNodes: collection.Seq[XNode],
                                        prePostComments: Int): Unit = {
     checkComma()
     if (container != null) {
-      printElementName(container, e, total, used)
-      w(":")
+      printElementName(e, total, used)
+      sb.append(':')
     }
-    w("{")
+    sb.append('{')
     lastChar = '{'
 
     var prePostUsed = 0
     if (container == null) {
       preNodes.foreach {
-        case d: XDoctype => printDoctypeNode(d)
-        case c: XComment =>
-          printCommentNode(c, prefixUl = true, prePostComments, prePostUsed); prePostUsed += 1
-        case _ =>
+          case d: XDoctype => printDoctypeNode(d)
+          case c: XComment =>
+            printCommentNode(c, prefixUl = true, prePostComments, prePostUsed); prePostUsed += 1
+          case _ =>
       }
     }
 
     if (container == null && e.name != "_") {
       checkComma()
-      w("\"_\":")
+      sb.append("\"_\":")
       lastChar = ':'
-      printElementName(container, e, total, used)
+      printElementName(e, total, used)
     }
     printAttributes(e)
-    printObjectNodes(e, e.children)
+    printObjectNodes(e, e.children, 0, e.children.length)
 
     if (container == null) {
       postNodes.foreach {
-        case c: XComment =>
-          printCommentNode(c, prefixUl = true, prePostComments, prePostUsed); prePostUsed += 1
-        case _ =>
+          case c: XComment =>
+            printCommentNode(c, prefixUl = true, prePostComments, prePostUsed); prePostUsed += 1
+          case _ =>
       }
     }
-    w("}")
+    sb.append('}')
     lastChar = '}'
   }
 
   private def printArrayWithChildren(container: XElem, e: XElem): Unit = {
     checkComma()
     if (container != null) {
-      printElementName(container, e, 1, 0)
-      w(":")
+      printElementName(e, 1, 0)
+      sb.append(':')
     }
-    w("[")
+    sb.append('[')
     lastChar = '['
     printArrayNodes(e.children)
-    w("]")
+    sb.append(']')
     lastChar = ']'
   }
 
@@ -292,8 +378,8 @@ final class JsonPrinter {
                            forceString: Boolean): Unit = {
     checkComma()
     if (container != null) {
-      printElementName(container, e, total, used)
-      w(":")
+      printElementName(e, total, used)
+      sb.append(':')
       lastChar = ':'
     }
     printValue(e.children, forceString)
@@ -302,44 +388,42 @@ final class JsonPrinter {
   private def printLeafNode(container: XElem, e: XElem, total: Int, used: Int): Unit = {
     checkComma()
     if (e.name != null && e.name != "_") {
-      printElementName(container, e, total, used)
-      w(":")
+      printElementName(e, total, used)
+      sb.append(':')
     }
-    if (e.attr("A").isDefined) { w("[]"); lastChar = ']' }
+    if (e.attrOrNull("A") != null) { sb.append("[]"); lastChar = ']' }
     else if (e.attrs.nonEmpty || e.nsDefs.nonEmpty) {
-      w("{"); lastChar = '{'
+      sb.append('{'); lastChar = '{'
       printAttributes(e)
-      w("}"); lastChar = '}'
-    } else { w("{}"); lastChar = '}' }
+      sb.append('}'); lastChar = '}'
+    } else { sb.append("{}"); lastChar = '}' }
   }
 
   private def printCommentNode(c: XComment, prefixUl: Boolean, total: Int, used: Int): Unit = {
     checkComma()
-    if (prefixUl) w("\"_//") else w("\"//")
-    if (total > 1) w("[" + used + "]\":") else w("\":")
-    lastChar = ':'
-    printValue(Seq(new XText(c.content)), forceString = true)
-    lastChar = '"'
+    sb.append(if (prefixUl) "\"_//" else "\"//")
+    if (total > 1) sb.append('[').append(used).append(']')
+    sb.append("\":")
+    quoted(c.content)
   }
 
   private def printDoctypeNode(d: XDoctype): Unit = {
     checkComma()
-    w("\"!DOCTYPE\":")
-    lastChar = ':'
-    w("\""); w(TextUtil.quoteAsC(d.value)); w("\"")
-    lastChar = '"'
+    sb.append("\"!DOCTYPE\":")
+    quoted(d.value)
   }
 
   private def printEntityNode(r: XEntityRef): Unit = {
     checkComma()
-    w("\"&\":\"&" + r.name + ";\"")
+    sb.append("\"&\":\"&").append(r.name).append(";\"")
     lastChar = '"'
   }
 
   private def printStandaloneQuote(t: XText, total: Int, used: Int): Unit = {
     checkComma()
-    if (total == 1) w("\"|\":\"" + TextUtil.quoteAsC(t.content) + "\"")
-    else w("\"|[" + used + "]\":\"" + TextUtil.quoteAsC(t.content) + "\"")
-    lastChar = '"'
+    sb.append("\"|")
+    if (total > 1) sb.append('[').append(used).append(']')
+    sb.append("\":")
+    quoted(t.content)
   }
 }

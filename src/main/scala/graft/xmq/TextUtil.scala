@@ -33,18 +33,21 @@ object TextUtil {
   def isXmqElementStart(c: Int): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || c == '_'
 
-  /** (text.c is_xmq_element_name) returns (valid, colonIndex or -1) */
-  def isXmqElementName(s: String): (Boolean, Int) = {
-    if (s.isEmpty || !isXmqElementStart(s.charAt(0))) return (false, -1)
+  final val NotAnElementName = -2
+
+  /** text.c is_xmq_element_name: the index of the last ':' in the name, -1
+    * without one, NotAnElementName when s is not an element name. */
+  def xmqElementNameColon(s: String): Int = {
+    if (s.isEmpty || !isXmqElementStart(s.charAt(0))) return NotAnElementName
     var colon = -1
     var i = 1
     while (i < s.length) {
       val c = s.charAt(i)
-      if (c > 127 || !isXmqTextName(c)) return (false, -1)
+      if (c > 127 || !isXmqTextName(c)) return NotAnElementName
       if (c == ':') colon = i
       i += 1
     }
-    (true, colon)
+    colon
   }
 
   def isLowercaseHex(c: Int): Boolean = (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f')
@@ -57,33 +60,46 @@ object TextUtil {
   /** Unicode length: count of non-continuation bytes == code points (text.c str_b_u_len). */
   def uLen(s: String): Int = s.codePointCount(0, s.length)
 
-  /** Escape as C/JSON string content (text.c xmq_quote_as_c, add_quotes=false). */
+  /** Escape as C/JSON string content (text.c xmq_quote_as_c, add_quotes=false);
+    * `s` itself when nothing needs escaping. */
   def quoteAsC(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
+    var i = 0
+    while (i < s.length && !needsCEscape(s.charAt(i))) i += 1
+    if (i == s.length) s
+    else {
+      val sb = new java.lang.StringBuilder(s.length + 8)
+      appendQuotedAsC(sb, s)
+      sb.toString
+    }
+  }
+
+  private def needsCEscape(c: Char): Boolean = c < ' ' || c == '"' || c == '\\'
+
+  /** append `quoteAsC(s)` to sb, copying the runs between escapes in bulk. */
+  def appendQuotedAsC(sb: java.lang.StringBuilder, s: String): Unit = {
+    var run = 0
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (c >= ' ' && c <= 126 && c != '"' && c != '\\') sb.append(c)
-      else c match {
-        case '\\' => sb.append("\\\\")
-        case '"'  => sb.append("\\\"")
-        case '\u0007' => sb.append("\\a")
-        case '\b' => sb.append("\\b")
-        case '\t' => sb.append("\\t")
-        case '\n' => sb.append("\\n")
-        case '\u000b' => sb.append("\\v")
-        case '\f' => sb.append("\\f")
-        case '\r' => sb.append("\\r")
-        case _ =>
-          if (c > 126) sb.append(c) // non-7bit utf8 passes through
-          else {
-            sb.append("\\x")
-            sb.append(toHex((c >> 4) & 0xf)); sb.append(toHex(c & 0xf))
-          }
+      if (needsCEscape(c)) {
+        if (run < i) sb.append(s, run, i)
+        c match {
+          case '\\' => sb.append("\\\\")
+          case '"'  => sb.append("\\\"")
+          case '\u0007' => sb.append("\\a")
+          case '\b' => sb.append("\\b")
+          case '\t' => sb.append("\\t")
+          case '\n' => sb.append("\\n")
+          case '\u000b' => sb.append("\\v")
+          case '\f' => sb.append("\\f")
+          case '\r' => sb.append("\\r")
+          case _ => sb.append("\\x").append(toHex((c >> 4) & 0xf)).append(toHex(c & 0xf))
+        }
+        run = i + 1
       }
       i += 1
     }
-    sb.toString
+    if (run == 0) sb.append(s) else if (run < s.length) sb.append(s, run, s.length)
   }
 
   private def toHex(v: Int): Char = if (v <= 9) ('0' + v).toChar else ('A' - 10 + v).toChar
@@ -146,36 +162,48 @@ object TextUtil {
 
   // ---- String-level scans used by trim + printer (ASCII-only semantics) ----
 
-  /** If content has leading whitespace containing a newline, return index after
-    * that leading ws run, else -1. onlyNewlines set when the leading run is
-    * pure newlines before any other ws. (text.c has_leading_space_nl) */
-  def leadingSpaceNl(s: String, from: Int, to: Int): (Int, Int) = {
+  /** text.c has_leading_space_nl: the end of the leading whitespace run of
+    * s(from until to) when that run holds a newline, else -1. */
+  def leadingSpaceNl(s: String, from: Int, to: Int): Int = {
     var i = from
-    var onlyNls = 0
-    while (i < to && s.charAt(i) == '\n') { i += 1; onlyNls += 1 }
-    var foundNl = onlyNls > 0
-    val middle = i
+    var foundNl = false
     while (i < to && isXmlWhitespace(s.charAt(i))) {
       if (s.charAt(i) == '\n') foundNl = true
       i += 1
     }
-    if (!foundNl) return (-1, 0)
-    if (middle == i) (i, onlyNls) else (i, 0)
+    if (foundNl) i else -1
   }
 
-  /** Mirror of has_ending_nl_space: returns (index of first trailing-ws char, onlyNewlines). */
-  def endingNlSpace(s: String, from: Int, to: Int): (Int, Int) = {
+  /** text.c has_ending_nl_space: the start of the trailing whitespace run of
+    * s(from until to) when that run holds a newline, else -1. */
+  def endingNlSpace(s: String, from: Int, to: Int): Int = {
     var i = to - 1
-    var onlyNls = 0
-    while (i >= from && s.charAt(i) == '\n') { i -= 1; onlyNls += 1 }
-    var foundNl = onlyNls > 0
-    val middle = i
+    var foundNl = false
     while (i >= from && isXmlWhitespace(s.charAt(i))) {
       if (s.charAt(i) == '\n') foundNl = true
       i -= 1
     }
-    if (!foundNl) return (-1, 0)
-    if (middle == i) (i + 1, onlyNls) else (i + 1, 0)
+    if (foundNl) i + 1 else -1
+  }
+
+  /** `leadingSpaceNl` when the run is not only newlines, else -1: such a
+    * run prints as entities around the quote. */
+  def leadingMixedNlSpace(s: String, from: Int, to: Int): Int = {
+    val end = leadingSpaceNl(s, from, to)
+    if (end != -1 && !allChars(s, from, end, '\n')) end else -1
+  }
+
+  /** `endingNlSpace` when the run is not only newlines, else -1. */
+  def endingMixedNlSpace(s: String, from: Int, to: Int): Int = {
+    val start = endingNlSpace(s, from, to)
+    if (start != -1 && !allChars(s, start, to, '\n')) start else -1
+  }
+
+  /** whether every char of s(from until to) is c. */
+  def allChars(s: String, from: Int, to: Int, c: Char): Boolean = {
+    var i = from
+    while (i < to) { if (s.charAt(i) != c) return false; i += 1 }
+    true
   }
 
   def hasNewlines(s: String, from: Int, to: Int): Boolean = {
@@ -195,24 +223,12 @@ object TextUtil {
     true
   }
 
-  /** (allWhitespace, allSpace, onlyNewlines) per text.c has_all_whitespace */
-  def allWhitespace(s: String, from: Int, to: Int): (Boolean, Boolean, Boolean) = {
-    var allSpace = true
-    var onlyNl = true
-    var i = from
-    while (i < to) {
-      val c = s.charAt(i)
-      if (!isXmlWhitespace(c)) return (false, false, false)
-      if (c != ' ') allSpace = false
-      if (c != '\n') onlyNl = false
-      i += 1
-    }
-    (true, allSpace, onlyNl)
-  }
+  def isAllXmlWhitespace(s: String): Boolean = isAllXmlWhitespace(s, 0, s.length)
 
-  def isAllXmlWhitespace(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) { if (!isXmlWhitespace(s.charAt(i))) return false; i += 1 }
+  /** text.c has_all_whitespace over s(from until to). */
+  def isAllXmlWhitespace(s: String, from: Int, to: Int): Boolean = {
+    var i = from
+    while (i < to) { if (!isXmlWhitespace(s.charAt(i))) return false; i += 1 }
     true
   }
 
@@ -220,15 +236,17 @@ object TextUtil {
   def unsafeValueStart(c: Char, cc: Char): Boolean =
     c == '&' || c == '=' || (c == '/' && (cc == '/' || cc == '*'))
 
-  /** Safe unquoted value char at string position i (codepoint-aware for the
-    * unicode whitespaces the tokenizer treats as ws). */
-  def isSafeValueChar(s: String, i: Int): Boolean = {
-    val c = s.charAt(i)
-    if (c == ' ' || c == '\n' || c == '\t' || c == '\r' ||
-        c == '(' || c == ')' || c == '{' || c == '}' || c == '\'' || c == '"') return false
-    if (c == '\u00a0' || (c >= '\u2000' && c <= '\u2003')) return false
-    true
+  /** ASCII chars that end an unquoted value: whitespace, ( ) { } ' " */
+  private val UnsafeAscii: Array[Boolean] = {
+    val t = new Array[Boolean](128)
+    " \n\t\r(){}'\"".foreach(c => t(c) = true)
+    t
   }
+
+  /** Safe unquoted value char (the unicode whitespaces the tokenizer treats
+    * as ws are unsafe too). */
+  def isSafeValueChar(c: Char): Boolean =
+    if (c < 128) !UnsafeAscii(c) else !isUnicodeWhitespaceChar(c)
 
   def isXmqTextValue(s: String, from: Int, to: Int): Boolean = {
     if (from >= to) return false
@@ -237,7 +255,7 @@ object TextUtil {
     if (unsafeValueStart(c, cc)) return false
     var i = from
     while (i < to) {
-      if (!isSafeValueChar(s, i)) return false
+      if (!isSafeValueChar(s.charAt(i))) return false
       i += 1
     }
     true

@@ -26,9 +26,11 @@ sealed trait XNode {
 }
 
 final class XElem(var name: String, var nsPrefix: String = null) extends XNode {
-  val attrs = new ArrayBuffer[XAttr]()
-  val nsDefs = new ArrayBuffer[NsDef]()
-  val children = new ArrayBuffer[XNode]()
+  // small initial arrays: most elements have a few attributes and children
+  // and no namespace declarations (ArrayBuffer's default holds 16)
+  val attrs = new ArrayBuffer[XAttr](2)
+  val nsDefs = new ArrayBuffer[NsDef](1)
+  val children = new ArrayBuffer[XNode](4)
 
   def appendChild(n: XNode): Unit = { n.parent = this; children += n }
 
@@ -43,7 +45,16 @@ final class XElem(var name: String, var nsPrefix: String = null) extends XNode {
     appendChild(new XText(content))
   }
 
-  def attr(key: String): Option[XAttr] = attrs.find(a => a.key == key && a.nsPrefix == null)
+  /** the un-prefixed attribute `key`, or null. */
+  def attrOrNull(key: String): XAttr = {
+    var i = 0
+    while (i < attrs.length) {
+      val a = attrs(i)
+      if (a.nsPrefix == null && a.key == key) return a
+      i += 1
+    }
+    null
+  }
   def firstChild: XNode = if (children.isEmpty) null else children.head
   def lastChild: XNode = if (children.isEmpty) null else children.last
 }
@@ -63,7 +74,7 @@ final class XAttr(var nsPrefix: String, var key: String) {
   /** null = attribute declared without a value (html boolean attr / key-only). */
   var values: ArrayBuffer[XNode] = null
   def ensureValues(): ArrayBuffer[XNode] = {
-    if (values == null) values = new ArrayBuffer[XNode]()
+    if (values == null) values = new ArrayBuffer[XNode](1)
     values
   }
   def appendText(content: String, merge: Boolean = true): Unit = {
@@ -79,13 +90,21 @@ final class XAttr(var nsPrefix: String, var key: String) {
   /** Flattened string value (entity refs decoded), like xmlNodeListGetString. */
   def stringValue: String = {
     if (values == null) return ""
-    val sb = new StringBuilder
-    values.foreach {
-      case t: XText => sb.append(t.content)
-      case e: XEntityRef =>
-        val cp = TextUtil.decodeEntityRef(e.name)
-        if (cp > 0) sb.appendAll(Character.toChars(cp)) else sb.append('&').append(e.name).append(';')
+    if (values.length == 1) values(0) match {
+      case t: XText => return t.content
       case _ =>
+    }
+    val sb = new java.lang.StringBuilder
+    var i = 0
+    while (i < values.length) {
+      values(i) match {
+        case t: XText => sb.append(t.content)
+        case e: XEntityRef =>
+          val cp = TextUtil.decodeEntityRef(e.name)
+          if (cp > 0) sb.appendCodePoint(cp) else sb.append('&').append(e.name).append(';')
+        case _ =>
+      }
+      i += 1
     }
     sb.toString
   }
@@ -100,7 +119,17 @@ final class XDoc {
   var standalone: Int = -1
   val children = new ArrayBuffer[XNode]()
   def appendChild(n: XNode): Unit = children += n
-  def root: XElem = children.collectFirst { case e: XElem => e }.orNull
+  def root: XElem = {
+    var i = 0
+    while (i < children.length) {
+      children(i) match {
+        case e: XElem => return e
+        case _ =>
+      }
+      i += 1
+    }
+    null
+  }
 }
 
 object TreeOps {
@@ -134,12 +163,17 @@ object TreeOps {
 object Nodes {
   /** element whose children are only text/entity-ref nodes (>=1), reference xml.c:153-178 */
   def isKeyValueNode(e: XElem): Boolean = {
-    if (e.children.isEmpty) return false
-    e.children.forall {
-      case _: XText => true
-      case _: XEntityRef => true
-      case _ => false
+    val cs = e.children
+    if (cs.isEmpty) return false
+    var i = 0
+    while (i < cs.length) {
+      cs(i) match {
+        case _: XText | _: XEntityRef =>
+        case _ => return false
+      }
+      i += 1
     }
+    true
   }
   def isLeaf(e: XElem): Boolean = e.children.isEmpty
 

@@ -85,42 +85,26 @@ object Trim {
     indent
   }
 
-  /** Scan one line: returns (hasNl, afterLastNonSpace, eol). (xmq.c find_line) */
-  private def findLine(s: String, start: Int, stop: Int): (Boolean, Int, Int) = {
-    var i = start
-    while (i < stop && (s.charAt(i) == ' ' || s.charAt(i) == '\t')) i += 1
-    var hasNl = false
-    var lnws = start
-    var brk = false
-    while (i < stop && !brk) {
-      val c = s.charAt(i)
-      if (c == '\n' || c == '\r') {
-        if (c == '\r' && i + 1 < stop && s.charAt(i + 1) == '\n') i += 1
-        i += 1
-        hasNl = true
-        brk = true
-      } else {
-        if (c != ' ' && c != '\t') lnws = i + 1
-        i += 1
-      }
-    }
-    (hasNl, lnws, i)
-  }
-
   private def checkLeadingSpaceNl(s: String, from: Int, to: Int): Boolean = {
     var i = from
     while (i < to && s.charAt(i) == ' ') i += 1
     i < to && s.charAt(i) == '\n'
   }
 
-  /** The core trim (xmq.c xmq_trim_quote). */
+  /** The core trim (xmq.c xmq_trim_quote). A single-line quote is returned
+    * as it is (`s` itself for the whole string); only multi-line quotes
+    * build a new string. */
   def trimQuote(s: String, from0: Int, to0: Int, isXmq: Boolean, isComment: Boolean): String = {
     var from = from0
     var to = to0
+    val firstNl = s.indexOf('\n', from)
+    if (firstNl < 0 || firstNl >= to)
+      return if (from == 0 && to == s.length) s else s.substring(from, to)
+
     var appendNewlines = 0
     var lastLineSpaces = Int.MaxValue
 
-    if (endingNlSpace(s, from, to)._1 != -1) {
+    if (endingNlSpace(s, from, to) != -1) {
       var brk = false
       while (to > from && !brk) {
         val c = s.charAt(to - 1)
@@ -153,13 +137,18 @@ object Trim {
       return s.substring(from, to) + "\n" * appendNewlines
     }
 
+    // nothing to trim: no indent to strip, no ending or leading newline
+    // run, no blanks before a line break and no CR
+    if (incidental == 0 && to == to0 && leadingSpaceNl(s, from, to) == -1 &&
+        keepsLines(s, from, to))
+      return if (from == 0 && to == s.length) s else s.substring(from, to)
+
     var prependNewlines = 0
     var firstLine = true
 
-    val (_, _, eol0) = findLine(s, from, to)
-    if (leadingSpaceNl(s, from, to)._1 != -1) {
+    if (leadingSpaceNl(s, from, to) != -1) {
       firstLine = false
-      from = eol0
+      from = lineEnd(s, from, to)
       var i = from
       var brk = false
       while (i < to && !brk) {
@@ -170,25 +159,64 @@ object Trim {
       }
     }
 
-    val out = new StringBuilder(to - from + prependNewlines + appendNewlines)
+    val out = new java.lang.StringBuilder(to - from + prependNewlines + appendNewlines)
     var k = 0
     while (k < prependNewlines) { out.append('\n'); k += 1 }
 
+    // one line per turn (xmq.c find_line): [i, afterLastNonSpace) is copied
+    // after the incidental indent, then '\n' for a line break (CR LF is one)
     var i = from
     while (i < to) {
-      val (hasNl, afterLastNonSpace, eol) = findLine(s, i, to)
+      var j = i
+      while (j < to && (s.charAt(j) == ' ' || s.charAt(j) == '\t')) j += 1
+      var afterLastNonSpace = i
+      var hasNl = false
+      while (j < to && !hasNl) {
+        val c = s.charAt(j)
+        if (c == '\n' || c == '\r') {
+          if (c == '\r' && j + 1 < to && s.charAt(j + 1) == '\n') j += 1
+          hasNl = true
+        } else if (c != ' ' && c != '\t') afterLastNonSpace = j + 1
+        j += 1
+      }
+      val eol = j
       if (firstLine) firstLine = false
-      else if (i < to && s.charAt(i) == ' ') {
+      else if (s.charAt(i) == ' ') {
         var n = incidental
         while (n > 0 && i < to && s.charAt(i) == ' ') { i += 1; n -= 1 }
       }
-      while (i < afterLastNonSpace) { out.append(s.charAt(i)); i += 1 }
+      if (i < afterLastNonSpace) { out.append(s, i, afterLastNonSpace); i = afterLastNonSpace }
       if (hasNl) out.append('\n')
-      else while (i < eol) { out.append(s.charAt(i)); i += 1 }
+      else if (i < eol) out.append(s, i, eol)
       i = eol
     }
     k = 0
     while (k < appendNewlines) { out.append('\n'); k += 1 }
     out.toString
+  }
+
+  /** whether s(from until to) has no CR and no space or tab before a
+    * newline: the line loop below would copy such lines unchanged. */
+  private def keepsLines(s: String, from: Int, to: Int): Boolean = {
+    var i = from
+    while (i < to) {
+      val c = s.charAt(i)
+      if (c == '\r') return false
+      if (c == '\n' && i > from && (s.charAt(i - 1) == ' ' || s.charAt(i - 1) == '\t')) return false
+      i += 1
+    }
+    true
+  }
+
+  /** the end of the line starting at `start`, past its line break. */
+  private def lineEnd(s: String, start: Int, stop: Int): Int = {
+    var i = start
+    while (i < stop) {
+      val c = s.charAt(i)
+      i += 1
+      if (c == '\n') return i
+      if (c == '\r') return if (i < stop && s.charAt(i) == '\n') i + 1 else i
+    }
+    i
   }
 }

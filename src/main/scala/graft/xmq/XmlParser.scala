@@ -120,6 +120,34 @@ object XmlParser {
 
   def parse(content: String, html: Boolean): XDoc =
     new XmlParser(content, html).parseDocument()
+
+  /** whether `name` can be in an html tag table: they hold only lower-case
+    * ASCII letters and digits. Tested before a lookup, so that a name
+    * outside the html vocabulary is not hashed. */
+  def htmlTagLike(name: String): Boolean = {
+    var i = 0
+    while (i < name.length) {
+      val c = name.charAt(i)
+      if (!((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9'))) return false
+      i += 1
+    }
+    true
+  }
+
+  def isHtmlTag(tags: Set[String], name: String): Boolean =
+    name != null && htmlTagLike(name) && tags.contains(name)
+
+  /** `name.toLowerCase`, returning `name` itself when it has no upper-case
+    * ASCII letter and no non-ASCII char (the usual html tag or attribute). */
+  def lowerName(name: String): String = {
+    var i = 0
+    while (i < name.length) {
+      val c = name.charAt(i)
+      if (c >= 128 || (c >= 'A' && c <= 'Z')) return name.toLowerCase
+      i += 1
+    }
+    name
+  }
 }
 
 final class XmlParser(s: String, html: Boolean) {
@@ -142,17 +170,25 @@ final class XmlParser(s: String, html: Boolean) {
     * end-tag-priority machinery. */
   private val openNames = mutable.ArrayBuffer.empty[String]
 
-  /** lower-cased tag name at `i` (positioned on '<') without consuming. */
+  /** lower-cased tag name at `i` (positioned on '<') without consuming,
+    * or null when it cannot be an html table name: an ASCII char other than
+    * a letter or digit stays in it after lower-casing, and the tables hold
+    * none. Such a name is not materialized. */
   private def peekName: String = {
     var k = i + 1
     val start = k
-    while (k < stop && nameChar(s.charAt(k))) k += 1
-    s.substring(start, k).toLowerCase
+    var tagLike = true
+    while (k < stop && nameChar(s.charAt(k))) {
+      val c = s.charAt(k)
+      if (c < 128 && !Character.isLetterOrDigit(c)) tagLike = false
+      k += 1
+    }
+    if (tagLike) lowerName(s.substring(start, k)) else null
   }
 
   /** does starting `tag` implicitly close the current element `cur`? */
   private def autoCloses(tag: String, cur: String): Boolean =
-    HtmlAutoClose.get(tag).exists(_.contains(cur))
+    tag != null && htmlTagLike(tag) && HtmlAutoClose.get(tag).exists(_.contains(cur))
 
   def parseDocument(): XDoc = {
     // prolog
@@ -202,7 +238,7 @@ final class XmlParser(s: String, html: Boolean) {
           openNames += "html"
           parseHtmlChildren(root)
           openNames.remove(openNames.length - 1)
-          root.children.foreach(_.parent = root)
+          setParent(root)
         } else parseElement(list)
         htmlRootSeen = true
       } else if (i < stop) {
@@ -282,7 +318,7 @@ final class XmlParser(s: String, html: Boolean) {
 
   /** fixup_comments after readin: -␐ escapes collapse (xmq.c:3609-3650). */
   private def unescapeDleComment(c: String): String = {
-    if (!c.contains("-␐")) return c
+    if (c.indexOf('␐') < 0) return c
     val sb = new StringBuilder
     var k = 0
     while (k < c.length) {
@@ -322,20 +358,29 @@ final class XmlParser(s: String, html: Boolean) {
     else list += new XText(text)
   }
 
+  /** character data up to the next '<': plain runs are copied in bulk, and
+    * a run without references becomes the text as one substring. */
   private def parseText(list: mutable.ArrayBuffer[XNode]): Unit = {
-    val sb = new StringBuilder
-    while (i < stop && cur != '<') {
-      val c = cur
-      if (c == '&') {
+    var sb: java.lang.StringBuilder = null
+    var run = i
+    while (i < stop && s.charAt(i) != '<') {
+      if (s.charAt(i) == '&') {
+        if (sb == null) sb = new java.lang.StringBuilder
+        sb.append(s, run, i)
         parseReference() match {
           case Left(str) => sb.append(str)
           case Right(name) =>
-            if (sb.nonEmpty) { appendText(list, sb.toString); sb.clear() }
+            if (sb.length > 0) { appendText(list, sb.toString); sb.setLength(0) }
             list += new XEntityRef(name)
         }
-      } else { sb.append(c); i += 1 }
+        run = i
+      } else i += 1
     }
-    if (sb.nonEmpty) appendText(list, sb.toString)
+    if (sb == null) { if (i > run) appendText(list, s.substring(run, i)) }
+    else {
+      sb.append(s, run, i)
+      if (sb.length > 0) appendText(list, sb.toString)
+    }
   }
 
   /** Left = decoded text, Right = kept entity-ref name. */
@@ -389,7 +434,7 @@ final class XmlParser(s: String, html: Boolean) {
     val nameStart = i
     while (i < stop && nameChar(s.charAt(i))) i += 1
     var rawName = s.substring(nameStart, i)
-    if (html) rawName = rawName.toLowerCase
+    if (html) rawName = lowerName(rawName)
     val (prefix, localName) = splitPrefix(rawName)
     val e = new XElem(localName, prefix)
 
@@ -406,13 +451,13 @@ final class XmlParser(s: String, html: Boolean) {
     }
 
     list += e
-    // fix parents for children appended via e.appendChild later
-    e.children.foreach(_.parent = e)
 
-    val isVoid = html && VoidElements.contains(e.name)
+    // names outside the html vocabulary skip the table lookups
+    val tagLike = html && htmlTagLike(e.name)
+    val isVoid = tagLike && VoidElements.contains(e.name)
     if (!selfClosed && !isVoid) {
       if (html) openNames += e.name
-      if (html && RawTextElements.contains(e.name)) {
+      if (tagLike && RawTextElements.contains(e.name)) {
         // raw text until </name>
         val close = "</" + e.name
         val idx0 = indexOfIC(close, i)
@@ -434,7 +479,12 @@ final class XmlParser(s: String, html: Boolean) {
       if (html) openNames.remove(openNames.length - 1)
     }
     // re-parent children
-    e.children.foreach(_.parent = e)
+    setParent(e)
+  }
+
+  private def setParent(e: XElem): Unit = {
+    var k = 0
+    while (k < e.children.length) { e.children(k).parent = e; k += 1 }
   }
 
   private def indexOfIC(needle: String, from: Int): Int = {
@@ -446,16 +496,18 @@ final class XmlParser(s: String, html: Boolean) {
     -1
   }
 
+  /** children of e up to its end tag; the caller sets their parent. */
   private def parseChildren(e: XElem): Unit = {
     var done = false
     while (i < stop && !done) {
-      if (at("</")) {
+      val c1 = if (s.charAt(i) == '<' && i + 1 < stop) s.charAt(i + 1) else 0.toChar
+      if (c1 == '/') {
         val save = i
         i += 2
         val nameStart = i
         while (i < stop && nameChar(s.charAt(i))) i += 1
         var closeName = s.substring(nameStart, i)
-        if (html) closeName = closeName.toLowerCase
+        if (html) closeName = lowerName(closeName)
         skipWs()
         if (cur == '>') i += 1
         val full = if (e.nsPrefix != null) e.nsPrefix + ":" + e.name else e.name
@@ -474,14 +526,14 @@ final class XmlParser(s: String, html: Boolean) {
             if (!blocked) { i = save; done = true } // unwind; the named ancestor consumes
           } // not open or blocked: ignored, continue with this element
         } else err(s"mismatched closing tag $closeName for $full")
-      } else if (at("<!--")) parseComment(e.children)
-      else if (at("<![CDATA[")) parseCData(e.children)
-      else if (at("<?")) parsePi(e.children)
+      } else if (c1 == '!' && at("<!--")) parseComment(e.children)
+      else if (c1 == '!' && at("<![CDATA[")) parseCData(e.children)
+      else if (c1 == '?') parsePi(e.children)
       else if (cur == '<' && (i + 1 >= stop || nameChar(s.charAt(i + 1)))) {
         if (html && autoCloses(peekName, e.name)) done = true // implied end tag
         else parseElement(e.children)
       } else if (cur == '<') parseElement(e.children)
-      else if (i < stop) {
+      else {
         if (html && e.name == "head") {
           // blank character data stays in the head as a text node (visible
           // under --trim=none); anything else closes head (and implies
@@ -496,7 +548,6 @@ final class XmlParser(s: String, html: Boolean) {
     // xmlReadMemory: "Premature end of data in tag X" — EOF with the element
     // still open is a parse error in xml mode (html stays lenient)
     if (!done && !html) err(s"premature end of data in tag ${e.name}")
-    e.children.foreach(_.parent = e)
   }
 
   /** children of <html> (explicit or implied): libxml2's implied-structure
@@ -515,7 +566,7 @@ final class XmlParser(s: String, html: Boolean) {
       parseText(p.children)
       parseChildren(p)
       openNames.remove(openNames.length - 1)
-      p.children.foreach(_.parent = p)
+      setParent(p)
     }
     def implied(name: String)(body: XElem => Unit): Unit = {
       val el = new XElem(name)
@@ -524,7 +575,7 @@ final class XmlParser(s: String, html: Boolean) {
       openNames += name
       body(el)
       openNames.remove(openNames.length - 1)
-      el.children.foreach(_.parent = el)
+      setParent(el)
     }
     while (i < stop && !done) {
       if (at("</")) {
@@ -532,7 +583,7 @@ final class XmlParser(s: String, html: Boolean) {
         i += 2
         val nameStart = i
         while (i < stop && nameChar(s.charAt(i))) i += 1
-        val closeName = s.substring(nameStart, i).toLowerCase
+        val closeName = lowerName(s.substring(nameStart, i))
         skipWs()
         if (cur == '>') i += 1
         if (closeName == e.name) done = true
@@ -551,9 +602,9 @@ final class XmlParser(s: String, html: Boolean) {
         if (t == "head") { parseElement(e.children); headDone = true }
         else if (t == "body") { headDone = true; parseElement(e.children); bodyDone = true }
         else if (t == "html") parseElement(e.children) // stray nested html: literal
-        else if (HtmlImpliesHead.contains(t) && !headDone && !bodyDone)
+        else if (isHtmlTag(HtmlImpliesHead, t) && !headDone && !bodyDone)
           implied("head") { h => parseChildren(h); headDone = true }
-        else if (HtmlImpliesHead.contains(t)) parseElement(e.children) // head closed: stays under html
+        else if (isHtmlTag(HtmlImpliesHead, t)) parseElement(e.children) // head closed: stays under html
         else if (!bodyDone) {
           headDone = true
           implied("body") { b => parseChildren(b); bodyDone = true }
@@ -574,7 +625,7 @@ final class XmlParser(s: String, html: Boolean) {
         } else impliedParagraph(e.children) // after </body>: bare implied <p>
       }
     }
-    e.children.foreach(_.parent = e)
+    setParent(e)
   }
 
   private def splitPrefix(n: String): (String, String) = {
@@ -587,7 +638,7 @@ final class XmlParser(s: String, html: Boolean) {
     while (i < stop && nameChar(s.charAt(i))) i += 1
     if (i == nameStart) { i += 1; return } // skip stray char
     var rawName = s.substring(nameStart, i)
-    if (html) rawName = rawName.toLowerCase
+    if (html) rawName = lowerName(rawName)
     skipWs()
     var value: String = null
     var hasValue = false
@@ -598,45 +649,53 @@ final class XmlParser(s: String, html: Boolean) {
       val q = cur
       if (q == '"' || q == '\'') {
         i += 1
-        val vs = new StringBuilder
-        val parts = mutable.ArrayBuffer.empty[XNode]
-        while (i < stop && cur != q) {
-          val c = cur
-          if (c == '&') {
-            parseReference() match {
-              case Left(str) => vs.append(normalizeAttrWsRef(str))
-              case Right(name) =>
-                if (vs.nonEmpty) { parts += new XText(vs.toString); vs.clear() }
-                parts += new XEntityRef(name)
+        // plain runs are copied in bulk; a value without references or
+        // normalized whitespace is one substring
+        var vs: java.lang.StringBuilder = null
+        val parts = new mutable.ArrayBuffer[XNode](1)
+        var run = i
+        while (i < stop && s.charAt(i) != q) {
+          val c = s.charAt(i)
+          if (c == '&' || (!html && (c == '\n' || c == '\t' || c == '\r'))) {
+            if (vs == null) vs = new java.lang.StringBuilder
+            vs.append(s, run, i)
+            if (c == '&') {
+              parseReference() match {
+                // char refs in attr values are NOT whitespace-normalized (&#10; stays \n)
+                case Left(str) => vs.append(str)
+                case Right(name) =>
+                  if (vs.length > 0) { parts += new XText(vs.toString); vs.setLength(0) }
+                  parts += new XEntityRef(name)
+              }
+            } else { // xml attr normalization: \n, \t, \r and \r\n become one space
+              vs.append(' '); i += 1
+              if (c == '\r' && i < stop && s.charAt(i) == '\n') i += 1
             }
-          } else if (!html && (c == '\n' || c == '\t')) { vs.append(' '); i += 1 } // xml attr normalization
-          else if (!html && c == '\r') {
-            vs.append(' '); i += 1
-            if (cur == '\n') i += 1
-          } else { vs.append(c); i += 1 }
+            run = i
+          } else i += 1
         }
+        val last = if (vs == null) s.substring(run, i) else vs.append(s, run, i).toString
         if (i < stop) i += 1 // closing quote
-        if (vs.nonEmpty || parts.isEmpty) parts += new XText(vs.toString)
+        if (last.nonEmpty || parts.isEmpty) parts += new XText(last)
         attachAttr(e, rawName, parts, hasValue = true)
         return
       } else {
         // unquoted (html): runs to whitespace or '>' — a trailing '/' is
         // PART of the value (libxml2: <meta k=63/> parses as k="63/"),
         // never an XML-style self-close
-        val vs = new StringBuilder
-        while (i < stop && !TextUtil.isXmlWhitespace(cur) && cur != '>') { vs.append(cur); i += 1 }
-        value = vs.toString
+        val start = i
+        while (i < stop && !TextUtil.isXmlWhitespace(cur) && cur != '>') i += 1
+        value = s.substring(start, i)
       }
     }
     if (hasValue) {
-      attachAttr(e, rawName, mutable.ArrayBuffer(new XText(value)), hasValue = true)
+      val parts = new mutable.ArrayBuffer[XNode](1)
+      parts += new XText(value)
+      attachAttr(e, rawName, parts, hasValue = true)
     } else {
       attachAttr(e, rawName, null, hasValue = false)
     }
   }
-
-  /** char refs in attr values are NOT whitespace-normalized (&#10; stays \n). */
-  private def normalizeAttrWsRef(str: String): String = str
 
   private def attachAttr(e: XElem, rawName: String, parts: mutable.ArrayBuffer[XNode],
                          hasValue: Boolean): Unit = {

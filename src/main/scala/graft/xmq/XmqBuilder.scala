@@ -1,7 +1,6 @@
 package graft.xmq
 
 import java.nio.charset.StandardCharsets
-import scala.collection.mutable
 
 /** DOM builder driven by the tokenizer — the analogue of the reference's
   * parse callbacks (/root/reference/src/main/c/xmq.c:2196-3053).
@@ -19,11 +18,13 @@ final class XmqBuilder(implicitRoot: String = null,
   var buf: Array[Byte] = null
 
   val doc = new XDoc
-  /** stack of open containers: null slot = document level. */
-  private val stack = mutable.Stack[XElem](null.asInstanceOf[XElem])
+  /** stack of open containers, stack(depth - 1) on top: null slot =
+    * document level. lastStack(k) is elementLast when level k + 1 opened. */
+  private var stack = new Array[XElem](16)
+  private var lastStack = new Array[AnyRef](16)
+  private var depth = 1
   /** mirror of C element_last: last created element/attr/text. */
   private var elementLast: AnyRef = null
-  private val lastStack = mutable.Stack[AnyRef]()
   private var rootCreated = false
 
   private var parsingPi = false
@@ -45,7 +46,7 @@ final class XmqBuilder(implicitRoot: String = null,
   private def str(start: Int, stop: Int): String =
     new String(buf, start, stop - start, StandardCharsets.UTF_8)
 
-  private def top: XElem = stack.top
+  private def top: XElem = stack(depth - 1)
 
   private def appendAtCurrent(n: XNode): Unit = {
     val t = top
@@ -57,34 +58,47 @@ final class XmqBuilder(implicitRoot: String = null,
   def token(tpe: String, line: Int, col: Int, start: Int, stop: Int, suffix: Int): Unit = {
     tpe match {
       case Tok.Whitespace | Tok.Equals | Tok.NsColon => // no-op
-      case Tok.Quote => simQuote(str(start, stop), raw = false)
+      case Tok.Quote => simQuote(quoteText(start, stop), raw = true)
       case Tok.Entity => simEntityAtTop(entityName(str(start, stop)))
       case Tok.Comment => simComment(str(start, stop), raw = false)
       case Tok.CommentContinuation => doCommentContinuation(str(start, stop))
       case Tok.ElementNs => elementNamespace = str(start, stop)
       case Tok.ElementName | Tok.ElementKey => createNode(str(start, stop))
       case Tok.ElementValueText => doElementValueText(str(start, stop))
-      case Tok.ElementValueQuote =>
-        doElementValueQuote(if (noTrimQuotes) str(start, stop)
-                            else Trim.unQuote(str(start, stop), removeQs = true, isXmq = true))
+      case Tok.ElementValueQuote => doElementValueQuote(quoteText(start, stop))
       case Tok.ElementValueEntity => doElementValueEntity(entityName(str(start, stop)))
-      case Tok.ElementValueCompoundQuote => simQuote(str(start, stop), raw = false)
+      case Tok.ElementValueCompoundQuote => simQuote(quoteText(start, stop), raw = true)
       case Tok.ElementValueCompoundEntity => simEntityAtTop(entityName(str(start, stop)))
       case Tok.AttrNs => if (!declaringXmlns) attributeNamespace = str(start, stop)
       case Tok.AttrKey => doAttrKey(str(start, stop))
       case Tok.AttrValueText => doAttrValueText(str(start, stop))
-      case Tok.AttrValueQuote =>
-        doAttrValueQuote(if (noTrimQuotes) str(start, stop)
-                         else Trim.unQuote(str(start, stop), removeQs = true, isXmq = true))
+      case Tok.AttrValueQuote => doAttrValueQuote(quoteText(start, stop))
       case Tok.AttrValueEntity => doAttrValueEntity(entityName(str(start, stop)))
-      case Tok.AttrValueCompoundQuote =>
-        attrAppendQuote(if (noTrimQuotes) str(start, stop)
-                        else Trim.unQuote(str(start, stop), removeQs = true, isXmq = true))
+      case Tok.AttrValueCompoundQuote => attrAppendQuote(quoteText(start, stop))
       case Tok.AttrValueCompoundEntity => attrAppendEntity(entityName(str(start, stop)))
       case Tok.NsDeclaration => doNsDeclaration(stop == suffix, str(stop, suffix))
       case Tok.BraceLeft | Tok.AparLeft | Tok.CparLeft => pushStack()
       case Tok.BraceRight | Tok.AparRight | Tok.CparRight => popStack()
     }
+  }
+
+  /** a quote token's text: `Trim.unQuote(str(start, stop), removeQs = true,
+    * isXmq = true)`, decoding only the bytes between the quotes (they are
+    * ASCII, so the byte and char scans agree). Verbatim under noTrimQuotes. */
+  private def quoteText(start: Int, stop: Int): String = {
+    if (noTrimQuotes) return str(start, stop)
+    var from = start
+    var to = stop
+    if (to > from) {
+      val q = buf(from)
+      if (q == '\'' || q == '"') {
+        var j = 0
+        while (from + j < to - j && buf(from + j) == q && buf(to - j - 1) == q) j += 1
+        from += j; to -= j
+      }
+    }
+    val s = str(from, to)
+    Trim.trimQuote(s, 0, s.length, isXmq = true, isComment = false)
   }
 
   private def entityName(tok: String): String = {
@@ -94,16 +108,22 @@ final class XmqBuilder(implicitRoot: String = null,
   }
 
   private def pushStack(): Unit = {
-    lastStack.push(elementLast)
-    elementLast match {
-      case e: XElem => stack.push(e)
-      case _ => stack.push(top) // attr compound: container unchanged
+    if (depth == stack.length) {
+      stack = java.util.Arrays.copyOf(stack, depth * 2)
+      lastStack = java.util.Arrays.copyOf(lastStack, depth * 2)
     }
+    lastStack(depth - 1) = elementLast
+    stack(depth) = elementLast match {
+      case e: XElem => e
+      case _ => top // attr compound: container unchanged
+    }
+    depth += 1
   }
 
   private def popStack(): Unit = {
-    stack.pop()
-    elementLast = lastStack.pop()
+    depth -= 1
+    stack(depth) = null
+    elementLast = lastStack(depth - 1)
   }
 
   // ---- simulated-token entry points (used directly by the json reader too) ----
@@ -193,8 +213,7 @@ final class XmqBuilder(implicitRoot: String = null,
       if (implicitRoot != null && implicitRoot != name) {
         val root = new XElem(implicitRoot)
         doc.appendChild(root)
-        stack.pop()
-        stack.push(root)
+        stack(depth - 1) = root
       }
     }
     appendAtCurrent(newNode)

@@ -13,15 +13,31 @@ object XmqEngine {
                               nomerge: Boolean = false,
                               implicitRoot: String = null)
 
-  /** Parse content into a tree per xmqParseBufferWithType (xmq.c:4502-4586). */
+  /** Parse content into a tree per xmqParseBufferWithType (xmq.c:4502-4586).
+    * Forced xmq is tokenized from the bytes without decoding them. */
   def parse(bytes0: Array[Byte], flags: ParseFlags = ParseFlags()): XDoc = {
     val bytes = Xmq.stripBom(bytes0)
-    val content = new String(bytes, StandardCharsets.UTF_8)
-    val detected = Xmq.detect(content)
-    val ct = if (flags.forced != null) flags.forced else detected
+    if (flags.forced == Xmq.XMQ) parseAs(Xmq.XMQ, null, bytes, flags)
+    else {
+      val content = new String(bytes, StandardCharsets.UTF_8)
+      parseAs(if (flags.forced != null) flags.forced else Xmq.detect(content), content, bytes, flags)
+    }
+  }
 
+  /** `parse` of already-decoded content: a leading U+FEFF is the BOM. */
+  def parseText(content0: String, flags: ParseFlags = ParseFlags()): XDoc = {
+    val content = if (content0.startsWith("\uFEFF")) content0.substring(1) else content0
+    parseAs(if (flags.forced != null) flags.forced else Xmq.detect(content), content, null, flags)
+  }
+
+  /** parse as `ct`; content (null only for xmq) and bytes (null: encode
+    * content) are the same BOM-less text. */
+  private def parseAs(ct: Xmq.ContentType, content: String, bytes: Array[Byte],
+                      flags: ParseFlags): XDoc = {
     val doc = ct match {
-      case Xmq.XMQ => XmqBuilder.parse(bytes, flags.implicitRoot, mergeText = !flags.nomerge)
+      case Xmq.XMQ =>
+        XmqBuilder.parse(if (bytes != null) bytes else content.getBytes(StandardCharsets.UTF_8),
+          flags.implicitRoot, mergeText = !flags.nomerge)
       case Xmq.XML => XmlParser.parse(content, html = false)
       case Xmq.HTML => XmlParser.parse(content, html = true)
       case Xmq.JSON => JsonParser.parse(content, flags.implicitRoot)

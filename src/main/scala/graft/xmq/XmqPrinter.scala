@@ -18,22 +18,21 @@ final case class XmqSettings(compact: Boolean = false,
   * /root/reference/src/main/c/parts/xmq_printer.c (quote-depth computation,
   * compound synthesis, '='-alignment, compact mode) with a plain theme.
   */
-final class XmqPrinter(os: XmqSettings) {
+final class XmqPrinter(os: XmqSettings,
+                       sb: java.lang.StringBuilder = new java.lang.StringBuilder) {
 
-  private val sb = new StringBuilder
   private var currentIndent = 0
   private var lineIndent = 0
   private var lastChar: Char = 0
-
-  def result: String = sb.toString
 
   // ---------- low-level writers ----------
 
   private def writeRaw(s: String): Unit = sb.append(s)
 
   private def printWhiteSpaces(num: Int): Unit = {
-    var k = 0
-    while (k < num) { sb.append(' '); k += 1 }
+    var k = num
+    while (k > XmqPrinter.Spaces.length) { sb.append(XmqPrinter.Spaces); k -= XmqPrinter.Spaces.length }
+    if (k > 0) sb.append(XmqPrinter.Spaces, 0, k)
     currentIndent += num
   }
 
@@ -41,10 +40,23 @@ final class XmqPrinter(os: XmqSettings) {
   private def printUtf8(s: String): Unit = {
     if (s.isEmpty) return
     sb.append(s)
-    // last char: char at start of last code point
-    val lastIdx = s.offsetByCodePoints(s.length, -1)
-    lastChar = s.charAt(lastIdx)
+    lastChar = lastCodePointStart(s, 0, s.length)
     currentIndent += uLen(s)
+  }
+
+  /** print_utf8 of one ASCII char. */
+  private def printChar(c: Char): Unit = {
+    sb.append(c)
+    lastChar = c
+    currentIndent += 1
+  }
+
+  /** the first char of the last code point of s(from until to), to > from. */
+  private def lastCodePointStart(s: String, from: Int, to: Int): Char = {
+    val c = s.charAt(to - 1)
+    if (Character.isLowSurrogate(c) && to - 2 >= from && Character.isHighSurrogate(s.charAt(to - 2)))
+      s.charAt(to - 2)
+    else c
   }
 
   private def printQuotes(num: Int, useDouble: Boolean): Unit = {
@@ -81,13 +93,13 @@ final class XmqPrinter(os: XmqSettings) {
   private def printCharEntity(s: String, i: Int): Int = {
     val cp = s.codePointAt(i)
     val named = if (os.escapeNon7bit && os.htmq) HtmlEntityNames.byCodepoint.get(cp) else None
-    val buf = named match {
-      case Some(n) => "&" + n + ";"
-      case None => "&#" + cp + ";"
+    val before = sb.length
+    named match {
+      case Some(n) => sb.append('&').append(n).append(';')
+      case None => sb.append("&#").append(cp).append(';')
     }
-    sb.append(buf)
     lastChar = ';'
-    currentIndent += buf.length
+    currentIndent += sb.length - before
     Character.charCount(cp)
   }
 
@@ -155,23 +167,34 @@ final class XmqPrinter(os: XmqSettings) {
 
   // ---------- quote analysis (xmq_printer.c:44-171, 1576-1708) ----------
 
+  // count_necessary_quotes results, set by quoteNeeds
+  private var qNum = 0
+  private var qAddNls = false
+  private var qAddCompound = false
+  private var qUseDq = false
+
   /** returns (numQuotes, addNls, addCompound, useDoubleQuotes) */
   def countNecessaryQuotes(s: String, from: Int, to: Int): (Int, Boolean, Boolean, Boolean) = {
+    quoteNeeds(s, from, to)
+    (qNum, qAddNls, qAddCompound, qUseDq)
+  }
+
+  /** count_necessary_quotes: sets qNum, qAddNls, qAddCompound and qUseDq. */
+  private def quoteNeeds(s: String, from: Int, to: Int): Unit = {
     var allSafe = true
     val c0 = s.charAt(from)
     val c1 = if (from + 1 < to) s.charAt(from + 1) else 0.toChar
     if (unsafeValueStart(c0, c1)) allSafe = false
 
-    val (ls, onlyPre) = leadingSpaceNl(s, from, to)
-    val (es, onlyApp) = endingNlSpace(s, from, to)
-    val addCompound = (ls != -1 && onlyPre == 0) || (es != -1 && onlyApp == 0)
+    val addCompound =
+      leadingMixedNlSpace(s, from, to) != -1 || endingMixedNlSpace(s, from, to) != -1
 
     var maxSingle = 0; var curSingle = 0
     var maxDouble = 0; var curDouble = 0
     var i = from
     while (i < to) {
       val c = s.charAt(i)
-      if (allSafe && !isSafeValueChar(s, i)) allSafe = false
+      if (allSafe && !isSafeValueChar(c)) allSafe = false
       if (c == '\'') { curSingle += 1; if (curSingle > maxSingle) maxSingle = curSingle }
       else {
         curSingle = 0
@@ -196,27 +219,31 @@ final class XmqPrinter(os: XmqSettings) {
     if (max == 0 && !allSafe) max = 1
     if (max == 2) max = 3
 
-    val addNls = (useDqs && leadEndDq) || (!useDqs && leadEndSq)
-    (max, addNls, addCompound, useDqs)
+    qNum = max
+    qAddNls = (useDqs && leadEndDq) || (!useDqs && leadEndSq)
+    qAddCompound = addCompound
+    qUseDq = useDqs
   }
 
-  /** returns (needsCompounded, useDquotes) — xmq_printer.c quote_needs_compounded */
-  def quoteNeedsCompounded(s: String, from: Int, to: Int): (Boolean, Boolean) = {
+  /** quote_needs_compounded (xmq_printer.c): whether s(from until to)
+    * needs a compound; sets `compoundUseDq`. */
+  private var compoundUseDq = false
+
+  private def quoteNeedsCompounded(s: String, from: Int, to: Int): Boolean = {
     val compact = os.compact
+    compoundUseDq = os.preferDoubleQuotes
     if (to == from + 1) {
       val c = s.charAt(from)
-      if (c == '\'' || c == '\n' || c == '\r' || c == '\t') return (false, os.preferDoubleQuotes)
+      if (c == '\'' || c == '\n' || c == '\r' || c == '\t') return false
     }
-    val (ls, onlyLead) = leadingSpaceNl(s, from, to)
-    if (ls != -1 && onlyLead == 0) return (true, os.preferDoubleQuotes)
-    val (es, onlyEnd) = endingNlSpace(s, from, to)
-    if (es != -1 && onlyEnd == 0) return (true, os.preferDoubleQuotes)
+    if (leadingMixedNlSpace(s, from, to) != -1) return true
+    if (endingMixedNlSpace(s, from, to) != -1) return true
 
     if (compact) {
-      if (hasNewlines(s, from, to)) return (true, os.preferDoubleQuotes)
+      if (hasNewlines(s, from, to)) return true
       if (from < to && ((s.charAt(from) == '\'' && s.charAt(to - 1) == '"') ||
                         (s.charAt(from) == '"' && s.charAt(to - 1) == '\'')))
-        return (true, os.preferDoubleQuotes)
+        return true
     }
 
     var numSq = 0; var numDq = 0
@@ -251,7 +278,8 @@ final class XmqPrinter(os: XmqSettings) {
       if (numSq > 0) useDq = true
       if (numDq > 0) useDq = false
     }
-    (needs, useDq)
+    compoundUseDq = useDq
+    needs
   }
 
   // ---------- widths / alignment ----------
@@ -312,7 +340,12 @@ final class XmqPrinter(os: XmqSettings) {
   }
 
   def printNode(node: XNode, align: Int): Unit = node match {
-    case t: XText => printValue(Seq(t), Level.XMQ, alreadyCompounded = false)
+    // print_value at LEVEL_XMQ: never compound, straight to the text printer
+    case t: XText =>
+      val oldLineIndent = lineIndent
+      printValueInternalText(t.content, 0, t.content.length, Level.XMQ, os.preferDoubleQuotes,
+        alreadyCompounded = false)
+      lineIndent = oldLineIndent
     case e: XEntityRef => printEntityNode(e)
     case c: XComment => printCommentNode(c)
     case p: XPi => printPiNode(p)
@@ -325,9 +358,9 @@ final class XmqPrinter(os: XmqSettings) {
 
   private def printEntityNode(e: XEntityRef): Unit = {
     checkSpaceBeforeEntityNode()
-    printUtf8("&")
+    printChar('&')
     printUtf8(e.name)
-    printUtf8(";")
+    printChar(';')
   }
 
   private def countNecessarySlashes(s: String): Int = {
@@ -411,13 +444,13 @@ final class XmqPrinter(os: XmqSettings) {
     checkSpaceBeforeKey()
     if (e.nsPrefix != null) {
       printUtf8(e.nsPrefix)
-      printUtf8(":")
+      printChar(':')
     }
     printUtf8(e.name)
     if (e.attrs.nonEmpty || e.nsDefs.nonEmpty) {
-      printUtf8("(")
+      printChar('(')
       printAttributes(e)
-      printUtf8(")")
+      printChar(')')
     }
     elemTotalULen(e)
   }
@@ -434,27 +467,27 @@ final class XmqPrinter(os: XmqSettings) {
       if (len < align) pad = 1 + align - len
       printWhiteSpaces(pad)
     }
-    printUtf8("=")
+    printChar('=')
     if (!os.compact) printWhiteSpaces(1)
-    printValue(e.children.toSeq, Level.ELEMENT_VALUE, alreadyCompounded = false)
+    printValue(e.children, Level.ELEMENT_VALUE)
   }
 
   private def printElementWithChildren(e: XElem, align: Int): Unit = {
     printElementNameAndAttributes(e)
     checkSpaceBeforeOpeningBrace()
-    printUtf8("{")
+    printChar('{')
     lineIndent += os.addIndent
     printNodesList(e.children)
     lineIndent -= os.addIndent
     checkSpaceBeforeClosingBrace()
-    printUtf8("}")
+    printChar('}')
   }
 
   private def printDoctype(d: XDoctype): Unit = {
     checkSpaceBeforeKey()
     printUtf8("!DOCTYPE")
     if (!os.compact) printWhiteSpaces(1)
-    printUtf8("=")
+    printChar('=')
     if (!os.compact) printWhiteSpaces(1)
     var v = d.value
     if (os.compact) v = v.replace('\n', ' ')
@@ -465,7 +498,7 @@ final class XmqPrinter(os: XmqSettings) {
     checkSpaceBeforeKey()
     printUtf8("?" + p.name)
     if (!os.compact) printWhiteSpaces(1)
-    printUtf8("=")
+    printChar('=')
     if (!os.compact) printWhiteSpaces(1)
     var content = TextUtil.potentiallyAddLeadingEndingSpace(p.content)
     if (os.compact) content = content.replace('\n', ' ')
@@ -477,35 +510,39 @@ final class XmqPrinter(os: XmqSettings) {
   private def printAttributes(e: XElem): Unit = {
     var max = 0
     if (!os.compact) {
-      e.attrs.foreach { a => val w = attrTotalULen(a); if (w > max) max = w }
-      e.nsDefs.foreach { ns => val w = nsTotalULen(ns); if (w > max) max = w }
+      var k = 0
+      while (k < e.attrs.length) { max = math.max(max, attrTotalULen(e.attrs(k))); k += 1 }
+      k = 0
+      while (k < e.nsDefs.length) { max = math.max(max, nsTotalULen(e.nsDefs(k))); k += 1 }
     }
     val savedLineIndent = lineIndent
     lineIndent = currentIndent
-    e.attrs.foreach(printAttribute(_, max))
-    e.nsDefs.foreach(printNsDeclaration(_, max))
+    var k = 0
+    while (k < e.attrs.length) { printAttribute(e.attrs(k), max); k += 1 }
+    k = 0
+    while (k < e.nsDefs.length) { printNsDeclaration(e.nsDefs(k), max); k += 1 }
     lineIndent = savedLineIndent
   }
 
   private def printAttribute(a: XAttr, align: Int): Unit = {
     checkSpaceBeforeAttribute()
-    if (a.nsPrefix != null) { printUtf8(a.nsPrefix); printUtf8(":") }
+    if (a.nsPrefix != null) { printUtf8(a.nsPrefix); printChar(':') }
     printUtf8(a.key)
     if (a.values != null && !Nodes.isSingleEmptyText(a.values)) {
       if (!os.compact) printWhiteSpaces(1 + align - attrTotalULen(a))
-      printUtf8("=")
+      printChar('=')
       if (!os.compact) printWhiteSpaces(1)
-      printValue(a.values.toSeq, Level.ATTR_VALUE, alreadyCompounded = false)
+      printValue(a.values, Level.ATTR_VALUE)
     }
   }
 
   private def printNsDeclaration(ns: NsDef, align: Int): Unit = {
     checkSpaceBeforeAttribute()
     printUtf8("xmlns")
-    if (ns.prefix != null) { printUtf8(":"); printUtf8(ns.prefix) }
+    if (ns.prefix != null) { printChar(':'); printUtf8(ns.prefix) }
     if (ns.href != null) {
       if (!os.compact) printWhiteSpaces(1 + align - nsTotalULen(ns))
-      printUtf8("=")
+      printChar('=')
       if (!os.compact) printWhiteSpaces(1)
       printValueText(ns.href, 0, ns.href.length, Level.ATTR_VALUE, alreadyCompounded = false, topCall = true)
     }
@@ -513,38 +550,37 @@ final class XmqPrinter(os: XmqSettings) {
 
   // ---------- value printing ----------
 
-  /** print_value over a node list (children of key node / attr values). */
-  private def printValue(parts: Seq[XNode], level: Int, alreadyCompounded: Boolean): Unit = {
-    var isCompound = level != Level.XMQ && parts.length > 1
+  /** print_value over a node list (children of key node / attr values),
+    * at ELEMENT_VALUE or ATTR_VALUE level. */
+  private def printValue(parts: collection.IndexedSeq[XNode], level: Int): Unit = {
+    var isCompound = parts.length > 1
     var useDq = os.preferDoubleQuotes
 
-    if (!isCompound && parts.length == 1 && !parts.head.isInstanceOf[XEntityRef] && level != Level.XMQ) {
+    if (!isCompound && parts.length == 1 && !parts.head.isInstanceOf[XEntityRef]) {
       val s = contentOf(parts.head)
       if (s.nonEmpty) {
-        val r = quoteNeedsCompounded(s, 0, s.length)
-        isCompound = r._1; useDq = r._2
+        isCompound = quoteNeedsCompounded(s, 0, s.length)
+        useDq = compoundUseDq
       }
     }
 
     val oldLineIndent = lineIndent
-    if (isCompound && !alreadyCompounded) {
-      printUtf8("(")
+    if (isCompound) {
+      printChar('(')
       if (!os.compact) printWhiteSpaces(1)
       lineIndent = currentIndent
     }
 
-    val lvl = if (isCompound && !alreadyCompounded) Level.enterCompound(level) else level
+    val lvl = if (isCompound) Level.enterCompound(level) else level
     var i = 0
-    var break = false
-    while (i < parts.length && !break) {
-      printValueInternal(parts(i), lvl, useDq, isCompound || alreadyCompounded)
-      if (level == Level.XMQ) break = true
+    while (i < parts.length) {
+      printValueInternal(parts(i), lvl, useDq, isCompound)
       i += 1
     }
 
-    if (isCompound && !alreadyCompounded) {
+    if (isCompound) {
       if (!os.compact) printWhiteSpaces(1)
-      printUtf8(")")
+      printChar(')')
     }
     lineIndent = oldLineIndent
   }
@@ -572,12 +608,12 @@ final class XmqPrinter(os: XmqSettings) {
     var isCompound = false
     var useDq = useDqIn
     if (from < to) {
-      val r = quoteNeedsCompounded(s, from, to)
-      isCompound = r._1; useDq = r._2
+      isCompound = quoteNeedsCompounded(s, from, to)
+      useDq = compoundUseDq
     }
     val oldLineIndent = lineIndent
     if (isCompound && !alreadyCompounded) {
-      printUtf8("(")
+      printChar('(')
       if (!os.compact) printWhiteSpaces(1)
       lineIndent = currentIndent
     }
@@ -585,7 +621,7 @@ final class XmqPrinter(os: XmqSettings) {
     printValueInternalText(s, from, to, lvl, useDq, isCompound || alreadyCompounded)
     if (isCompound && !alreadyCompounded) {
       if (!os.compact) printWhiteSpaces(1)
-      printUtf8(")")
+      printChar(')')
     }
     lineIndent = oldLineIndent
   }
@@ -649,14 +685,13 @@ final class XmqPrinter(os: XmqSettings) {
       return
     }
 
-    val (allWs, allSpace, onlyNl) = allWhitespace(s, from, to)
-    if (allSpace) {
-      checkSpaceBeforeQuote(level)
-      printQuotedSpaces(to - from)
-      return
-    }
-    if (allWs) {
-      if (onlyNl && !os.compact && (to - from) > 1) {
+    if (isAllXmlWhitespace(s, from, to)) {
+      if (allChars(s, from, to, ' ')) {
+        checkSpaceBeforeQuote(level)
+        printQuotedSpaces(to - from)
+        return
+      }
+      if (allChars(s, from, to, '\n') && !os.compact && (to - from) > 1) {
         // all newlines, more than one: handled by quote printing below
       } else {
         printAllWhitespace(s, from, to, level)
@@ -669,15 +704,15 @@ final class XmqPrinter(os: XmqSettings) {
       return
     }
 
-    val (newStart, onlyPre) = leadingSpaceNl(s, from, to)
-    if (newStart != -1 && onlyPre == 0) {
+    val newStart = leadingMixedNlSpace(s, from, to)
+    if (newStart != -1) {
       printAllWhitespace(s, from, newStart, level)
       from = newStart
     }
 
     val oldStop = to
-    val (newStop, onlyApp) = endingNlSpace(s, from, to)
-    if (newStop != -1 && onlyApp == 0) {
+    val newStop = endingMixedNlSpace(s, from, to)
+    if (newStop != -1) {
       to = newStop
       while (to < oldStop && s.charAt(to) == ' ') to += 1
     }
@@ -695,25 +730,28 @@ final class XmqPrinter(os: XmqSettings) {
           i += printCharEntity(s, i)
         }
       } else {
-        val (_, addNls, addCompound, useDq2) = countNecessaryQuotes(s, i, esc)
-        if (!addCompound && (!addNls || !os.compact)) {
+        quoteNeeds(s, i, esc)
+        if (!qAddCompound && (!qAddNls || !os.compact)) {
           checkSpaceBeforeQuote(level)
-          printSafeLeafQuote(s, i, esc)
+          printSafeLeafQuote(s, i, esc, qNum, qAddNls, qUseDq)
         } else {
-          printValueText(s, i, esc, level, alreadyCompounded, topCall = false, useDq2)
+          printValueText(s, i, esc, level, alreadyCompounded, topCall = false, qUseDq)
         }
         i = esc
       }
     }
 
-    if (newStop != -1 && onlyApp == 0) {
+    if (newStop != -1) {
       printAllWhitespace(s, to, oldStop, level)
     }
   }
 
-  private def printSafeLeafQuote(s: String, from: Int, to: Int): Unit = {
+  /** print_safe_leaf_quote, given count_necessary_quotes of s(from until to). */
+  private def printSafeLeafQuote(s: String, from: Int, to: Int,
+                                 numq0: Int, addNls0: Boolean, useDq: Boolean): Unit = {
     val compact = os.compact
-    var (numq, addNls, _, useDq) = countNecessaryQuotes(s, from, to)
+    var numq = numq0
+    var addNls = addNls0
     var indent = currentIndent
 
     if (numq > 0 && !addNls) {
@@ -754,14 +792,13 @@ final class XmqPrinter(os: XmqSettings) {
         else printNl()
         i += 1
       } else {
-        // print one codepoint
-        val cp = s.codePointAt(i)
-        val n = Character.charCount(cp)
-        var k = i
-        while (k < i + n) { sb.append(s.charAt(k)); k += 1 }
-        lastChar = s.charAt(i)
-        currentIndent += 1
-        i += n
+        // the run up to the next newline: indent counts its code points
+        var j = i + 1
+        while (j < to && s.charAt(j) != '\n') j += 1
+        sb.append(s, i, j)
+        lastChar = lastCodePointStart(s, i, j)
+        currentIndent += Character.codePointCount(s, i, j)
+        i = j
         allNewlines = false
       }
     }
@@ -782,9 +819,11 @@ object XmqPrinter {
   def print(doc: XDoc, compact: Boolean = false): String =
     print(doc, XmqSettings(compact = compact))
 
-  def print(doc: XDoc, settings: XmqSettings): String = {
-    val p = new XmqPrinter(settings)
-    p.printDoc(doc)
-    p.result
-  }
+  def print(doc: XDoc, settings: XmqSettings): String =
+    PrintBuffer.print(printTo(doc, settings, _))
+
+  def printTo(doc: XDoc, settings: XmqSettings, sb: java.lang.StringBuilder): Unit =
+    new XmqPrinter(settings, sb).printDoc(doc)
+
+  private val Spaces = " " * 64
 }

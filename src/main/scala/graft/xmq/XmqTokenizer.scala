@@ -9,35 +9,35 @@ import java.nio.charset.StandardCharsets
   * reference's longjmp to a single handler).
   */
 object Tok {
-  val Whitespace = "whitespace"
-  val Equals = "equals"
-  val BraceLeft = "brace_left"
-  val BraceRight = "brace_right"
-  val AparLeft = "apar_left"
-  val AparRight = "apar_right"
-  val CparLeft = "cpar_left"
-  val CparRight = "cpar_right"
-  val Quote = "quote"
-  val Entity = "entity"
-  val Comment = "comment"
-  val CommentContinuation = "comment_continuation"
-  val ElementNs = "element_ns"
-  val ElementName = "element_name"
-  val ElementKey = "element_key"
-  val ElementValueText = "element_value_text"
-  val ElementValueQuote = "element_value_quote"
-  val ElementValueEntity = "element_value_entity"
-  val ElementValueCompoundQuote = "element_value_compound_quote"
-  val ElementValueCompoundEntity = "element_value_compound_entity"
-  val AttrNs = "attr_ns"
-  val AttrKey = "attr_key"
-  val AttrValueText = "attr_value_text"
-  val AttrValueQuote = "attr_value_quote"
-  val AttrValueEntity = "attr_value_entity"
-  val AttrValueCompoundQuote = "attr_value_compound_quote"
-  val AttrValueCompoundEntity = "attr_value_compound_entity"
-  val NsDeclaration = "ns_declaration"
-  val NsColon = "ns_colon"
+  final val Whitespace = "whitespace"
+  final val Equals = "equals"
+  final val BraceLeft = "brace_left"
+  final val BraceRight = "brace_right"
+  final val AparLeft = "apar_left"
+  final val AparRight = "apar_right"
+  final val CparLeft = "cpar_left"
+  final val CparRight = "cpar_right"
+  final val Quote = "quote"
+  final val Entity = "entity"
+  final val Comment = "comment"
+  final val CommentContinuation = "comment_continuation"
+  final val ElementNs = "element_ns"
+  final val ElementName = "element_name"
+  final val ElementKey = "element_key"
+  final val ElementValueText = "element_value_text"
+  final val ElementValueQuote = "element_value_quote"
+  final val ElementValueEntity = "element_value_entity"
+  final val ElementValueCompoundQuote = "element_value_compound_quote"
+  final val ElementValueCompoundEntity = "element_value_compound_entity"
+  final val AttrNs = "attr_ns"
+  final val AttrKey = "attr_key"
+  final val AttrValueText = "attr_value_text"
+  final val AttrValueQuote = "attr_value_quote"
+  final val AttrValueEntity = "attr_value_entity"
+  final val AttrValueCompoundQuote = "attr_value_compound_quote"
+  final val AttrValueCompoundEntity = "attr_value_compound_entity"
+  final val NsDeclaration = "ns_declaration"
+  final val NsColon = "ns_colon"
 }
 
 final case class XmqParseError(error: String, line: Int, col: Int)
@@ -45,11 +45,11 @@ final case class XmqParseError(error: String, line: Int, col: Int)
 
 /** Levels for value parsing (xmq_internals.h Level enum). */
 object Level {
-  val XMQ = 0
-  val ELEMENT_VALUE = 1
-  val ELEMENT_VALUE_COMPOUND = 2
-  val ATTR_VALUE = 3
-  val ATTR_VALUE_COMPOUND = 4
+  final val XMQ = 0
+  final val ELEMENT_VALUE = 1
+  final val ELEMENT_VALUE_COMPOUND = 2
+  final val ATTR_VALUE = 3
+  final val ATTR_VALUE_COMPOUND = 4
   def enterCompound(l: Int): Int =
     if (l == ELEMENT_VALUE) ELEMENT_VALUE_COMPOUND
     else if (l == ATTR_VALUE) ATTR_VALUE_COMPOUND
@@ -133,14 +133,18 @@ final class XmqTokenizer(val buf: Array[Byte], sink: TokenSink) {
 
   private def isPiStart: Boolean = b(i) == '?' && i + 2 <= stop
 
+  /** a run of token whitespace; a tab ends it. */
   private def parseWhitespace(): Unit = {
     val sl = line; val sc = col; val start = i
     var brk = false
     while (i < stop && !brk) {
-      val nw = countWhitespace(buf, i, stop)
-      if (nw == 0) brk = true
-      else if (nw == 1 && b(i) == '\t') brk = true
-      else incRun(nw)
+      val c = buf(i)
+      if (c == ' ' || c == '\r') { col += 1; i += 1 }
+      else if (c == '\n') { line += 1; col = 1; i += 1 }
+      else if (c < 0) { // multi-byte: U+00A0 and U+2000..U+2003 continue the run
+        val nw = countWhitespace(buf, i, stop)
+        if (nw == 0) brk = true else incRun(nw)
+      } else brk = true
     }
     sink.token(Tok.Whitespace, sl, sc, start, i, i)
   }
@@ -152,19 +156,22 @@ final class XmqTokenizer(val buf: Array[Byte], sink: TokenSink) {
     j - k
   }
 
-  /** returns (start, stop) of the full quote token incl. surrounding quotes. */
-  private def eatQuote(): (Int, Int) = {
+  /** eats a quote token incl. its surrounding quotes, which starts at i;
+    * returns the token's end. */
+  private def eatQuote(): Int = {
     val q = b(i)
     var depth = countQuotes(i)
-    val start = i
     var count = depth
     while (count > 0) { inc(1); count -= 1 }
-    if (depth == 2) return (start, i) // the empty quote ''
+    if (depth == 2) return i // the empty quote ''
     var end = -1
     while (i < stop && end < 0) {
       val c = b(i)
-      if (c != q) inc(1)
-      else {
+      if (c != q) { // inc(1), inlined
+        if (c == '\n') { line += 1; col = 1 }
+        else if ((c & 0xc0) != 0x80) col += 1
+        i += 1
+      } else {
         val n = countQuotes(i)
         if (n > depth) err("quote closed with too many quotes")
         else if (n < depth) { var k = n; while (k > 0) { inc(1); k -= 1 } }
@@ -172,12 +179,12 @@ final class XmqTokenizer(val buf: Array[Byte], sink: TokenSink) {
       }
     }
     if (depth != 0) err("quote not closed")
-    (start, end)
+    end
   }
 
   private def parseQuote(level: Int): Unit = {
-    val sl = line; val sc = col
-    val (s, e) = eatQuote()
+    val sl = line; val sc = col; val s = i
+    val e = eatQuote()
     val tpe = level match {
       case Level.XMQ => Tok.Quote
       case Level.ELEMENT_VALUE => Tok.ElementValueQuote
@@ -271,17 +278,19 @@ final class XmqTokenizer(val buf: Array[Byte], sink: TokenSink) {
     err("comment not closed")
   }
 
-  /** returns (nameStart, nameStop, nsStart, nsStop) — ns -1 when absent. */
-  private def eatTextName(): (Int, Int, Int, Int) = {
+  /** eats a name that starts at i; returns the index of its last ':' (the
+    * namespace prefix ends there), -1 without one. */
+  private def eatTextName(): Int = {
     var colon = -1
     val start = i
     var brk = false
     while (i < stop && !brk) {
       val c = b(i)
       if (!isXmqTextName(c)) brk = true
-      else { if (c == ':') colon = i; inc(1) }
+      else { if (c == ':') colon = i; i += 1 } // one ASCII column per name byte
     }
-    if (colon >= 0) (colon + 1, i, start, colon) else (start, i, -1, -1)
+    col += i - start
+    colon
   }
 
   private def peekNextIsEqual(): Boolean = {
@@ -310,8 +319,11 @@ final class XmqTokenizer(val buf: Array[Byte], sink: TokenSink) {
       while (i < stop && isXmqTextName(b(i))) inc(1)
       nameStop = i
     } else {
-      val r = eatTextName()
-      nameStart = r._1; nameStop = r._2; nsStart = r._3; nsStop = r._4
+      val start = i
+      val colon = eatTextName()
+      nameStop = i
+      if (colon >= 0) { nameStart = colon + 1; nsStart = start; nsStop = colon }
+      else nameStart = start
     }
     val stop0 = i
     val isKey = peekNextIsEqual()
@@ -381,7 +393,12 @@ final class XmqTokenizer(val buf: Array[Byte], sink: TokenSink) {
 
   private def parseAttribute(): Unit = {
     val startLine = line; val startCol = col
-    val (nameStart, nameStop, nsStart, nsStop) = eatTextName()
+    val start = i
+    val colon = eatTextName()
+    val nameStart = if (colon >= 0) colon + 1 else start
+    val nameStop = i
+    val nsStart = if (colon >= 0) start else -1
+    val nsStop = colon
     val stop0 = i
 
     if (nsStart < 0) {
@@ -440,17 +457,19 @@ final class XmqTokenizer(val buf: Array[Byte], sink: TokenSink) {
     var brk = false
     while (i < stop && !brk) {
       if (!isSafeValueByte(i)) brk = true
-      else inc(1)
+      else { // inc(1) of a byte that is not a newline
+        if ((buf(i) & 0xc0) != 0x80) col += 1
+        i += 1
+      }
     }
     val tpe = if (level == Level.ATTR_VALUE) Tok.AttrValueText else Tok.ElementValueText
     sink.token(tpe, sl, sc, start, i, i)
   }
 
   private def isSafeValueByte(k: Int): Boolean = {
-    val c = b(k)
-    if (countWhitespace(buf, k, stop) > 0) return false
-    !(c == '\n' || c == '\t' || c == '\r' || c == '(' || c == ')' ||
-      c == '{' || c == '}' || c == '\'' || c == '"')
+    val c = buf(k)
+    if (c >= 0) isSafeValueChar(c.toChar)
+    else countWhitespace(buf, k, stop) == 0
   }
 
   private def parseCompound(level: Int): Unit = {

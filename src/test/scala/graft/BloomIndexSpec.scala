@@ -154,4 +154,25 @@ class BloomIndexSpec extends SparkTestBase {
     val other = df.filter(col("commit") =!= victim).select("commit").as[String].head()
     assert(BloomIndex.lookup(t, "commit", other)._1.count() >= 1)
   }
+
+  test("build under pending merge-on-read deletes indexes the live files; lookups prune") {
+    val t = freshTable("bloom-mor-build")
+    val df = synthDf(200)
+    t.append(df.repartition(8))
+    import spark.implicits._
+    val victim = df.select("commit").as[String].head()
+    MorDelete.deleteWhere(t, col("commit") === victim)
+    // scan() is now an anti-join, which input_file_name() used to refuse
+    val (n, _) = BloomIndex.build(t, "commit")
+    assert(n == 8)
+    val plain = df.filter(col("commit") =!= victim)
+    plain.select("commit").as[String].collect().take(20).foreach { key =>
+      val (rows, total, kept) = BloomIndex.lookup(t, "commit", key)
+      assert(total == 8 && kept <= 3, s"weak pruning for $key: kept=$kept of $total")
+      val cols = df.columns.map(col)
+      assert(rows.select(cols: _*).collect().map(_.toString).sorted.sameElements(
+        plain.filter(col("commit") === key).collect().map(_.toString).sorted), key)
+    }
+    assert(BloomIndex.lookup(t, "commit", victim)._1.count() == 0, "deleted key resurfaced")
+  }
 }

@@ -105,6 +105,20 @@ class XmqExprSpec extends SparkTestBase {
     assert(parseLongC("99999999999999999999") == Long.MaxValue) // strtol clamp
   }
 
+  test("parseDoubleC keeps strtod's longest decimal prefix (xmq.c:4357)") {
+    import graft.expr.XmqExprs.parseDoubleC
+    val table = Seq(
+      "42" -> 42.0, "  3.5abc" -> 3.5, "-1e3x" -> -1000.0, "+.5" -> 0.5,
+      "12." -> 12.0, "5e-1" -> 0.5, "1.5e+2" -> 150.0, "  +7.25E2 rest" -> 725.0,
+      "1e" -> 1.0, "1.2.3" -> 1.2, "\t\n 7" -> 7.0, "1,5" -> 1.0,
+      "." -> 0.0, "-" -> 0.0, "abc" -> 0.0, "" -> 0.0, "\u00a09" -> 0.0)
+    table.foreach { case (in, want) => assert(parseDoubleC(in) == want, s"strtod($in)") }
+    assert(parseDoubleC("1e400").isPosInfinity) // overflow: HUGE_VAL
+    // the getter parses the first match's text the same way
+    assert(XmqExprs.getDouble("<a><r> 2.5e1x</r></a>", "xml", "/a/r") == 25.0)
+    assert(XmqExprs.getDouble("<a/>", "xml", "/a/r") == 0.0)
+  }
+
   test("the getter parse memo pins no document once its task ends") {
     import graft.expr.XmqFunctions._
     import org.apache.spark.sql.functions.{col, concat, lit}
