@@ -145,7 +145,7 @@ final class JsonPrinter(sb: java.lang.StringBuilder) {
 
   /** json_print_object_nodes over nodes(from until until), with the
     * duplicate-key counter: a name that occurs `total` > 1 times prints as
-    * name[used]. preNodes/postNodes index the document's leading and
+    * name[used]. preNodes/postNodes are the document's leading and
     * trailing nodes, printed inside the first/last node's braces. */
   private def printObjectNodes(container: XElem, nodes: collection.IndexedSeq[XNode],
                                from: Int, until: Int,

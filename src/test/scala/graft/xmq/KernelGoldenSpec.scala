@@ -37,6 +37,17 @@ class KernelGoldenSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"${bad.size} of ${want.size} digests differ: ${bad.take(20).mkString(", ")}")
   }
 
+  test("json duplicate-key suffixes past 16 siblings (the hashed counter)") {
+    // no corpus document has that many siblings; the expected print is the
+    // unchanged kernel's
+    val kids = (0 until 18).map { i =>
+      val n = Seq("a", "b", "a", "c", "_")(i % 5); s"<$n>$i</$n>" }.mkString
+    assert(XmqExprs.convert(s"<r>$kids<!--x--></r>", "xml", "json", false) ==
+      """{"_":"r","a[0]":0,"b[0]":1,"a[1]":2,"c[0]":3,"":4,"a[2]":5,"b[1]":6,"a[3]":7,""" +
+      """"c[1]":8,"":9,"a[4]":10,"b[2]":11,"a[5]":12,"c[2]":13,"":14,"a[6]":15,"b[3]":16,""" +
+      """"a[7]":17,"//":"x"}""" + "\n")
+  }
+
   test("the corpus covers every edge-case family and all three row seeds") {
     val keys = recorded.keySet
     for (fam <- Seq("entity", "cdata", "comment", "doctype", "ns", "compound", "bom",
