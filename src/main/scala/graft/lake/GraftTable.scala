@@ -892,7 +892,7 @@ class GraftTable(val spark: SparkSession, val location: String,
         case None => seqPairs(manifestWithSeq(s))
       }
       morScan(s, pairs)
-    case Some(_) => scanFiles()
+    case Some(s) => filesOf(s)
   }
 
   /** The current snapshot's live data files, read as they are: pending
@@ -900,12 +900,16 @@ class GraftTable(val spark: SparkSession, val location: String,
     * `scan()`'s. One parquet read, so `input_file_name()` works over it. */
   def scanFiles(): DataFrame = currentSnapshot match {
     case None => emptyDf
-    case Some(s) =>
-      val paths = localManifest(manifestShards(s)) match {
-        case Some(entries) => entries.map(_.file_path) // jobless planning
-        case None => manifest(s).select("file_path").as[String].collect().toSeq
-      }
-      readFiles(paths)
+    case Some(s) => filesOf(s)
+  }
+
+  /** Snapshot `s`'s live data files, read without its pending deletes. */
+  private def filesOf(s: Snapshot): DataFrame = {
+    val paths = localManifest(manifestShards(s)) match {
+      case Some(entries) => entries.map(_.file_path) // jobless planning
+      case None => manifest(s).select("file_path").as[String].collect().toSeq
+    }
+    readFiles(paths)
   }
 
   /** Pruned scan: prune the manifest DataFrame with a predicate over min/max

@@ -88,15 +88,9 @@ object JsonPrinter {
     }
     sb.toString
   }
-
-  /** above this many siblings the duplicate-key counter hashes names
-    * instead of comparing each pair. */
-  private val PairwiseMaxSiblings = 16
 }
 
 final class JsonPrinter(sb: java.lang.StringBuilder) {
-  import JsonPrinter.PairwiseMaxSiblings
-
   private var lastChar: Char = 0
   private var warningList: List[String] = Nil
 
@@ -152,21 +146,17 @@ final class JsonPrinter(sb: java.lang.StringBuilder) {
                                preNodes: collection.Seq[XNode] = Nil,
                                postNodes: collection.Seq[XNode] = Nil,
                                prePostComments: Int = 0): Unit = {
-    val totals =
-      if (until - from <= PairwiseMaxSiblings) null
-      else {
-        val m = new java.util.HashMap[String, Array[Int]]
-        var j = from
-        while (j < until) {
-          val name = Nodes.jsonCountName(nodes(j))
-          if (name != null && name != "_") {
-            val c = m.get(name)
-            if (c == null) m.put(name, Array(1, 0)) else c(0) += 1
-          }
-          j += 1
-        }
-        m
+    // name -> (total, used so far)
+    val counts = new java.util.HashMap[String, Array[Int]]
+    var j = from
+    while (j < until) {
+      val name = Nodes.jsonCountName(nodes(j))
+      if (name != null && name != "_") {
+        val c = counts.get(name)
+        if (c == null) counts.put(name, Array(1, 0)) else c(0) += 1
       }
+      j += 1
+    }
     var idx = from
     while (idx < until) {
       val n = nodes(idx)
@@ -174,20 +164,8 @@ final class JsonPrinter(sb: java.lang.StringBuilder) {
       var total = 1
       var used = 0
       if (name != null && name != "_") {
-        if (totals != null) {
-          val c = totals.get(name)
-          total = c(0); used = c(1); c(1) += 1
-        } else {
-          total = 0
-          var j = from
-          while (j < until) {
-            if (name == Nodes.jsonCountName(nodes(j))) {
-              total += 1
-              if (j < idx) used += 1
-            }
-            j += 1
-          }
-        }
+        val c = counts.get(name)
+        total = c(0); used = c(1); c(1) += 1
       }
       printNode(container, n, total, used,
         if (idx == from) preNodes else Nil,

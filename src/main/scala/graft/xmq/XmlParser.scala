@@ -121,22 +121,6 @@ object XmlParser {
   def parse(content: String, html: Boolean): XDoc =
     new XmlParser(content, html).parseDocument()
 
-  /** whether `name` can be in an html tag table: they hold only lower-case
-    * ASCII letters and digits. Tested before a lookup, so that a name
-    * outside the html vocabulary is not hashed. */
-  def htmlTagLike(name: String): Boolean = {
-    var i = 0
-    while (i < name.length) {
-      val c = name.charAt(i)
-      if (!((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9'))) return false
-      i += 1
-    }
-    true
-  }
-
-  def isHtmlTag(tags: Set[String], name: String): Boolean =
-    name != null && htmlTagLike(name) && tags.contains(name)
-
   /** `name.toLowerCase`, returning `name` itself when it has no upper-case
     * ASCII letter and no non-ASCII char (the usual html tag or attribute). */
   def lowerName(name: String): String = {
@@ -170,25 +154,17 @@ final class XmlParser(s: String, html: Boolean) {
     * end-tag-priority machinery. */
   private val openNames = mutable.ArrayBuffer.empty[String]
 
-  /** lower-cased tag name at `i` (positioned on '<') without consuming,
-    * or null when it cannot be an html table name: an ASCII char other than
-    * a letter or digit stays in it after lower-casing, and the tables hold
-    * none. Such a name is not materialized. */
+  /** lower-cased tag name at `i` (positioned on '<') without consuming. */
   private def peekName: String = {
     var k = i + 1
     val start = k
-    var tagLike = true
-    while (k < stop && nameChar(s.charAt(k))) {
-      val c = s.charAt(k)
-      if (c < 128 && !Character.isLetterOrDigit(c)) tagLike = false
-      k += 1
-    }
-    if (tagLike) lowerName(s.substring(start, k)) else null
+    while (k < stop && nameChar(s.charAt(k))) k += 1
+    lowerName(s.substring(start, k))
   }
 
   /** does starting `tag` implicitly close the current element `cur`? */
   private def autoCloses(tag: String, cur: String): Boolean =
-    tag != null && htmlTagLike(tag) && HtmlAutoClose.get(tag).exists(_.contains(cur))
+    HtmlAutoClose.get(tag).exists(_.contains(cur))
 
   def parseDocument(): XDoc = {
     // prolog
@@ -452,12 +428,10 @@ final class XmlParser(s: String, html: Boolean) {
 
     list += e
 
-    // names outside the html vocabulary skip the table lookups
-    val tagLike = html && htmlTagLike(e.name)
-    val isVoid = tagLike && VoidElements.contains(e.name)
+    val isVoid = html && VoidElements.contains(e.name)
     if (!selfClosed && !isVoid) {
       if (html) openNames += e.name
-      if (tagLike && RawTextElements.contains(e.name)) {
+      if (html && RawTextElements.contains(e.name)) {
         // raw text until </name>
         val close = "</" + e.name
         val idx0 = indexOfIC(close, i)
@@ -602,9 +576,9 @@ final class XmlParser(s: String, html: Boolean) {
         if (t == "head") { parseElement(e.children); headDone = true }
         else if (t == "body") { headDone = true; parseElement(e.children); bodyDone = true }
         else if (t == "html") parseElement(e.children) // stray nested html: literal
-        else if (isHtmlTag(HtmlImpliesHead, t) && !headDone && !bodyDone)
+        else if (HtmlImpliesHead.contains(t) && !headDone && !bodyDone)
           implied("head") { h => parseChildren(h); headDone = true }
-        else if (isHtmlTag(HtmlImpliesHead, t)) parseElement(e.children) // head closed: stays under html
+        else if (HtmlImpliesHead.contains(t)) parseElement(e.children) // head closed: stays under html
         else if (!bodyDone) {
           headDone = true
           implied("body") { b => parseChildren(b); bodyDone = true }

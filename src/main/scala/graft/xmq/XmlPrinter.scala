@@ -148,7 +148,7 @@ object XmlPrinter {
 
 object HtmlPrinter {
 
-  import XmlParser.{VoidElements, RawTextElements, htmlTagLike, isHtmlTag}
+  import XmlParser.{VoidElements, RawTextElements}
 
   /** html 4.0 element table tags known to libxml2 (htmlElemDesc). */
   private val KnownTags: Set[String] = Set(
@@ -175,7 +175,7 @@ object HtmlPrinter {
   /** known, non-inline tags: the ones the html formatting breaks around. */
   private val BlockTags: Set[String] = KnownTags -- InlineTags
 
-  private def isBlockKnown(name: String): Boolean = isHtmlTag(BlockTags, name)
+  private def isBlockKnown(name: String): Boolean = BlockTags.contains(name)
 
   def printHtml(doc: XDoc): String = PrintBuffer.print(writeHtml(doc, _))
 
@@ -227,9 +227,7 @@ object HtmlPrinter {
       k += 1
     }
     sb.append('>')
-    // names outside the html vocabulary skip the table lookups
-    val tagLike = htmlTagLike(e.name)
-    if (tagLike && VoidElements.contains(e.name)) return
+    if (VoidElements.contains(e.name)) return
     val children = e.children
     // libxml2 htmlNodeDumpFormatOutput format=1: newline after the opening tag
     // of a known non-inline element whose multiple children start non-textual.
@@ -237,9 +235,9 @@ object HtmlPrinter {
     // newlines), not on the first child — probed: <body><p>.. breaks after
     // <body>, while <p><code>..<section>.. does not break after <p>.
     val formats = children.length > 1 && !(e.name.nonEmpty && e.name.charAt(0) == 'p') &&
-      tagLike && BlockTags.contains(e.name)
+      BlockTags.contains(e.name)
     if (formats && !isTextual(children.head)) sb.append('\n')
-    if (tagLike && RawTextElements.contains(e.name)) {
+    if (RawTextElements.contains(e.name)) {
       // fixup_html (xmq.c:3680-3698): inside cdata-declared elements entity
       // refs are decoded into raw text before writeout.
       children.foreach {

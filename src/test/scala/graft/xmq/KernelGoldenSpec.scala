@@ -37,9 +37,9 @@ class KernelGoldenSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"${bad.size} of ${want.size} digests differ: ${bad.take(20).mkString(", ")}")
   }
 
-  test("json duplicate-key suffixes past 16 siblings (the hashed counter)") {
-    // no corpus document has that many siblings; the expected print is the
-    // unchanged kernel's
+  test("json duplicate-key suffixes of an 18-sibling object") {
+    // wider than any corpus object; the expected print is the unchanged
+    // kernel's
     val kids = (0 until 18).map { i =>
       val n = Seq("a", "b", "a", "c", "_")(i % 5); s"<$n>$i</$n>" }.mkString
     assert(XmqExprs.convert(s"<r>$kids<!--x--></r>", "xml", "json", false) ==
