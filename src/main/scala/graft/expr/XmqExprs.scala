@@ -224,14 +224,32 @@ object XmqExprs {
     if (s == null) 0L else parseLongC(s)
   }
 
-  /** strtod's longest valid leading prefix (xmqGetDouble, xmq.c:4357). */
+  /** strtod's longest valid leading prefix (xmqGetDouble, xmq.c:4357), one
+    * pattern per form: decimal, hex significand with an optional binary
+    * exponent, and the case-insensitive `inf`/`nan` words (`infinity` and
+    * `nan(...)` read the same value as their prefix). */
   private val StrtodPrefix =
     java.util.regex.Pattern.compile("^\\s*[-+]?(\\d+(\\.\\d*)?|\\.\\d+)([eE][-+]?\\d+)?")
+  private val StrtodHex = java.util.regex.Pattern.compile(
+    "^\\s*([-+]?)0[xX](\\p{XDigit}+\\.?\\p{XDigit}*|\\.\\p{XDigit}+)(?:[pP]([-+]?\\d+))?")
+  private val StrtodWord = java.util.regex.Pattern.compile(
+    "^\\s*([-+]?)(inf|nan)", java.util.regex.Pattern.CASE_INSENSITIVE)
 
-  /** C strtod of `s`: its longest valid leading number, 0 on none. */
+  /** C strtod of `s`: its longest valid leading number, 0 on none (`"0x"`
+    * reads its `0`). */
   def parseDoubleC(s: String): Double = {
-    val m = StrtodPrefix.matcher(s)
-    if (m.find()) m.group(0).trim.toDouble else 0.0
+    val w = StrtodWord.matcher(s)
+    lazy val h = StrtodHex.matcher(s)
+    lazy val d = StrtodPrefix.matcher(s)
+    if (w.find()) {
+      val v = if (w.group(2).equalsIgnoreCase("inf")) Double.PositiveInfinity else Double.NaN
+      if (w.group(1) == "-") -v else v
+    } else if (h.find()) {
+      // Java's hex literal needs the exponent (it saturates a huge one)
+      val v = java.lang.Double.parseDouble(s"0x${h.group(2)}p${Option(h.group(3)).getOrElse("0")}")
+      if (h.group(1) == "-") -v else v
+    } else if (d.find()) d.group(0).trim.toDouble
+    else 0.0
   }
 
   def getDouble(content: String, lang: String, path: String): Double = {

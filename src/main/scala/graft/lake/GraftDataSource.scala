@@ -461,7 +461,7 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
 
   /** (kept, total) file counts from planning — surfaced in description() so
     * EXPLAIN/plan dumps show the pruning ratio once the scan has planned. */
-  @volatile private[lake] var pruneInfo: Option[(Int, Int)] = None
+  @volatile private[graft] var pruneInfo: Option[(Int, Int)] = None
   /** Σ(record_count), Σ(file_bytes) over the files that SURVIVED pruning —
     * accumulated in the same planning collect, no extra job. */
   @volatile private[lake] var statsInfo: Option[(Long, Long)] = None
@@ -514,6 +514,7 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
 
   override def description(): String = {
     val files = pruneInfo.map { case (k, t) => s" files=$k/$t" }.getOrElse("")
+    val tasks = Option(planned).map(p => s" partitions=${p.length}").getOrElse("")
     val rt = if (runtime.nonEmpty) s" RuntimeFilters=[${runtime.mkString(", ")}]" else ""
     val inc = fromSnapshot.map(v => s" incrementalFrom=v$v").getOrElse("")
     val lim = limit.map(l => s" PushedLimit=$l").getOrElse("")
@@ -521,7 +522,7 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
       val served = if (topNCap.isDefined) "capped" else "uncapped"
       s" PushedTopN=$c ASC LIMIT $l ($served)"
     }.getOrElse("")
-    s"GraftScan location=$location PushedFilters=[${pushed.mkString(", ")}]$rt$inc$lim$tn$files"
+    s"GraftScan location=$location PushedFilters=[${pushed.mkString(", ")}]$rt$inc$lim$tn$files$tasks"
   }
 
   /** Manifest pruning keeps a scan's fixed cost in the files it opens: a
@@ -658,16 +659,15 @@ class GraftScan(location: String, pushed: Array[Filter], required: StructType,
               // breaks its duplicate-value grouping under reduced
               // (mismatched-bucket-count) transforms
               byBucket.toArray.sortBy(_._1).map { case (b, ks) =>
-                GraftBucketedPartition(b,
+                new GraftBucketedPartition(b,
                   ks.map(k => table.io.abs(k._1).toString).toSeq): InputPartition
               }
             case None =>
               bucketInfo = None
               orderInfo = false
               topNCap = None
-              kept.map { case (p, _, _, _) =>
-                GraftInputPartition(table.io.abs(p).toString).asInstanceOf[InputPartition]
-              }
+              GraftScan.packFiles(spark,
+                kept.map { case (p, _, bytes, _) => (table.io.abs(p).toString, bytes) })
           }
         }
     }
@@ -734,10 +734,10 @@ class GraftMicroBatchStream(location: String, pushed: Array[Filter],
     val spark = SparkSession.active
     import spark.implicits._
     val t = table
-    t.incrementalEntries(from, to)
+    val files = t.incrementalEntries(from, to)
       .filter(GraftScan.manifestPredicate(pushed))
-      .select("file_path").as[String].collect()
-      .map(p => GraftInputPartition(t.io.abs(p).toString).asInstanceOf[InputPartition])
+      .select("file_path", "file_bytes").as[(String, Long)].collect()
+    GraftScan.packFiles(spark, files.map { case (p, bytes) => (t.io.abs(p).toString, bytes) })
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -747,6 +747,39 @@ class GraftMicroBatchStream(location: String, pushed: Array[Filter],
 object GraftScan {
   import org.apache.spark.sql.{Column, Row}
   import org.apache.spark.sql.functions._
+
+  /** THE read-task rule: packs a scan's kept data files (absolute path,
+    * committed `file_bytes`) into [[GraftFilesPartition]]s by Spark's own
+    * FileSourceScan rule — the split size is `FilePartition.maxSplitBytes`
+    * over Σ(file_bytes + openCostInBytes), and `FilePartition
+    * .getFilePartitions` packs the files largest first (path tiebreak, so a
+    * plan is deterministic). It reads `spark.sql.files.maxPartitionBytes`,
+    * `openCostInBytes` and `minPartitionNum` (default: the session's leaf
+    * parallelism), the confs every `GraftTable.readFiles` read already obeys;
+    * the sizes come from the manifest, so planning lists no file. The split
+    * size never falls below openCostInBytes, so a scan of at most
+    * leaf-parallelism small files (a point lookup) keeps one file per task.
+    *
+    * Three reads stay one file per partition ([[GraftInputPartition]]):
+    *  - a scan with pending merge-on-read deletes: each partition carries its
+    *    file's add seq, and the filtering reader counts `_pos` ordinals and
+    *    probes positional deletes per file;
+    *  - GraftRowLevel's DML scan: its writer maps tasks to output files;
+    *  - a file larger than the split size gets a task to itself: it is not
+    *    split by row group. */
+  private[lake] def packFiles(spark: SparkSession,
+                              files: Seq[(String, Long)]): Array[InputPartition] = {
+    import org.apache.spark.paths.SparkPath
+    import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+    val openCost = org.apache.spark.sql.internal.SQLConf.get.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark, files.map(_._2 + openCost).sum)
+    val largestFirst = files.sortBy { case (p, bytes) => (-bytes, p) }.map { case (p, bytes) =>
+      PartitionedFile(InternalRow.empty, SparkPath.fromUrlString(p), 0L, bytes)
+    }
+    FilePartition.getFilePartitions(spark, largestFirst, maxSplit).map { fp =>
+      new GraftFilesPartition(fp.files.map(_.filePath.urlEncoded).toSeq): InputPartition
+    }.toArray
+  }
 
   /** THE manifest pruning rule: false only when an entry's stats prove that
     * no row of its file satisfies every filter. Strings compare in
@@ -968,24 +1001,29 @@ object GraftScan {
     }
 }
 
-/** One data file. addSeq/eqDeletes/posDeletes carry the merge-on-read
-  * delete state when the scanned snapshot has pending delete shards: such a
+/** One data file: the read task of a scan with pending merge-on-read
+  * deletes and of GraftRowLevel's DML scan ([[GraftScan.packFiles]] says
+  * why neither is packed). addSeq/eqDeletes/posDeletes carry the delete
+  * state when the scanned snapshot has pending delete shards: such a
   * partition reads as rows through GraftMorFilteringReader, which drops
   * rows whose key is equality-deleted at a seq GREATER than the file's add
   * seq (the sequence rule) and rows whose (file, ordinal) address is
-  * position-deleted. Defaults mean "no pending deletes" — the common case,
-  * read columnar. */
+  * position-deleted. Defaults mean "no pending deletes", read columnar. */
 case class GraftInputPartition(absPath: String, addSeq: Long = Long.MaxValue,
                                eqDeletes: Seq[String] = Nil,
                                posDeletes: Seq[String] = Nil) extends InputPartition
 
-/** One partition per storage bucket (possibly several bucket-pure files,
-  * possibly none — empty buckets are still emitted so both sides of a
-  * storage-partitioned join expose identical partition-value sets). The
-  * partition key is the bucket id, which Spark's KeyGroupedPartitioning
-  * machinery aligns across the join. */
-case class GraftBucketedPartition(bucket: Int, absPaths: Seq[String])
-  extends InputPartition with org.apache.spark.sql.connector.read.HasPartitionKey {
+/** Data files read back to back by one task ([[GraftChainedReader]]),
+  * columnar: the connector's read task when no merge-on-read delete is
+  * pending. [[GraftScan.packFiles]] plans them. */
+class GraftFilesPartition(val absPaths: Seq[String]) extends InputPartition
+
+/** One partition per occupied storage bucket: its bucket-pure files, keyed
+  * by the bucket id, which Spark's KeyGroupedPartitioning machinery aligns
+  * across a storage-partitioned join. */
+class GraftBucketedPartition(val bucket: Int, absPaths: Seq[String])
+  extends GraftFilesPartition(absPaths)
+  with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucket))
 }
@@ -1124,12 +1162,12 @@ class GraftReaderFactory(required: StructType, limit: Option[Int] = None,
 
   /** columnar iff the partition carries no pending deletes. Uniform per
     * scan: a scan planned with pending MoR deletes ships them to EVERY
-    * partition (→ rows, filtered), one planned without ships none. Bucketed
-    * partitions are planned only when no deletes are pending. */
+    * partition (→ rows, filtered), one planned without ships none.
+    * Multi-file partitions are planned only when no deletes are pending. */
   override def supportColumnarReads(partition: InputPartition): Boolean =
     partition match {
       case p: GraftInputPartition => p.eqDeletes.isEmpty && p.posDeletes.isEmpty
-      case _: GraftBucketedPartition => true
+      case _: GraftFilesPartition => true
     }
 
   override def createColumnarReader(partition: InputPartition)
@@ -1138,8 +1176,8 @@ class GraftReaderFactory(required: StructType, limit: Option[Int] = None,
     val inner = partition match {
       case p: GraftInputPartition =>
         new GraftColumnarPartitionReader(p.absPath, required, pushed, confBag)
-      case b: GraftBucketedPartition =>
-        GraftChainedReader(b.absPaths, required, pushed, confBag)
+      case f: GraftFilesPartition =>
+        GraftChainedReader(f.absPaths, required, pushed, confBag)
     }
     limit.fold(inner)(GraftLimitReaders.columnar(inner, _))
   }
@@ -1257,9 +1295,11 @@ object GraftLimitReaders {
     }
 }
 
-/** Sequential concatenation of per-file readers — a bucketed partition may
-  * hold several bucket-pure files (appends after bucketize); each is opened
-  * only when its predecessor is exhausted, so memory stays one-file-bounded. */
+/** Sequential concatenation of per-file readers — the reader of every
+  * [[GraftFilesPartition]] (packed files, or a bucket's files); each is
+  * opened only when its predecessor is exhausted, so memory stays
+  * one-file-bounded, and each file's reader serves its own `_file` and
+  * `_pos`. */
 object GraftChainedReader {
   import org.apache.spark.sql.vectorized.ColumnarBatch
 

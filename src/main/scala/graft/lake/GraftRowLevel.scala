@@ -166,6 +166,8 @@ class GraftCowScan(location: String, op: GraftRowLevelOperation,
           case None => kept
         }
         op.scannedFiles = narrowed.toSeq.map(k => (k._1, k._2))
+        // one file per task, never packed: the ReplaceData writer maps each
+        // task to its output file
         narrowed.map { case (rel, _, seq) =>
           GraftInputPartition(table.io.abs(rel).toString, seq, eqdels, posdels)
             .asInstanceOf[InputPartition]

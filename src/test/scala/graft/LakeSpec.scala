@@ -266,8 +266,8 @@ class LakeSpec extends SparkTestBase {
     val desc = scan.toString + df.queryExecution.executedPlan.toString
     assert(desc.contains("PushedFilters=[") && desc.contains("repo"),
       s"no pushed filter in scan:\n$desc")
-    val partitions = df.rdd.getNumPartitions
-    assert(partitions < total, s"no file pruning: $partitions of $total files read")
+    val kept = keptFiles(df)
+    assert(kept < total, s"no file pruning: $kept of $total files read")
 
     // row-set equality vs the plan-time pruned scan path
     val expected = keyset(t.scan().filter($"repo" === repo))
@@ -434,9 +434,9 @@ class LakeSpec extends SparkTestBase {
         .map(_.file_path)).filter($"repo" === repo))
     val survivors = t.manifestEntries(t.currentSnapshot.get)
       .count(e => e.partition != "fake" && e.min_repo <= repo && repo <= e.max_repo)
-    // one InputPartition per surviving file — the collect was survivor-sized
-    assert(df.rdd.getNumPartitions == survivors,
-      s"planned ${df.rdd.getNumPartitions} partitions, expected $survivors of ${realTotal + 10000}")
+    // the scan kept exactly the surviving files — the collect was survivor-sized
+    assert(keptFiles(df) == survivors,
+      s"kept ${keptFiles(df)} files, expected $survivors of ${realTotal + 10000}")
     assert(keyset(df) == expected)
   }
 
@@ -455,8 +455,8 @@ class LakeSpec extends SparkTestBase {
       .filter($"repo".startsWith(prefix))
     val expected = t.scan().filter($"repo".startsWith(prefix)).count()
     assert(df.count() == expected)
-    assert(df.rdd.getNumPartitions < total,
-      s"prefix filter pruned nothing: ${df.rdd.getNumPartitions}/$total")
+    assert(keptFiles(df) < total,
+      s"prefix filter pruned nothing: ${keptFiles(df)}/$total")
 
     // OR of two repo equalities also prunes (both sides supported)
     val r2 = SourceFiles.repoName(5)
@@ -464,7 +464,7 @@ class LakeSpec extends SparkTestBase {
       .filter($"repo" === repo || $"repo" === r2)
     val expOr = t.scan().filter($"repo" === repo || $"repo" === r2).count()
     assert(dfOr.count() == expOr)
-    assert(dfOr.rdd.getNumPartitions < total)
+    assert(keptFiles(dfOr) < total)
   }
 
   test("DSv2 scan description reports the pruning ratio after planning") {
@@ -559,9 +559,11 @@ class LakeSpec extends SparkTestBase {
     val scan = new graft.lake.GraftScanBuilder(t.location).build()
       .asInstanceOf[graft.lake.GraftScan]
     assert(scan.filterAttributes().map(_.describe()).toSet == Set("repo", "path", "lang"))
-    val before = scan.planInputPartitions().length
+    scan.planInputPartitions()
+    val before = scan.pruneInfo.get._1
     scan.filter(Array[org.apache.spark.sql.sources.Filter](EqualTo("repo", repo)))
-    val after = scan.planInputPartitions().length
+    scan.planInputPartitions()
+    val after = scan.pruneInfo.get._1
     assert(after < before, s"runtime filter pruned nothing: $after of $before")
     // end-to-end: a selective broadcast join through the connector stays
     // correct whether or not the optimizer injects the runtime filter

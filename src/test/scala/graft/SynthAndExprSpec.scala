@@ -111,9 +111,16 @@ class XmqExprSpec extends SparkTestBase {
       "42" -> 42.0, "  3.5abc" -> 3.5, "-1e3x" -> -1000.0, "+.5" -> 0.5,
       "12." -> 12.0, "5e-1" -> 0.5, "1.5e+2" -> 150.0, "  +7.25E2 rest" -> 725.0,
       "1e" -> 1.0, "1.2.3" -> 1.2, "\t\n 7" -> 7.0, "1,5" -> 1.0,
-      "." -> 0.0, "-" -> 0.0, "abc" -> 0.0, "" -> 0.0, "\u00a09" -> 0.0)
+      "." -> 0.0, "-" -> 0.0, "abc" -> 0.0, "" -> 0.0, "\u00a09" -> 0.0,
+      // hex significand, optional binary exponent; "0x" alone reads its 0
+      "0x10" -> 16.0, "0x1.8p1" -> 3.0, " -0X1Fz" -> -31.0, "0x.8" -> 0.5,
+      "0x1p" -> 1.0, "0x1p-2" -> 0.25, "0x" -> 0.0, "0xg" -> 0.0,
+      // case-insensitive infinity, its long form, any trailing text
+      "-INF" -> Double.NegativeInfinity, "infx" -> Double.PositiveInfinity,
+      " +Infinity" -> Double.PositiveInfinity, "in" -> 0.0)
     table.foreach { case (in, want) => assert(parseDoubleC(in) == want, s"strtod($in)") }
     assert(parseDoubleC("1e400").isPosInfinity) // overflow: HUGE_VAL
+    Seq("nan", "NaN(123)", "-nan", " nanx").foreach(in => assert(parseDoubleC(in).isNaN, in))
     // the getter parses the first match's text the same way
     assert(XmqExprs.getDouble("<a><r> 2.5e1x</r></a>", "xml", "/a/r") == 25.0)
     assert(XmqExprs.getDouble("<a/>", "xml", "/a/r") == 0.0)
